@@ -177,12 +177,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # relationally (explode → broadcast join → sum(log) → argmax).
         d = _t(spark, sf, "documents")
         model = train_ngram_lm(d, n=1)
-        # grams stay the JVM explode → groupBy form: the r7 Arrow
-        # per-doc-tf variant (functions/ngramcount.per_doc_char_ngram_counts)
-        # removed this shuffle but MEASURED SLOWER end-to-end at sf1.0
-        # (8.7 s vs 4.3 s in the frozen bench) — 3M (doc, gram, tf) rows
-        # crossing the Python→JVM Arrow boundary cost more than the
-        # all-JVM explode+hashagg of 15M gram rows. Kept the explode.
+        # grams stay the JVM explode → groupBy form: an Arrow pass that
+        # emitted exact per-doc tf rows removed this shuffle but MEASURED
+        # SLOWER end-to-end at sf1.0 (8.7 s vs 4.3 s in the frozen bench)
+        # — 3M (doc, gram, tf) rows crossing the Python→JVM Arrow
+        # boundary cost more than the all-JVM explode+hashagg of 15M gram
+        # rows.
         grams = (
             d.select("doc_id", F.explode(char_ngrams(F.col("text"), 1)).alias("ngram"))
             .groupBy("doc_id", "ngram")
@@ -335,13 +335,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def gopher_repetition(spark, sf):
         # r5 Gopher §A1.1 completion: top-{2,3,4}-gram char coverage and
-        # duplicate-{5..10}-gram char fractions via the serving-shape
-        # Arrow UDF (functions/text.with_repetition_columns mode='arrow';
-        # the HOF fold twin is pinned bit-identical in
-        # tests/test_misc_ops.py). The documents table is random
-        # text, so repetition is PLANTED (doc_id % 3: hammered 2-gram /
-        # 5-word phrase ×2 / untouched) identically in both engines; all
-        # fractions are exact integer divisions, round(6) for the hash.
+        # duplicate-{5..10}-gram char fractions via the repetition Arrow
+        # UDF (functions/text.with_repetition_columns; pinned bit-identical
+        # to the Python oracle twin in tests/test_misc_ops.py). The
+        # documents table is random text, so repetition is PLANTED
+        # (doc_id % 3: hammered 2-gram / 5-word phrase ×2 / untouched)
+        # identically in both engines; all fractions are exact integer
+        # divisions, round(6) for the hash.
         from language_identification_spark.functions.text import (
             DUP_NGRAM_NS,
             TOP_NGRAM_NS,
@@ -2517,9 +2517,9 @@ def oracle_sql() -> dict[str, str]:
             FROM classes c LEFT JOIN lc USING (class)
             LEFT JOIN pc USING (class) LEFT JOIN tp USING (class))
     """
-    from language_identification_spark.pipeline.rules import DEFAULT_STOPWORDS
+    from language_identification_spark.pipeline.rules import default_stopwords
 
-    stops_sql = "[" + ", ".join(f"'{w}'" for w in DEFAULT_STOPWORDS) + "]"
+    stops_sql = "[" + ", ".join(f"'{w}'" for w in default_stopwords()) + "]"
     # gopher_repetition twin: per n, explode word n-grams to rows (the
     # oracle need not mirror the Spark side's per-row fold — only its
     # values), count, take the cnt>=2-pinned top/dup char sums, join back.

@@ -164,22 +164,16 @@ def prepare_corpus(spark, sf_dir: str, mult: int, n_files: int, out: str) -> int
     return spark.read.parquet(out).count()
 
 
-def pipeline_run(
-    spark, corpus_path: str, models, heuristics: str = "fused"
-) -> tuple[float, int, float]:
+def pipeline_run(spark, corpus_path: str, models) -> tuple[float, int, float]:
     """Serve the full quality pipeline over a prepared corpus; returns
-    (wall_s, docs, docs/s). Scan→score→noop, serving wall only.
-
-    Default ``heuristics='fused'``: the graded pipeline number measures
-    the production serving shape — the same one the scaling section runs
-    (scale_probe sets SPARK_GRAFT_FUSED=1) — not the Catalyst-visible
-    debug shape. ``main()`` also reports the native shape side by side."""
+    (wall_s, docs, docs/s). Scan→score→noop, serving wall only — the same
+    serving shape the scaling section runs."""
     from language_identification_spark.pipeline.quality import run_quality_pipeline
 
     pages = spark.read.parquet(corpus_path)
     n = pages.count()
     t0 = time.monotonic()
-    _materialize(run_quality_pipeline(spark, pages, models, heuristics=heuristics))
+    _materialize(run_quality_pipeline(spark, pages, models))
     wall = time.monotonic() - t0
     return wall, n, n / wall
 
@@ -336,7 +330,7 @@ def scaling_report(
              sys.executable, os.path.join(REPO, "scripts", "scale_probe.py"),
              str(cores), str(mult), "2"],  # best-of-2 timed runs per probe
             capture_output=True, text=True,
-            env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_FUSED="1"),
+            env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir),
             timeout=1200,
         )
         return json.loads(out.stdout.strip().splitlines()[-1])
@@ -433,21 +427,15 @@ def main() -> None:
     # r2 recorded a 2.5×-contaminated window for it)
     from scripts.scale_probe import stat_snapshot, window_valid
 
-    def timed_pipeline(heuristics: str):
-        runs = []
-        attempts = 0
-        while sum(1 for r in runs if r[3]) < 2 and attempts < 6:
-            attempts += 1
-            s0 = stat_snapshot()
-            w, n_docs, dps = pipeline_run(spark, corpus, models, heuristics)
-            runs.append((w, n_docs, dps, window_valid(s0, stat_snapshot())))
-        valid = [r for r in runs if r[3]] or runs
-        return min(valid, key=lambda r: r[0])
-
-    # Graded number = fused (the production serving shape, same as the
-    # scaling probes); native measured alongside for the comparison.
-    pipe_wall, pipe_docs, pipe_dps, pipe_clean = timed_pipeline("fused")
-    _, _, pipe_dps_native, pipe_native_clean = timed_pipeline("native")
+    runs = []
+    attempts = 0
+    while sum(1 for r in runs if r[3]) < 2 and attempts < 6:
+        attempts += 1
+        s0 = stat_snapshot()
+        w, n_docs, dps = pipeline_run(spark, corpus, models)
+        runs.append((w, n_docs, dps, window_valid(s0, stat_snapshot())))
+    valid = [r for r in runs if r[3]] or runs
+    pipe_wall, pipe_docs, pipe_dps, pipe_clean = min(valid, key=lambda r: r[0])
 
     queries = run_headline_queries(spark, SF_DIR)
     queries["quality_pipeline"] = round(pipe_wall, 3)
@@ -470,10 +458,8 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": CPUS,
         "pipeline_docs_per_sec": round(pipe_dps, 1),
-        "pipeline_docs_per_sec_native": round(pipe_dps_native, 1),
         "pipeline_docs": pipe_docs,
         "pipeline_window_clean": bool(pipe_clean),
-        "pipeline_native_window_clean": bool(pipe_native_clean),
     }
 
     if lsh_ab is not None:
@@ -624,16 +610,12 @@ line-level ratios, r5 the nine word-n-gram repetition fractions
 (§A1.1), r6 the per-script routing columns (script letter counts,
 is_cjk, char-4-gram diversity) — strictly more per-doc work each round,
 so per-core docs/s is not directly comparable across rounds; the
-scaling RATIO is. r6 also moved the NATIVE pipeline's repetition
-columns from interpreted HOF folds to one Arrow UDF pass (the r5
-native-shape regression, 66.6k → 6.5k docs/s, was those folds;
-mode='hof' survives as the gate-only second implementation).
+scaling RATIO is.
 
 Reference single-node baseline (BASELINE.md): char_freq ≈ 110 docs/s
 train+predict, best statistical family ≈ 135 docs/s. This pipeline serves
 **{result['pipeline_docs_per_sec']:,} docs/s** at {result['cpus']} cores
-(fused serving shape, the graded/production path; native Catalyst-visible
-shape: {result['pipeline_docs_per_sec_native']:,} docs/s) including langid
+(the single fused serving shape) including langid
 + perplexity + scrub + full Gopher/C4 heuristics — ~3 orders of magnitude
 over the reference on one node, with per-core throughput
 (~{result['pipeline_docs_per_sec'] / result['cpus'] / 1000:.1f}k docs/s/core)

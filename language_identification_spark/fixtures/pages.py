@@ -224,9 +224,3 @@ def gen_pages(
     pdf["warc_ts"] = pdf["warc_ts"].astype("datetime64[us, UTC]")
     return pdf
 
-
-def write_pages(path: str, **kwargs) -> pd.DataFrame:
-    """Write the fixture to parquet (pyarrow) and return the frame."""
-    pdf = gen_pages(**kwargs)
-    pdf.to_parquet(path, index=False)
-    return pdf

@@ -140,61 +140,3 @@ def char_ngram_counts(
     keys = ([key_col] if key_col else []) + [gram_col]
     return partials.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
 
-
-def per_doc_char_ngram_counts(
-    df: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lower: bool = False,
-    pad: bool = True,
-    gram_col: str = "ngram",
-    cnt_col: str = "tf",
-) -> DataFrame:
-    """(id_col, gram_col, cnt_col) — EXACT per-document n-gram counts,
-    shuffle-free: each document lives wholly inside one Arrow batch, so
-    the emitted rows are already final (the old
-    ``explode → groupBy(doc, gram)`` paid a corpus-wide shuffle of one
-    row per gram occurrence to compute the same thing). One ``np.unique``
-    over (doc-index, packed-gram) combined keys per batch."""
-    if n > 2:
-        raise ValueError("per-doc combined keys hold 20 bits of doc index + 21n gram bits; n must be <= 2")
-    text_expr = F.lower(F.col(text_col)) if lower else F.col(text_col)
-    src = df.select(F.col(id_col), text_expr.alias(text_col))
-    out_schema = f"`{id_col}` long, `{gram_col}` string, `{cnt_col}` long"
-    gram_bits = np.uint64(_SHIFT * n)
-
-    def partial(pdfs):
-        for pdf in pdfs:
-            texts = pdf[text_col]
-            mask = texts.notna().to_numpy()
-            ids = pdf[id_col].to_numpy()[mask]
-            tlist = texts[texts.notna()].tolist()
-            m = len(tlist)
-            if m == 0:
-                continue
-            if pad:
-                head = "_" * (n - 1)
-                parts = [head + t + "_" for t in tlist]
-            else:
-                parts = tlist
-            lens = np.fromiter((len(t) for t in parts), dtype=np.int64, count=m)
-            counts = np.maximum(lens - (n - 1), 0)
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            keys = _pack_window_keys(tlist, n, pad)
-            doc_idx = np.repeat(np.arange(m, dtype=np.uint64), counts)
-            combined = (doc_idx << gram_bits) | keys
-            vals, cnts = np.unique(combined, return_counts=True)
-            gkeys = vals & np.uint64((1 << int(gram_bits)) - 1)
-            didx = (vals >> gram_bits).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    id_col: ids[didx],
-                    gram_col: _decode_keys(gkeys, n),
-                    cnt_col: cnts.astype(np.int64),
-                }
-            )
-
-    return src.mapInPandas(partial, schema=out_schema)

@@ -1,10 +1,12 @@
 """Text primitives, in two matched flavors:
 
-1. **Spark Column expressions** (JVM-side, whole-stage-codegen'd) — the hot
-   path at scale: n-gram generation, tokenization, heuristic quality columns.
+1. **Spark Column expressions** (JVM-side, whole-stage-codegen'd) — n-gram
+   generation, tokenization, and the Catalyst-visible heuristic quality
+   columns the oracle gates compare.
 2. **Plain-Python equivalents** — used by the pure-Python oracle AND inside
-   pandas UDFs, guaranteeing that anything the pipeline computes in Python
-   matches the oracle bit-for-bit (same module, same code).
+   pandas UDFs (the serving UDF computes every heuristic feature here),
+   guaranteeing that anything the pipeline computes in Python matches the
+   oracle bit-for-bit (same module, same code).
 
 Semantics notes (pinned so Spark SQL, DuckDB oracle SQL, and Python agree):
 - Whitespace class is the Java-default ``\\s`` = ``[ \\t\\n\\x0B\\f\\r]``
@@ -25,6 +27,8 @@ import re
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..pipeline.rules import default_stopwords
 
 JAVA_WS = "[ \\t\\n\\x0B\\f\\r]"
 PY_WS_CLASS = "[ \t\n\x0b\f\r]"
@@ -110,103 +114,10 @@ TOP_NGRAM_NS = (2, 3, 4)
 DUP_NGRAM_NS = (5, 6, 7, 8, 9, 10)
 
 
-def word_ngrams(w: Column, n: int) -> Column:
-    """Array of space-joined word n-grams from a token array column;
-    ``[]`` when the doc has fewer than n tokens. Same zip_with-over-
-    shifted-slices machinery as :func:`char_ngrams`, token-wise."""
-    if n == 1:
-        return w
-    size = F.size(w)
-    grams = F.slice(w, 1, size - (n - 1))
-    for k in range(1, n):
-        grams = F.zip_with(
-            grams,
-            F.slice(w, k + 1, size - (n - 1)),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    # the when() guard keeps slice() from seeing a negative length on
-    # short docs (CaseWhen evaluates only the matched branch per row)
-    return F.when(size >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
-def _L0() -> Column:
-    # lazy: F.lit at module import would require an active SparkContext
-    return F.lit(0).cast("long")
-
-
-def _dup_gram_chars(grams: Column) -> Column:
-    """Σ cnt·len(gram) over grams occurring ≥ 2 times — one fold over the
-    SORTED gram array (equal grams become runs; run length = count), so
-    the whole computation is a per-row codegen-free HOF with no explode/
-    shuffle. Pure integer arithmetic ⇒ bit-identical to the Python twin."""
-
-    def close(acc):
-        return F.when(
-            acc["run"] >= 2, acc["run"] * F.length(acc["prev"]).cast("long")
-        ).otherwise(_L0())
-
-    def merge(acc, x):
-        same = acc["prev"].isNotNull() & (x == acc["prev"])
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("long")).alias("run"),
-            F.when(same, acc["dup"]).otherwise(acc["dup"] + close(acc)).alias("dup"),
-        )
-
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        _L0().alias("run"),
-        _L0().alias("dup"),
-    )
-    return F.aggregate(
-        F.array_sort(grams), init, merge, lambda acc: acc["dup"] + close(acc)
-    )
-
-
-def _top_gram_chars(grams: Column) -> Column:
-    """cnt·len(gram) of the most frequent gram (ties: the LONGEST gram —
-    the conservative choice, and cnt·len is what the rule consumes so
-    equal (cnt, len) ties are value-irrelevant); 0 when the top count is
-    < 2 (a gram seen once is not repetition — pinned deviation from
-    verbatim Gopher so short docs aren't dropped for having ANY 2-gram).
-    Same sorted-run fold as :func:`_dup_gram_chars`."""
-
-    def prev_len(acc):
-        return F.coalesce(F.length(acc["prev"]).cast("long"), _L0())
-
-    def closes_better(acc):
-        return (acc["run"] > acc["best_cnt"]) | (
-            (acc["run"] == acc["best_cnt"]) & (prev_len(acc) > acc["best_len"])
-        )
-
-    def merge(acc, x):
-        same = acc["prev"].isNotNull() & (x == acc["prev"])
-        better = (~same) & closes_better(acc)
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("long")).alias("run"),
-            F.when(better, acc["run"]).otherwise(acc["best_cnt"]).alias("best_cnt"),
-            F.when(better, prev_len(acc)).otherwise(acc["best_len"]).alias("best_len"),
-        )
-
-    def finish(acc):
-        cnt = F.when(closes_better(acc), acc["run"]).otherwise(acc["best_cnt"])
-        ln = F.when(closes_better(acc), prev_len(acc)).otherwise(acc["best_len"])
-        return F.when(cnt >= 2, cnt * ln).otherwise(_L0())
-
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        _L0().alias("run"),
-        _L0().alias("best_cnt"),
-        _L0().alias("best_len"),
-    )
-    return F.aggregate(F.array_sort(grams), init, merge, finish)
-
-
 # The 9 Gopher word-n-gram repetition fractions plus the char-level
 # diversity ratio (the CJK-route repetition substitute — see
 # pipeline/rules.py MIN_CJK_DISTINCT_CHAR_4GRAM_RATIO): all computed in
-# the same Arrow pass / the same HOF column set.
+# the same Arrow pass.
 CHAR_DIVERSITY_N = 4
 REPETITION_KEYS = (
     tuple(f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS)
@@ -216,19 +127,15 @@ REPETITION_KEYS = (
 
 
 def repetition_features_udf():
-    """Arrow-vectorized twin of the HOF repetition fold: one pandas UDF
-    returning the 9-field repetition struct, computed per batch by
-    :func:`py_repetition_features` (Counter over word windows, with the
-    monotonicity early-exit). Bit-identical to both the HOF path and the
-    oracle by construction — it IS the oracle function.
+    """One pandas UDF returning the 10-field repetition struct, computed
+    per batch by :func:`batch_repetition_features` (value-identical to
+    the per-doc oracle :func:`py_repetition_features`).
 
-    Why a UDF in an otherwise-native column set: the 9 sorted-run
-    ``aggregate`` folds are interpreted HOFs (never codegen'd) and
-    measured 10× slower end-to-end than this Arrow pass
-    (pipeline_docs_per_sec_native 66.6k → 6.5k in BENCH_r05) — the same
-    lesson the winnowing vectorization quantified at ~1200×
-    (functions/analysis.py). The HOF form survives as ``mode='hof'``
-    for plan pins and as a genuinely independent second implementation."""
+    Why a UDF in an otherwise-native column set: the SQL form of these
+    features is 9 sorted-run ``aggregate`` folds — interpreted HOFs,
+    never codegen'd — and measured 10× slower end-to-end than this Arrow
+    pass (66.6k → 6.5k docs/s in BENCH_r05), the same lesson the
+    winnowing vectorization quantified at ~1200× (functions/analysis.py)."""
     schema = ", ".join(f"{k} double" for k in REPETITION_KEYS)
 
     @F.pandas_udf(schema)
@@ -261,69 +168,27 @@ def repetition_features_udf():
     return rep
 
 
-def with_repetition_columns(
-    df: DataFrame, text_col: str = "norm_text", mode: str = "arrow"
-) -> DataFrame:
+def with_repetition_columns(df: DataFrame, text_col: str = "norm_text") -> DataFrame:
     """Gopher §A1.1 repetition features:
     ``top_{2,3,4}gram_char_frac`` (chars covered by the most frequent
     word n-gram / total chars; 0 unless it occurs ≥ 2 times) and
     ``dup_{5..10}gram_char_frac`` (chars in word n-grams occurring ≥ 2
     times / total chars), each capped at 1.0 (overlapping occurrences
-    can cover more than n_chars). All counts are exact integers divided
-    once ⇒ bit-identical across the two modes and the Python twin
-    (py_repetition_features).
-
-    ``mode='arrow'`` (default, the serving shape): one vectorized Arrow
-    UDF pass — narrow, no shuffle, ~10× the interpreted-HOF throughput.
-    ``mode='hof'``: per-row SQL sorted-run ``aggregate`` folds — no
-    Python at all, kept as the independent second implementation and for
-    plan pins; NOT a serving path (HOFs bypass codegen)."""
-    if mode == "arrow":
-        rep = repetition_features_udf()
-        df = df.withColumn("_rep", rep(F.col(text_col)))
-        for k in REPETITION_KEYS:
-            df = df.withColumn(k, F.col("_rep")[k])
-        return df.drop("_rep")
-    if mode != "hof":
-        raise ValueError(f"unknown repetition mode: {mode!r}")
-    c = F.col(text_col)
-    n_chars = F.length(c)
-    w = words(c)
-    for nn in TOP_NGRAM_NS:
-        frac = F.when(
-            n_chars > 0,
-            F.least(
-                _top_gram_chars(word_ngrams(w, nn)).cast("double") / n_chars,
-                F.lit(1.0),
-            ),
-        ).otherwise(F.lit(0.0))
-        df = df.withColumn(f"top_{nn}gram_char_frac", frac)
-    for nn in DUP_NGRAM_NS:
-        frac = F.when(
-            n_chars > 0,
-            F.least(
-                _dup_gram_chars(word_ngrams(w, nn)).cast("double") / n_chars,
-                F.lit(1.0),
-            ),
-        ).otherwise(F.lit(0.0))
-        df = df.withColumn(f"dup_{nn}gram_char_frac", frac)
-    from .analysis import script_counts
-
-    sc = script_counts(c)
-    total = sc["n_latin"] + sc["n_cjk"] + sc["n_cyrillic"] + sc["n_greek"]
-    return df.withColumn(
-        "distinct_char_4gram_ratio",
-        F.when(sc["n_cjk"] * 2 > total, char_diversity_expr(c)).otherwise(
-            F.lit(1.0)
-        ),
-    )
+    can cover more than n_chars), plus the CJK-guarded
+    ``distinct_char_4gram_ratio``. One vectorized Arrow UDF pass —
+    narrow, no shuffle. All counts are exact integers divided once ⇒
+    bit-identical to the Python twin (py_repetition_features)."""
+    rep = repetition_features_udf()
+    df = df.withColumn("_rep", rep(F.col(text_col)))
+    for k in REPETITION_KEYS:
+        df = df.withColumn(k, F.col("_rep")[k])
+    return df.drop("_rep")
 
 
 def char_diversity_udf(n: int = CHAR_DIVERSITY_N):
-    """Arrow twin of :func:`char_diversity_expr` (and of the field the
-    repetition UDF emits) — the serving-speed form for callers that want
-    ONLY the diversity ratio: the SQL form's char-array zip_with chain is
-    interpreted (the HOF lesson) and pays per char."""
+    """The ``distinct_char_4gram_ratio`` field of the repetition UDF, on its
+    own — for callers that want ONLY the diversity ratio (unguarded: no
+    is_cjk mask)."""
 
     @F.pandas_udf("double")
     def div(texts: pd.Series) -> pd.Series:
@@ -333,17 +198,6 @@ def char_diversity_udf(n: int = CHAR_DIVERSITY_N):
 
     return div
 
-
-def char_diversity_expr(c: Column, n: int = CHAR_DIVERSITY_N) -> Column:
-    """distinct char n-gram windows / total windows; 1.0 for docs shorter
-    than n. SQL form (char array + zip_with grams + array_distinct) —
-    interpreted HOFs, so gate/debug only; serving computes it inside the
-    repetition Arrow UDF."""
-    g = char_ngrams(c, n, reference_pad=False)
-    return F.when(
-        F.length(c) >= n,
-        F.size(F.array_distinct(g)).cast("double") / F.size(g),
-    ).otherwise(F.lit(1.0))
 
 # Gopher-style line heuristics — pinned, no trimming, so Spark SQL, the
 # Python twin, and the DuckDB oracle evaluate byte-identical predicates.
@@ -362,18 +216,22 @@ def with_quality_columns(
     df: DataFrame,
     text_col: str = "norm_text",
     stopwords: tuple[str, ...] | None = None,
-    repetition_mode: str = "arrow",
 ) -> DataFrame:
     """Gopher/C4-style heuristic quality features: doc length, word
     stats, symbol ratio, repetition ratio, stop-word fraction,
     bullet/ellipsis line ratios, duplicate-line fraction. Most columns
     are native Spark SQL expressions; the repetition/diversity columns
-    go through the vectorized Arrow UDF under the default
-    ``repetition_mode='arrow'`` (ADVICE r6 doc fix) — ``mode='hof'`` is
-    the all-SQL form.
+    go through :func:`with_repetition_columns`' Arrow UDF.
+
+    NOT the serving path — the serving UDF
+    (pipeline/quality.make_fused_udf) computes the same features with
+    :func:`py_quality_features_batch` in its one Arrow pass. This is the
+    Catalyst-visible twin: it backs the ``gopher_scores`` oracle gate
+    (its script columns back ``cjk_quality_rules``) and is pinned equal
+    to the serving UDF by tests/test_pipeline.py::test_fused_matches_native.
 
     Assumes ``text_col`` is already normalized (no leading/trailing ws).
-    ``stopwords`` defaults to :data:`..pipeline.rules.DEFAULT_STOPWORDS`
+    ``stopwords`` defaults to :func:`..pipeline.rules.default_stopwords`
     (the per-fixture-language lexicon). Lexicon transport depends on
     size: up to :data:`LEXICON_LITERAL_MAX` words it enters the plan as
     a literal array (constant-folded, zero join machinery); a
@@ -384,8 +242,8 @@ def with_quality_columns(
     Both transports evaluate the identical ``array_contains`` predicate
     per token ⇒ identical ratios and keep decisions (pinned by
     tests/test_pipeline.py::test_large_lexicon_broadcast_path). The
-    per-token membership scan is O(|lexicon|), fine for debugging; at
-    serving scale the fused UDF's hash-set lookup is the hot path.
+    per-token membership scan is O(|lexicon|), fine for a gate; the
+    serving UDF uses a hash-set lookup.
 
     Perf note: character counting uses ``translate`` (codegen'd, allocation
     light) instead of ``regexp_replace``, and mean word length is derived
@@ -393,12 +251,11 @@ def with_quality_columns(
     ``aggregate`` over the word array — HOFs are not codegen'd and measured
     as the pipeline's JVM bottleneck at 32 cores. The line/stop-word
     columns do use ``filter`` HOFs: they are keep-rule inputs with tiny
-    operand arrays (lines per doc, ≤200 stopwords), and the serving hot
-    path computes them in the fused Arrow UDF anyway. Semantics are
+    operand arrays (lines per doc, ≤200 stopwords). Semantics are
     identical to the Python twin ``py_quality_features``.
     """
     if stopwords is None:
-        from ..pipeline.rules import DEFAULT_STOPWORDS as stopwords  # lazy: no cycle
+        stopwords = default_stopwords()
     if len(stopwords) <= LEXICON_LITERAL_MAX:
         stop_arr = F.array(*[F.lit(s) for s in stopwords])
     else:
@@ -461,7 +318,7 @@ def with_quality_columns(
             (n_lines - F.size(F.array_distinct(lines))).cast("double") / n_lines,
         )
         .transform(lambda d: with_script_columns(d, text_col))
-        .transform(lambda d: with_repetition_columns(d, text_col, repetition_mode))
+        .transform(lambda d: with_repetition_columns(d, text_col))
         .drop("__stop_lex")
     )
 
@@ -495,12 +352,6 @@ def py_words(s: str) -> list[str]:
     return [t for t in _PY_WS_RE.split(s) if t]
 
 
-def _default_stopwords() -> tuple[str, ...]:
-    from ..pipeline.rules import DEFAULT_STOPWORDS
-
-    return DEFAULT_STOPWORDS
-
-
 def _py_line_feats(norm: str) -> tuple[int, int, int, int]:
     """(n_lines, n_bullet, n_ellipsis, n_dup) with the pinned no-trim
     predicates (:data:`BULLET_PREFIXES` / :data:`ELLIPSIS_SUFFIXES`)."""
@@ -528,9 +379,7 @@ def py_quality_features_batch(norm_series, stopwords: tuple[str, ...] | None = N
     import numpy as np
     import pandas as pd
 
-    from .analysis import CJK_PY, CYR_PY, GREEK_PY, LATIN_PY
-
-    stopset = frozenset(stopwords if stopwords is not None else _default_stopwords())
+    stopset = frozenset(stopwords if stopwords is not None else default_stopwords())
     rep_keys = tuple(f"top_{nn}gram_char_frac" for nn in TOP_NGRAM_NS) + tuple(
         f"dup_{nn}gram_char_frac" for nn in DUP_NGRAM_NS
     )
@@ -604,8 +453,8 @@ def py_quality_features_batch(norm_series, stopwords: tuple[str, ...] | None = N
 
 
 def py_distinct_char_ngram_ratio(s: str, n: int = CHAR_DIVERSITY_N) -> float:
-    """distinct char n-gram windows / total windows; 1.0 below n chars.
-    Twin of :func:`char_diversity_expr` (exact ints, one division).
+    """distinct char n-gram windows / total windows; 1.0 below n chars
+    (exact ints, one division).
 
     Implementation measured, not assumed: a numpy stride-tricks +
     np.unique-over-record-views variant (the winnowing pattern) ran
@@ -638,7 +487,7 @@ def py_script_features(norm: str) -> dict:
 
 
 def py_quality_features(norm: str, stopwords: tuple[str, ...] | None = None) -> dict[str, float]:
-    stopset = frozenset(stopwords if stopwords is not None else _default_stopwords())
+    stopset = frozenset(stopwords if stopwords is not None else default_stopwords())
     ws = py_words(norm)
     n_words = len(ws)
     n_chars = len(norm)

@@ -195,31 +195,6 @@ def token_buckets_udf(n_buckets: int):
     return buckets
 
 
-def bucket_log_probs(
-    df: DataFrame,
-    text_col: str,
-    n_buckets: int,
-    smoothing: float = 1.0,
-) -> DataFrame:
-    """Hashed-unigram distribution of a corpus: (bucket, logp) with
-    add-``smoothing`` over the ``n_buckets`` vocabulary — B rows out of
-    one map-side-combined hash agg; absent buckets get the smoothed
-    floor via the consumer's left join, so this table stays sparse."""
-    counts = (
-        df.select(F.explode(token_buckets(F.col(text_col), n_buckets)).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("cnt"))
-    )
-    tot = counts.agg(F.sum("cnt").alias("tot"))
-    return counts.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        F.log((F.col("cnt") + smoothing) / (F.col("tot") + smoothing * n_buckets)).alias(
-            "logp"
-        ),
-        "tot",
-    )
-
-
 def dsir_weights(
     raw_df: DataFrame,
     target_df: DataFrame,

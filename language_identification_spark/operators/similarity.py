@@ -214,14 +214,6 @@ def lsh_topk(
 KNUTH = 2_654_435_761
 
 
-def _quantized(col: Column) -> Column:
-    """array<float> → array<long> on the 1e-6 grid (same floor(x·1e6+0.5)
-    convention as quantize_components — exact across engines)."""
-    return F.transform(
-        col, lambda x: F.floor(x.cast("double") * BUCKET_QUANT + F.lit(0.5)).cast("long")
-    )
-
-
 def _int_l2(a: Column, b: Column) -> Column:
     """Exact integer squared-L2 between two quantized arrays. Pure int64
     (no float summation-order hazard): (2e6)² · dim ≪ 2^63."""

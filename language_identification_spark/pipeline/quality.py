@@ -1,18 +1,19 @@
 """The flagship quality-filter pipeline (north_rule):
 
     pages(url, warc_ts, html, text, lang)
-      → normalize → langid (hashed-ngram NB, broadcast, Arrow UDF)
-      → perplexity (bigram LM, broadcast, Arrow UDF)
-      → Gopher/C4 heuristics (native Spark SQL columns)
-      → PII/toxicity scrub (compiled regex, Arrow UDF)
+      → normalize → langid (hashed-ngram NB, broadcast)
+      → perplexity (bigram LM, broadcast)
+      → Gopher/C4 heuristic features
+      → PII/toxicity scrub (compiled regex)
       → keep/drop
 
 Execution shape at scale: training is two groupBy shuffles over the train
 split (exact integer counts); serving is a SINGLE narrow map stage — one
-pandas UDF computes (norm_text, lang_pred, lang_conf, perplexity,
-scrubbed_text) per Arrow batch (one Python round trip per batch), then the
-heuristic columns and the keep predicate stay JVM-side. No shuffle touches
-the 100 TB side after the scan.
+pandas UDF computes (lang_pred, lang_conf, perplexity, scrubbed_text) and
+every heuristic feature per Arrow batch (one Python round trip per batch,
+numbers back instead of a second copy of the text), then the keep
+predicate stays JVM-side. No shuffle touches the 100 TB side after the
+scan.
 """
 
 from __future__ import annotations
@@ -25,23 +26,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.scrub import scrub_series
-from ..functions.text import with_quality_columns
+from ..functions.text import DUP_NGRAM_NS, TOP_NGRAM_NS, py_quality_features_batch
 from ..models.hashed_ngram import DIM, HashedNgramNB, featurize_counts_pdf
 from ..models.perplexity import BigramLM, bigram_counts_pdf
 from ..session import ship_package
 from .rules import keep_expr
-
-OUTPUT_STRUCT = T.StructType(
-    [
-        T.StructField("norm_text", T.StringType()),
-        T.StructField("lang_pred", T.StringType()),
-        T.StructField("lang_conf", T.DoubleType()),
-        T.StructField("perplexity", T.DoubleType()),
-        T.StructField("scrubbed_text", T.StringType()),
-    ]
-)
-
-from ..functions.text import DUP_NGRAM_NS, TOP_NGRAM_NS
 
 FUSED_STRUCT = T.StructType(
     [
@@ -78,12 +67,12 @@ class QualityModels:
     including the stop-word lexicon: at production scale that list is
     10k+ words per language, and riding the model broadcast (instead of
     being inlined into the plan as a literal) is the correct transport.
-    The native heuristic path receives the same tuple so both serving
-    shapes stay bit-identical."""
+    The Catalyst-visible gate twin (``functions/text.with_quality_columns``)
+    takes the same tuple, so the two stay bit-identical."""
 
     langid: HashedNgramNB
     lm: BigramLM
-    stopwords: tuple[str, ...] | None = None  # None → rules.DEFAULT_STOPWORDS
+    stopwords: tuple[str, ...] | None = None  # None → rules.default_stopwords()
 
 
 def train_quality_models(
@@ -135,49 +124,13 @@ def train_quality_models(
     return QualityModels(langid=langid, lm=lm, stopwords=stopwords)
 
 
-def make_score_udf(spark: SparkSession, models: QualityModels):
-    """One Arrow UDF computing every Python-side column in a single pass.
+def make_fused_udf(spark: SparkSession, models: QualityModels):
+    """The serving UDF: scoring + scrub + heuristic features in ONE Arrow
+    pass, returning numbers instead of a second full-text column.
 
     The broadcast is deserialized once per Python worker process (module
     cache + spark.python.worker.reuse), never per batch.
     """
-    ship_package(spark)
-    bc = spark.sparkContext.broadcast(models)
-    state: dict = {}
-
-    @F.pandas_udf(OUTPUT_STRUCT)
-    def score(texts: pd.Series) -> pd.DataFrame:
-        if "m" not in state:
-            state["m"] = bc.value
-        m: QualityModels = state["m"]
-        norm = texts.fillna("").str.strip()
-        labels, confs = m.langid.predict_labels(norm.tolist())
-        ppl = m.lm.perplexity_batch(norm.tolist())
-        scrubbed = scrub_series(norm)
-        return pd.DataFrame(
-            {
-                "norm_text": norm,
-                "lang_pred": labels,
-                "lang_conf": confs,
-                "perplexity": ppl,
-                "scrubbed_text": scrubbed,
-            }
-        )
-
-    return score
-
-
-def make_fused_udf(spark: SparkSession, models: QualityModels):
-    """Fused serving UDF: scoring + scrub + heuristic features in ONE Arrow
-    pass, returning numbers instead of a second full-text column.
-
-    vs the default path: drops ``norm_text`` from the Arrow return (one
-    full copy of every document saved on the Python→JVM hop) and computes
-    the heuristic features with the byte-identical Python twin instead of
-    a second JVM scan over the text. Used by ``heuristics='fused'``.
-    """
-    from ..functions.text import py_quality_features_batch
-
     ship_package(spark)
     bc = spark.sparkContext.broadcast(models)
     state: dict = {}
@@ -208,25 +161,18 @@ def run_quality_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     models: QualityModels,
-    heuristics: str = "native",
+    heuristics: str = "fused",
 ) -> DataFrame:
-    """pages → scored/filtered output. Narrow (no shuffle) after the scan.
+    """pages → scored/filtered output. Narrow (no shuffle) after the scan:
+    one Arrow pass (:func:`make_fused_udf`) and the JVM keep predicate.
 
-    ``heuristics='native'`` (default): heuristic columns as Spark SQL
-    expressions over the UDF's ``norm_text`` — fully Catalyst-visible.
-    ``heuristics='fused'``: features computed inside the scoring UDF (same
-    numbers, bit-identical) — one Arrow pass, no norm_text round trip;
-    the faster serving shape when nothing downstream needs norm_text.
+    ``heuristics`` has one legal value, ``'fused'``; anything else raises
+    ``ValueError``.
     """
-    if heuristics == "fused":
-        score = make_fused_udf(spark, models)
-        out = pages.withColumn("_s", score(F.col("text"))).select(
-            *[c for c in pages.columns if c not in ("html",)], "_s.*"
-        )
-        return out.withColumn("keep", keep_expr())
-    score = make_score_udf(spark, models)
+    if heuristics != "fused":
+        raise ValueError(f"unknown heuristics shape: {heuristics!r} (only 'fused')")
+    score = make_fused_udf(spark, models)
     out = pages.withColumn("_s", score(F.col("text"))).select(
         *[c for c in pages.columns if c not in ("html",)], "_s.*"
     )
-    out = with_quality_columns(out, "norm_text", stopwords=models.stopwords)
     return out.withColumn("keep", keep_expr())

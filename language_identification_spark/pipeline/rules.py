@@ -44,7 +44,7 @@ MIN_CJK_CHARS = 25
 MIN_CJK_DISTINCT_CHAR_4GRAM_RATIO = 0.3
 # Gopher §A1.1 repetition bounds (r5): chars covered by the most frequent
 # word n-gram (n=2,3,4; counted only when it occurs ≥2 times — see
-# text._top_gram_chars) and chars inside duplicated word n-grams
+# text.py_repetition_features) and chars inside duplicated word n-grams
 # (n=5..10), as fractions of the doc's chars. Thresholds are the Gopher
 # paper's published values.
 MAX_TOP_NGRAM_CHAR_FRAC = {2: 0.20, 3: 0.18, 4: 0.16}
@@ -67,14 +67,6 @@ def default_stopwords() -> tuple[str, ...]:
 
         _DEFAULT_STOPWORDS_CACHE = fixture_stopwords()
     return _DEFAULT_STOPWORDS_CACHE
-
-
-def __getattr__(name: str):
-    # PEP 562: keep the DEFAULT_STOPWORDS constant-style name working for
-    # existing importers without paying the fixture import at module load.
-    if name == "DEFAULT_STOPWORDS":
-        return default_stopwords()
-    raise AttributeError(name)
 
 
 def keep_expr() -> Column:

@@ -33,17 +33,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, location: str, name: str) -> DataFrame:
-    """Read a table by name: Iceberg identifier if configured, else
-    ``{location}/{name}.parquet`` or ``{location}/{name}`` directory."""
-    if iceberg_available(spark) and "." in location:
-        return spark.read.table(f"{location}.{name}")
-    p = os.path.join(location, f"{name}.parquet")
-    if not os.path.exists(p):
-        p = os.path.join(location, name)
-    return spark.read.parquet(p)
-
-
 def write_bucketed(
     df: DataFrame,
     location: str,

@@ -1,8 +1,9 @@
 """Structured Streaming variant of the quality pipeline.
 
 The reference is batch-only (SURVEY.md §2.9); this is the net-new streaming
-surface: the SAME narrow transform chain (score UDF + heuristic columns +
-keep predicate) applied to a ``readStream`` source, so batch and streaming
+surface: the SAME narrow transform chain (the one serving Arrow UDF —
+scores, scrub and heuristic features — plus the keep predicate) applied
+to a ``readStream`` source, so batch and streaming
 share one code path (``run_quality_pipeline`` works on both because every
 stage is a stateless projection — no watermark needed for the filter
 itself).

@@ -140,13 +140,11 @@ def main() -> None:
     pages = spark.read.parquet(corpus)
     n = pages.count()
 
-    heuristics = "fused" if os.environ.get("SPARK_GRAFT_FUSED") else "native"
-
     def run() -> float:
         t0 = time.monotonic()
-        run_quality_pipeline(spark, pages, models, heuristics=heuristics).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        run_quality_pipeline(spark, pages, models).write.format("noop").mode(
+            "overwrite"
+        ).save()
         return time.monotonic() - t0
 
     run()  # warm-up (JIT, python workers, page cache)

@@ -154,10 +154,10 @@ def test_events_quantiles_approx_bound(spark, sf_dir):
 
 
 def test_repetition_columns_native_matches_python(spark):
-    """r5 (mode coverage widened r6): both the HOF fold (sorted-run
-    aggregate, no explode) and the serving Arrow UDF must be bit-identical
-    to the Python twin on adversarial shapes — overlapping repeats, cap
-    saturation, ties between gram lengths, short docs."""
+    """r5: the repetition Arrow UDF (the Catalyst-visible gate column
+    set) must be bit-identical to the Python twin on adversarial shapes —
+    overlapping repeats, cap saturation, ties between gram lengths,
+    short docs."""
     from language_identification_spark.functions.text import (
         DUP_NGRAM_NS,
         TOP_NGRAM_NS,
@@ -183,12 +183,11 @@ def test_repetition_columns_native_matches_python(spark):
         + [f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS]
         + ["distinct_char_4gram_ratio"]
     )
-    for mode in ("arrow", "hof"):
-        out = {r["i"]: r for r in with_repetition_columns(df, "t", mode).collect()}
-        for i, t in enumerate(texts):
-            exp = py_quality_features(t)
-            for k in keys:
-                assert out[i][k] == exp[k], (mode, i, k, out[i][k], exp[k])
+    out = {r["i"]: r for r in with_repetition_columns(df, "t").collect()}
+    for i, t in enumerate(texts):
+        exp = py_quality_features(t)
+        for k in keys:
+            assert out[i][k] == exp[k], (i, k, out[i][k], exp[k])
 
 
 def test_fixture_repetition_anomalies_trip_one_rule_each(pages_pdf):
@@ -1619,27 +1618,6 @@ def test_char_ngram_counts_match_explode_form(spark):
     assert {(r["g"], r["cnt"]) for r in new.collect()} == {
         (r["g"], r["count"]) for r in old.collect()
     }
-
-
-def test_per_doc_char_ngram_counts_match_explode_form(spark):
-    """r7: per-doc tf rows from the Arrow pass must equal
-    explode(char_ngrams) -> groupBy(doc, gram) -> count exactly."""
-    from language_identification_spark.functions.ngramcount import (
-        per_doc_char_ngram_counts,
-    )
-    from language_identification_spark.functions.text import char_ngrams
-
-    rows = [(0, "hello"), (1, ""), (2, "aא b"), (3, "zz zz"), (4, None)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for n in (1, 2):
-        old = (
-            df.select("doc_id", F.explode(char_ngrams(F.col("text"), n)).alias("g"))
-            .groupBy("doc_id", "g").count()
-        )
-        new = per_doc_char_ngram_counts(df, n, gram_col="g", cnt_col="tf")
-        got = {(r["doc_id"], r["g"]): r["tf"] for r in new.collect()}
-        want = {(r["doc_id"], r["g"]): r["count"] for r in old.collect()}
-        assert got == want, n
 
 
 def test_token_buckets_udf_matches_sql(spark):

@@ -10,7 +10,9 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from language_identification_spark.functions.text import norm_text, with_quality_columns
 from language_identification_spark.oracle.pipeline import (
     run_oracle_pipeline,
     train_oracle_models,
@@ -19,6 +21,17 @@ from language_identification_spark.pipeline.quality import (
     run_quality_pipeline,
     train_quality_models,
 )
+from language_identification_spark.pipeline.rules import keep_expr
+
+
+def _sql_twin(served, stopwords):
+    """The Catalyst-visible twin of the serving UDF's heuristic features
+    (``with_quality_columns``) over the same stripped text, with the
+    served model scores and the same keep predicate."""
+    base = served.select(
+        "url", "lang_conf", "perplexity", norm_text(F.col("text")).alias("norm_text")
+    )
+    return with_quality_columns(base, stopwords=stopwords).withColumn("keep", keep_expr())
 
 
 @pytest.fixture(scope="module")
@@ -60,7 +73,6 @@ def test_langpred_and_scrub_byte_identical(oracle_out, spark_out):
         s = spark_out[url]
         assert s["lang_pred"] == o["lang_pred"], url
         assert s["scrubbed_text"].encode() == o["scrubbed_text"].encode(), url
-        assert s["norm_text"] == o["norm_text"], url
 
 
 def test_scores_bit_identical(oracle_out, spark_out):
@@ -107,29 +119,32 @@ def test_output_schema(spark, pages_df, spark_models):
 
 
 def test_fused_matches_native(spark, pages_df, spark_models):
-    native = run_quality_pipeline(spark, pages_df, spark_models)
-    fused = run_quality_pipeline(spark, pages_df, spark_models, heuristics="fused")
+    """The one gate between the two feature implementations: every
+    heuristic feature the serving UDF returns, and the keep decision,
+    equal the native Spark SQL twin (with_quality_columns) over the
+    stripped text."""
     from language_identification_spark.functions.text import (
         DUP_NGRAM_NS,
         TOP_NGRAM_NS,
     )
 
-    cols = ["url", "keep", "lang_pred", "lang_conf", "perplexity",
-            "scrubbed_text", "n_chars", "n_words", "mean_word_len",
+    served = run_quality_pipeline(spark, pages_df, spark_models)
+    twin = _sql_twin(served, spark_models.stopwords)
+    cols = ["url", "keep", "n_chars", "n_words", "mean_word_len",
             "symbol_ratio", "distinct_word_ratio", "stopword_ratio",
             "bullet_line_ratio", "ellipsis_line_ratio", "dup_line_ratio"]
     cols += [f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS]
     cols += [f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS]
     cols += ["n_cjk", "n_script_letters", "is_cjk", "distinct_char_4gram_ratio"]
-    a = sorted(map(tuple, native.select(cols).collect()))
-    b = sorted(map(tuple, fused.select(cols).collect()))
+    a = sorted(map(tuple, twin.select(cols).collect()))
+    b = sorted(map(tuple, served.select(cols).collect()))
     assert a == b
 
 
 def test_custom_stopword_lexicon_flows_through(spark, pages_df, pages_pdf):
     """r4: the stop-word lexicon rides the model broadcast (QualityModels)
-    and reaches all three implementations — native SQL columns, fused
-    Arrow UDF, and the pure-Python oracle — producing identical
+    and reaches all three implementations — the serving Arrow UDF, the
+    native SQL twin, and the pure-Python oracle — producing identical
     stopword_ratio and keep decisions. A deliberately absurd lexicon
     (words that never occur) must drop every doc via the stop-word rule
     alone, proving the custom list is actually in effect everywhere."""
@@ -144,8 +159,8 @@ def test_custom_stopword_lexicon_flows_through(spark, pages_df, pages_pdf):
     )
     assert models.stopwords == absurd
 
-    native = run_quality_pipeline(spark, pages_df, models)
-    fused = run_quality_pipeline(spark, pages_df, models, heuristics="fused")
+    fused = run_quality_pipeline(spark, pages_df, models)
+    native = _sql_twin(fused, models.stopwords)
     cols = ["url", "stopword_ratio", "keep", "is_cjk"]
     a = sorted(map(tuple, native.select(cols).collect()))
     b = sorted(map(tuple, fused.select(cols).collect()))
@@ -166,9 +181,10 @@ def test_custom_stopword_lexicon_flows_through(spark, pages_df, pages_pdf):
 def test_large_lexicon_broadcast_path(spark, pages_df):
     """r5 (judge ask): a production-size (10k-word) stop-word lexicon must
     NOT enter the plan as a literal array — it rides a one-row broadcast
-    relation — while keep decisions and stopword_ratio stay identical to
-    the fused (hash-set) serving path. A small-lexicon control proves the
-    literal-detection is non-vacuous (plan truncation can hide arrays)."""
+    relation in the native SQL twin — while keep decisions and
+    stopword_ratio stay identical to the (hash-set) serving path. A
+    small-lexicon control proves the literal-detection is non-vacuous
+    (plan truncation can hide arrays)."""
     from language_identification_spark.fixtures.pages import fixture_stopwords
 
     sub = pages_df.limit(150)
@@ -181,14 +197,16 @@ def test_large_lexicon_broadcast_path(spark, pages_df):
     models_small = train_quality_models(
         pages_df.filter("split = 'train'"), stopwords=small
     )
-    native_small = run_quality_pipeline(spark, sub, models_small)
+    native_small = _sql_twin(
+        run_quality_pipeline(spark, sub, models_small), models_small.stopwords
+    )
     plan_small = native_small._jdf.queryExecution().analyzed().toString()
     assert "zzcontrolsentinel" in plan_small
 
     big = fixture_stopwords() + tuple(f"zzfill{i}" for i in range(10_000))
     models = train_quality_models(pages_df.filter("split = 'train'"), stopwords=big)
-    native = run_quality_pipeline(spark, sub, models)
-    fused = run_quality_pipeline(spark, sub, models, heuristics="fused")
+    fused = run_quality_pipeline(spark, sub, models)
+    native = _sql_twin(fused, models.stopwords)
     cols = ["url", "stopword_ratio", "keep"]
     a = sorted(map(tuple, native.select(cols).collect()))
     b = sorted(map(tuple, fused.select(cols).collect()))

@@ -27,6 +27,25 @@ def test_pipeline_is_narrow(spark, pages_df):
     assert_no_shuffle(out)
 
 
+def test_quality_pipeline_is_one_arrow_pass(spark, pages_df):
+    """One serving shape: the executed plan runs exactly one Arrow UDF
+    (scores, scrub and every heuristic feature in one Python round
+    trip), the output carries no normalized-text copy, and no other
+    heuristics shape is accepted."""
+    import re
+
+    import pytest
+
+    models = train_quality_models(pages_df.filter("split = 'train'"))
+    out = run_quality_pipeline(spark, pages_df, models)
+    out.write.format("noop").mode("overwrite").save()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"ArrowEvalPython", plan)) == 1, plan
+    assert "norm_text" not in out.columns
+    with pytest.raises(ValueError):
+        run_quality_pipeline(spark, pages_df, models, heuristics="native")
+
+
 def test_model_join_is_broadcast(spark, pages_df):
     df = pages_df.select("text", F.col("lang"), F.monotonically_increasing_id().alias("doc_id"))
     model = train_ngram_lm(df, n=1)
@@ -385,7 +404,7 @@ def test_bloom_probe_never_shuffles_text(spark, sf_dir):
 
 
 def test_repetition_arrow_udf_evaluates_once(spark):
-    """r6: the arrow repetition mode extracts 10 struct fields from ONE
+    """r6: the repetition Arrow UDF extracts 10 struct fields from ONE
     UDF result column — projection collapse must not duplicate the
     Python call. Pin: exactly one ArrowEvalPython node, and the plan
     stays shuffle-free."""
@@ -395,7 +414,7 @@ def test_repetition_arrow_udf_evaluates_once(spark):
     from language_identification_spark.plans.asserts import explain_str
 
     df = spark.createDataFrame([(i, "a b c a b") for i in range(4)], "i long, t string")
-    out = with_repetition_columns(df, "t", "arrow")
+    out = with_repetition_columns(df, "t")
     import re
 
     plan = explain_str(out)
