@@ -19,7 +19,19 @@ are bit-identical.
 
 Gram strings are decoded from the packed keys (codepoints → utf-32) —
 lossless for any Unicode codepoint (< 2^21), so output grams equal the
-oracle's ``string_split``-by-codepoint semantics.
+oracle's ``string_split``-by-codepoint semantics. Encoding and decoding
+use ``surrogatepass``, so a lone surrogate is one codepoint as it is to
+the ``str`` oracles (Arrow strings are UTF-8, so none reaches the
+kernels through Spark).
+
+The Cavnar–Trenkle rank profile (``rank_profile``, the twin of the
+oracle's ``ct_profile``) counts 1..5-gram windows, too wide for one
+21-bit-per-codepoint key. Each codepoint maps to its dense alphabet
+index + 1 (0 = "no character", so a shorter gram sorts before its
+extensions) and each window packs into TWO uint64 words — the first
+≤ 2 characters and the remaining ≤ 3, 21 bits each — exact for any
+alphabet. One lexsort over the word pairs counts every window and
+leaves the distinct grams in the oracle's string order.
 """
 
 from __future__ import annotations
@@ -31,6 +43,7 @@ from pyspark.sql import functions as F
 
 _SHIFT = 21  # bits per codepoint; max codepoint 0x10FFFF < 2^21
 _MASK = np.uint64((1 << _SHIFT) - 1)
+_S1, _S2 = np.uint64(_SHIFT), np.uint64(2 * _SHIFT)
 
 
 def _pack_window_keys(texts: list[str], n: int, pad: bool) -> np.ndarray:
@@ -49,7 +62,7 @@ def _pack_window_keys(texts: list[str], n: int, pad: bool) -> np.ndarray:
     if total_chars == 0:
         return np.empty(0, dtype=np.uint64)
     big = "".join(parts)
-    cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
+    cp = np.frombuffer(big.encode("utf-32-le", "surrogatepass"), dtype=np.uint32).astype(np.uint64)
     L = len(cp)
     if L < n:
         return np.empty(0, dtype=np.uint64)
@@ -78,7 +91,7 @@ def _decode_keys(keys: np.ndarray, n: int) -> list[str]:
     mat = np.empty((u, n), dtype="<u4")
     for j in range(n):
         mat[:, n - 1 - j] = ((keys >> np.uint64(j * _SHIFT)) & _MASK).astype(np.uint32)
-    text = mat.tobytes().decode("utf-32-le")
+    text = mat.tobytes().decode("utf-32-le", "surrogatepass")
     return [text[i * n : (i + 1) * n] for i in range(u)]
 
 
@@ -90,6 +103,51 @@ def grouped_gram_counts(texts: list[str], n: int, pad: bool) -> tuple[list[str],
         return [], np.empty(0, dtype=np.int64)
     vals, cnts = np.unique(keys, return_counts=True)
     return _decode_keys(vals, n), cnts.astype(np.int64)
+
+
+def rank_profile(text: str, max_size: int = 400) -> list[tuple[str, int]]:
+    """Ordered 1..5-gram profile, equal to ``oracle.reference.ct_profile``:
+    windows of ``'_'*(n-1) + text.lower() + '_'*(n-1)`` for n = 1..5,
+    sorted by (-count, gram), first ``max_size`` kept."""
+    low = text.lower()  # Python case folding, as the oracle
+    cp = np.frombuffer(
+        ("____" + low + "____").encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+    )
+    alpha, inv = np.unique(cp, return_inverse=True)
+    d = inv.astype(np.uint64) + np.uint64(1)
+    # every n's padded windows are the windows of the 4-padded string
+    # starting at 5-n .. L+3; absent trailing digits stay 0
+    L = len(low)
+    w1, w2 = [], []
+    for n in range(1, 6):
+        idx = np.arange(5 - n, L + 4)
+        none = np.zeros(len(idx), dtype=np.uint64)
+        digit = [d[idx + j] if j < n else none for j in range(5)]
+        w1.append((digit[0] << _S1) | digit[1])
+        w2.append((digit[2] << _S2) | (digit[3] << _S1) | digit[4])
+    w1, w2 = np.concatenate(w1), np.concatenate(w2)
+    order = np.lexsort((w2, w1))
+    w1, w2 = w1[order], w2[order]
+    new = np.ones(len(w1), dtype=bool)
+    new[1:] = (w1[1:] != w1[:-1]) | (w2[1:] != w2[:-1])
+    first = np.flatnonzero(new)
+    cnt = np.diff(np.append(first, len(w1)))
+    w1, w2 = w1[first], w2[first]
+    if 0 < max_size < len(cnt):
+        keep = cnt >= np.partition(cnt, len(cnt) - max_size)[len(cnt) - max_size]
+        w1, w2, cnt = w1[keep], w2[keep], cnt[keep]
+    # distinct grams are in string order; a stable sort on -count gives
+    # the oracle's (-count, gram) order
+    top = np.argsort(-cnt, kind="stable")
+    w1, w2, cnt = w1[top], w2[top], cnt[top]
+    digits = np.stack(
+        [w1 >> _S1, w1 & _MASK, w2 >> _S2, (w2 >> _S1) & _MASK, w2 & _MASK], axis=1
+    ).astype(np.int64)
+    lens = (digits > 0).sum(axis=1)
+    mat = alpha[np.maximum(digits - 1, 0)].astype("<u4")
+    flat = mat.tobytes().decode("utf-32-le", "surrogatepass")
+    grams = [flat[5 * i : 5 * i + k] for i, k in enumerate(lens.tolist())]
+    return list(zip(grams, cnt.tolist()))[:max_size]
 
 
 def char_ngram_counts(

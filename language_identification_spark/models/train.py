@@ -17,11 +17,11 @@ per distinct key ⇒ prob = (cnt + s) / (Σcnt + s·|keys|).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.ngramcount import char_ngram_counts
-from ..oracle.reference import ct_profile
+from ..functions.ngramcount import char_ngram_counts, grouped_gram_counts, rank_profile
 
 NGRAM_SMOOTHING = 1e-8   # statistical_models.py:8
 CHARFREQ_SMOOTHING = 1e-10  # statistical_models.py:52
@@ -104,7 +104,9 @@ def train_cavnar_trenkle(
     texts *in dataset order* (lieterature.py:28), so cross-document n-grams
     exist and order matters — inherently sequential per language. We
     distribute per-language with ``applyInPandas`` (one group per lang;
-    profiles are tiny) and reuse the oracle's ``ct_profile`` for exactness.
+    profiles are tiny) and build each profile with the whole-array numpy
+    kernel ``functions.ngramcount.rank_profile`` — no per-character
+    Python loop — pinned equal to the oracle's ``ct_profile``.
 
     ``max_chars_per_lang`` is the SCALE mode: exact concatenation puts a
     whole language's corpus in one executor's Python string (at web scale
@@ -133,7 +135,7 @@ def train_cavnar_trenkle(
 
         pdf = pdf.sort_values(order_col)
         combined = " ".join(pdf[text_col].tolist())
-        prof = ct_profile(combined, max_profile_size)
+        prof = rank_profile(combined, max_profile_size)
         return pd.DataFrame(
             {
                 "lang": pdf[lang_col].iloc[0],
@@ -156,62 +158,91 @@ def train_dunning(
 ) -> DataFrame:
     """(lang, feat, prob) — char unigram ('c_x') + bigram ('bg_xy') features,
     globally-unioned vocabulary, additive smoothing over |V|
-    (lieterature.py:83-113). Pure relational: two explodes, a union, a
-    cross join of langs × vocab, left join of counts.
+    (lieterature.py:83-113).
 
-    Scale note: the reference semantics REQUIRE a dense langs × vocab grid
-    (every lang carries a smoothed prob for every global feature), so the
-    model table is L·|V| rows — fine for alphabetic corpora, and for a
+    The corpus is read ONCE: one ``mapInPandas`` emits both the 'c_' and
+    the 'bg_' partial counts of each (batch, lang) ('c_'/'bg_' namespaces
+    never collide), and one ``groupBy(lang, feat).sum`` totals them.
+    Everything after reads that aggregate, whose exchange Spark reuses:
+    per-language totals, and the dense langs × vocab grid — one row per
+    feature holding its {lang: cnt} map, cross-joined with the broadcast
+    totals. Every language has exactly |V| grid rows, so |V| is a window
+    count over the grid; no action runs until the caller collects.
+
+    Scale note: the reference semantics REQUIRE the dense grid (every
+    lang carries a smoothed prob for every global feature), so the model
+    table is L·|V| rows — fine for alphabetic corpora, and for a
     CJK-heavy web corpus (|V| ~ 10⁷ observed bigrams) still only a model
-    BUILD cost: the corpus itself is touched once, the grid never joins
-    back to documents (serving broadcasts per-lang dicts)."""
-    low = F.lower(F.col(text_col))
-    # two vectorized count passes; prefixes applied on the SMALL count
-    # tables ('c_'/'bg_' namespaces never collide, so the union of the
-    # two per-(lang, gram) counts equals the old count over the unioned
-    # explode)
-    uni = char_ngram_counts(
-        df.select(F.col(lang_col).alias("lang"), low.alias("text")),
-        1, key_col="lang", lower=False, pad=False, gram_col="raw",
-    ).select("lang", F.concat(F.lit("c_"), F.col("raw")).alias("feat"), "cnt")
-    pad = F.concat(F.lit("_"), low, F.lit("_"))
-    bg = char_ngram_counts(
-        df.select(F.col(lang_col).alias("lang"), pad.alias("text")),
-        2, key_col="lang", lower=False, pad=False, gram_col="raw",
-    ).select("lang", F.concat(F.lit("bg_"), F.col("raw")).alias("feat"), "cnt")
-    counts = uni.unionAll(bg)
-    vocab = counts.select("feat").distinct()
-    vocab_size = vocab.count()
-    lang_totals = counts.groupBy("lang").agg(F.sum("cnt").alias("total"))
-    full = lang_totals.crossJoin(F.broadcast(vocab))
-    joined = full.join(counts, ["lang", "feat"], "left").na.fill({"cnt": 0})
-    return joined.select(
+    BUILD cost: the grid never joins back to documents (serving
+    broadcasts per-lang dicts)."""
+    # lowercasing stays JVM-side (F.lower), as in the oracle-validated form
+    src = df.select(
+        F.col(lang_col).alias("lang"), F.lower(F.col(text_col)).alias("text")
+    )
+
+    def partial(pdfs):
+        import pandas as pd
+
+        for pdf in pdfs:
+            texts = pdf["text"]
+            mask = texts.notna()  # NULL text contributes nothing
+            texts = texts[mask]
+            for lang, grp in texts.groupby(pdf["lang"].to_numpy()[mask.to_numpy()]):
+                grp = grp.tolist()
+                uni, uni_cnt = grouped_gram_counts(grp, 1, False)
+                # pad=True is the reference '_' + text + '_' bigram padding
+                bg, bg_cnt = grouped_gram_counts(grp, 2, True)
+                yield pd.DataFrame({
+                    "lang": lang,
+                    "feat": ["c_" + g for g in uni] + ["bg_" + g for g in bg],
+                    "cnt": np.concatenate([uni_cnt, bg_cnt]),
+                })
+
+    counts = (
+        src.mapInPandas(partial, schema="lang string, feat string, cnt long")
+        .groupBy("lang", "feat")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    totals = counts.groupBy("lang").agg(F.sum("cnt").alias("total"))
+    by_feat = counts.groupBy("feat").agg(
+        F.map_from_entries(F.collect_list(F.struct("lang", "cnt"))).alias("m")
+    )
+    grid = by_feat.crossJoin(F.broadcast(totals)).select(
+        "lang", "feat", "total",
+        F.coalesce(F.col("m")[F.col("lang")], F.lit(0)).alias("cnt"),
+        F.count("*").over(Window.partitionBy("lang")).alias("vocab_size"),
+    )
+    return grid.select(
         "lang", "feat",
         (
             (F.col("cnt") + F.lit(smoothing))
-            / (F.col("total") + F.lit(smoothing) * F.lit(float(vocab_size)))
+            / (F.col("total") + F.lit(smoothing) * F.col("vocab_size"))
         ).alias("prob"),
     )
 
 
 def model_table_to_dict(model_df: DataFrame, kind: str) -> dict:
-    """Collect a model table into the oracle's dict shape (for broadcast)."""
-    rows = model_df.collect()
+    """Collect a model table into the oracle's dict shape (for broadcast).
+
+    The table comes back through Arrow (``toPandas``); ``.tolist()``
+    turns each column into builtin ``str``/``int``/``float`` values."""
+    pdf = model_df.toPandas()
+    col = {c: pdf[c].tolist() for c in pdf.columns}
     if kind in ("ngram", "char_freq", "dunning"):
         key = {"ngram": "ngram", "char_freq": "char", "dunning": "feat"}[kind]
         out: dict = {}
-        for r in rows:
-            out.setdefault(r["lang"], {})[r[key]] = r["prob"]
+        for lang, k, p in zip(col["lang"], col[key], col["prob"]):
+            out.setdefault(lang, {})[k] = p
         return out
     if kind == "markov":
         out = {}
-        for r in rows:
-            out.setdefault(r["lang"], {}).setdefault(r["cur"], {})[r["nxt"]] = r["prob"]
+        for lang, cur, nxt, p in zip(col["lang"], col["cur"], col["nxt"], col["prob"]):
+            out.setdefault(lang, {}).setdefault(cur, {})[nxt] = p
         return out
     if kind == "cavnar_trenkle":
         out = {}
-        for r in rows:
-            out.setdefault(r["lang"], []).append((r["rank"], r["ngram"], r["cnt"]))
+        for lang, rank, g, c in zip(col["lang"], col["rank"], col["ngram"], col["cnt"]):
+            out.setdefault(lang, []).append((rank, g, c))
         return {
             lang: [(g, c) for _, g, c in sorted(items)] for lang, items in out.items()
         }

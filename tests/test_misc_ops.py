@@ -1753,3 +1753,115 @@ def test_doc_fingerprint_udf_matches_sql(spark):
     got = {r["i"]: r["f"] for r in df.select("i", doc_fingerprint(F.col("t")).alias("f")).collect()}
     want = {r["i"]: r["f"] for r in df.select("i", doc_fingerprint_sql(F.col("t")).alias("f")).collect()}
     assert got == want, (got, want)
+
+
+def _dunning_two_pass(df, smoothing):
+    """The previous train_dunning: two count passes, an eager vocab
+    count and a left join — the twin the one-pass trainer is pinned to."""
+    from language_identification_spark.functions.ngramcount import char_ngram_counts
+
+    low = F.lower(F.col("text"))
+    uni = char_ngram_counts(
+        df.select("lang", low.alias("text")),
+        1, key_col="lang", lower=False, pad=False, gram_col="raw",
+    ).select("lang", F.concat(F.lit("c_"), F.col("raw")).alias("feat"), "cnt")
+    pad = F.concat(F.lit("_"), low, F.lit("_"))
+    bg = char_ngram_counts(
+        df.select("lang", pad.alias("text")),
+        2, key_col="lang", lower=False, pad=False, gram_col="raw",
+    ).select("lang", F.concat(F.lit("bg_"), F.col("raw")).alias("feat"), "cnt")
+    counts = uni.unionAll(bg)
+    vocab = counts.select("feat").distinct()
+    vocab_size = vocab.count()
+    lang_totals = counts.groupBy("lang").agg(F.sum("cnt").alias("total"))
+    full = lang_totals.crossJoin(F.broadcast(vocab))
+    joined = full.join(counts, ["lang", "feat"], "left").na.fill({"cnt": 0})
+    return joined.select(
+        "lang", "feat",
+        (
+            (F.col("cnt") + F.lit(smoothing))
+            / (F.col("total") + F.lit(smoothing) * F.lit(float(vocab_size)))
+        ).alias("prob"),
+    )
+
+
+def test_train_dunning_matches_two_pass_form(spark):
+    """The one-pass Dunning trainer must equal the two-pass twin row for
+    row, probabilities compared with ==, on hostile rows: NULL, empty and
+    whitespace-only text, a language whose only document is NULL, 'İ'
+    (lowercases to two codepoints), a NUL byte and an astral emoji."""
+    from language_identification_spark.models.train import (
+        DUNNING_SMOOTHING,
+        train_dunning,
+    )
+
+    rows = [
+        ("en", "Hello World"),
+        ("en", None),
+        ("en", ""),
+        ("de", "   \t\n "),
+        ("de", "Straße İstanbul"),
+        ("tr", "İİ ı"),
+        ("xx", None),
+        ("el", "nul\x00byte αβγ"),
+        ("zh", "的一是 😀😀 emoji"),
+        (None, "orphan text"),
+    ]
+    df = spark.createDataFrame(rows * 2, "lang string, text string")
+    got = {(r["lang"], r["feat"]): r["prob"] for r in train_dunning(df).collect()}
+    want = {
+        (r["lang"], r["feat"]): r["prob"]
+        for r in _dunning_two_pass(df, DUNNING_SMOOTHING).collect()
+    }
+    assert got == want
+    assert "xx" not in {lang for lang, _ in got}
+
+
+def test_model_table_to_dict_matches_row_collect(spark, pages_pdf):
+    """The Arrow collect must build the same dict as a Row collect for
+    all five model families, with builtin str/int/float values."""
+    from language_identification_spark.models import train as tr
+
+    def row_dict(model_df, kind):
+        rows = model_df.collect()
+        out: dict = {}
+        if kind == "markov":
+            for r in rows:
+                out.setdefault(r["lang"], {}).setdefault(r["cur"], {})[r["nxt"]] = r["prob"]
+            return out
+        if kind == "cavnar_trenkle":
+            for r in rows:
+                out.setdefault(r["lang"], []).append((r["rank"], r["ngram"], r["cnt"]))
+            return {k: [(g, c) for _, g, c in sorted(v)] for k, v in out.items()}
+        key = {"ngram": "ngram", "char_freq": "char", "dunning": "feat"}[kind]
+        for r in rows:
+            out.setdefault(r["lang"], {})[r[key]] = r["prob"]
+        return out
+
+    def leaves(v):
+        if isinstance(v, dict):
+            for k, x in v.items():
+                yield k
+                yield from leaves(x)
+        elif isinstance(v, list):
+            for x in v:
+                yield from leaves(x)
+        elif isinstance(v, tuple):
+            yield from v
+        else:
+            yield v
+
+    pdf = pages_pdf[["text", "lang"]].head(200).copy()
+    pdf["doc_idx"] = range(len(pdf))
+    df = spark.createDataFrame(pdf)
+    tables = {
+        "ngram": tr.train_ngram_lm(df, n=2),
+        "char_freq": tr.train_char_freq(df),
+        "markov": tr.train_markov(df),
+        "cavnar_trenkle": tr.train_cavnar_trenkle(df),
+        "dunning": tr.train_dunning(df),
+    }
+    for kind, tbl in tables.items():
+        got = tr.model_table_to_dict(tbl, kind)
+        assert got == row_dict(tbl, kind), kind
+        assert {type(x) for x in leaves(got)} <= {str, int, float}, kind

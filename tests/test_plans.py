@@ -422,3 +422,27 @@ def test_repetition_arrow_udf_evaluates_once(spark):
     # count detail headers = physical node count
     assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
     assert_no_shuffle(out)
+
+
+def test_dunning_training_reads_corpus_once(spark, pages_df):
+    """Building the Dunning model table runs no Spark job, and its
+    executed plan has ONE Python count pass: the per-language totals
+    reuse the (lang, feat) aggregate's exchange instead of recounting."""
+    import re
+
+    from language_identification_spark.models.train import train_dunning
+
+    sc = spark.sparkContext
+    group = "test-dunning-build"
+    sc.setJobGroup(group, "train_dunning builds a plan only")
+    try:
+        model = train_dunning(pages_df.select("text", "lang"))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    model.collect()
+    plan = model._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"MapInPandas", final)) == 1, plan
+    assert "ReusedExchange" in final, plan

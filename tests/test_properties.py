@@ -4,9 +4,13 @@ inputs."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from language_identification_spark.functions.ngramcount import (
+    grouped_gram_counts,
+    rank_profile,
+)
 from language_identification_spark.functions.scrub import scrub_text
 from language_identification_spark.functions.text import (
     py_char_ngrams,
@@ -16,6 +20,7 @@ from language_identification_spark.functions.text import (
 )
 from language_identification_spark.models.hashed_ngram import DIM, doc_bucket_ids
 from language_identification_spark.models.perplexity import doc_bigram_keys
+from language_identification_spark.oracle.reference import ct_profile
 
 TEXT = st.text(min_size=0, max_size=400)
 ASCII_TEXT = st.text(
@@ -54,6 +59,36 @@ def test_char_ngrams_reference_padding(s, n):
     grams = py_char_ngrams(s, n)
     assert len(grams) == len(s) + 1  # padded length (len + n) - n + 1
     assert all(len(g) == n for g in grams)
+
+
+# 7,134 distinct codepoints with "_" and the emoji: five dense indices
+# (+1) no longer fit one uint64
+_WIDE_ALPHABET = "".join(chr(0x4E00 + i) for i in range(7132)) + "😀"
+
+
+@given(st.text(), st.integers(min_value=1, max_value=500))
+@example("", 400)
+@example("_", 400)
+@example("_" * 40, 3)
+@example("ab ab abc", 10_000)
+@example(_WIDE_ALPHABET, 400)
+@example(_WIDE_ALPHABET, 10**6)
+@settings(max_examples=200, deadline=None)
+def test_rank_profile_matches_ct_profile(s, max_size):
+    """The two-word numpy rank-profile kernel equals the oracle's
+    Counter loop: same grams, counts and (-count, gram) order."""
+    assert rank_profile(s, max_size) == ct_profile(s, max_size)
+
+
+def test_gram_kernels_accept_lone_surrogates():
+    """A lone surrogate is one codepoint to the str oracles; the packed
+    kernels encode/decode with surrogatepass and agree."""
+    s = "ab\ud800cd"
+    grams, cnts = grouped_gram_counts([s], 2, True)
+    assert dict(zip(grams, cnts.tolist())) == {
+        g: 1 for g in ("_a", "ab", "b\ud800", "\ud800c", "cd", "d_")
+    }
+    assert rank_profile(s, 400) == ct_profile(s, 400)
 
 
 @given(ASCII_TEXT)
