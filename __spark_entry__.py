@@ -294,16 +294,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def gopher_scores(spark, sf):
-        # r4 Gopher/C4 heuristic completion: stop-word fraction (broadcast
+        # r4 Gopher/C4 heuristic completion: stop-word fraction (default
         # per-fixture-language lexicon), bullet/ellipsis line ratios,
-        # duplicate-line fraction — all native SQL columns
-        # (functions/text.with_quality_columns). The documents table is
+        # duplicate-line fraction — computed by the serving feature kernel
+        # (functions/text.with_quality_features). The documents table is
         # single-line, so the gate PLANTS per-row line structure
         # (doc_id % 4 modes: bullet line + dup line / ellipsis line /
         # tripled line / untouched) identically in both engines; ratios
         # are exact small-integer divisions, round(6) for the hash.
         from language_identification_spark.functions.text import (
-            with_quality_columns,
+            with_quality_features,
         )
 
         d = _t(spark, sf, "documents")
@@ -323,7 +323,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .when(mode == 2, F.concat_ws("\n", "text", "text", "text"))
             .otherwise(F.col("text"))
         )
-        out = with_quality_columns(d.select("doc_id", txt.alias("t")), "t")
+        out = with_quality_features(d.select("doc_id", txt.alias("t")), "t")
         return out.select(
             "doc_id",
             "n_words",
@@ -335,9 +335,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def gopher_repetition(spark, sf):
         # r5 Gopher §A1.1 completion: top-{2,3,4}-gram char coverage and
-        # duplicate-{5..10}-gram char fractions via the repetition Arrow
-        # UDF (functions/text.with_repetition_columns; pinned bit-identical
-        # to the Python oracle twin in tests/test_misc_ops.py). The
+        # duplicate-{5..10}-gram char fractions via the serving feature
+        # kernel (functions/text.with_quality_features; pinned bit-identical
+        # to the per-doc Python oracle in tests/test_properties.py). The
         # documents table is random text, so repetition is PLANTED
         # (doc_id % 3: hammered 2-gram / 5-word phrase ×2 / untouched)
         # identically in both engines; all fractions are exact integer
@@ -345,7 +345,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from language_identification_spark.functions.text import (
             DUP_NGRAM_NS,
             TOP_NGRAM_NS,
-            with_repetition_columns,
+            with_quality_features,
         )
 
         d = _t(spark, sf, "documents")
@@ -358,7 +358,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .otherwise(F.col("text"))
         )
-        out = with_repetition_columns(d.select("doc_id", txt.alias("t")), "t")
+        out = with_quality_features(d.select("doc_id", txt.alias("t")), "t")
         return out.select(
             "doc_id",
             *[
@@ -379,10 +379,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 8-CJK-char prefix (char-level spam). The gate checks the new
         # script/diversity feature columns and the two cjk substitute
         # rules from raw text cross-engine; the guard ROUTING itself is
-        # gated by drop_reasons (synthesized is_cjk rows).
+        # gated by drop_reasons (synthesized is_cjk rows). The script
+        # columns come from the serving feature kernel; char_div is the
+        # UNGUARDED ratio (the kernel reports 1.0 for non-CJK docs).
         from language_identification_spark.functions.text import (
             char_diversity_udf,
-            with_script_columns,
+            with_quality_features,
         )
         from language_identification_spark.pipeline.rules import (
             MIN_CJK_CHARS,
@@ -402,11 +404,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         # the sf tables are single parquet files (one input split ⇒ one
         # task); real crawl input is thousands of splits. Repartition so
-        # the per-doc script-count + diversity work parallelizes — the
-        # one shuffle carries (doc_id, t) once, before the 9 regexp
-        # passes, not because the operator needs it at scale.
+        # the per-doc feature + diversity work parallelizes — the one
+        # shuffle carries (doc_id, t) once, before the Arrow passes, not
+        # because the operator needs it at scale.
         variants = d.select("doc_id", txt.alias("t")).repartition(32, "doc_id")
-        out = with_script_columns(variants, "t").withColumn(
+        out = with_quality_features(variants, "t").withColumn(
             "_div", char_diversity_udf()(F.col("t"))
         )
         div = F.round(F.col("_div"), 6)
@@ -684,7 +686,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             quality_score,
         )
         from language_identification_spark.operators.dedup import (
-            _register_cache,
+            scoped_persist,
         )
         from language_identification_spark.operators.filtering import (
             percentile_filter,
@@ -695,7 +697,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # an unpersisted base pays the text scan + counts UDF twice.
         # Registered with the active pair_cache_scope like the span/DSIR
         # bases; measured 2.3-3.4 s → 1.3-2.3 s at sf1.0.
-        d = _register_cache(
+        d = scoped_persist(
             _t(spark, sf, "documents").select(
                 "doc_id", "lang", quality_score(F.col("text")).alias("q_score")
             )
@@ -1515,7 +1517,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             quality_score,
         )
         from language_identification_spark.operators.dedup import (
-            _register_cache,
+            scoped_persist,
         )
         from language_identification_spark.operators.selection import (
             quantile_buckets,
@@ -1524,7 +1526,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Same narrow-base persist as quality_percentile_filter: tercile
         # thresholds + bucket join otherwise re-run the counts UDF scan
         # twice. Measured 2.6-2.8 s → 1.3-1.5 s at sf1.0.
-        d = _register_cache(
+        d = scoped_persist(
             _t(spark, sf, "documents").select(
                 "doc_id", "lang", quality_score(F.col("text")).alias("q_score")
             )

@@ -1,12 +1,15 @@
-"""Text primitives, in two matched flavors:
+"""Text primitives:
 
-1. **Spark Column expressions** (JVM-side, whole-stage-codegen'd) — n-gram
-   generation, tokenization, and the Catalyst-visible heuristic quality
-   columns the oracle gates compare.
-2. **Plain-Python equivalents** — used by the pure-Python oracle AND inside
-   pandas UDFs (the serving UDF computes every heuristic feature here),
-   guaranteeing that anything the pipeline computes in Python matches the
-   oracle bit-for-bit (same module, same code).
+1. **Spark Column expressions** (JVM-side, whole-stage-codegen'd) — char
+   n-grams and whitespace tokenization.
+2. **The Gopher/C4 heuristic feature kernel** —
+   :func:`py_quality_features_batch`, one vectorized pass per Arrow
+   batch. It is the only production implementation: the serving UDF
+   (pipeline/quality.make_fused_udf) and the oracle gates
+   (:func:`with_quality_features`) both run it.
+3. **Per-doc Python oracles** — :func:`py_quality_features` and its
+   helpers, used by the pure-Python pipeline oracle; the kernel equals
+   them bit-for-bit (tests/test_properties.py).
 
 Semantics notes (pinned so Spark SQL, DuckDB oracle SQL, and Python agree):
 - Whitespace class is the Java-default ``\\s`` = ``[ \\t\\n\\x0B\\f\\r]``
@@ -14,8 +17,7 @@ Semantics notes (pinned so Spark SQL, DuckDB oracle SQL, and Python agree):
   Unicode-aware ``\\s``.
 - ``strip`` follows the reference's pandas ``.str.strip()`` (Python
   ``str.strip()``: Unicode whitespace). Spark's ``trim`` only strips
-  ``' '``, so normalization uses ``regexp_replace`` on the Java class above
-  (fixtures only contain ASCII whitespace; documented limitation).
+  ``' '``, so normalization stays Python-side.
 - Char n-grams replicate the reference padding ``'_'*(n-1) + text + '_'``
   (/root/reference/src/models/statistical_models.py:23,38).
 """
@@ -27,6 +29,7 @@ import re
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..pipeline.rules import default_stopwords
 
@@ -43,11 +46,6 @@ _PY_SYMBOL_RE = re.compile(SYMBOL_CLASS)
 # ---------------------------------------------------------------------------
 # Spark Column expressions (JVM side)
 # ---------------------------------------------------------------------------
-def norm_text(col: Column) -> Column:
-    """Strip leading/trailing whitespace — reference src/utils.py:89-90."""
-    return F.regexp_replace(F.regexp_replace(col, f"^{JAVA_WS}+", ""), f"{JAVA_WS}+$", "")
-
-
 def char_ngrams(col: Column, n: int, reference_pad: bool = True) -> Column:
     """Array of character n-grams with the reference's sentinel padding.
 
@@ -105,90 +103,59 @@ def words(col: Column) -> Column:
     )
 
 
-WS_CHARS = " \t\n\x0b\f\r"
-SYMBOL_CHARS = "#!$%&*+=@^~|<>"
-
 # Gopher repetition rules (r5): which word-n-gram orders feed the
 # top-n-gram coverage rule vs the duplicate-n-gram rule (Gopher §A1.1).
 TOP_NGRAM_NS = (2, 3, 4)
 DUP_NGRAM_NS = (5, 6, 7, 8, 9, 10)
+REPETITION_KEYS = tuple(f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS) + tuple(
+    f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS
+)
 
-
-# The 9 Gopher word-n-gram repetition fractions plus the char-level
-# diversity ratio (the CJK-route repetition substitute — see
-# pipeline/rules.py MIN_CJK_DISTINCT_CHAR_4GRAM_RATIO): all computed in
-# the same Arrow pass.
+# Window of the char-level diversity ratio (the CJK-route repetition
+# substitute — see pipeline/rules.py MIN_CJK_DISTINCT_CHAR_4GRAM_RATIO).
 CHAR_DIVERSITY_N = 4
-REPETITION_KEYS = (
-    tuple(f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS)
-    + tuple(f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS)
-    + ("distinct_char_4gram_ratio",)
+
+# Every heuristic feature :func:`py_quality_features_batch` returns, in
+# order — the one declaration of the feature schema (the serving UDF's
+# struct is the scores followed by these fields).
+QUALITY_FEATURE_STRUCT = T.StructType(
+    [
+        T.StructField("n_chars", T.IntegerType()),
+        T.StructField("n_words", T.IntegerType()),
+        T.StructField("mean_word_len", T.DoubleType()),
+        T.StructField("symbol_ratio", T.DoubleType()),
+        T.StructField("distinct_word_ratio", T.DoubleType()),
+        T.StructField("stopword_ratio", T.DoubleType()),
+        T.StructField("bullet_line_ratio", T.DoubleType()),
+        T.StructField("ellipsis_line_ratio", T.DoubleType()),
+        T.StructField("dup_line_ratio", T.DoubleType()),
+        T.StructField("n_cjk", T.IntegerType()),
+        T.StructField("n_script_letters", T.IntegerType()),
+        T.StructField("is_cjk", T.BooleanType()),
+        T.StructField("distinct_char_4gram_ratio", T.DoubleType()),
+    ]
+    + [T.StructField(k, T.DoubleType()) for k in REPETITION_KEYS]
 )
 
 
-def repetition_features_udf():
-    """One pandas UDF returning the 10-field repetition struct, computed
-    per batch by :func:`batch_repetition_features` (value-identical to
-    the per-doc oracle :func:`py_repetition_features`).
+def with_quality_features(df: DataFrame, text_col: str) -> DataFrame:
+    """``df`` plus every :data:`QUALITY_FEATURE_STRUCT` column of the
+    already-normalized ``text_col`` (NULL scores as empty), computed by
+    :func:`py_quality_features_batch` — the kernel the serving UDF
+    (pipeline/quality.make_fused_udf) runs — with the default stop-word
+    lexicon. One Arrow UDF pass, narrow, no shuffle. The oracle gates
+    call this, so they check the serving kernel itself."""
 
-    Why a UDF in an otherwise-native column set: the SQL form of these
-    features is 9 sorted-run ``aggregate`` folds — interpreted HOFs,
-    never codegen'd — and measured 10× slower end-to-end than this Arrow
-    pass (66.6k → 6.5k docs/s in BENCH_r05), the same lesson the
-    winnowing vectorization quantified at ~1200× (functions/analysis.py)."""
-    schema = ", ".join(f"{k} double" for k in REPETITION_KEYS)
+    @F.pandas_udf(QUALITY_FEATURE_STRUCT)
+    def feats(texts: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(py_quality_features_batch(texts.fillna("")))
 
-    @F.pandas_udf(schema)
-    def rep(texts: pd.Series) -> pd.DataFrame:
-        s = texts.fillna("")
-        # char diversity is the CJK-substitute rule's input — computed
-        # only where that rule can consult it (is_cjk docs; 1.0 = not
-        # applicable otherwise). The mask re-derives is_cjk from the
-        # same script classes the native columns use, so the guard
-        # branches identically in every implementation. Measured: the
-        # unconditional per-doc set build cost the fused pipeline ~1.5×
-        # (121k → 80k docs/s) on a mostly-latin corpus.
-        sc = batch_script_symbol_counts(s.tolist())
-        n_cjk = sc["n_cjk"]
-        is_cjk = n_cjk * 2 > (
-            n_cjk + sc["n_latin"] + sc["n_cyr"] + sc["n_greek"]
-        )
-        toks_list = [py_words(x) for x in s]
-        feats = batch_repetition_features(
-            toks_list, s.str.len().to_numpy(dtype="int64")
-        )
-        feats["distinct_char_4gram_ratio"] = [
-            py_distinct_char_ngram_ratio(x) if is_cjk[i] else 1.0
-            for i, x in enumerate(s)
-        ]
-        return pd.DataFrame(
-            {k: feats[k] for k in REPETITION_KEYS}, columns=list(REPETITION_KEYS)
-        )
-
-    return rep
-
-
-def with_repetition_columns(df: DataFrame, text_col: str = "norm_text") -> DataFrame:
-    """Gopher §A1.1 repetition features:
-    ``top_{2,3,4}gram_char_frac`` (chars covered by the most frequent
-    word n-gram / total chars; 0 unless it occurs ≥ 2 times) and
-    ``dup_{5..10}gram_char_frac`` (chars in word n-grams occurring ≥ 2
-    times / total chars), each capped at 1.0 (overlapping occurrences
-    can cover more than n_chars), plus the CJK-guarded
-    ``distinct_char_4gram_ratio``. One vectorized Arrow UDF pass —
-    narrow, no shuffle. All counts are exact integers divided once ⇒
-    bit-identical to the Python twin (py_repetition_features)."""
-    rep = repetition_features_udf()
-    df = df.withColumn("_rep", rep(F.col(text_col)))
-    for k in REPETITION_KEYS:
-        df = df.withColumn(k, F.col("_rep")[k])
-    return df.drop("_rep")
+    return df.withColumn("_qf", feats(F.col(text_col))).select(*df.columns, "_qf.*")
 
 
 def char_diversity_udf(n: int = CHAR_DIVERSITY_N):
-    """The ``distinct_char_4gram_ratio`` field of the repetition UDF, on its
-    own — for callers that want ONLY the diversity ratio (unguarded: no
-    is_cjk mask)."""
+    """``distinct_char_4gram_ratio`` on its own and unguarded: computed
+    for every doc, where the kernel reports 1.0 for non-CJK docs."""
 
     @F.pandas_udf("double")
     def div(texts: pd.Series) -> pd.Series:
@@ -199,144 +166,11 @@ def char_diversity_udf(n: int = CHAR_DIVERSITY_N):
     return div
 
 
-# Gopher-style line heuristics — pinned, no trimming, so Spark SQL, the
-# Python twin, and the DuckDB oracle evaluate byte-identical predicates.
+# Gopher-style line heuristics — pinned, no trimming, so the batch
+# kernel, the per-doc oracle and the DuckDB oracle SQL evaluate
+# byte-identical predicates.
 BULLET_PREFIXES = ("- ", "* ", "•")  # '•' matches with or without space
 ELLIPSIS_SUFFIXES = ("...", "…")
-
-
-# Above this size the stop-word lexicon no longer enters the plan as a
-# literal array (a 10k-element literal bloats every serialized plan/task
-# and the codegen source) — it ships as DATA in a broadcast one-row
-# relation instead (see with_quality_columns).
-LEXICON_LITERAL_MAX = 1024
-
-
-def with_quality_columns(
-    df: DataFrame,
-    text_col: str = "norm_text",
-    stopwords: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Gopher/C4-style heuristic quality features: doc length, word
-    stats, symbol ratio, repetition ratio, stop-word fraction,
-    bullet/ellipsis line ratios, duplicate-line fraction. Most columns
-    are native Spark SQL expressions; the repetition/diversity columns
-    go through :func:`with_repetition_columns`' Arrow UDF.
-
-    NOT the serving path — the serving UDF
-    (pipeline/quality.make_fused_udf) computes the same features with
-    :func:`py_quality_features_batch` in its one Arrow pass. This is the
-    Catalyst-visible twin: it backs the ``gopher_scores`` oracle gate
-    (its script columns back ``cjk_quality_rules``) and is pinned equal
-    to the serving UDF by tests/test_pipeline.py::test_fused_matches_native.
-
-    Assumes ``text_col`` is already normalized (no leading/trailing ws).
-    ``stopwords`` defaults to :func:`..pipeline.rules.default_stopwords`
-    (the per-fixture-language lexicon). Lexicon transport depends on
-    size: up to :data:`LEXICON_LITERAL_MAX` words it enters the plan as
-    a literal array (constant-folded, zero join machinery); a
-    production-size lexicon (10k+ words) instead rides a ONE-ROW
-    broadcast relation cross-joined onto the input — the plan stays free
-    of the giant literal and the lexicon ships once per executor via the
-    broadcast exchange, exactly like the fused UDF's model broadcast.
-    Both transports evaluate the identical ``array_contains`` predicate
-    per token ⇒ identical ratios and keep decisions (pinned by
-    tests/test_pipeline.py::test_large_lexicon_broadcast_path). The
-    per-token membership scan is O(|lexicon|), fine for a gate; the
-    serving UDF uses a hash-set lookup.
-
-    Perf note: character counting uses ``translate`` (codegen'd, allocation
-    light) instead of ``regexp_replace``, and mean word length is derived
-    as (non-ws chars)/n_words instead of an interpreted higher-order
-    ``aggregate`` over the word array — HOFs are not codegen'd and measured
-    as the pipeline's JVM bottleneck at 32 cores. The line/stop-word
-    columns do use ``filter`` HOFs: they are keep-rule inputs with tiny
-    operand arrays (lines per doc, ≤200 stopwords). Semantics are
-    identical to the Python twin ``py_quality_features``.
-    """
-    if stopwords is None:
-        stopwords = default_stopwords()
-    if len(stopwords) <= LEXICON_LITERAL_MAX:
-        stop_arr = F.array(*[F.lit(s) for s in stopwords])
-    else:
-        lex = df.sparkSession.createDataFrame(
-            [(list(stopwords),)], "__stop_lex: array<string>"
-        )
-        # one-row broadcast relation: stream-static-join safe, and the
-        # lexicon ships as broadcast data instead of a plan literal
-        df = df.crossJoin(F.broadcast(lex))
-        stop_arr = F.col("__stop_lex")
-    c = F.col(text_col)
-    w = words(c)
-    n_words = F.size(w)
-    non_ws = F.length(F.translate(c, WS_CHARS, ""))
-    non_symbol = F.length(F.translate(c, SYMBOL_CHARS, ""))
-    lines = F.split(c, "\n")
-    n_lines = F.size(lines)  # ≥ 1 always: split('', ...) yields ['']
-    n_stop = F.size(F.filter(w, lambda t: F.array_contains(stop_arr, t)))
-    n_bullet = F.size(
-        F.filter(
-            lines,
-            lambda l: l.startswith(BULLET_PREFIXES[0])
-            | l.startswith(BULLET_PREFIXES[1])
-            | l.startswith(BULLET_PREFIXES[2]),
-        )
-    )
-    n_ellipsis = F.size(
-        F.filter(
-            lines,
-            lambda l: l.endswith(ELLIPSIS_SUFFIXES[0])
-            | l.endswith(ELLIPSIS_SUFFIXES[1]),
-        )
-    )
-    return (
-        df.withColumn("n_chars", F.length(c))
-        .withColumn("n_words", n_words)
-        .withColumn(
-            "mean_word_len",
-            F.when(n_words > 0, non_ws.cast("double") / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "symbol_ratio",
-            F.when(
-                n_words > 0, (F.length(c) - non_symbol).cast("double") / n_words
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "distinct_word_ratio",
-            F.when(n_words > 0, F.size(F.array_distinct(w)).cast("double") / n_words)
-            .otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "stopword_ratio",
-            F.when(n_words > 0, n_stop.cast("double") / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn("bullet_line_ratio", n_bullet.cast("double") / n_lines)
-        .withColumn("ellipsis_line_ratio", n_ellipsis.cast("double") / n_lines)
-        .withColumn(
-            "dup_line_ratio",
-            (n_lines - F.size(F.array_distinct(lines))).cast("double") / n_lines,
-        )
-        .transform(lambda d: with_script_columns(d, text_col))
-        .transform(lambda d: with_repetition_columns(d, text_col))
-        .drop("__stop_lex")
-    )
-
-
-def with_script_columns(df: DataFrame, text_col: str = "norm_text") -> DataFrame:
-    """Script-routing columns (r6): per-script letter counts collapse to
-    ``n_cjk`` / ``n_script_letters`` and the ``is_cjk`` majority flag that
-    gates the word-based keep rules (pipeline/rules.RULE_GUARDS). Native
-    ``regexp_count`` — codegen, fuses into the scan."""
-    from .analysis import script_counts
-
-    sc = script_counts(F.col(text_col))
-    total = sc["n_latin"] + sc["n_cjk"] + sc["n_cyrillic"] + sc["n_greek"]
-    return (
-        df.withColumn("n_cjk", sc["n_cjk"])
-        .withColumn("n_script_letters", total)
-        .withColumn("is_cjk", F.col("n_cjk") * 2 > F.col("n_script_letters"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -364,7 +198,9 @@ def _py_line_feats(norm: str) -> tuple[int, int, int, int]:
 def py_quality_features_batch(norm_series, stopwords: tuple[str, ...] | None = None) -> dict[str, list]:
     """Vectorized batch twin of :func:`py_quality_features` — same integer
     counts, same divisions, so every float is bit-identical to the
-    per-doc oracle path. Used by the fused serving UDF.
+    per-doc oracle path. The one production implementation of these
+    features: the fused serving UDF and :func:`with_quality_features`
+    both call it.
 
     Batch form, measured against alternatives at web-doc lengths: char and
     symbol counts are vectorized pandas str ops; tokenization keeps a
@@ -380,19 +216,10 @@ def py_quality_features_batch(norm_series, stopwords: tuple[str, ...] | None = N
     import pandas as pd
 
     stopset = frozenset(stopwords if stopwords is not None else default_stopwords())
-    rep_keys = tuple(f"top_{nn}gram_char_frac" for nn in TOP_NGRAM_NS) + tuple(
-        f"dup_{nn}gram_char_frac" for nn in DUP_NGRAM_NS
-    )
-    keys = (
-        "n_chars", "n_words", "mean_word_len", "symbol_ratio",
-        "distinct_word_ratio", "stopword_ratio", "bullet_line_ratio",
-        "ellipsis_line_ratio", "dup_line_ratio",
-        "n_cjk", "n_script_letters", "is_cjk", "distinct_char_4gram_ratio",
-    ) + rep_keys
     s = pd.Series(norm_series).reset_index(drop=True)
     n = len(s)
     if n == 0:
-        return {k: [] for k in keys}
+        return {k: [] for k in QUALITY_FEATURE_STRUCT.fieldNames()}
     n_chars = s.str.len().to_numpy(dtype=np.int64)
     sc = batch_script_symbol_counts(s.tolist())
     sym_cnt = sc["n_symbol"]
@@ -416,8 +243,9 @@ def py_quality_features_batch(norm_series, stopwords: tuple[str, ...] | None = N
         toklen[i] = sum(map(len, toks))
         stop_cnt[i] = sum(1 for t in toks if t in stopset)
         n_lines[i], bullet[i], ellipsis[i], dup[i] = _py_line_feats(x)
-        # cjk-guarded like every other implementation (1.0 = the rule
-        # that consumes this can never consult it for this doc)
+        # cjk-guarded like the oracle (1.0 = the rule that consumes this
+        # can never consult it for this doc); the unguarded per-doc set
+        # build measured ~1.5× slower serving on a mostly-latin corpus
         char_div[i] = (
             py_distinct_char_ngram_ratio(x)
             if n_cjk[i] * 2 > n_scripts[i]
@@ -469,7 +297,8 @@ def py_distinct_char_ngram_ratio(s: str, n: int = CHAR_DIVERSITY_N) -> float:
 
 
 def py_script_features(norm: str) -> dict:
-    """Twin of :func:`with_script_columns`."""
+    """Per-doc oracle of the kernel's script-routing fields
+    (:func:`batch_script_symbol_counts`)."""
     from .analysis import CJK_PY, CYR_PY, GREEK_PY, LATIN_PY
 
     n_cjk = len(CJK_PY.findall(norm))
@@ -515,9 +344,14 @@ def py_quality_features(norm: str, stopwords: tuple[str, ...] | None = None) -> 
 
 
 def py_repetition_features(toks: list[str], n_chars: int) -> dict[str, float]:
-    """Python twin of :func:`with_repetition_columns` over an already-
-    tokenized doc: same integer counts, same single division, same 1.0
-    cap and same cnt≥2 pin ⇒ bit-identical floats.
+    """Gopher §A1.1 repetition features of an already-tokenized doc:
+    ``top_{2,3,4}gram_char_frac`` (chars covered by the most frequent
+    word n-gram / total chars; 0 unless it occurs ≥ 2 times) and
+    ``dup_{5..10}gram_char_frac`` (chars in word n-grams occurring ≥ 2
+    times / total chars), each capped at 1.0 (overlapping occurrences can
+    cover more than n_chars). The per-doc oracle of
+    :func:`batch_repetition_features`: same integer counts, same single
+    division, same 1.0 cap and same cnt≥2 pin ⇒ bit-identical floats.
 
     Monotonicity early-exit (r5 serving-cost fix, measured 1.8× on the
     fixture corpus, bit-identical by construction): two equal n-gram
@@ -580,7 +414,7 @@ def batch_script_symbol_counts(texts) -> dict[str, "np.ndarray"]:
     if int(lens.sum()) == 0:
         return {k: np.zeros(n, dtype=np.int64) for k in out_keys}
     big = "".join(texts)
-    cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32)
+    cp = np.frombuffer(big.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
     # bincount of matching chars' doc index: O(matches) per class after
     # one O(chars) doc-index expansion (a full-buffer cumsum per class
     # measured 5× slower)
@@ -627,8 +461,7 @@ def batch_repetition_features(
     from .wordhash import fnv_token_hashes
 
     n_docs = len(toks_list)
-    keys = list(REPETITION_KEYS[:-1])  # the 9 word-n-gram fractions
-    out = {k: np.zeros(n_docs, dtype=np.float64) for k in keys}
+    out = {k: np.zeros(n_docs, dtype=np.float64) for k in REPETITION_KEYS}
     nc = np.asarray(n_chars, dtype=np.int64)
     ntoks = np.fromiter((len(t) for t in toks_list), dtype=np.int64, count=n_docs)
     all_toks: list[str] = []

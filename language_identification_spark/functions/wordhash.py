@@ -73,7 +73,9 @@ def fnv_token_hashes(all_toks: list[str], lens: np.ndarray | None = None) -> np.
         return np.empty(0, dtype=np.uint64)
     with np.errstate(over="ignore"):
         big = "\x00".join(all_toks)
-        cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
+        cp = np.frombuffer(
+            big.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+        ).astype(np.uint64)
         if lens is None:
             lens = np.fromiter((len(w) for w in all_toks), dtype=np.int64, count=nw)
         starts = np.zeros(nw, dtype=np.int64)

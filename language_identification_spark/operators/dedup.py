@@ -123,7 +123,12 @@ def pair_cache_scope():
         scope.release()
 
 
-def _register_cache(df: DataFrame) -> DataFrame:
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it with the innermost active
+    :func:`pair_cache_scope` (the module default registry when none is
+    active), which unpersists it on exit. Returns ``df`` for chaining.
+    Materialize every result that reads it before the scope exits; an
+    early release costs a recompute, never wrong rows."""
     df.persist()
     _current_scope().add(df)
     return df
@@ -347,7 +352,7 @@ def _bucket_self_join(
     if spill_dir is not None:
         banded = _spill_banded(banded, key_cols, spill_dir)
     elif max_bucket is not None:
-        banded = _register_cache(banded)
+        banded = scoped_persist(banded)
     if max_bucket is not None:
         hot = (
             banded.groupBy(*key_cols)
@@ -612,7 +617,7 @@ def incremental_near_duplicates(
     shn_src = new_base
     shc_src = corpus_df
     if candidate_first:
-        cand = _register_cache(cand)
+        cand = scoped_persist(cand)
         shn_src = new_base.join(
             cand.select("new_id"), F.col("id") == F.col("new_id"), "left_semi"
         )
@@ -738,7 +743,7 @@ def minhash_near_duplicates(
     # and the extra shuffle measured ~+3s on the sf0.1 gate corpus.
     sh = base
     if candidate_first:
-        cand = _register_cache(cand)
+        cand = scoped_persist(cand)
         cand_ids = cand.select(F.col("id_a").alias("cid")).unionAll(
             cand.select(F.col("id_b").alias("cid"))
         )

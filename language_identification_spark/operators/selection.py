@@ -225,10 +225,10 @@ def dsir_weights(
     #   the same bounded-driver-action class as ivf's centroid ids) and
     #   re-enter as literal tables; the log/ratio arithmetic stays in
     #   JVM expressions, so every double equals the old plan's.
-    from .dedup import _register_cache
+    from .dedup import scoped_persist
 
     bucket_arr = token_buckets_udf(n_buckets)
-    per_tok = _register_cache(
+    per_tok = scoped_persist(
         raw_df.select(
             F.col(id_col),
             F.explode_outer(bucket_arr(F.col(text_col))).alias("bucket"),

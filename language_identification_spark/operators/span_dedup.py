@@ -73,13 +73,13 @@ def duplicated_spans(
       (doc, gh), so plain ``count(*)`` equals the old
       ``count_distinct(id)`` without its two-Exchange distinct-aggregate
       rewrite."""
-    from .dedup import _register_cache
+    from .dedup import scoped_persist
 
     # one UDF pass: the (id, hash-array) base feeds both the freq
     # aggregation and the position join; it is hashes-only (~8 bytes per
     # window), so the persist is small — registered with the active
     # pair_cache_scope like the LSH caches
-    base = _register_cache(
+    base = scoped_persist(
         docs.select(
             F.col(id_col).alias("id"),
             word_gram_hashes_udf(k)(F.col(text_col)).alias("_gh"),

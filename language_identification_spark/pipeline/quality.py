@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.scrub import scrub_series
-from ..functions.text import DUP_NGRAM_NS, TOP_NGRAM_NS, py_quality_features_batch
+from ..functions.text import QUALITY_FEATURE_STRUCT, py_quality_features_batch
 from ..models.hashed_ngram import DIM, HashedNgramNB, featurize_counts_pdf
 from ..models.perplexity import BigramLM, bigram_counts_pdf
 from ..session import ship_package
@@ -38,26 +38,8 @@ FUSED_STRUCT = T.StructType(
         T.StructField("lang_conf", T.DoubleType()),
         T.StructField("perplexity", T.DoubleType()),
         T.StructField("scrubbed_text", T.StringType()),
-        T.StructField("n_chars", T.IntegerType()),
-        T.StructField("n_words", T.IntegerType()),
-        T.StructField("mean_word_len", T.DoubleType()),
-        T.StructField("symbol_ratio", T.DoubleType()),
-        T.StructField("distinct_word_ratio", T.DoubleType()),
-        T.StructField("stopword_ratio", T.DoubleType()),
-        T.StructField("bullet_line_ratio", T.DoubleType()),
-        T.StructField("ellipsis_line_ratio", T.DoubleType()),
-        T.StructField("dup_line_ratio", T.DoubleType()),
-        T.StructField("n_cjk", T.IntegerType()),
-        T.StructField("n_script_letters", T.IntegerType()),
-        T.StructField("is_cjk", T.BooleanType()),
-        T.StructField("distinct_char_4gram_ratio", T.DoubleType()),
     ]
-    + [
-        T.StructField(f"top_{n}gram_char_frac", T.DoubleType()) for n in TOP_NGRAM_NS
-    ]
-    + [
-        T.StructField(f"dup_{n}gram_char_frac", T.DoubleType()) for n in DUP_NGRAM_NS
-    ]
+    + QUALITY_FEATURE_STRUCT.fields
 )
 
 
@@ -67,8 +49,8 @@ class QualityModels:
     including the stop-word lexicon: at production scale that list is
     10k+ words per language, and riding the model broadcast (instead of
     being inlined into the plan as a literal) is the correct transport.
-    The Catalyst-visible gate twin (``functions/text.with_quality_columns``)
-    takes the same tuple, so the two stay bit-identical."""
+    The per-doc oracle (``oracle/pipeline.run_oracle_pipeline``) takes
+    the same tuple, so the two stay bit-identical."""
 
     langid: HashedNgramNB
     lm: BigramLM

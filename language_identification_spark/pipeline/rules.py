@@ -132,7 +132,7 @@ RULE_SPECS: list[tuple[str, str, str, float]] = (
 # rule assumes space-delimited tokens — skipped for CJK-majority docs.
 # "cjk": the char-based substitute — applies ONLY to CJK-majority docs.
 # Absent: applies to every doc. ``is_cjk`` itself is a feature column
-# (letters are CJK-majority; see functions/text.with_quality_columns).
+# (letters are CJK-majority; see functions/text.py_quality_features_batch).
 RULE_GUARDS: dict[str, str] = {
     "too_few_words": "word",
     "mean_word_len_low": "word",

@@ -60,6 +60,7 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from language_identification_spark.operators.dedup import pair_cache_scope
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -83,9 +84,11 @@ def main():
     n_bad = 0
     for name in names:
         try:
-            sdf = qs[name](spark, sf_dir)
-            scols = sdf.columns
-            srows = sdf.collect()
+            # persists a query registers are released once it is collected
+            with pair_cache_scope():
+                sdf = qs[name](spark, sf_dir)
+                scols = sdf.columns
+                srows = sdf.collect()
         except Exception as e:
             print(f"{name}: SPARK ERROR {type(e).__name__}: {e}")
             n_bad += 1

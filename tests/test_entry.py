@@ -14,6 +14,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from language_identification_spark.operators import dedup
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -69,10 +70,15 @@ QUERIES = entrymod.queries()
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_vs_oracle(name, spark, sf_dir, duck):
-    q = QUERIES[name]
-    sdf = q(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
+    # run and materialize inside a cache scope: every persist the query
+    # registers is released here, none lands in the unscoped default
+    n_unscoped = len(dedup._DEFAULT_SCOPE._entries)
+    with dedup.pair_cache_scope():
+        sdf = QUERIES[name](spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+        spdf = sdf.toPandas() if name in ORACLE else None
+    assert len(dedup._DEFAULT_SCOPE._entries) == n_unscoped, name
 
     if name not in ORACLE:
         # rows-only check (driver's weaker mode)
@@ -96,7 +102,7 @@ def test_query_vs_oracle(name, spark, sf_dir, duck):
     # dtype-exactness gate: the driver compares pandas-materialized frames,
     # so representation differences (int64 75 vs float64 75.0) fail its hash
     # even when values are equal. Replicate that exactly.
-    sp = _pandas_canon(sdf.toPandas())
+    sp = _pandas_canon(spdf)
     dp = _pandas_canon(duck.execute(ORACLE[name]).df())
     diffs = [i for i, (a, b) in enumerate(zip(sp, dp)) if a != b]
     assert not diffs, (

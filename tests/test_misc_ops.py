@@ -154,15 +154,14 @@ def test_events_quantiles_approx_bound(spark, sf_dir):
 
 
 def test_repetition_columns_native_matches_python(spark):
-    """r5: the repetition Arrow UDF (the Catalyst-visible gate column
-    set) must be bit-identical to the Python twin on adversarial shapes —
-    overlapping repeats, cap saturation, ties between gram lengths,
-    short docs."""
+    """r5: the repetition columns of the gates' feature UDF
+    (with_quality_features) must be bit-identical to the per-doc Python
+    oracle on adversarial shapes — overlapping repeats, cap saturation,
+    ties between gram lengths, short docs."""
     from language_identification_spark.functions.text import (
-        DUP_NGRAM_NS,
-        TOP_NGRAM_NS,
+        REPETITION_KEYS,
         py_quality_features,
-        with_repetition_columns,
+        with_quality_features,
     )
 
     texts = [
@@ -178,12 +177,8 @@ def test_repetition_columns_native_matches_python(spark):
         "你好 世界 mixed latin words here 你好",  # mixed, latin-majority: 1.0
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
-    keys = (
-        [f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS]
-        + [f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS]
-        + ["distinct_char_4gram_ratio"]
-    )
-    out = {r["i"]: r for r in with_repetition_columns(df, "t").collect()}
+    keys = [*REPETITION_KEYS, "distinct_char_4gram_ratio"]
+    out = {r["i"]: r for r in with_quality_features(df, "t").collect()}
     for i, t in enumerate(texts):
         exp = py_quality_features(t)
         for k in keys:
@@ -1331,13 +1326,13 @@ def test_cjk_routing_fixes_word_rule_misjudgement(spark):
     misclassification the old rule set produced; the cjk route keeps it.
     Char-level spam is dropped by the cjk substitute rule. A latin doc that
     drops its spaces is garbage and still drops. Asserted through BOTH the
-    Python twin and the native Spark predicate."""
+    Python oracle and the Spark predicate over the gates' feature UDF."""
     import pandas as pd
 
     from language_identification_spark.fixtures.pages import gen_pages
     from language_identification_spark.functions.text import (
         py_quality_features,
-        with_quality_columns,
+        with_quality_features,
     )
     from language_identification_spark.pipeline.rules import (
         MIN_WORDS,
@@ -1372,7 +1367,7 @@ def test_cjk_routing_fixes_word_rule_misjudgement(spark):
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["k", "norm_text"]))
     out = {
         r["k"]: r["reason"]
-        for r in with_quality_columns(df)
+        for r in with_quality_features(df, "norm_text")
         .select("k", drop_reason_expr(include_model_rules=False).alias("reason"))
         .collect()
     }

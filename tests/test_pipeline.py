@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from language_identification_spark.functions.text import norm_text, with_quality_columns
+from language_identification_spark.functions.text import QUALITY_FEATURE_STRUCT
 from language_identification_spark.oracle.pipeline import (
     run_oracle_pipeline,
     train_oracle_models,
@@ -21,24 +21,22 @@ from language_identification_spark.pipeline.quality import (
     run_quality_pipeline,
     train_quality_models,
 )
-from language_identification_spark.pipeline.rules import keep_expr
 
 
-def _sql_twin(served, stopwords):
-    """The Catalyst-visible twin of the serving UDF's heuristic features
-    (``with_quality_columns``) over the same stripped text, with the
-    served model scores and the same keep predicate."""
-    base = served.select(
-        "url", "lang_conf", "perplexity", norm_text(F.col("text")).alias("norm_text")
-    )
-    return with_quality_columns(base, stopwords=stopwords).withColumn("keep", keep_expr())
+def _by_url(rows, cols):
+    """url → tuple of ``cols``, for Spark Rows and oracle records alike."""
+    return {r["url"]: tuple(r[c] for c in cols) for r in rows}
 
 
 @pytest.fixture(scope="module")
-def oracle_out(pages_pdf):
+def oracle_models(pages_pdf):
     train = pages_pdf[pages_pdf["split"] == "train"][["text", "lang"]]
-    nb, lm = train_oracle_models(train)
-    return run_oracle_pipeline(pages_pdf, nb, lm).set_index("url")
+    return train_oracle_models(train)
+
+
+@pytest.fixture(scope="module")
+def oracle_out(pages_pdf, oracle_models):
+    return run_oracle_pipeline(pages_pdf, *oracle_models).set_index("url")
 
 
 @pytest.fixture(scope="module")
@@ -118,101 +116,64 @@ def test_output_schema(spark, pages_df, spark_models):
     assert "html" not in cols  # pruned: never carry the heavy binary column
 
 
-def test_fused_matches_native(spark, pages_df, spark_models):
-    """The one gate between the two feature implementations: every
-    heuristic feature the serving UDF returns, and the keep decision,
-    equal the native Spark SQL twin (with_quality_columns) over the
-    stripped text."""
-    from language_identification_spark.functions.text import (
-        DUP_NGRAM_NS,
-        TOP_NGRAM_NS,
-    )
-
-    served = run_quality_pipeline(spark, pages_df, spark_models)
-    twin = _sql_twin(served, spark_models.stopwords)
-    cols = ["url", "keep", "n_chars", "n_words", "mean_word_len",
-            "symbol_ratio", "distinct_word_ratio", "stopword_ratio",
-            "bullet_line_ratio", "ellipsis_line_ratio", "dup_line_ratio"]
-    cols += [f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS]
-    cols += [f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS]
-    cols += ["n_cjk", "n_script_letters", "is_cjk", "distinct_char_4gram_ratio"]
-    a = sorted(map(tuple, twin.select(cols).collect()))
-    b = sorted(map(tuple, served.select(cols).collect()))
-    assert a == b
+def test_served_features_match_oracle(oracle_out, spark_out):
+    """The feature kernel at pipeline level: every heuristic feature the
+    serving UDF returns, and the keep decision, equal the per-doc Python
+    oracle's for the same url."""
+    cols = ["keep", *QUALITY_FEATURE_STRUCT.fieldNames()]
+    for url, o in oracle_out.iterrows():
+        s = spark_out[url]
+        assert {c: s[c] for c in cols} == {c: o[c] for c in cols}, url
 
 
-def test_custom_stopword_lexicon_flows_through(spark, pages_df, pages_pdf):
+def test_custom_stopword_lexicon_flows_through(spark, pages_df, pages_pdf, oracle_models):
     """r4: the stop-word lexicon rides the model broadcast (QualityModels)
-    and reaches all three implementations — the serving Arrow UDF, the
-    native SQL twin, and the pure-Python oracle — producing identical
-    stopword_ratio and keep decisions. A deliberately absurd lexicon
-    (words that never occur) must drop every doc via the stop-word rule
-    alone, proving the custom list is actually in effect everywhere."""
-    from language_identification_spark.oracle.pipeline import (
-        run_oracle_pipeline as oracle_run,
-        train_oracle_models as oracle_train,
-    )
-
+    and reaches both implementations — the serving Arrow UDF and the
+    pure-Python oracle — producing identical stopword_ratio and keep
+    decisions. A deliberately absurd lexicon (words that never occur)
+    must drop every doc via the stop-word rule alone, proving the custom
+    list is actually in effect everywhere."""
     absurd = ("zzzzneverseen1", "zzzzneverseen2")
     models = train_quality_models(
         pages_df.filter("split = 'train'"), stopwords=absurd
     )
     assert models.stopwords == absurd
 
-    fused = run_quality_pipeline(spark, pages_df, models)
-    native = _sql_twin(fused, models.stopwords)
-    cols = ["url", "stopword_ratio", "keep", "is_cjk"]
-    a = sorted(map(tuple, native.select(cols).collect()))
-    b = sorted(map(tuple, fused.select(cols).collect()))
-    assert a == b
-    assert all(r[1] == 0.0 for r in a)   # no doc contains the absurd words
+    cols = ["stopword_ratio", "keep", "is_cjk"]
+    served = _by_url(run_quality_pipeline(spark, pages_df, models).collect(), cols)
+    o = run_oracle_pipeline(pages_pdf, *oracle_models, stopwords=absurd)
+    assert served == _by_url(o.to_dict("records"), cols)
+    assert all(r[0] == 0.0 for r in served.values())  # absurd words never occur
     # the stop-word rule drops every word-routed doc; CJK-majority docs
     # are exempt from it by design (r6 per-script routing)
-    assert not any(r[2] for r in a if not r[3])
-    assert any(r[3] for r in a)          # the fixture does carry cjk docs
-
-    train = pages_pdf[pages_pdf["split"] == "train"][["text", "lang"]]
-    nb, lm = oracle_train(train)
-    o = oracle_run(pages_pdf, nb, lm, stopwords=absurd)
-    assert not o[~o["is_cjk"]]["keep"].any()
-    assert (o["stopword_ratio"] == 0.0).all()
+    assert not any(r[1] for r in served.values() if not r[2])
+    assert any(r[2] for r in served.values())  # the fixture does carry cjk docs
 
 
-def test_large_lexicon_broadcast_path(spark, pages_df):
+def test_large_lexicon_broadcast_path(spark, pages_df, pages_pdf, oracle_models):
     """r5 (judge ask): a production-size (10k-word) stop-word lexicon must
-    NOT enter the plan as a literal array — it rides a one-row broadcast
-    relation in the native SQL twin — while keep decisions and
-    stopword_ratio stay identical to the (hash-set) serving path. A
-    small-lexicon control proves the literal-detection is non-vacuous
-    (plan truncation can hide arrays)."""
+    NOT enter the served plan as a literal array — it rides the model
+    broadcast — while keep decisions and stopword_ratio equal the
+    oracle's. A sentinel literal column proves the no-literal check is
+    non-vacuous (plan truncation can hide arrays)."""
     from language_identification_spark.fixtures.pages import fixture_stopwords
 
-    sub = pages_df.limit(150)
     # plan stringification truncates expression lists by default, which
     # would make the no-literal assertion vacuous — print everything
     spark.conf.set("spark.sql.debug.maxToStringFields", "1000000")
-
-    # control: small lexicon takes the literal path and IS plan-visible
-    small = fixture_stopwords() + ("zzcontrolsentinel",)
-    models_small = train_quality_models(
-        pages_df.filter("split = 'train'"), stopwords=small
-    )
-    native_small = _sql_twin(
-        run_quality_pipeline(spark, sub, models_small), models_small.stopwords
-    )
-    plan_small = native_small._jdf.queryExecution().analyzed().toString()
-    assert "zzcontrolsentinel" in plan_small
-
     big = fixture_stopwords() + tuple(f"zzfill{i}" for i in range(10_000))
     models = train_quality_models(pages_df.filter("split = 'train'"), stopwords=big)
-    fused = run_quality_pipeline(spark, sub, models)
-    native = _sql_twin(fused, models.stopwords)
-    cols = ["url", "stopword_ratio", "keep"]
-    a = sorted(map(tuple, native.select(cols).collect()))
-    b = sorted(map(tuple, fused.select(cols).collect()))
-    assert a == b
-    assert any(r[1] > 0 for r in a)  # the real stop words still hit
-    plan = native._jdf.queryExecution().analyzed().toString()
-    assert "zzfill9999" not in plan  # no 10k literal anywhere in the plan
-    assert "__stop_lex" not in native.columns  # transport column dropped
+    served = run_quality_pipeline(spark, pages_df.limit(150), models).withColumn(
+        "_control", F.lit("zzcontrolsentinel")
+    )
+    plan = served._jdf.queryExecution().analyzed().toString()
     spark.conf.unset("spark.sql.debug.maxToStringFields")
+    assert "zzcontrolsentinel" in plan  # literals ARE visible in this plan
+    assert "zzfill9999" not in plan  # no 10k literal anywhere in the plan
+
+    cols = ["stopword_ratio", "keep"]
+    got = _by_url(served.select("url", *cols).collect(), cols)
+    sub = pages_pdf[pages_pdf["url"].isin(list(got))]
+    o = run_oracle_pipeline(sub, *oracle_models, stopwords=big)
+    assert got == _by_url(o.to_dict("records"), cols)
+    assert any(r[0] > 0 for r in got.values())  # the real stop words still hit

@@ -404,17 +404,17 @@ def test_bloom_probe_never_shuffles_text(spark, sf_dir):
 
 
 def test_repetition_arrow_udf_evaluates_once(spark):
-    """r6: the repetition Arrow UDF extracts 10 struct fields from ONE
+    """r6: the gates' feature UDF extracts every struct field from ONE
     UDF result column — projection collapse must not duplicate the
     Python call. Pin: exactly one ArrowEvalPython node, and the plan
     stays shuffle-free."""
     from language_identification_spark.functions.text import (
-        with_repetition_columns,
+        with_quality_features,
     )
     from language_identification_spark.plans.asserts import explain_str
 
     df = spark.createDataFrame([(i, "a b c a b") for i in range(4)], "i long, t string")
-    out = with_repetition_columns(df, "t")
+    out = with_quality_features(df, "t")
     import re
 
     plan = explain_str(out)

@@ -16,11 +16,13 @@ from language_identification_spark.functions.text import (
     py_char_ngrams,
     py_norm,
     py_quality_features,
+    py_quality_features_batch,
     py_words,
 )
 from language_identification_spark.models.hashed_ngram import DIM, doc_bucket_ids
 from language_identification_spark.models.perplexity import doc_bigram_keys
 from language_identification_spark.oracle.reference import ct_profile
+from language_identification_spark.pipeline.rules import default_stopwords
 
 TEXT = st.text(min_size=0, max_size=400)
 ASCII_TEXT = st.text(
@@ -89,6 +91,38 @@ def test_gram_kernels_accept_lone_surrogates():
         g: 1 for g in ("_a", "ab", "b\ud800", "\ud800c", "cd", "d_")
     }
     assert rank_profile(s, 400) == ct_profile(s, 400)
+
+
+# Arbitrary text interleaved with the pieces the line, script, stop-word
+# and repetition rules key on: bullet/ellipsis markers, newlines, CJK and
+# Cyrillic letters, fixture stop words and short repeatable words.
+_FEATURE_PIECES = (
+    "- ", "* ", "•", "...", "…", "\n", " ", "\t", "的", "一是", "人在有",
+    "дом ", "и", "ab ", "ab cd ", *default_stopwords()[:3],
+)
+FEATURE_TEXT = st.lists(
+    st.sampled_from(_FEATURE_PIECES) | st.text(max_size=4), max_size=60
+).map("".join)
+_ALL_CJK = "的一是了我人在有他这中大来上国个到说们为" * 3
+
+
+@given(st.lists(st.text() | FEATURE_TEXT, max_size=8))
+@example(["ab \ud800cd"])
+@example(["a\x00b c\x00d"])
+@example([""])
+@example([_ALL_CJK])
+@example(["ab \ud800cd", "", "a\x00b", _ALL_CJK, "- x\n- x\ny..."])
+@settings(max_examples=200, deadline=None)
+def test_quality_features_batch_matches_oracle(xs):
+    """The serving kernel equals the per-doc oracle on every feature of
+    every doc — the kernel's only independent check. Lone surrogates,
+    NUL bytes and empty docs included."""
+    got = py_quality_features_batch(xs)
+    for i, x in enumerate(xs):
+        want = py_quality_features(x)
+        assert set(got) == set(want)
+        for k, v in want.items():
+            assert got[k][i] == v, (k, i, x, got[k][i], v)
 
 
 @given(ASCII_TEXT)
