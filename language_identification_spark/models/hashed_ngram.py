@@ -199,6 +199,8 @@ class HashedNgramNB:
         dim: int = DIM,
         alpha: float = ALPHA,
     ) -> "HashedNgramNB":
+        if any(pd.isna(lg) for lg in doc_counts):
+            raise ValueError("training row with a NULL `lang`: the lang column must be non-null")
         langs = sorted(doc_counts)
         idx = {lg: i for i, lg in enumerate(langs)}
         counts = np.zeros((len(langs), dim), dtype=np.float64)

@@ -33,19 +33,33 @@ def doc_bigram_keys(text: str) -> np.ndarray:
     return (c[:-1] << np.uint64(32)) | c[1:]
 
 
+def bigram_key_counts(texts) -> tuple[np.ndarray, np.ndarray]:
+    """Distinct packed transition keys of a batch and their counts — the
+    one bigram counting kernel (non-``str`` entries count as ``""``)."""
+    chunks = [doc_bigram_keys(t if isinstance(t, str) else "") for t in texts]
+    if not chunks:
+        return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64)
+    return np.unique(np.concatenate(chunks), return_counts=True)
+
+
+def bigram_frame(keys, cnts) -> pd.DataFrame:
+    """Packed keys + counts → the (cur, nxt, cnt) table
+    :meth:`BigramLM.from_counts` takes."""
+    keys = np.asarray(keys, dtype=np.uint64)
+    cur = [chr(k) for k in (keys >> np.uint64(32)).tolist()]
+    nxt = [chr(k) for k in (keys & np.uint64(0xFFFFFFFF)).tolist()]
+    return pd.DataFrame(
+        {
+            "cur": pd.Series(cur, dtype="object"),
+            "nxt": pd.Series(nxt, dtype="object"),
+            "cnt": np.asarray(cnts, dtype=np.int64),
+        }
+    )
+
+
 def bigram_counts_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """(text) batch → (cur, nxt, cnt) partial aggregate for mapInPandas."""
-    chunks = [
-        doc_bigram_keys(t if isinstance(t, str) else "") for t in pdf["text"]
-    ]
-    if not chunks:
-        return pd.DataFrame({"cur": pd.Series(dtype="object"),
-                             "nxt": pd.Series(dtype="object"),
-                             "cnt": pd.Series(dtype="int64")})
-    keys, cnts = np.unique(np.concatenate(chunks), return_counts=True)
-    cur = [chr(int(k >> np.uint64(32))) for k in keys]
-    nxt = [chr(int(k & np.uint64(0xFFFFFFFF))) for k in keys]
-    return pd.DataFrame({"cur": cur, "nxt": nxt, "cnt": cnts})
+    return bigram_frame(*bigram_key_counts(pdf["text"]))
 
 
 @dataclass

@@ -17,40 +17,26 @@ import pandas as pd
 from ..functions.scrub import scrub_text
 from ..functions.text import py_norm, py_quality_features
 from ..models.hashed_ngram import DIM, HashedNgramNB, doc_bucket_counts
-from ..models.perplexity import BigramLM, doc_bigram_keys
+from ..models.perplexity import BigramLM, bigram_frame, bigram_key_counts
 from ..pipeline.rules import py_keep
 
 
 def train_oracle_models(train_pdf: pd.DataFrame, dim: int = DIM):
     """train_pdf: columns (text, lang). Returns (HashedNgramNB, BigramLM)."""
-    import numpy as np
-
     acc: dict[tuple[str, int], int] = {}
     doc_counts: dict[str, int] = {}
-    bg_chunks: list[np.ndarray] = []
-    for text, lang in zip(train_pdf["text"], train_pdf["lang"]):
-        norm = py_norm(text or "")
+    norms = [py_norm(text or "") for text in train_pdf["text"]]
+    for norm, lang in zip(norms, train_pdf["lang"]):
         doc_counts[lang] = doc_counts.get(lang, 0) + 1
         for b, c in doc_bucket_counts(norm, dim).items():
             acc[(lang, b)] = acc.get((lang, b), 0) + c
-        bg_chunks.append(doc_bigram_keys(norm))
 
     langs, buckets = zip(*acc.keys()) if acc else ((), ())
     bucket_counts = pd.DataFrame(
         {"lang": langs, "bucket": buckets, "cnt": list(acc.values())}
     )
     nb = HashedNgramNB.from_counts(bucket_counts, doc_counts, dim=dim)
-
-    keys, cnts = np.unique(np.concatenate(bg_chunks), return_counts=True)
-    lm = BigramLM.from_counts(
-        pd.DataFrame(
-            {
-                "cur": [chr(int(k >> np.uint64(32))) for k in keys],
-                "nxt": [chr(int(k & np.uint64(0xFFFFFFFF))) for k in keys],
-                "cnt": cnts,
-            }
-        )
-    )
+    lm = BigramLM.from_counts(bigram_frame(*bigram_key_counts(norms)))
     return nb, lm
 
 

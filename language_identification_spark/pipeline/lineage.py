@@ -6,7 +6,10 @@ run processes all *pending* buckets in ONE Spark job (not a driver loop),
 writes output partitioned by bucket with dynamic partition overwrite (so a
 re-run of a bucket replaces, never duplicates), then appends one lineage
 row per bucket: (bucket, run_id, input_snapshot, n_input, n_kept,
-attrition per stage, wall_s, ts).
+attrition per stage, wall_s, ts). The counts come from ``observe()`` on
+the write job; the rows are committed through :func:`lineage_frame`, a
+pandas-built frame that plans as a JVM ``LocalTableScan``, so the commit
+starts no Python worker (the streaming job commits the same way).
 
 Resume = anti-join of the bucket universe against the lineage table
 (driver-side: the lineage table is tiny). A killed run re-processes only
@@ -25,8 +28,10 @@ import os
 import time
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .quality import QualityModels, run_quality_pipeline
 from .rules import MAX_PERPLEXITY, MIN_LANG_CONF
@@ -34,6 +39,17 @@ from .rules import MAX_PERPLEXITY, MIN_LANG_CONF
 
 def bucket_expr(url_col: str = "url", n_buckets: int = 16):
     return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets)).cast("int")
+
+
+def lineage_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Lineage rows (one tuple per unit of work, in ``schema``'s column
+    order) plus a commit ``ts``, built from a pandas frame: with Arrow on
+    it plans as a JVM ``LocalTableScan``, where a list-built frame is a
+    Python RDD (``Scan ExistingRDD``) that starts a Python worker pool
+    just to write a handful of rows."""
+    struct = T.StructType.fromDDL(schema)
+    pdf = pd.DataFrame.from_records(rows, columns=struct.names)
+    return spark.createDataFrame(pdf, struct).withColumn("ts", F.current_timestamp())
 
 
 def input_snapshot_id(pages: DataFrame) -> str:
@@ -132,7 +148,8 @@ def run_resumable(
     m = obs.get
     # A pending bucket with zero input rows gets an n_input=0 lineage row
     # (previously it had none and was rescanned on every resume).
-    stats = spark.createDataFrame(
+    stats = lineage_frame(
+        spark,
         [
             (
                 int(b),
@@ -140,16 +157,14 @@ def run_resumable(
                 int(m[f"k_{b}"] or 0),
                 int(m[f"l_{b}"] or 0),
                 int(m[f"p_{b}"] or 0),
+                run_id,
+                snapshot,
+                float(wall_s),
             )
             for b in pending
         ],
-        "bucket int, n_input long, n_kept long, n_lowconf long, n_highppl long",
-    )
-    stats = (
-        stats.withColumn("run_id", F.lit(run_id))
-        .withColumn("input_snapshot", F.lit(snapshot))
-        .withColumn("wall_s", F.lit(float(wall_s)))
-        .withColumn("ts", F.current_timestamp())
+        "bucket int, n_input long, n_kept long, n_lowconf long, n_highppl long, "
+        "run_id string, input_snapshot string, wall_s double",
     )
     stats.write.mode("append").parquet(lineage_dir)
     return pending

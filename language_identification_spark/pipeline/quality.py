@@ -7,9 +7,10 @@
       → PII/toxicity scrub (compiled regex)
       → keep/drop
 
-Execution shape at scale: training is two groupBy shuffles over the train
-split (exact integer counts); serving is a SINGLE narrow map stage — one
-pandas UDF computes (lang_pred, lang_conf, perplexity, scrubbed_text) and
+Execution shape at scale: training is ONE pass over the train split (one
+mapInPandas emits every model's exact integer partial counts, one groupBy
+shuffle totals them, one collect); serving is a SINGLE narrow map stage —
+one pandas UDF computes (lang_pred, lang_conf, perplexity, scrubbed_text) and
 every heuristic feature per Arrow batch (one Python round trip per batch,
 numbers back instead of a second copy of the text), then the keep
 predicate stays JVM-side. No shuffle touches the 100 TB side after the
@@ -20,6 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,7 +30,7 @@ from pyspark.sql import types as T
 from ..functions.scrub import scrub_series
 from ..functions.text import QUALITY_FEATURE_STRUCT, py_quality_features_batch
 from ..models.hashed_ngram import DIM, HashedNgramNB, featurize_counts_pdf
-from ..models.perplexity import BigramLM, bigram_counts_pdf
+from ..models.perplexity import BigramLM, bigram_frame, bigram_key_counts
 from ..session import ship_package
 from .rules import keep_expr
 
@@ -57,52 +59,76 @@ class QualityModels:
     stopwords: tuple[str, ...] | None = None  # None → rules.default_stopwords()
 
 
+# One schema for every training partial: kind 0 = NB bucket count keyed
+# (lang, bucket), kind 1 = bigram count keyed by the packed codepoint pair
+# (lang NULL), kind 2 = row count per language (key 0).
+_NB, _BIGRAM, _DOCS = 0, 1, 2
+_PARTIAL_SCHEMA = "kind int, lang string, key long, cnt long"
+
+
+def training_partials_pdf(pdf: pd.DataFrame, dim: int = DIM) -> pd.DataFrame:
+    """(text, lang) batch → every model's partial counts in
+    ``_PARTIAL_SCHEMA``, from ONE normalization of the batch."""
+    # Python-semantics strip (same as the oracle / serving UDF); Spark's
+    # trim() only strips ' ' so normalization stays Python-side.
+    norm = pdf.assign(text=pdf["text"].fillna("").str.strip())
+    nb = featurize_counts_pdf(norm, dim)
+    keys, cnts = bigram_key_counts(norm["text"])
+    docs = norm["lang"].value_counts(dropna=False)
+    return pd.DataFrame(
+        {
+            "kind": np.repeat([_NB, _BIGRAM, _DOCS], [len(nb), len(keys), len(docs)]),
+            "lang": pd.concat(
+                [nb["lang"], pd.Series([None] * len(keys)), docs.index.to_series()],
+                ignore_index=True,
+            ),
+            "key": np.concatenate([nb["bucket"], keys.astype(np.int64),
+                                   np.zeros(len(docs), dtype=np.int64)]),
+            "cnt": np.concatenate([nb["cnt"], cnts, docs.to_numpy()]),
+        }
+    )
+
+
 def train_quality_models(
     train_df: DataFrame,
     dim: int = DIM,
     stopwords: tuple[str, ...] | None = None,
 ) -> QualityModels:
-    """Train both models with two distributed aggregations.
+    """Train both models from ONE pass over the train split.
 
-    ``train_df`` must have (text, lang); text is normalized inside the
-    featurizers (they lowercase; padding conventions are theirs).
+    One ``mapInPandas`` (:func:`training_partials_pdf`) emits the NB
+    bucket, bigram and per-language row-count partials of each Arrow
+    batch; one ``groupBy(kind, lang, key).sum`` totals them and one
+    ``toPandas`` brings the (small) totals to the driver, which splits
+    them by kind. ``train_df`` must have (text, lang); text is normalized
+    inside the pass (the featurizers lowercase; padding conventions are
+    theirs). A NULL ``lang`` raises ``ValueError``.
     Counts are exact integers ⇒ the resulting float model is identical
     regardless of partitioning (SURVEY.md §7.3 float-determinism rule).
     """
-    # Caller may supply any SparkSession (the driver does): the UDF/
-    # mapInPandas closures below reference package modules, so the package
-    # zip must be on the executors' python path.
+    # Caller may supply any SparkSession (the driver does): the
+    # mapInPandas closure references package modules, so the package zip
+    # must be on the executors' python path.
     ship_package(train_df.sparkSession)
-    src = train_df.select("text", "lang")
-
-    def _norm(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Python-semantics strip (same as the oracle / serving UDF); Spark's
-        # trim() only strips ' ' so normalization stays Python-side.
-        return pdf.assign(text=pdf["text"].fillna("").str.strip())
-
-    bucket_counts = (
-        src.mapInPandas(
-            lambda it: (featurize_counts_pdf(_norm(pdf), dim) for pdf in it),
-            schema="lang string, bucket long, cnt long",
+    totals = (
+        train_df.select("text", "lang")
+        .mapInPandas(
+            lambda it: (training_partials_pdf(pdf, dim) for pdf in it),
+            schema=_PARTIAL_SCHEMA,
         )
-        .groupBy("lang", "bucket")
+        .groupBy("kind", "lang", "key")
         .agg(F.sum("cnt").alias("cnt"))
         .toPandas()
     )
-    doc_counts = {
-        r["lang"]: r["n"] for r in src.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    langid = HashedNgramNB.from_counts(bucket_counts, doc_counts, dim=dim)
-
-    bg_counts = (
-        src.select("text")
-        .mapInPandas(lambda it: (bigram_counts_pdf(_norm(pdf)) for pdf in it),
-                     schema="cur string, nxt string, cnt long")
-        .groupBy("cur", "nxt")
-        .agg(F.sum("cnt").alias("cnt"))
-        .toPandas()
+    by_kind = {k: totals[totals["kind"] == k] for k in (_NB, _BIGRAM, _DOCS)}
+    docs = by_kind[_DOCS]
+    langid = HashedNgramNB.from_counts(
+        by_kind[_NB].rename(columns={"key": "bucket"})[["lang", "bucket", "cnt"]],
+        dict(zip(docs["lang"], docs["cnt"].tolist())),
+        dim=dim,
     )
-    lm = BigramLM.from_counts(bg_counts)
+    bigrams = by_kind[_BIGRAM]
+    lm = BigramLM.from_counts(bigram_frame(bigrams["key"], bigrams["cnt"]))
     return QualityModels(langid=langid, lm=lm, stopwords=stopwords)
 
 

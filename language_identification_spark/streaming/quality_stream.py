@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pipeline.lineage import lineage_frame
 from ..pipeline.quality import QualityModels, run_quality_pipeline
 
 PAGES_SCHEMA = T.StructType(
@@ -109,7 +110,8 @@ def run_stream_with_lineage(
             .parquet(out_dir)
         )
         m = obs.get
-        row = spark.createDataFrame(
+        row = lineage_frame(
+            spark,
             [
                 (
                     int(batch_id),
@@ -121,7 +123,7 @@ def run_stream_with_lineage(
                 )
             ],
             "batch_id long, n_input long, n_kept long, n_lowconf long, n_highppl long, wall_s double",
-        ).withColumn("ts", F.current_timestamp())
+        )
         (
             row.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

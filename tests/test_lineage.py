@@ -39,6 +39,11 @@ def test_resume_exactly_once(spark, pages_df, tmp_path):
 
     # No bucket processed twice.
     lineage = spark.read.parquet(lin_dir)
+    assert lineage.dtypes == [
+        ("bucket", "int"), ("n_input", "bigint"), ("n_kept", "bigint"),
+        ("n_lowconf", "bigint"), ("n_highppl", "bigint"), ("run_id", "string"),
+        ("input_snapshot", "string"), ("wall_s", "double"), ("ts", "timestamp"),
+    ]
     per_bucket = lineage.groupBy("bucket").count().collect()
     assert all(r["count"] == 1 for r in per_bucket)
     assert {r["bucket"] for r in per_bucket} == set(range(N_BUCKETS))

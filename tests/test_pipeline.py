@@ -9,6 +9,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,6 +85,43 @@ def test_scores_bit_identical(oracle_out, spark_out):
             assert math.isinf(s["perplexity"])
         else:
             assert s["perplexity"] == o["perplexity"], url
+
+
+@pytest.mark.parametrize("n_parts", [1, 7])
+def test_trained_models_equal_oracle(spark, pages_pdf, n_parts):
+    """The models themselves, not only their scores, equal the oracle's
+    on every field: over the train split plus NULL, empty and
+    whitespace-only text, a NUL byte, an astral emoji and an all-CJK doc
+    (a language of its own), however the rows are spread over
+    partitions."""
+    hostile = pd.DataFrame(
+        {
+            "text": [None, "", " \t\n ", "nul\x00byte here", "astral 😀 emoji", "日本語の文書です"],
+            "lang": ["en", "de", "fr", "en", "de", "ja"],
+        }
+    )
+    train = pd.concat(
+        [pages_pdf[pages_pdf["split"] == "train"][["text", "lang"]], hostile],
+        ignore_index=True,
+    )
+    df = spark.createDataFrame(train, "text string, lang string").repartition(n_parts)
+    models = train_quality_models(df)
+    nb, lm = train_oracle_models(train)
+    assert models.langid.langs == nb.langs
+    assert np.array_equal(models.langid.W, nb.W)
+    assert np.array_equal(models.langid.log_prior, nb.log_prior)
+    assert models.lm.char_ids == lm.char_ids
+    assert np.array_equal(models.lm.logprob, lm.logprob)
+    assert np.array_equal(models.lm.lut, lm.lut)
+
+
+def test_null_lang_fails_the_same_way_on_both_sides(spark):
+    bad = pd.DataFrame({"text": ["some text", "more text"], "lang": ["en", None]})
+    with pytest.raises(ValueError, match="`lang`") as spark_err:
+        train_quality_models(spark.createDataFrame(bad, "text string, lang string"))
+    with pytest.raises(ValueError, match="`lang`") as oracle_err:
+        train_oracle_models(bad)
+    assert str(spark_err.value) == str(oracle_err.value)
 
 
 def test_scrubber_actually_scrubbed(spark_out, pages_pdf):

@@ -46,6 +46,60 @@ def test_quality_pipeline_is_one_arrow_pass(spark, pages_df):
         run_quality_pipeline(spark, pages_df, models, heuristics="native")
 
 
+def test_quality_training_is_one_action_one_pass(spark, pages_df, monkeypatch):
+    """Training both quality models runs ONE Spark action, and its
+    executed plan reads the corpus through ONE Python pass."""
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    actions = []
+    for name in ("toPandas", "collect"):
+        def counted(self, *a, _name=name, _orig=getattr(ClassicDataFrame, name), **k):
+            actions.append((_name, self))
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(ClassicDataFrame, name, counted)
+    train_quality_models(pages_df.filter("split = 'train'"))
+    assert [n for n, _ in actions] == ["toPandas"], actions
+    plan = actions[0][1]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"MapInPandas", final)) == 1, plan
+
+
+def test_lineage_commits_are_local_table_scans(spark, pages_df, tmp_path, monkeypatch):
+    """Both lineage commits (the resumable batch job's and the streaming
+    job's) write a JVM LocalTableScan, never a Python RDD."""
+    from language_identification_spark.pipeline import lineage
+    from language_identification_spark.streaming import quality_stream
+
+    frames = []
+
+    def spy(*a, _orig=lineage.lineage_frame, **k):
+        frames.append(_orig(*a, **k))
+        return frames[-1]
+
+    monkeypatch.setattr(lineage, "lineage_frame", spy)
+    monkeypatch.setattr(quality_stream, "lineage_frame", spy)
+    models = train_quality_models(pages_df.filter("split = 'train'"))
+    src = str(tmp_path / "src")
+    pages_df.limit(40).coalesce(1).write.parquet(src)
+    lineage.run_resumable(
+        spark, spark.read.parquet(src), models,
+        str(tmp_path / "out"), str(tmp_path / "lineage"), n_buckets=2,
+    )
+    q = quality_stream.run_stream_with_lineage(
+        spark, src, models, str(tmp_path / "s_out"), str(tmp_path / "s_lineage"),
+        str(tmp_path / "ckpt"),
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert [f.columns[0] for f in frames] == ["bucket", "batch_id"]
+    for f in frames:
+        plan = f._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_model_join_is_broadcast(spark, pages_df):
     df = pages_df.select("text", F.col("lang"), F.monotonically_increasing_id().alias("doc_id"))
     model = train_ngram_lm(df, n=1)
