@@ -685,7 +685,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from language_identification_spark.functions.analysis import (
             quality_score,
         )
-        from language_identification_spark.operators.dedup import (
+        from language_identification_spark.operators.cache import (
             scoped_persist,
         )
         from language_identification_spark.operators.filtering import (
@@ -1516,7 +1516,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from language_identification_spark.functions.analysis import (
             quality_score,
         )
-        from language_identification_spark.operators.dedup import (
+        from language_identification_spark.operators.cache import (
             scoped_persist,
         )
         from language_identification_spark.operators.selection import (

@@ -24,140 +24,17 @@ Four families, each with the partitioning story that survives 100 TB:
 
 from __future__ import annotations
 
-import contextlib
-import threading
-import warnings
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.wordhash import char_gram_hashes_udf
+from .cache import local_checkpoint, scoped_persist
+from .cache import pair_cache_scope  # noqa: F401  (re-export: bench.py, perfbench)
 
 # 31-bit Mersenne prime: (a*h+b) stays < 2^62, safe for int64 ANSI math
 MERSENNE31 = (1 << 31) - 1
-
-
-class CacheScope:
-    """Release handle for the persisted/checkpointed/spilled intermediates
-    created by LSH-family operator calls while the scope was active.
-
-    A registry (not an attribute on the returned DataFrame) because any
-    downstream transform (select/filter/...) returns a NEW DataFrame
-    without custom attributes — release must not depend on callers
-    preserving the original object. Entries are of three kinds with
-    DIFFERENT release consequences:
-
-    - persisted DataFrames (banded tables, candidate pairs): recomputable
-      lineage — an early release costs recompute, never wrong rows;
-    - _CkptBlocks (dedup_components labels): localCheckpoint TRUNCATED the
-      lineage, so after release the result DataFrame is UNREADABLE;
-    - _SpillTable (spill_dir mode): release drops the catalog entry the
-      returned pairs read from.
-
-    Hence: release a scope only once every result produced under it has
-    been materialized (write/collect).
-    """
-
-    def __init__(self) -> None:
-        self._entries: list = []
-        self._lock = threading.Lock()
-
-    def add(self, entry) -> None:
-        with self._lock:
-            self._entries.append(entry)
-
-    def release(self, *, recomputable_only: bool = False) -> None:
-        with self._lock:
-            if recomputable_only:
-                keep = [e for e in self._entries if not isinstance(e, DataFrame)]
-                drain = [e for e in self._entries if isinstance(e, DataFrame)]
-                self._entries = keep
-            else:
-                drain, self._entries = self._entries, []
-        for e in drain:
-            e.unpersist()
-
-
-# Default (unscoped) registry — back-compat home for caches created
-# outside any pair_cache_scope(). Scope stack is thread-local so two
-# threads running LSH calls concurrently cannot interleave entries into
-# each other's scopes (ADVICE r4); the default scope itself is
-# lock-guarded.
-_DEFAULT_SCOPE = CacheScope()
-_ACTIVE = threading.local()
-
-
-def _current_scope() -> CacheScope:
-    stack = getattr(_ACTIVE, "stack", None)
-    return stack[-1] if stack else _DEFAULT_SCOPE
-
-
-@contextlib.contextmanager
-def pair_cache_scope():
-    """Scope the LSH family's caches to one operator call (or group of
-    calls) and free them deterministically on exit::
-
-        with pair_cache_scope():
-            pairs = minhash_near_duplicates(docs)
-            pairs.write.parquet(out)          # materialize INSIDE the scope
-        # banded/candidate persists + any checkpoint blocks are gone here
-
-    This is the safe release pattern when several LSH-family results are
-    in flight: each call site frees exactly its own intermediates, and a
-    release cannot invalidate another pending result (the r4 global-drain
-    hazard). Exiting the scope makes checkpoint/spill-backed results
-    (``dedup_components`` labels, ``spill_dir`` pairs) created inside it
-    UNREADABLE — consume them before leaving the scope. Reentrant and
-    thread-safe (the active-scope stack is thread-local)."""
-    scope = CacheScope()
-    stack = getattr(_ACTIVE, "stack", None)
-    if stack is None:
-        stack = _ACTIVE.stack = []
-    stack.append(scope)
-    try:
-        yield scope
-    finally:
-        stack.pop()
-        scope.release()
-
-
-def scoped_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it with the innermost active
-    :func:`pair_cache_scope` (the module default registry when none is
-    active), which unpersists it on exit. Returns ``df`` for chaining.
-    Materialize every result that reads it before the scope exits; an
-    early release costs a recompute, never wrong rows."""
-    df.persist()
-    _current_scope().add(df)
-    return df
-
-
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Ids of every persistent RDD registered with the SparkContext
-    (includes localCheckpoint blocks, which are invisible to the SQL
-    CacheManager)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
-class _CkptBlocks:
-    """Unpersist handle for localCheckpoint blocks, identified by RDD id
-    (``DataFrame.rdd.unpersist()`` cannot free them: ``.rdd`` wraps a
-    different, python-converted RDD). Quacks like a persisted DataFrame
-    for the :data:`_LIVE_PAIR_CACHES` registry."""
-
-    def __init__(self, spark, rdd_ids: set[int]):
-        self._jsc = spark.sparkContext._jsc
-        self._ids = rdd_ids
-
-    def unpersist(self) -> None:
-        jmap = self._jsc.getPersistentRDDs()
-        for rid in self._ids:
-            if jmap.containsKey(rid):
-                jmap.get(rid).unpersist()
-        self._ids = set()
 
 
 def exact_duplicate_groups(
@@ -269,51 +146,10 @@ def jaccard_similar_pairs(
     )
 
 
-class _SpillTable:
-    """Cleanup handle for a spilled banded table: drops the catalog entry
-    on release (files under the caller's spill_dir are the caller's to
-    manage — on a cluster they are the durable artifact). Quacks like a
-    persisted DataFrame for the :data:`_LIVE_PAIR_CACHES` registry."""
-
-    def __init__(self, spark, name: str):
-        self._spark = spark
-        self._name = name
-
-    def unpersist(self) -> None:
-        self._spark.sql(f"DROP TABLE IF EXISTS {self._name}")
-
-
-def _spill_banded(banded: DataFrame, key_cols: list[str], spill_dir: str) -> DataFrame:
-    """Write the banded table as a Hive-bucketed parquet table (bucketed by
-    the band-hash key) and read it back: both sides of the self-join then
-    scan the SAME bucketed table, so the join needs no Exchange at all —
-    the spill replaces executor-memory persist() when the corpus exceeds
-    what MEMORY_AND_DISK should hold (at 100 TB the banded table is
-    O(bands × corpus) rows; a disk-backed bucketed table is the only shape
-    that both survives executor loss and co-locates the join)."""
-    import os
-    import uuid
-
-    from ..sources.catalog import write_join_bucketed
-
-    name = f"lid_banded_spill_{uuid.uuid4().hex[:8]}"
-    write_join_bucketed(
-        banded,
-        name,
-        os.path.join(spill_dir, name),
-        bucket_col=key_cols[-1],
-        n_buckets=64,
-    )
-    spark = banded.sparkSession
-    _current_scope().add(_SpillTable(spark, name))
-    return spark.table(name)
-
-
 def _bucket_self_join(
     banded: DataFrame,
     key_cols: list[str],
     max_bucket: int | None,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b) distinct candidate pairs from a (id, *key_cols) bucket
     table, with a hot-bucket guard.
@@ -332,28 +168,12 @@ def _bucket_self_join(
     members), so it broadcasts to route rows — no window sort over the
     full banded table. ``banded`` feeds several consumers (hot scan + both
     join sides + star), and its lineage usually contains an expensive
-    signature UDF, so it is persisted. The cache lives until explicitly
-    released: the persisted handle lands in the active
-    :func:`pair_cache_scope` (or the unscoped default registry, drained
-    by :func:`release_pair_cache`) — long-lived sessions that release
-    nothing keep the MEMORY_AND_DISK blocks for the life of the
-    SparkContext.
-
-    ``spill_dir``: when set, the multi-consumer banded table is written as
-    a Hive-bucketed parquet table (see :func:`_spill_banded`) instead of
-    ``persist()`` — the corpus-scale mode where the banded rows exceed
-    executor memory; pair output is identical, and release drops the
-    catalog entry instead of unpersisting blocks.
+    signature UDF, so it is persisted through :func:`scoped_persist`: the
+    active :func:`pair_cache_scope` frees it on exit, and outside any
+    scope the MEMORY_AND_DISK blocks live as long as the SparkContext.
     """
-    # The cache/spill decision is independent of the hot-bucket guard
-    # (ADVICE r4: spill_dir used to be silently ignored with
-    # max_bucket=None): even unguarded, `banded` feeds both self-join
-    # sides and its lineage contains the signature UDF.
-    if spill_dir is not None:
-        banded = _spill_banded(banded, key_cols, spill_dir)
-    elif max_bucket is not None:
-        banded = scoped_persist(banded)
     if max_bucket is not None:
+        banded = scoped_persist(banded)
         hot = (
             banded.groupBy(*key_cols)
             .agg(F.count("*").alias("_bsz"), F.min("id").alias("_bmin"))
@@ -377,44 +197,6 @@ def _bucket_self_join(
     if star is not None:
         pairs = pairs.unionAll(star)
     return pairs.distinct()
-
-
-def release_pair_cache(
-    pairs: DataFrame | None = None, *, include_blocks: bool = False
-) -> None:
-    """Release the UNSCOPED caches created by the LSH family (those made
-    outside any :func:`pair_cache_scope`). No-op if nothing was cached;
-    without some release, each guarded LSH call leaves its
-    MEMORY_AND_DISK blocks cached for the rest of the SparkContext's
-    life. Prefer :func:`pair_cache_scope`, which scopes release to one
-    call site and cannot affect other in-flight results.
-
-    By default only RECOMPUTABLE entries are drained (persisted banded /
-    candidate-pair DataFrames): releasing those early merely costs a
-    recompute, never a wrong or unreadable result, so the default is safe
-    to call with other LSH results still pending. Entries whose backing
-    is a checkpoint or spill table (``dedup_components`` labels;
-    ``spill_dir`` band tables) make their result DataFrame UNREADABLE
-    once freed — draining them requires ``include_blocks=True`` and the
-    same discipline as a scope: every outstanding checkpoint/spill-backed
-    result must already be materialized. (Before r5 the no-arg call
-    drained blocks too — the unsafe half of that contract now needs the
-    explicit flag.)
-
-    Drains a module-level registry, so it works no matter what transforms
-    the caller applied to the returned pairs (a ``.select()`` returns a
-    fresh DataFrame — an attribute riding on the original object would
-    silently make release a no-op). The ``pairs`` argument never selected
-    what to release and is deprecated."""
-    if pairs is not None:
-        warnings.warn(
-            "release_pair_cache(pairs) is deprecated and the argument is "
-            "ignored — the registry is module-level; use pair_cache_scope() "
-            "to scope release to one operator call",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-    _DEFAULT_SCOPE.release(recomputable_only=not include_blocks)
 
 
 def _perm_params(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -485,7 +267,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     n_hashes: int = 64,
     max_bucket: int | None = 10_000,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs: equal band-hash in ≥1 of ``bands``
     bands. Shuffle key = (band_idx, band_hash) — collision buckets only.
@@ -495,11 +276,10 @@ def minhash_lsh_candidates(
     spanning SUBSET of the bucket's pairs, sufficient for connected-
     component dedup grouping but NOT an exhaustive pair enumeration
     (member↔member pairs of a flooded bucket are dropped). Pass
-    ``max_bucket=None`` for exact all-pairs semantics. Call
-    :func:`release_pair_cache` after materializing (see
-    ``_bucket_self_join``)."""
+    ``max_bucket=None`` for exact all-pairs semantics. Materialize the
+    result inside a :func:`pair_cache_scope` (see ``_bucket_self_join``)."""
     banded = _band_table(sigs, bands, n_hashes)
-    return _bucket_self_join(banded, ["band", "bh"], max_bucket, spill_dir)
+    return _bucket_self_join(banded, ["band", "bh"], max_bucket)
 
 
 def _band_table(sigs: DataFrame, bands: int, n_hashes: int) -> DataFrame:
@@ -611,7 +391,7 @@ def incremental_near_duplicates(
     # pass for the ~99% of corpus docs with no colliding band (the r5
     # measured winner in both broadcast regimes). Only that shape gives
     # ``cand`` multiple consumers (two semi-joins + the verify join), so
-    # only it persists (released via scope/release_pair_cache); the
+    # only it persists (released with the active scope); the
     # default path consumes ``cand`` exactly once and a persist would be
     # pure cache-write overhead at corpus scale.
     shn_src = new_base
@@ -663,7 +443,6 @@ def minhash_near_duplicates(
     bands: int = 16,
     seed: int = 42,
     max_bucket: int | None = 10_000,
-    spill_dir: str | None = None,
     candidate_first: bool = False,
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard ≥ threshold.
@@ -690,10 +469,6 @@ def minhash_near_duplicates(
       Output identical either way
       (test_candidate_first_ab_equivalence).
 
-    ``spill_dir`` switches the banded-signature cache from executor-memory
-    persist() to a Hive-bucketed on-disk table (corpus-scale mode; see
-    ``_bucket_self_join``). Pair output is identical either way.
-
     The verify stage computes Jaccard PER CANDIDATE PAIR (join the two
     distinct-shingle arrays, ``array_intersect`` JVM-side): cost is
     O(|candidates| · shingles/doc). Routing candidates through the
@@ -705,8 +480,8 @@ def minhash_near_duplicates(
     Inherits the guard contract of :func:`minhash_lsh_candidates`: with
     the default ``max_bucket``, pairs inside a flooded bucket are the
     star subset (complete for dedup GROUPING, not for exhaustive pair
-    listing — use ``max_bucket=None`` for that). Call
-    :func:`release_pair_cache` on the result after materializing it.
+    listing — use ``max_bucket=None`` for that). Materialize the result
+    inside a :func:`pair_cache_scope`.
 
     History of the default: r4 argued the candidate-first semi-join was
     the scale shape ("always-shingle shuffles the corpus to verify a
@@ -732,13 +507,13 @@ def minhash_near_duplicates(
     # still halves verify bytes and runs ``array_intersect`` on longs.
     base = _shingle_sets(df, id_col, text_col, n)
     sigs = _signatures_from_shingles(base, n_hashes, seed)
-    cand = minhash_lsh_candidates(sigs, bands, n_hashes, max_bucket, spill_dir)
+    cand = minhash_lsh_candidates(sigs, bands, n_hashes, max_bucket)
     # candidate_first=True: semi-join the (cached) shingle base on the
     # candidate id set before the verify join (the huge-candidate-set
     # escape hatch; see the docstring's measured decision rule). Only
     # that shape gives ``cand`` multiple consumers (the id-set union +
-    # the verify join), so only it persists (released via
-    # scope/release_pair_cache); the default path consumes ``cand`` once.
+    # the verify join), so only it persists (released with the active
+    # scope); the default path consumes ``cand`` once.
     # No .distinct() on the id set: left_semi deduplicates by construction,
     # and the extra shuffle measured ~+3s on the sf0.1 gate corpus.
     sh = base
@@ -924,16 +699,6 @@ def dedup_components(
     labels are constant on every component; since the component min keeps
     its own label and labels never go below it, that constant is the min.
     """
-    spark = pairs.sparkSession
-
-    def ckpt(df: DataFrame) -> tuple[DataFrame, _CkptBlocks]:
-        """Eager localCheckpoint + a handle to ITS persistent-RDD blocks
-        (``df.rdd.unpersist()`` would not touch them: ``.rdd`` wraps a
-        different, python-converted RDD)."""
-        before = _persistent_rdd_ids(spark)
-        out = df.localCheckpoint()  # eager: blocks exist on return
-        return out, _CkptBlocks(spark, _persistent_rdd_ids(spark) - before)
-
     # Truncate the (usually LSH-derived, UDF-heavy) upstream lineage once;
     # every round re-reads edges. Symmetrize with ONE explode over the
     # pairs subtree, not a unionAll of two selects: union branches are
@@ -941,7 +706,7 @@ def dedup_components(
     # upstream would execute twice before this first checkpoint —
     # measured 7.25 s vs 6.01 s warmed on the sf1.0 components corpus.
     # Same row multiset into the distinct, so the edge set is identical.
-    edges, edge_blocks = ckpt(
+    edges, edge_blocks = local_checkpoint(
         pairs.select(
             F.explode(
                 F.array(
@@ -953,7 +718,7 @@ def dedup_components(
         .select("e.src", "e.dst")
         .distinct()
     )
-    labels, label_blocks = ckpt(
+    labels, label_blocks = local_checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
@@ -978,31 +743,29 @@ def dedup_components(
         # The previous round's label rides along as `old`, so the
         # convergence probe below is a filter over the fresh checkpoint
         # blocks — no extra join against the previous label table.
-        new_labels, new_blocks = ckpt(
+        new_labels, new_blocks = local_checkpoint(
             prop.join(parent, "label").select(
                 "id", F.col("parent").alias("label"), "old"
             )
         )
         converged = new_labels.filter(F.col("label") != F.col("old")).isEmpty()
-        label_blocks.unpersist()  # previous round, no longer referenced
+        label_blocks.release()  # previous round, no longer referenced
         labels, label_blocks = new_labels.select("id", "label"), new_blocks
         if converged:
             break
     else:
         # Silently returning non-converged labels would make
         # canonical_documents under-delete duplicates with no signal.
-        label_blocks.unpersist()
-        edge_blocks.unpersist()
+        label_blocks.release()
+        edge_blocks.release()
         raise RuntimeError(
             f"dedup_components did not converge within max_iter={max_iter} "
             "rounds; raise max_iter (pointer jumping needs O(log n) rounds)"
         )
     # The final labels are materialized blocks — edges are no longer
     # needed; the final label blocks must outlive this call (the caller
-    # has not consumed the result yet), so they go on the release
-    # registry like every other LSH-family cache.
-    edge_blocks.unpersist()
-    _current_scope().add(label_blocks)
+    # has not consumed the result yet), so the active scope frees them.
+    edge_blocks.release()
     return labels.select("id", F.col("label").alias("canonical_id"))
 
 

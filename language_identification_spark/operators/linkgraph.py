@@ -25,13 +25,18 @@ hash-partitioned on src ONCE and reused every round (at corpus scale:
 persist/bucket it); the rank table is two columns (BIGINT, BIGINT).
 K iterations = K narrow shuffles of the RANK table, never the corpus —
 the same keyed-join loop discipline as dedup_components, including
-eager localCheckpoint to stop lineage growth.
+eager localCheckpoint to stop lineage growth: each round's blocks are
+freed once the next round is materialized, and only the returned rank
+table's blocks outlive the call (the active ``pair_cache_scope`` frees
+them).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .cache import local_checkpoint
 
 # anchor href, double-quoted: capture group 1. Works unchanged in Java
 # regex (Spark) and RE2 (DuckDB).
@@ -59,7 +64,6 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, rank_micro) after ``n_iter`` exact-integer PageRank
     iterations over distinct ``edges`` (duplicate edge rows count
@@ -77,10 +81,8 @@ def pagerank(
         .distinct()
     )
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ed = e.join(deg, "src")  # (src, dst, deg); reused every round
-    if checkpoint:
-        ed = ed.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    ed, ed_blocks = local_checkpoint(e.join(deg, "src"))  # (src, dst, deg)
+    nodes, node_blocks = local_checkpoint(nodes)
     n = nodes.count()
     # floor(x+0.5), not Python round(): Python rounds half-to-even while
     # Spark/DuckDB round() rounds half away from zero — these two
@@ -91,6 +93,7 @@ def pagerank(
     rank = nodes.withColumn(
         "rank_micro", F.lit(math.floor(MICRO / n + 0.5)).cast("long")
     )
+    rank_blocks = None
     for _ in range(n_iter):
         contrib = (
             ed.join(rank, ed["src"] == rank["node"])
@@ -105,15 +108,20 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
         )
-        rank = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.lit(teleport).cast("long")
-                + F.coalesce(F.col("inflow"), F.lit(0).cast("long"))
-            ).alias("rank_micro"),
+        rank, new_blocks = local_checkpoint(
+            nodes.join(contrib, "node", "left").select(
+                "node",
+                (
+                    F.lit(teleport).cast("long")
+                    + F.coalesce(F.col("inflow"), F.lit(0).cast("long"))
+                ).alias("rank_micro"),
+            )
         )
-        if checkpoint:
-            rank = rank.localCheckpoint(eager=True)
+        if rank_blocks is not None:
+            rank_blocks.release()  # previous round, no longer referenced
+        rank_blocks = new_blocks
+    ed_blocks.release()
+    node_blocks.release()
     return rank
 
 

@@ -225,7 +225,7 @@ def dsir_weights(
     #   the same bounded-driver-action class as ivf's centroid ids) and
     #   re-enter as literal tables; the log/ratio arithmetic stays in
     #   JVM expressions, so every double equals the old plan's.
-    from .dedup import scoped_persist
+    from .cache import scoped_persist
 
     bucket_arr = token_buckets_udf(n_buckets)
     per_tok = scoped_persist(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cache import pair_cache_scope, scoped_persist
+
 
 def approx_distinct_by(
     df: DataFrame,
@@ -132,20 +134,22 @@ def certified_top_terms(
     # error bound, the candidate set, and nothing else; it stays
     # distributed — only the 1-row bound and the k-row result are ever
     # collected, so the driver footprint is O(k) no matter the fleet.
-    partials = terms.mapInPandas(partial_topm, "t string, c long").persist()
-    err_bound = (
-        partials.filter(F.col("t").isNull()).agg(F.sum("c")).first()[0] or 0
-    )
-    cand_df = partials.filter(F.col("t").isNotNull()).select("t").distinct()
-    exact = (
-        terms.join(F.broadcast(cand_df), "t", "left_semi")
-        .groupBy("t")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("t"))
-        .limit(k)
-    )
-    top = exact.collect()
-    partials.unpersist()
+    with pair_cache_scope():
+        partials = scoped_persist(
+            terms.mapInPandas(partial_topm, "t string, c long")
+        )
+        err_bound = (
+            partials.filter(F.col("t").isNull()).agg(F.sum("c")).first()[0] or 0
+        )
+        cand_df = partials.filter(F.col("t").isNotNull()).select("t").distinct()
+        exact = (
+            terms.join(F.broadcast(cand_df), "t", "left_semi")
+            .groupBy("t")
+            .agg(F.count("*").alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("t"))
+            .limit(k)
+        )
+        top = exact.collect()
     # Certificate: every non-candidate term has true count <= err_bound.
     # Uncertifiable iff (a) the k-th candidate count doesn't beat the
     # bound, or (b) fewer than k candidates exist AT ALL while truncation

@@ -73,7 +73,7 @@ def duplicated_spans(
       (doc, gh), so plain ``count(*)`` equals the old
       ``count_distinct(id)`` without its two-Exchange distinct-aggregate
       rewrite."""
-    from .dedup import scoped_persist
+    from .cache import scoped_persist
 
     # one UDF pass: the (id, hash-array) base feeds both the freq
     # aggregation and the position join; it is hashes-only (~8 bytes per

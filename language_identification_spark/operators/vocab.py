@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cache import local_checkpoint, pair_cache_scope, scoped_persist
 
 
 def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -64,8 +65,8 @@ def vocab_coverage(
     # ONE corpus pass: counts is persisted across the two bounded
     # actions below (top-k rows + the 1-row total), then freed — without
     # the persist the corpus-wide explode+count shuffle would run twice.
-    counts = _word_counts(df, text_col).persist()
-    try:
+    with pair_cache_scope():
+        counts = scoped_persist(_word_counts(df, text_col))
         # The top table is ≤ max(ks) rows BY CONSTRUCTION (tokenizer
         # vocab sizes, not corpus sizes), so the cumulative sum is a
         # bounded driver-side fold — the IVF-centroid discipline: no
@@ -78,8 +79,6 @@ def vocab_coverage(
             .collect()
         ]  # already in (cnt desc, word asc) order
         total_tokens = counts.agg(F.sum("cnt")).collect()[0][0] or 0
-    finally:
-        counts.unpersist()
     covered = []
     run = 0
     for c in top_counts:
@@ -245,10 +244,12 @@ def bpe_train_merges(
             "freq long, syms array<string>",
         )
         return merges, final
-    syms_df = types.select(
-        "freq",
-        F.concat(F.split(F.col("word"), ""), F.array(F.lit("</w>"))).alias("syms"),
-    ).localCheckpoint()
+    syms_df, syms_blocks = local_checkpoint(
+        types.select(
+            "freq",
+            F.concat(F.split(F.col("word"), ""), F.array(F.lit("</w>"))).alias("syms"),
+        )
+    )
 
     def pair_counts(sdf: DataFrame) -> DataFrame:
         # fully-merged single-symbol words have no pairs — and would turn
@@ -301,7 +302,9 @@ def bpe_train_merges(
                 out.append(res)
             return pd.Series(out)
 
-        syms_df = syms_df.select(
-            "freq", apply_merge(F.col("syms")).alias("syms")
-        ).localCheckpoint()
+        syms_df, new_blocks = local_checkpoint(
+            syms_df.select("freq", apply_merge(F.col("syms")).alias("syms"))
+        )
+        syms_blocks.release()  # previous round, no longer referenced
+        syms_blocks = new_blocks
     return merges, syms_df

@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run queries() on Spark
-and oracle_sql() on DuckDB over the same sf parquet, compare row count,
-name-sorted schema, and a value hash. Usage:
+and oracle_sql() on DuckDB over the same sf parquet and compare them
+with the one gate comparator (``oracle/gate.py``, the same rule as
+tests/test_entry.py). Usage:
 
     python scripts/check_gates.py [query ...]        # default: all
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python scripts/check_gates.py
@@ -8,8 +9,6 @@ name-sorted schema, and a value hash. Usage:
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import sys
 
@@ -22,36 +21,6 @@ TABLES = [
 ]
 
 
-def _norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.6g}"
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm_cell(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(
-            f"{k}:{_norm_cell(v[k])}" for k in sorted(v)
-        ) + "}"
-    return str(v)
-
-
-def _hash_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x1f".join(_norm_cell(r[i]) for i in order) for r in rows
-    )
-    h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode("utf-8", "surrogatepass"))
-        h.update(b"\n")
-    return h.hexdigest()
-
-
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     want = sys.argv[1:]
@@ -60,7 +29,8 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
-    from language_identification_spark.operators.dedup import pair_cache_scope
+    from language_identification_spark.operators.cache import pair_cache_scope
+    from language_identification_spark.oracle.gate import gate_mismatch
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -89,6 +59,7 @@ def main():
                 sdf = qs[name](spark, sf_dir)
                 scols = sdf.columns
                 srows = sdf.collect()
+                spdf = sdf.toPandas() if name in oracles else None
         except Exception as e:
             print(f"{name}: SPARK ERROR {type(e).__name__}: {e}")
             n_bad += 1
@@ -100,25 +71,17 @@ def main():
             rel = con.execute(oracles[name])
             ocols = [d[0] for d in rel.description]
             orows = rel.fetchall()
+            opdf = con.execute(oracles[name]).df()
         except Exception as e:
             print(f"{name}: ORACLE ERROR {type(e).__name__}: {e}")
             n_bad += 1
             continue
-        rows_match = len(srows) == len(orows)
-        schema_match = sorted(scols) == sorted(ocols)
-        hash_match = (
-            schema_match
-            and _hash_rows(scols, srows) == _hash_rows(ocols, orows)
-        )
-        ok = rows_match and schema_match and hash_match
-        n_bad += 0 if ok else 1
+        err = gate_mismatch(scols, srows, spdf, ocols, orows, opdf)
+        n_bad += 0 if err is None else 1
         print(
-            f"{name}: {'PASS' if ok else 'FAIL'} rows={len(srows)}/{len(orows)}"
-            f" schema={schema_match} hash={hash_match}"
+            f"{name}: {'PASS' if err is None else 'FAIL ' + err}"
+            f" rows={len(srows)}/{len(orows)}"
         )
-        if not schema_match:
-            print(f"  spark cols:  {sorted(scols)}")
-            print(f"  oracle cols: {sorted(ocols)}")
     spark.stop()
     sys.exit(1 if n_bad else 0)
 

@@ -882,6 +882,7 @@ def test_pagerank_matches_pure_python_recurrence(spark):
     import math
     import random
 
+    from language_identification_spark.operators.cache import pair_cache_scope
     from language_identification_spark.operators.linkgraph import (
         MICRO,
         pagerank,
@@ -915,10 +916,11 @@ def test_pagerank_matches_pure_python_recurrence(spark):
         rank = {v: teleport + inflow.get(v, 0) for v in present}
 
     df = spark.createDataFrame(sorted(edges), "src string, dst string")
-    got = {
-        r["node"]: r["rank_micro"]
-        for r in pagerank(df, n_iter=4, checkpoint=False).collect()
-    }
+    with pair_cache_scope():
+        got = {
+            r["node"]: r["rank_micro"]
+            for r in pagerank(df, n_iter=4).collect()
+        }
     assert got == rank
 
     try:

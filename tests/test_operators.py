@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from language_identification_spark.operators import dedup, eval as ev, multimodal, similarity
+from language_identification_spark.operators.cache import pair_cache_scope
 
 
 @pytest.fixture(scope="module")
@@ -208,101 +209,51 @@ def test_frame_sampling(pages_df):
 
 
 def test_release_pair_cache(spark, sf_dir):
-    """ADVICE r2: the banded-signature persist must be releasable — after
-    materializing the pairs and calling release_pair_cache, no persistent
-    RDD blocks remain registered with the SparkContext."""
-    from language_identification_spark.operators.dedup import (
-        minhash_near_duplicates,
-        release_pair_cache,
-    )
-
+    """ADVICE r2: the banded-signature persist must be releasable — once
+    the pair_cache_scope the pairs were materialized in exits, no
+    persistent RDD blocks remain registered with the SparkContext."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     jsc = spark.sparkContext._jsc.sc()
-    # drain leftovers from earlier tests in this session
-    release_pair_cache(include_blocks=True)
     baseline = jsc.getPersistentRDDs().size()  # other suites may cache too
-    pairs = minhash_near_duplicates(docs, threshold=0.5)
-    # ADVICE r3: release must survive downstream transforms — every entry
-    # query applies a .select(), which returns a NEW DataFrame (an
-    # attribute-based handle would silently make release a no-op).
-    projected = pairs.select("id_a", "id_b")
-    projected.count()  # materialize
-    assert jsc.getPersistentRDDs().size() > baseline  # cache in use
-    # the minhash path's caches are recomputable persists — the default
-    # (blocks-excluded) drain frees all of them
-    release_pair_cache()
+    with pair_cache_scope():
+        pairs = dedup.minhash_near_duplicates(docs, threshold=0.5)
+        # ADVICE r3: release must survive downstream transforms — every
+        # entry query applies a .select(), which returns a NEW DataFrame
+        # (an attribute-based handle would silently make release a no-op).
+        projected = pairs.select("id_a", "id_b")
+        projected.count()  # materialize
+        assert jsc.getPersistentRDDs().size() > baseline  # cache in use
     assert jsc.getPersistentRDDs().size() == baseline
-    # the deprecated positional argument still works but warns loudly
-    with pytest.warns(DeprecationWarning, match="pair_cache_scope"):
-        release_pair_cache(docs)
-    release_pair_cache()
 
 
 def test_pair_cache_scope_isolated_release(spark, sf_dir):
     """ADVICE r4 (medium): releasing one result's caches must not make
     another in-flight result unreadable. Scopes give each call site its
-    own handle: result A's scope exits (freeing its checkpoint blocks)
-    while result B — built OUTSIDE that scope — is still pending, and B
-    must remain fully consumable afterwards."""
-    from language_identification_spark.operators import dedup
-
+    own handle: result A's inner scope exits (freeing its checkpoint
+    blocks) while result B — built in the OUTER scope — is still
+    pending, and B must remain fully consumable afterwards."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
     jsc = spark.sparkContext._jsc.sc()
-    dedup.release_pair_cache(include_blocks=True)
     baseline = jsc.getPersistentRDDs().size()
 
-    # B: checkpoint-backed components result in the (unscoped) default
-    # registry, NOT yet consumed.
-    pairs_b = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
-    comp_b = dedup.dedup_components(pairs_b)
+    with pair_cache_scope():
+        # B: checkpoint-backed components result, NOT yet consumed.
+        pairs_b = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+        )
+        comp_b = dedup.dedup_components(pairs_b)
 
-    # A: a full LSH run inside its own scope, consumed inside it.
-    with dedup.pair_cache_scope():
-        pairs_a = dedup.minhash_near_duplicates(docs, threshold=0.5)
-        comp_a = dedup.dedup_components(pairs_a)
-        comp_a.count()
-    # A's persists AND checkpoint blocks are gone; B's blocks survive.
-    assert jsc.getPersistentRDDs().size() > baseline
+        # A: a full LSH run inside its own scope, consumed inside it.
+        with pair_cache_scope():
+            pairs_a = dedup.minhash_near_duplicates(docs, threshold=0.5)
+            comp_a = dedup.dedup_components(pairs_a)
+            comp_a.count()
+        # A's persists AND checkpoint blocks are gone; B's blocks survive.
+        assert jsc.getPersistentRDDs().size() > baseline
 
-    got_b = sorted(map(tuple, comp_b.collect()))  # B still readable
-    assert got_b == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
-    dedup.release_pair_cache(include_blocks=True)
+        got_b = sorted(map(tuple, comp_b.collect()))  # B still readable
+        assert got_b == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
     assert jsc.getPersistentRDDs().size() == baseline
-
-
-def test_spill_dir_honored_without_guard(spark, dup_docs, tmp_path):
-    """ADVICE r4: spill_dir used to be silently ignored when
-    max_bucket=None. Now the corpus-scale disk-backed mode engages
-    independently of the hot-bucket guard: same pairs, a spill table
-    exists during the run, and no banded persist is live."""
-    from language_identification_spark.operators import dedup
-
-    dedup.release_pair_cache(include_blocks=True)
-    with dedup.pair_cache_scope():
-        mem = sorted(
-            map(
-                tuple,
-                dedup.minhash_near_duplicates(
-                    dup_docs, threshold=0.5, max_bucket=None
-                ).collect(),
-            )
-        )
-
-    def spill_tables():
-        return [
-            t.name
-            for t in spark.catalog.listTables()
-            if t.name.startswith("lid_banded_spill_")
-        ]
-
-    with dedup.pair_cache_scope():
-        spill = dedup.minhash_near_duplicates(
-            dup_docs, threshold=0.5, max_bucket=None, spill_dir=str(tmp_path)
-        )
-        got = sorted(map(tuple, spill.collect()))
-        assert spill_tables() != []
-    assert got == mem
-    assert spill_tables() == []
 
 
 def test_split_empty_regex_boundary(spark):
@@ -392,20 +343,20 @@ def test_ivf_topk_recall(spark):
 def test_dedup_components_basic(spark):
     """Chain (exercises pointer jumping), star, and isolated pair all
     resolve to min-id canonicals; only pair-participating ids appear."""
-    pairs = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7), (7, 8),  # chain
-         (20, 21), (20, 22), (20, 23),                            # star
-         (100, 101)],
-        "id_a long, id_b long",
-    )
-    got = sorted(map(tuple, dedup.dedup_components(pairs).collect()))
-    exp = sorted(
-        [(i, 1) for i in range(1, 9)]
-        + [(i, 20) for i in (20, 21, 22, 23)]
-        + [(100, 100), (101, 100)]
-    )
-    assert got == exp
-    dedup.release_pair_cache(include_blocks=True)
+    with pair_cache_scope():
+        pairs = spark.createDataFrame(
+            [(2, 1), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7), (7, 8),  # chain
+             (20, 21), (20, 22), (20, 23),                            # star
+             (100, 101)],
+            "id_a long, id_b long",
+        )
+        got = sorted(map(tuple, dedup.dedup_components(pairs).collect()))
+        exp = sorted(
+            [(i, 1) for i in range(1, 9)]
+            + [(i, 20) for i in (20, 21, 22, 23)]
+            + [(100, 100), (101, 100)]
+        )
+        assert got == exp
 
 
 def test_components_star_equals_all_pairs(spark):
@@ -414,45 +365,45 @@ def test_components_star_equals_all_pairs(spark):
     docs) as the exhaustive all-pairs enumeration."""
     import itertools
 
-    members = list(range(10, 17))
-    allp = spark.createDataFrame(
-        [(a, b) for a, b in itertools.combinations(members, 2)],
-        "id_a long, id_b long",
-    )
-    star = spark.createDataFrame(
-        [(members[0], m) for m in members[1:]], "id_a long, id_b long"
-    )
-    got_all = sorted(map(tuple, dedup.dedup_components(allp).collect()))
-    got_star = sorted(map(tuple, dedup.dedup_components(star).collect()))
-    assert got_all == got_star == [(m, members[0]) for m in members]
-    dedup.release_pair_cache(include_blocks=True)
+    with pair_cache_scope():
+        members = list(range(10, 17))
+        allp = spark.createDataFrame(
+            [(a, b) for a, b in itertools.combinations(members, 2)],
+            "id_a long, id_b long",
+        )
+        star = spark.createDataFrame(
+            [(members[0], m) for m in members[1:]], "id_a long, id_b long"
+        )
+        got_all = sorted(map(tuple, dedup.dedup_components(allp).collect()))
+        got_star = sorted(map(tuple, dedup.dedup_components(star).collect()))
+        assert got_all == got_star == [(m, members[0]) for m in members]
 
 
 def test_components_via_lsh_guard(spark, dup_docs):
     """End-to-end: LSH pairs with a tiny max_bucket (guard active) vs
     unguarded — identical components either way, and canonical_documents
     keeps exactly one survivor per duplicate cluster."""
-    guarded = dedup.minhash_near_duplicates(
-        dup_docs, threshold=0.5, max_bucket=2
-    )
-    exact = dedup.minhash_near_duplicates(
-        dup_docs, threshold=0.5, max_bucket=None
-    )
-    cg = sorted(map(tuple, dedup.dedup_components(guarded).collect()))
-    ce = sorted(map(tuple, dedup.dedup_components(exact).collect()))
-    assert cg == ce
-    assert len(cg) >= 3  # the planted 0/1/2(/3) cluster participates
+    with pair_cache_scope():
+        guarded = dedup.minhash_near_duplicates(
+            dup_docs, threshold=0.5, max_bucket=2
+        )
+        exact = dedup.minhash_near_duplicates(
+            dup_docs, threshold=0.5, max_bucket=None
+        )
+        cg = sorted(map(tuple, dedup.dedup_components(guarded).collect()))
+        ce = sorted(map(tuple, dedup.dedup_components(exact).collect()))
+        assert cg == ce
+        assert len(cg) >= 3  # the planted 0/1/2(/3) cluster participates
 
-    kept = dedup.canonical_documents(dup_docs, exact)
-    kept_ids = sorted(r["doc_id"] for r in kept.collect())
-    # one survivor (min id = 0) for the planted cluster, everything else kept
-    comp = dict(ce)
-    dropped = {i for i, c in comp.items() if i != c}
-    assert kept_ids == sorted(
-        r["doc_id"] for r in dup_docs.collect() if r["doc_id"] not in dropped
-    )
-    assert 0 in kept_ids and 1 not in kept_ids and 2 not in kept_ids
-    dedup.release_pair_cache(include_blocks=True)
+        kept = dedup.canonical_documents(dup_docs, exact)
+        kept_ids = sorted(r["doc_id"] for r in kept.collect())
+        # one survivor (min id = 0) for the planted cluster, everything else kept
+        comp = dict(ce)
+        dropped = {i for i, c in comp.items() if i != c}
+        assert kept_ids == sorted(
+            r["doc_id"] for r in dup_docs.collect() if r["doc_id"] not in dropped
+        )
+        assert 0 in kept_ids and 1 not in kept_ids and 2 not in kept_ids
 
 
 def test_ivf_probe_everything_equals_brute_force(spark, emb):
@@ -530,56 +481,19 @@ def test_ivf_no_partitionless_window(spark, emb):
         ), line
 
 
-def test_spill_to_table_mode(spark, dup_docs, tmp_path):
-    """r4: spill_dir switches the multi-consumer banded cache from
-    executor-memory persist() to a Hive-bucketed on-disk table (the
-    corpus-scale mode). Pair output identical; no persistent blocks are
-    live during the run (banded is on disk, and the default verify path
-    consumes candidates once without caching); release drops the catalog
-    table."""
-    dedup.release_pair_cache(include_blocks=True)
-    mem = dedup.minhash_near_duplicates(dup_docs, threshold=0.5)
-    got_mem = sorted(map(tuple, mem.collect()))
-    dedup.release_pair_cache(include_blocks=True)
-
-    jsc = spark.sparkContext._jsc.sc()
-    baseline = jsc.getPersistentRDDs().size()
-    spill = dedup.minhash_near_duplicates(
-        dup_docs, threshold=0.5, spill_dir=str(tmp_path)
-    )
-    got_spill = sorted(map(tuple, spill.collect()))
-    assert got_spill == got_mem
-
-    def spill_tables():
-        return [
-            t.name
-            for t in spark.catalog.listTables()
-            if t.name.startswith("lid_banded_spill_")
-        ]
-
-    assert len(spill_tables()) == 1
-    # banded table on disk, not in executor memory — and the default
-    # (single-consumer) verify path persists nothing else, so NO
-    # persistent blocks are live at all
-    assert jsc.getPersistentRDDs().size() == baseline
-    dedup.release_pair_cache(include_blocks=True)
-    assert jsc.getPersistentRDDs().size() == baseline
-    assert spill_tables() == []
-
-
 def test_dedup_components_raises_on_iteration_cap(spark):
     """Non-convergence must be loud: silently returning partial labels
     would make canonical_documents under-delete duplicates."""
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dedup_components(pairs, max_iter=1)
-    dedup.release_pair_cache(include_blocks=True)
+    with pair_cache_scope():
+        pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.dedup_components(pairs, max_iter=1)
 
 
 def test_candidate_first_ab_equivalence(spark, dup_docs):
     """r5: the candidate-first and always-shingle verify shapes are an
     output-identical A/B pair, for both same-shard and incremental LSH."""
-    with dedup.pair_cache_scope():
+    with pair_cache_scope():
         a = sorted(
             map(
                 tuple,
@@ -600,7 +514,7 @@ def test_candidate_first_ab_equivalence(spark, dup_docs):
 
     corpus = dup_docs.filter("doc_id % 2 = 0")
     new = dup_docs.filter("doc_id % 2 = 1")
-    with dedup.pair_cache_scope():
+    with pair_cache_scope():
         ia = sorted(
             map(
                 tuple,

@@ -249,20 +249,21 @@ def test_lsh_verify_candidate_first_plan(spark, sf_dir):
     operator docstring), both LSH verify stages must actually semi-join
     the document sides on the candidate id set BEFORE re-shingling."""
     from language_identification_spark.operators import dedup
+    from language_identification_spark.operators.cache import pair_cache_scope
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    near = dedup.minhash_near_duplicates(
-        docs.limit(100), threshold=0.5, candidate_first=True
-    )
-    _assert_verify_shingles_semi_joined(near, ("sh_a", "sh_b"))
+    with pair_cache_scope():
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        near = dedup.minhash_near_duplicates(
+            docs.limit(100), threshold=0.5, candidate_first=True
+        )
+        _assert_verify_shingles_semi_joined(near, ("sh_a", "sh_b"))
 
-    corpus = docs.filter("doc_id % 2 = 0")
-    new = docs.filter("doc_id % 2 = 1")
-    inc = dedup.incremental_near_duplicates(
-        new, corpus, threshold=0.5, candidate_first=True
-    )
-    _assert_verify_shingles_semi_joined(inc, ("sh_n", "sh_c"))
-    dedup.release_pair_cache()
+        corpus = docs.filter("doc_id % 2 = 0")
+        new = docs.filter("doc_id % 2 = 1")
+        inc = dedup.incremental_near_duplicates(
+            new, corpus, threshold=0.5, candidate_first=True
+        )
+        _assert_verify_shingles_semi_joined(inc, ("sh_n", "sh_c"))
 
 
 def test_incremental_default_is_candidate_first(spark, sf_dir):
@@ -271,13 +272,14 @@ def test_incremental_default_is_candidate_first(spark, sf_dir):
     corpus-side shingle pass is O(corpus)); pin that the no-flag call
     semi-joins before re-shingling."""
     from language_identification_spark.operators import dedup
+    from language_identification_spark.operators.cache import pair_cache_scope
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.filter("doc_id % 2 = 0")
-    new = docs.filter("doc_id % 2 = 1")
-    inc = dedup.incremental_near_duplicates(new, corpus, threshold=0.5)
-    _assert_verify_shingles_semi_joined(inc, ("sh_n", "sh_c"))
-    dedup.release_pair_cache()
+    with pair_cache_scope():
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        corpus = docs.filter("doc_id % 2 = 0")
+        new = docs.filter("doc_id % 2 = 1")
+        inc = dedup.incremental_near_duplicates(new, corpus, threshold=0.5)
+        _assert_verify_shingles_semi_joined(inc, ("sh_n", "sh_c"))
 
 
 def test_lsh_verify_default_broadcasts_candidates(spark, sf_dir):
@@ -286,13 +288,14 @@ def test_lsh_verify_default_broadcasts_candidates(spark, sf_dir):
     shingle arrays are scanned narrowly — never shuffled — and no
     LeftSemi appears in the verify plan."""
     from language_identification_spark.operators import dedup
+    from language_identification_spark.operators.cache import pair_cache_scope
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    near = dedup.minhash_near_duplicates(docs.limit(100), threshold=0.5)
-    plan = near._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-    dedup.release_pair_cache()
+    with pair_cache_scope():
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        near = dedup.minhash_near_duplicates(docs.limit(100), threshold=0.5)
+        plan = near._jdf.queryExecution().executedPlan().toString()
+        assert "LeftSemi" not in plan
+        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
 
 
 def test_contamination_broadcasts_eval_side(spark, sf_dir):
@@ -398,7 +401,7 @@ def test_dsir_ratio_table_broadcasts(spark, sf_dir):
     row-at-a-time BatchEvalPython ever."""
     import re
 
-    from language_identification_spark.operators.dedup import pair_cache_scope
+    from language_identification_spark.operators.cache import pair_cache_scope
     from language_identification_spark.operators.selection import (
         dsir_weights,
     )

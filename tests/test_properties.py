@@ -175,6 +175,7 @@ def test_dedup_components_random_graphs_vs_union_find(spark):
     import random
 
     from language_identification_spark.operators import dedup
+    from language_identification_spark.operators.cache import pair_cache_scope
 
     def union_find(edges, nodes):
         parent = {n: n for n in nodes}
@@ -216,7 +217,7 @@ def test_dedup_components_random_graphs_vs_union_find(spark):
 
     exp = union_find(edges, nodes)
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    with dedup.pair_cache_scope():
+    with pair_cache_scope():
         got = dict(
             (r["id"], r["canonical_id"])
             for r in dedup.dedup_components(pairs).collect()
@@ -231,12 +232,13 @@ def test_dedup_components_path_log_rounds(spark):
     import pytest as _pytest
 
     from language_identification_spark.operators import dedup
+    from language_identification_spark.operators.cache import pair_cache_scope
 
     k = 5
     n = 2**k + 1  # diameter 2^k
     edges = [(i, i + 1) for i in range(n - 1)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    with dedup.pair_cache_scope():
+    with pair_cache_scope():
         got = dict(
             (r["id"], r["canonical_id"])
             for r in dedup.dedup_components(pairs, max_iter=k + 2).collect()
@@ -244,7 +246,7 @@ def test_dedup_components_path_log_rounds(spark):
     assert got == {i: 0 for i in range(n)}
     # far below the needed rounds → loud failure, not silent wrong labels
     with _pytest.raises(RuntimeError, match="did not converge"):
-        with dedup.pair_cache_scope():
+        with pair_cache_scope():
             dedup.dedup_components(pairs, max_iter=1)
 
 
