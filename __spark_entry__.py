@@ -731,11 +731,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 expr.cast("long" if c["is_int"] else "double").alias(col)
             )
         feats = d.select("doc_id", *feat_cols)
-        reason = drop_reason_expr()
-        return feats.select(
-            "doc_id",
-            reason.alias("drop_reason"),
-            reason.isNull().alias("kept"),
+        return feats.select("doc_id", drop_reason_expr().alias("drop_reason")).select(
+            "doc_id", "drop_reason", F.col("drop_reason").isNull().alias("kept")
         )
 
     def compression_signal(spark, sf):
@@ -2499,10 +2496,8 @@ def oracle_sql() -> dict[str, str]:
               {_reason_feats}
             FROM documents
           )
-          SELECT doc_id,
-                 {_drop_reason_sql()} AS drop_reason,
-                 ({_drop_reason_sql()}) IS NULL AS kept
-          FROM feats
+          SELECT doc_id, drop_reason, drop_reason IS NULL AS kept
+          FROM (SELECT doc_id, {_drop_reason_sql()} AS drop_reason FROM feats)
         """
     corrupt_pred = "CASE WHEN doc_id % 7 = 0 THEN 'en' ELSE lang END"
     report_base = f"""

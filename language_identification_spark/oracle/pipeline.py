@@ -1,8 +1,8 @@
 """Pure-pandas/single-process oracle for the full quality pipeline.
 
 Computes the exact same per-document outputs as
-``pipeline/quality.run_quality_pipeline`` — (keep, lang_pred, lang_conf,
-perplexity, scrubbed_text) — using the SAME shared modules
+``pipeline/quality.run_quality_pipeline`` — (drop_reason, keep, lang_pred,
+lang_conf, perplexity, scrubbed_text) — using the SAME shared modules
 (functions.text / functions.scrub / models.hashed_ngram /
 models.perplexity / pipeline.rules), but trained with plain pandas
 group-bys instead of Spark shuffles. Because both sides share the scoring
@@ -18,7 +18,7 @@ from ..functions.scrub import scrub_text
 from ..functions.text import py_norm, py_quality_features
 from ..models.hashed_ngram import DIM, HashedNgramNB, doc_bucket_counts
 from ..models.perplexity import BigramLM, bigram_frame, bigram_key_counts
-from ..pipeline.rules import py_keep
+from ..pipeline.rules import py_drop_reason
 
 
 def train_oracle_models(train_pdf: pd.DataFrame, dim: int = DIM):
@@ -61,6 +61,7 @@ def run_oracle_pipeline(
         pages_pdf["url"], norms, labels, confs, ppls
     ):
         feats = py_quality_features(norm, stopwords)
+        reason = py_drop_reason(feats, float(conf), float(ppl))
         rows.append(
             {
                 "url": url,
@@ -69,7 +70,8 @@ def run_oracle_pipeline(
                 "lang_conf": float(conf),
                 "perplexity": float(ppl),
                 "scrubbed_text": scrub_text(norm),
-                "keep": py_keep(feats, float(conf), float(ppl)),
+                "drop_reason": reason,
+                "keep": reason is None,
                 **feats,
             }
         )

@@ -5,15 +5,16 @@
       → perplexity (bigram LM, broadcast)
       → Gopher/C4 heuristic features
       → PII/toxicity scrub (compiled regex)
-      → keep/drop
+      → drop_reason (first failing rule, NULL = kept) → keep
 
 Execution shape at scale: training is ONE pass over the train split (one
 mapInPandas emits every model's exact integer partial counts, one groupBy
 shuffle totals them, one collect); serving is a SINGLE narrow map stage —
 one pandas UDF computes (lang_pred, lang_conf, perplexity, scrubbed_text) and
 every heuristic feature per Arrow batch (one Python round trip per batch,
-numbers back instead of a second copy of the text), then the keep
-predicate stays JVM-side. No shuffle touches the 100 TB side after the
+numbers back instead of a second copy of the text), then the rule CASE
+stays JVM-side: ``drop_reason`` is compiled once and ``keep`` is
+``drop_reason IS NULL``. No shuffle touches the 100 TB side after the
 scan.
 """
 
@@ -32,7 +33,7 @@ from ..functions.text import QUALITY_FEATURE_STRUCT, py_quality_features_batch
 from ..models.hashed_ngram import DIM, HashedNgramNB, featurize_counts_pdf
 from ..models.perplexity import BigramLM, bigram_frame, bigram_key_counts
 from ..session import ship_package
-from .rules import keep_expr
+from .rules import drop_reason_expr
 
 FUSED_STRUCT = T.StructType(
     [
@@ -172,7 +173,8 @@ def run_quality_pipeline(
     heuristics: str = "fused",
 ) -> DataFrame:
     """pages → scored/filtered output. Narrow (no shuffle) after the scan:
-    one Arrow pass (:func:`make_fused_udf`) and the JVM keep predicate.
+    one Arrow pass (:func:`make_fused_udf`), the JVM ``drop_reason`` CASE
+    and ``keep = drop_reason IS NULL``.
 
     ``heuristics`` has one legal value, ``'fused'``; anything else raises
     ``ValueError``.
@@ -183,4 +185,6 @@ def run_quality_pipeline(
     out = pages.withColumn("_s", score(F.col("text"))).select(
         *[c for c in pages.columns if c not in ("html",)], "_s.*"
     )
-    return out.withColumn("keep", keep_expr())
+    return out.withColumn("drop_reason", drop_reason_expr()).withColumn(
+        "keep", F.col("drop_reason").isNull()
+    )

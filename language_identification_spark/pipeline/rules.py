@@ -69,29 +69,15 @@ def default_stopwords() -> tuple[str, ...]:
     return _DEFAULT_STOPWORDS_CACHE
 
 
-def keep_expr() -> Column:
-    """Native Spark SQL keep predicate — generated from RULE_SPECS (with
-    per-script guards), so it cannot drift from ``drop_reason_expr``:
-    keep ⇔ no applicable rule fails ⇔ drop reason IS NULL."""
-    cond = F.lit(True)
-    for reason, col, op, t in RULE_SPECS:
-        fail = (F.col(col) < F.lit(t)) if op == "<" else (F.col(col) > F.lit(t))
-        cond = cond & ~(_guard_expr(reason) & fail)
-    return cond
-
-
-"""Per-rule reason codes — the observability face of the keep decision.
-
-RefinedWeb/Dolma-style pipelines report PER-RULE removal rates and store
-the first failing rule with each dropped doc (debugging a corpus cut of
-unknown provenance is the 100 TB failure mode this exists for). The
-table below lists every keep rule in ``keep_expr``'s contract order with
-its failing comparison; :func:`drop_reason_expr` compiles it to ONE
-native CASE chain (first failing rule wins, NULL = kept) and
-:func:`drop_reason_sql` emits the DuckDB twin from the SAME rows, so the
-two engines cannot drift. Equivalence with ``keep_expr`` (kept ⇔ reason
-IS NULL) is pinned by test_misc_ops::test_drop_reason_matches_keep."""
-
+# Per-rule reason codes: the one compile of the keep decision.
+# RefinedWeb/Dolma-style pipelines report PER-RULE removal rates and store
+# the first failing rule with each dropped doc. The table below lists
+# every keep rule in contract order with its failing comparison;
+# :func:`drop_reason_expr` compiles it to ONE native CASE chain (first
+# failing rule wins, NULL = kept), the served ``keep`` is
+# ``drop_reason IS NULL``, and :func:`drop_reason_sql` and
+# :func:`py_drop_reason` are the DuckDB and Python twins generated from
+# the SAME rows, so the engines cannot drift.
 RULE_SPECS: list[tuple[str, str, str, float]] = (
     [
         ("too_few_chars", "n_chars", "<", MIN_CHARS),
@@ -170,29 +156,21 @@ def _py_guard(reason: str, is_cjk: bool) -> bool:
     return True
 
 
-def _specs(include_model_rules: bool) -> list[tuple[str, str, str, float]]:
-    if include_model_rules:
-        return RULE_SPECS
-    return [r for r in RULE_SPECS if r[1] not in ("lang_conf", "perplexity")]
-
-
-def drop_reason_expr(include_model_rules: bool = True) -> Column:
-    """First failing rule's name (contract order), NULL when kept.
-    ``include_model_rules=False`` restricts to the heuristic columns
-    (the shape usable before langid/perplexity have run)."""
+def drop_reason_expr() -> Column:
+    """First failing rule's name (contract order), NULL when kept."""
     expr = None
-    for reason, col, op, t in _specs(include_model_rules):
+    for reason, col, op, t in RULE_SPECS:
         fail = (F.col(col) < F.lit(t)) if op == "<" else (F.col(col) > F.lit(t))
         cond = _guard_expr(reason) & fail
         expr = F.when(cond, F.lit(reason)) if expr is None else expr.when(cond, F.lit(reason))
     return expr.otherwise(F.lit(None).cast("string"))
 
 
-def drop_reason_sql(include_model_rules: bool = True) -> str:
+def drop_reason_sql() -> str:
     """DuckDB twin of :func:`drop_reason_expr`, generated from RULE_SPECS."""
     whens = "\n".join(
         f"WHEN {_guard_sql(reason)}{col} {op} {t} THEN '{reason}'"
-        for reason, col, op, t in _specs(include_model_rules)
+        for reason, col, op, t in RULE_SPECS
     )
     return f"CASE {whens} ELSE NULL END"
 
@@ -201,24 +179,16 @@ def py_drop_reason(
     feats: dict, lang_conf: float | None = None, perplexity: float | None = None
 ) -> str | None:
     """Oracle-side twin of :func:`drop_reason_expr`: first failing rule in
-    contract order, None when kept. Model rules are evaluated only when
-    lang_conf/perplexity are supplied (the pre-model heuristic shape
-    otherwise — same contract as ``include_model_rules=False``)."""
-    vals = dict(feats)
-    if lang_conf is not None:
-        vals["lang_conf"] = lang_conf
-    if perplexity is not None:
-        vals["perplexity"] = perplexity
+    contract order, None when kept. A model rule is evaluated only when
+    its value (lang_conf / perplexity) is supplied, so the features alone
+    give the pre-model heuristic reason."""
+    model = {"lang_conf": lang_conf, "perplexity": perplexity}
+    vals = {**feats, **model}
     is_cjk = bool(feats["is_cjk"])
-    for reason, col, op, t in _specs(lang_conf is not None):
-        if not _py_guard(reason, is_cjk):
+    for reason, col, op, t in RULE_SPECS:
+        if (col in model and model[col] is None) or not _py_guard(reason, is_cjk):
             continue
         v = vals[col]
         if (v < t) if op == "<" else (v > t):
             return reason
     return None
-
-
-def py_keep(feats: dict, lang_conf: float, perplexity: float) -> bool:
-    """Oracle-side twin of :func:`keep_expr` (same RULE_SPECS fold)."""
-    return py_drop_reason(feats, lang_conf, perplexity) is None

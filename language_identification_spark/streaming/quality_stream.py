@@ -2,8 +2,8 @@
 
 The reference is batch-only (SURVEY.md §2.9); this is the net-new streaming
 surface: the SAME narrow transform chain (the one serving Arrow UDF —
-scores, scrub and heuristic features — plus the keep predicate) applied
-to a ``readStream`` source, so batch and streaming
+scores, scrub and heuristic features — plus the ``drop_reason`` CASE and
+``keep``) applied to a ``readStream`` source, so batch and streaming
 share one code path (``run_quality_pipeline`` works on both because every
 stage is a stateless projection — no watermark needed for the filter
 itself).
@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..pipeline.lineage import lineage_frame
+from ..pipeline.lineage import lineage_frame, observe_drops
 from ..pipeline.quality import QualityModels, run_quality_pipeline
 
 PAGES_SCHEMA = T.StructType(
@@ -70,12 +70,12 @@ def run_stream_with_lineage(
 ):
     """Streaming twin of the batch path's observe()-lineage
     (pipeline/lineage.run_resumable): every micro-batch appends ONE
-    lineage row — (batch_id, n_input, n_kept, n_lowconf, n_highppl,
-    wall_s, ts), the same attrition schema keyed by batch instead of
-    url-bucket — collected via ``observe()`` on the batch DataFrame
+    lineage row — (batch_id, n_input, n_kept, drops, wall_s, ts), the
+    same counts keyed by batch instead of url-bucket, with ``drops``
+    mapping each first-failing rule to its count — collected by the same
+    ``pipeline.lineage.observe_drops`` on the batch DataFrame
     inside ``foreachBatch``, so the input is read once and the output
-    written once with no post-write rescan (identical discipline to the
-    batch path; the thresholds are the shared rules constants).
+    written once with no post-write rescan.
     Restart-safety: BOTH writes are dynamic partition overwrites keyed
     by ``batch_id``, so a replayed micro-batch (Structured Streaming's
     at-least-once foreachBatch contract) REPLACES its own output
@@ -86,43 +86,23 @@ def run_stream_with_lineage(
     """
     import time
 
-    from pyspark.sql import Observation
-
-    from ..pipeline.rules import MAX_PERPLEXITY, MIN_LANG_CONF
-
     scored = quality_stream(spark, read_pages_stream(spark, dir_path), models)
 
     def handle_batch(df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
-        obs = Observation(f"stream_lineage_{batch_id}")
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_input"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
-            F.sum((F.col("lang_conf") < MIN_LANG_CONF).cast("long")).alias("n_lowconf"),
-            F.sum((F.col("perplexity") > MAX_PERPLEXITY).cast("long")).alias("n_highppl"),
+        observed, counts = observe_drops(
+            df.withColumn("batch_id", F.lit(int(batch_id))), "batch_id", [int(batch_id)]
         )
         (
-            observed.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
+            observed.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(out_dir)
         )
-        m = obs.get
         row = lineage_frame(
             spark,
-            [
-                (
-                    int(batch_id),
-                    int(m["n_input"] or 0),
-                    int(m["n_kept"] or 0),
-                    int(m["n_lowconf"] or 0),
-                    int(m["n_highppl"] or 0),
-                    float(time.monotonic() - t0),
-                )
-            ],
-            "batch_id long, n_input long, n_kept long, n_lowconf long, n_highppl long, wall_s double",
+            [(b, *c, float(time.monotonic() - t0)) for b, c in counts().items()],
+            "batch_id long, n_input long, n_kept long, drops map<string,bigint>, wall_s double",
         )
         (
             row.write.mode("overwrite")

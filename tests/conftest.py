@@ -37,3 +37,25 @@ def pages_df(spark, pages_pdf, tmp_path_factory):
 def sf_dir():
     # SPARK_GRAFT_SF_NAME=sf0.01 runs the oracle gate at driver scale
     return os.path.join(TESTDATA, os.environ.get("SPARK_GRAFT_SF_NAME", "sf0.001"))
+
+
+@pytest.fixture(scope="session")
+def check_lineage_drops():
+    """Asserts that each lineage row's ``drops`` equals the written
+    output's first-failing-rule counts for the row's ``key`` value, and
+    that ``n_kept`` plus the drops account for every input row."""
+    from pyspark.sql import functions as F
+
+    def check(lineage_rows, out, key):
+        want = {}
+        for r in (
+            out.filter(F.col("drop_reason").isNotNull())
+            .groupBy(key, "drop_reason").count().collect()
+        ):
+            want.setdefault(r[key], {})[r["drop_reason"]] = r["count"]
+        assert want, "the fixture drops some docs"
+        for r in lineage_rows:
+            assert r["drops"] == want.get(r[key], {}), r[key]
+            assert r["n_kept"] + sum(r["drops"].values()) == r["n_input"], r[key]
+
+    return check

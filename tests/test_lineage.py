@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from language_identification_spark.pipeline.lineage import (
     completed_buckets,
+    input_snapshot_id,
     run_resumable,
 )
 from language_identification_spark.pipeline.quality import (
@@ -17,7 +18,7 @@ from language_identification_spark.pipeline.quality import (
 N_BUCKETS = 8
 
 
-def test_resume_exactly_once(spark, pages_df, tmp_path):
+def test_resume_exactly_once(spark, pages_df, tmp_path, check_lineage_drops):
     models = train_quality_models(pages_df.filter("split = 'train'"))
     out_dir = str(tmp_path / "out")
     lin_dir = str(tmp_path / "lineage")
@@ -28,7 +29,7 @@ def test_resume_exactly_once(spark, pages_df, tmp_path):
         only_buckets={0, 1, 2, 3},
     )
     assert first == [0, 1, 2, 3]
-    assert completed_buckets(spark, lin_dir) == {0, 1, 2, 3}
+    assert completed_buckets(spark, lin_dir, input_snapshot_id(pages_df)) == {0, 1, 2, 3}
 
     # Restart: processes only the remaining buckets.
     second = run_resumable(spark, pages_df, models, out_dir, lin_dir, N_BUCKETS)
@@ -41,7 +42,7 @@ def test_resume_exactly_once(spark, pages_df, tmp_path):
     lineage = spark.read.parquet(lin_dir)
     assert lineage.dtypes == [
         ("bucket", "int"), ("n_input", "bigint"), ("n_kept", "bigint"),
-        ("n_lowconf", "bigint"), ("n_highppl", "bigint"), ("run_id", "string"),
+        ("drops", "map<string,bigint>"), ("run_id", "string"),
         ("input_snapshot", "string"), ("wall_s", "double"), ("ts", "timestamp"),
     ]
     per_bucket = lineage.groupBy("bucket").count().collect()
@@ -60,6 +61,7 @@ def test_resume_exactly_once(spark, pages_df, tmp_path):
     # Lineage attrition numbers line up with the output.
     total_kept = lineage.agg(F.sum("n_kept")).first()[0]
     assert total_kept == resumed.filter("keep").count()
+    check_lineage_drops(lineage.collect(), resumed, "bucket")
 
 
 def test_empty_bucket_reopens_on_new_snapshot(spark, pages_df, tmp_path):
@@ -103,3 +105,33 @@ def test_empty_bucket_reopens_on_new_snapshot(spark, pages_df, tmp_path):
     assert second == [empty_bucket]
     out = spark.read.parquet(out_dir)
     assert out.count() == pages_df.count()
+
+
+def test_observe_drops_counts_are_exact(spark):
+    """The per-rule drops come from one histogram aggregate; merged from
+    64 partial histograms (every rule, skewed keys, one key with no
+    rows) they still equal the exact per-key counts."""
+    import numpy as np
+    import pandas as pd
+
+    from language_identification_spark.pipeline.lineage import observe_drops
+    from language_identification_spark.pipeline.rules import RULE_SPECS
+
+    rng = np.random.default_rng(3)
+    reasons = [r for r, *_ in RULE_SPECS] + [None]
+    keys = list(range(17))
+    weights = np.arange(1, 17) ** 2
+    n = 20_000
+    pdf = pd.DataFrame({
+        "k": rng.choice(keys[:-1], n, p=weights / weights.sum()),
+        "drop_reason": rng.choice(np.array(reasons, dtype=object), n),
+    })
+    pdf["keep"] = pdf["drop_reason"].isna()
+    observed, counts = observe_drops(spark.createDataFrame(pdf).repartition(64), "k", keys)
+    observed.write.format("noop").mode("overwrite").save()
+    got = counts()
+    for k in keys:
+        sub = pdf[pdf["k"] == k]
+        want = sub["drop_reason"].value_counts().to_dict()
+        assert got[k] == (len(sub), int(sub["keep"].sum()), want), k
+    assert got[16] == (0, 0, {})

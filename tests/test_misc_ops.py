@@ -578,9 +578,11 @@ def test_percentile_filter_approx_matches_exact_small(spark):
 
 
 def test_drop_reason_matches_keep(spark):
-    """r5 reason codes: kept <=> drop_reason IS NULL must hold for ANY
-    feature combination — checked over 600 seeded-random rows sweeping
-    each rule's threshold neighborhood."""
+    """The one rule compile, cross-engine: Spark's ``drop_reason_expr``
+    (whose NULL is the served ``keep``) equals the Python twin
+    ``py_drop_reason`` on EVERY row of 600 seeded-random rows sweeping
+    each rule's threshold neighborhood, plus 5 all-passing rows, over
+    both ``is_cjk`` branches."""
     import numpy as np
     import pandas as pd
 
@@ -619,15 +621,16 @@ def test_drop_reason_matches_keep(spark):
         pdf[c] = pdf[c].astype("int64")
     # r6 per-script routing: random is_cjk exercises both guard branches
     pdf["is_cjk"] = rng.integers(0, 2, len(pdf)).astype(bool)
+    pdf["row"] = range(len(pdf))
     df = spark.createDataFrame(pdf)
-    got = df.select(
-        rules.keep_expr().alias("kept"),
-        rules.drop_reason_expr().alias("reason"),
-    ).collect()
+    got = df.select("row", rules.drop_reason_expr().alias("reason")).collect()
+    assert len(got) == len(pdf)
     n_kept = 0
     for r in got:
-        assert bool(r["kept"]) == (r["reason"] is None), dict(r.asDict())
-        n_kept += int(bool(r["kept"]))
+        row = pdf.iloc[r["row"]].to_dict()
+        want = rules.py_drop_reason(row, row["lang_conf"], row["perplexity"])
+        assert r["reason"] == want, row
+        n_kept += int(r["reason"] is None)
     assert 0 < n_kept < len(got)
 
 
@@ -1370,7 +1373,10 @@ def test_cjk_routing_fixes_word_rule_misjudgement(spark):
     out = {
         r["k"]: r["reason"]
         for r in with_quality_features(df, "norm_text")
-        .select("k", drop_reason_expr(include_model_rules=False).alias("reason"))
+        # passing model scores, so only the heuristic rules can fire
+        .withColumn("lang_conf", F.lit(1.0))
+        .withColumn("perplexity", F.lit(0.0))
+        .select("k", drop_reason_expr().alias("reason"))
         .collect()
     }
     assert out["12-zh"] is None

@@ -149,7 +149,7 @@ def test_output_schema(spark, pages_df, spark_models):
     out = run_quality_pipeline(spark, pages_df, spark_models)
     cols = set(out.columns)
     assert {
-        "url", "warc_ts", "lang", "keep", "lang_pred", "lang_conf",
+        "url", "warc_ts", "lang", "drop_reason", "keep", "lang_pred", "lang_conf",
         "perplexity", "scrubbed_text", "n_chars", "n_words",
     } <= cols
     assert "html" not in cols  # pruned: never carry the heavy binary column
@@ -157,9 +157,9 @@ def test_output_schema(spark, pages_df, spark_models):
 
 def test_served_features_match_oracle(oracle_out, spark_out):
     """The feature kernel at pipeline level: every heuristic feature the
-    serving UDF returns, and the keep decision, equal the per-doc Python
-    oracle's for the same url."""
-    cols = ["keep", *QUALITY_FEATURE_STRUCT.fieldNames()]
+    serving UDF returns, the served drop reason and the keep decision
+    equal the per-doc Python oracle's for the same url."""
+    cols = ["drop_reason", "keep", *QUALITY_FEATURE_STRUCT.fieldNames()]
     for url, o in oracle_out.iterrows():
         s = spark_out[url]
         assert {c: s[c] for c in cols} == {c: o[c] for c in cols}, url

@@ -30,8 +30,9 @@ def test_pipeline_is_narrow(spark, pages_df):
 def test_quality_pipeline_is_one_arrow_pass(spark, pages_df):
     """One serving shape: the executed plan runs exactly one Arrow UDF
     (scores, scrub and every heuristic feature in one Python round
-    trip), the output carries no normalized-text copy, and no other
-    heuristics shape is accepted."""
+    trip) and compiles the rule CASE once (``keep`` reads
+    ``drop_reason``), the output carries no normalized-text copy, and no
+    other heuristics shape is accepted."""
     import re
 
     import pytest
@@ -39,8 +40,14 @@ def test_quality_pipeline_is_one_arrow_pass(spark, pages_df):
     models = train_quality_models(pages_df.filter("split = 'train'"))
     out = run_quality_pipeline(spark, pages_df, models)
     out.write.format("noop").mode("overwrite").save()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    # print every project field, or truncation could hide the CASE
+    spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
+    try:
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
     assert len(re.findall(r"ArrowEvalPython", plan)) == 1, plan
+    assert plan.count("too_few_chars") == 1, plan
     assert "norm_text" not in out.columns
     with pytest.raises(ValueError):
         run_quality_pipeline(spark, pages_df, models, heuristics="native")

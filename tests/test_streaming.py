@@ -165,7 +165,7 @@ def test_stateful_dedup_ttl_eviction(spark, tmp_path):
     ]
 
 
-def test_streaming_lineage_per_batch(spark, pages_df, tmp_path):
+def test_streaming_lineage_per_batch(spark, pages_df, tmp_path, check_lineage_drops):
     """r4: the streaming path gets the batch path's observe()-lineage —
     one row per micro-batch with the same attrition schema, counts
     consistent with the written output."""
@@ -195,12 +195,13 @@ def test_streaming_lineage_per_batch(spark, pages_df, tmp_path):
     assert len(rows) == 2
     assert sum(r["n_input"] for r in rows) == out.count() == pages_df.count()
     assert sum(r["n_kept"] for r in rows) == out.filter("keep").count()
-    assert sum(r["n_lowconf"] for r in rows) == out.filter(
-        F.col("lang_conf") < 0.5
+    check_lineage_drops(rows, out, "batch_id")
+    assert sum(r["drops"].get("lang_conf_low", 0) for r in rows) == out.filter(
+        F.col("drop_reason") == "lang_conf_low"
     ).count()
     assert all(r["wall_s"] > 0 for r in rows)
     assert set(lineage.columns) == {
-        "batch_id", "n_input", "n_kept", "n_lowconf", "n_highppl", "wall_s", "ts",
+        "batch_id", "n_input", "n_kept", "drops", "wall_s", "ts",
     }
     assert "batch_id" in out.columns
 
