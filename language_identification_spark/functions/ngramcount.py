@@ -17,6 +17,15 @@ final ``groupBy(...).sum("cnt")`` makes totals EXACTLY equal to the
 explode form (integer counts, any grouping), so trained probabilities
 are bit-identical.
 
+Case folding (``lower=True``) is Python ``str.lower``, the reference's
+``text.lower()``: ``fold_case`` lowers each text on its own, inside the
+Arrow batch, before padding and before the batch is joined into one
+buffer (final sigma depends on the letters around it, and 'İ' lowers to
+two codepoints, so lengths are taken after lowering). Spark's ``lower()``
+is not used: its first call in a JVM sets up ICU case mapping (1.5–2.5 s),
+and its Unicode version is newer than CPython's, so a few recent
+codepoints (U+A7CB, U+10D50, …) fold differently from the reference.
+
 Gram strings are decoded from the packed keys (codepoints → utf-32) —
 lossless for any Unicode codepoint (< 2^21), so output grams equal the
 oracle's ``string_split``-by-codepoint semantics. Encoding and decoding
@@ -150,6 +159,34 @@ def rank_profile(text: str, max_size: int = 400) -> list[tuple[str, int]]:
     return list(zip(grams, cnt.tolist()))[:max_size]
 
 
+def fold_case(texts: pd.Series) -> pd.Series:
+    """Python ``str.lower`` of each (non-NULL) text, index kept.
+
+    Per element, not ``Series.str.lower()``: on an Arrow-backed
+    (``string[pyarrow]``) series pandas lowers with utf8proc's simple
+    mapping, which loses final sigma ("ΟΔΟΣ" → "οδοσ") and the two-
+    codepoint 'İ' → "i̇"."""
+    return pd.Series([t.lower() for t in texts], index=texts.index, dtype=object)
+
+
+def keyed_texts(pdf: pd.DataFrame, text_col: str, key_col: str | None, lower: bool):
+    """(key, texts) groups of one Arrow batch — one group with key
+    ``None`` when ``key_col`` is None. NULL text is dropped (it
+    contributes no gram, as ``explode(char_ngrams(NULL))`` dropped the
+    row; empty text keeps its sentinel grams) and, with ``lower``, every
+    text is case-folded by ``fold_case``."""
+    texts = pdf[text_col]
+    mask = texts.notna()
+    texts = texts[mask]
+    if lower:
+        texts = fold_case(texts)
+    if key_col is None:
+        yield None, texts.tolist()
+        return
+    for key, grp in texts.groupby(pdf[key_col].to_numpy()[mask.to_numpy()]):
+        yield key, grp.tolist()
+
+
 def char_ngram_counts(
     df: DataFrame,
     n: int,
@@ -162,37 +199,24 @@ def char_ngram_counts(
     """(key_col?, gram_col, cnt) exact char-n-gram occurrence counts —
     the drop-in replacement for ``explode(char_ngrams(...)) → groupBy →
     count()``. Partial counts per (batch, key) via numpy, one map-side-
-    combinable ``sum`` shuffle. n ≤ 3 (the packed-key domain)."""
+    combinable ``sum`` shuffle. n ≤ 3 (the packed-key domain).
+
+    ``lower=True`` folds case with Python ``str.lower``, per text, before
+    padding (``fold_case``) — the reference's folding, not Spark's."""
     if n > 3:
         raise ValueError("char_ngram_counts packs codepoints 21 bits each; n must be <= 3")
-    # lowercasing stays JVM-side (F.lower) so case-folding semantics are
-    # EXACTLY the ones the oracle was validated against — only the gram
-    # windowing/counting moves to numpy.
-    text_expr = F.lower(F.col(text_col)) if lower else F.col(text_col)
-    cols = ([F.col(key_col)] if key_col else []) + [text_expr.alias(text_col)]
-    src = df.select(*cols)
+    src = df.select(*([key_col] if key_col else []), text_col)
     out_schema = (
         (f"`{key_col}` string, " if key_col else "") + f"`{gram_col}` string, cnt long"
     )
 
     def partial(pdfs):
         for pdf in pdfs:
-            # NULL text contributes nothing (explode(char_ngrams(NULL))
-            # dropped the row); empty text keeps its sentinel grams.
-            texts = pdf[text_col]
-            mask = texts.notna()
-            texts = texts[mask]
-            if key_col is None:
-                grams, cnts = grouped_gram_counts(texts.tolist(), n, pad)
+            for key, texts in keyed_texts(pdf, text_col, key_col, lower):
+                grams, cnts = grouped_gram_counts(texts, n, pad)
                 if grams:
-                    yield pd.DataFrame({gram_col: grams, "cnt": cnts})
-                continue
-            for key, grp in texts.groupby(pdf[key_col].to_numpy()[mask.to_numpy()]):
-                grams, cnts = grouped_gram_counts(grp.tolist(), n, pad)
-                if grams:
-                    yield pd.DataFrame(
-                        {key_col: key, gram_col: grams, "cnt": cnts}
-                    )
+                    out = {gram_col: grams, "cnt": cnts}
+                    yield pd.DataFrame({key_col: key, **out} if key_col else out)
 
     partials = src.mapInPandas(partial, schema=out_schema)
     keys = ([key_col] if key_col else []) + [gram_col]

@@ -21,7 +21,12 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.ngramcount import char_ngram_counts, grouped_gram_counts, rank_profile
+from ..functions.ngramcount import (
+    char_ngram_counts,
+    grouped_gram_counts,
+    keyed_texts,
+    rank_profile,
+)
 
 NGRAM_SMOOTHING = 1e-8   # statistical_models.py:8
 CHARFREQ_SMOOTHING = 1e-10  # statistical_models.py:52
@@ -53,7 +58,8 @@ def train_char_freq(
     df: DataFrame, smoothing: float = CHARFREQ_SMOOTHING,
     text_col: str = "text", lang_col: str = "lang",
 ) -> DataFrame:
-    """(lang, char, prob) — lowercased char profile (statistical_models.py:57-74)."""
+    """(lang, char, prob) — char profile of the Python-``str.lower``ed
+    text (statistical_models.py:57-74)."""
     counts = char_ngram_counts(
         df.select(F.col(lang_col).alias("lang"), F.col(text_col).alias("text")),
         1, key_col="lang", lower=True, pad=False, gram_col="char",
@@ -175,23 +181,17 @@ def train_dunning(
     CJK-heavy web corpus (|V| ~ 10⁷ observed bigrams) still only a model
     BUILD cost: the grid never joins back to documents (serving
     broadcasts per-lang dicts)."""
-    # lowercasing stays JVM-side (F.lower), as in the oracle-validated form
-    src = df.select(
-        F.col(lang_col).alias("lang"), F.lower(F.col(text_col)).alias("text")
-    )
+    src = df.select(F.col(lang_col).alias("lang"), F.col(text_col).alias("text"))
 
     def partial(pdfs):
         import pandas as pd
 
         for pdf in pdfs:
-            texts = pdf["text"]
-            mask = texts.notna()  # NULL text contributes nothing
-            texts = texts[mask]
-            for lang, grp in texts.groupby(pdf["lang"].to_numpy()[mask.to_numpy()]):
-                grp = grp.tolist()
-                uni, uni_cnt = grouped_gram_counts(grp, 1, False)
+            # Python str.lower per text, as the reference's dunning_features
+            for lang, texts in keyed_texts(pdf, "text", "lang", lower=True):
+                uni, uni_cnt = grouped_gram_counts(texts, 1, False)
                 # pad=True is the reference '_' + text + '_' bigram padding
-                bg, bg_cnt = grouped_gram_counts(grp, 2, True)
+                bg, bg_cnt = grouped_gram_counts(texts, 2, True)
                 yield pd.DataFrame({
                     "lang": lang,
                     "feat": ["c_" + g for g in uni] + ["bg_" + g for g in bg],

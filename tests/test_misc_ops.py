@@ -1598,6 +1598,12 @@ def test_char_ngram_counts_match_explode_form(spark):
         ("el", "αβγ αβ"),
         ("zh", "的一是了我"),
         ("en", "MiXeD Case\t tabs\nnewlines"),
+        # context-sensitive and multi-codepoint case mappings: the new
+        # side folds with Python str.lower, the old side with Spark lower
+        ("el", "ΟΔΟΣ ΣΟΦΟΣ."),
+        ("tr", "İstanbul"),
+        ("de", "ẞ"),
+        ("hr", "ǅ"),
     ]
     df = spark.createDataFrame(rows * 3, "lang string, text string")
     for n in (1, 2, 3):
@@ -1621,6 +1627,46 @@ def test_char_ngram_counts_match_explode_form(spark):
     assert {(r["g"], r["cnt"]) for r in new.collect()} == {
         (r["g"], r["count"]) for r in old.collect()
     }
+
+
+def test_fold_case_is_python_lower_on_arrow_strings():
+    """The gram kernels' case folding is str.lower per element, also on
+    an Arrow-backed series, where pandas' own ``.str.lower()`` gives
+    "οδοσ" (no final sigma) and "i" for 'İ'."""
+    import pandas as pd
+
+    from language_identification_spark.functions.ngramcount import fold_case
+
+    texts = pd.Series(["ΟΔΟΣ", "İ", "ẞ", ""], index=[3, 5, 7, 9], dtype="string[pyarrow]")
+    got = fold_case(texts)
+    assert got.tolist() == ["οδος", "i\u0307", "ß", ""]
+    assert got.index.tolist() == [3, 5, 7, 9]
+    assert all(type(t) is str for t in got)
+
+
+def test_word_counts_match_python_lower_split(spark, pages_pdf):
+    """Lowercase-parity twin for the vocab tokenizer: ``_word_counts``
+    equals a Counter over ``re.split("[ \\t\\n]+", t.lower())`` with
+    empty strings dropped, on the fixture pages, context-sensitive case
+    mappings, and NULL, empty and whitespace-only text. (Codepoints
+    added after CPython's Unicode database, e.g. U+A7CB, are left out:
+    ``_word_counts`` still folds with Spark's ``lower()``.)"""
+    import re
+    from collections import Counter
+
+    from language_identification_spark.operators.vocab import _word_counts
+
+    texts = pages_pdf["text"].tolist() + [
+        "ΟΔΟΣ ΣΟΦΟΣ.", "İstanbul", "ẞ", "ǅ", "MiXeD\tCase\n\nWords  x",
+        None, "", " ", " \t\n ", "\n lead and trail \t",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = {r["word"]: r["cnt"] for r in _word_counts(df, "text").collect()}
+    want = Counter(
+        w for t in texts if t is not None
+        for w in re.split("[ \t\n]+", t.lower()) if w != ""
+    )
+    assert got == dict(want)
 
 
 def test_token_buckets_udf_matches_sql(spark):

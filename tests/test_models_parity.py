@@ -65,6 +65,33 @@ def test_char_freq_parity(train_df, train_pdf):
     _assert_prob_dicts_close(d, m.language_profiles)
 
 
+def test_case_folding_follows_the_reference(spark):
+    """Char-freq and Dunning training fold case as the reference does
+    (Python str.lower), also on codepoints whose case mapping is newer
+    than CPython's Unicode database: U+A7CB 'Ɤ', U+10D50 and U+1C89
+    (Spark's ICU lower() maps U+A7CB to U+0264)."""
+    rows = [
+        ("en", "Hello World \ua7cb"),
+        ("en", "ΟΔΟΣ ΣΟΦΟΣ. İstanbul"),
+        ("de", "Straße \U00010d50\U00010d50 ẞ"),
+        ("de", "plain text"),
+        ("xx", "\u1c89 mixed \ua7cb\u1c89 Case"),
+    ]
+    texts = [t for _, t in rows]
+    labels = [lang for lang, _ in rows]
+    df = spark.createDataFrame(rows, "lang string, text string")
+
+    cf = ref.CharFrequency()
+    cf.train(texts, labels)
+    got = tr.model_table_to_dict(tr.train_char_freq(df), "char_freq")
+    _assert_prob_dicts_close(got, cf.language_profiles)
+
+    dn = ref.Dunning()
+    dn.train(texts, labels)
+    got = tr.model_table_to_dict(tr.train_dunning(df), "dunning")
+    _assert_prob_dicts_close(got, dn.language_models)
+
+
 def test_markov_parity(train_df, train_pdf):
     m = ref.MarkovChain()
     m.train(train_pdf["text"].tolist(), train_pdf["lang"].tolist())

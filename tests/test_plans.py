@@ -510,3 +510,24 @@ def test_dunning_training_reads_corpus_once(spark, pages_df):
     final = plan.split("== Initial Plan ==")[0]
     assert len(re.findall(r"MapInPandas", final)) == 1, plan
     assert "ReusedExchange" in final, plan
+
+
+def test_langid_case_folding_stays_in_the_kernel(spark, pages_df):
+    """Case folding is Python str.lower inside the gram kernels: the
+    executed plans of the lowercasing trainers and of
+    ``char_ngram_counts(lower=True)`` hold no Spark ``lower(``."""
+    from language_identification_spark.functions.ngramcount import char_ngram_counts
+    from language_identification_spark.models.train import (
+        train_char_freq,
+        train_dunning,
+    )
+
+    src = pages_df.select("text", "lang")
+    for df in (
+        train_char_freq(src),
+        train_dunning(src),
+        char_ngram_counts(src, 2, key_col="lang", lower=True),
+    ):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "lower(" not in plan, plan
