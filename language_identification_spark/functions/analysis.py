@@ -10,6 +10,10 @@ below were probed empirically:
 - ``regexp_count``    == ``length(regexp_extract_all(...))``
 - integer arithmetic identical ⇒ the rolling-hash fingerprint matches
   bit-for-bit.
+
+The Arrow-batch serving forms (``doc_fingerprint``, the quality-score
+counts, ``winnow_fingerprints``) read their codepoints through
+``codepoints`` and fold with its ``mod_step``.
 """
 
 from __future__ import annotations
@@ -19,9 +23,12 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .codepoints import FOLD_MOD as FINGERPRINT_MOD
+from .codepoints import encode, fold, mod_step, tile
+from .text import SYMBOL_TABLE
+
 # BPE-ish tokenizer: letter runs | digit runs | single non-alnum non-space.
 BPE_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n]"
-FINGERPRINT_MOD = 1_000_000_007
 
 # Unicode script ranges, written as literal char ranges so the same class
 # string works in both Java regex (Spark) and RE2 (DuckDB, via \x{...}).
@@ -67,44 +74,15 @@ def doc_fingerprint(col: Column) -> Column:
     """Deterministic rolling-hash fingerprint: fold (acc*31 + codepoint)
     mod 1e9+7 over the characters. Same value in DuckDB via list_reduce.
 
-    r7: computed in ``max_doc_len`` masked numpy rounds per Arrow batch —
-    the SQL ``aggregate`` HOF evaluated an interpreted lambda per
-    character. Exact: acc < 1e9+7 ⇒ acc*31 + cp < 2^63. NULL text stays
+    r7: one ``codepoints.fold`` per Arrow batch — the SQL ``aggregate``
+    HOF evaluated an interpreted lambda per character. NULL text stays
     NULL (the SQL form's propagation). Non-deterministic mark per guide
     §4.4 (pure function; prevents filter-pushdown double evaluation)."""
     @F.pandas_udf("long")
     def fp(texts: pd.Series) -> pd.Series:
-        n = len(texts)
-        isnull = np.fromiter(
-            (not isinstance(t, str) for t in texts), dtype=bool, count=n
-        )
-        lens = np.fromiter(
-            (len(t) if isinstance(t, str) else 0 for t in texts),
-            dtype=np.int64, count=n,
-        )
-        out = np.zeros(n, dtype=np.int64)
-        if int(lens.sum()) > 0:
-            big = "".join(t if isinstance(t, str) else "" for t in texts)
-            cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
-            )
-            starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-            # length-descending order: the docs still active at char
-            # position p are a contiguous PREFIX — per-position work is
-            # two slice ops, not an O(n) boolean mask
-            order = np.argsort(-lens, kind="stable")
-            ls = lens[order]
-            ss = starts[order]
-            acc = np.zeros(n, dtype=np.int64)
-            neg = -ls
-            for p in range(int(ls[0]) if n else 0):
-                k = int(np.searchsorted(neg, -(p + 1), side="right"))
-                if k == 0:
-                    break
-                acc[:k] = (acc[:k] * 31 + cp[ss[:k] + p]) % FINGERPRINT_MOD
-            out[order] = acc
-        res = pd.Series(out)
-        res[isnull] = None
+        cp, starts, lens = tile(texts)
+        res = pd.Series(fold(cp, starts, lens, np.int64(0), mod_step))
+        res[texts.isna().to_numpy()] = None
         return res
 
     return fp.asNondeterministic()(col)
@@ -136,28 +114,20 @@ def lang_guess_script(col: Column) -> Column:
 
 def _quality_counts_udf():
     """(n_alpha, n_space, n_symbol) counts per doc — codepoint-range
-    compares over one tiled utf-32 buffer per Arrow batch (r7): the
+    compares over one ``codepoints.tile`` buffer per Arrow batch (r7): the
     regexp_count form paid three Java-regex sweeps per evaluation, and
     the percentile gates evaluate the score twice (threshold agg + the
     broadcast-join CASE). Ranges are EXACTLY the regex classes'
-    (A-Za-z, U+00C0-00FF, U+0410-044F, U+0391-03C9, U+4E00-9FFF; the
-    14-char symbol set; the single space) — pinned equal by
+    (A-Za-z, U+00C0-00FF, U+0410-044F, U+0391-03C9, U+4E00-9FFF;
+    ``text.SYMBOL_TABLE``; the single space) — pinned equal by
     tests/test_misc_ops.py::test_quality_score_udf_matches_regex.
     Non-deterministic mark: pushed-down filters must not duplicate the
     evaluation (guide §4.4); the function is pure."""
-    state: dict = {}
 
     @F.pandas_udf("n_alpha int, n_space int, n_symbol int")
     def counts(texts: pd.Series) -> pd.DataFrame:
         n = len(texts)
-        lens = np.fromiter(
-            (len(t) if isinstance(t, str) else 0 for t in texts), dtype=np.int64, count=n
-        )
-        if int(lens.sum()) == 0:
-            z = np.zeros(n, dtype=np.int32)
-            return pd.DataFrame({"n_alpha": z, "n_space": z, "n_symbol": z})
-        big = "".join(t if isinstance(t, str) else "" for t in texts)
-        cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32)
+        cp, _, lens = tile(texts)
         doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
         alpha = (
             ((cp >= 0x41) & (cp <= 0x5A))
@@ -167,12 +137,6 @@ def _quality_counts_udf():
             | ((cp >= 0x391) & (cp <= 0x3C9))
             | ((cp >= 0x4E00) & (cp <= 0x9FFF))
         )
-        if "sym" not in state:
-            t = np.zeros(129, dtype=bool)
-            for c in "#!$%&*+=@^~|<>":
-                t[ord(c)] = True
-            state["sym"] = t
-        sym = state["sym"][np.minimum(cp, 128)]
 
         def seg(mask):
             return np.bincount(doc_idx[mask], minlength=n).astype(np.int32)
@@ -181,7 +145,7 @@ def _quality_counts_udf():
             {
                 "n_alpha": seg(alpha),
                 "n_space": seg(cp == 0x20),
-                "n_symbol": seg(sym),
+                "n_symbol": seg(SYMBOL_TABLE[np.minimum(cp, 128)]),
             }
         )
 
@@ -262,7 +226,7 @@ def winnow_fingerprints(col: Column, k: int = 5, w: int = 4) -> Column:
     say "same doc").
 
     Vectorized Arrow-batched numpy (the simhash/minhash-signature
-    pattern): codepoints via utf-32 reinterpret, the k-gram rolling
+    pattern): codepoints via ``codepoints.encode``, the k-gram rolling
     hash as k whole-array Horner rounds over shifted views, window
     minima via a stride-tricks sliding view — O(n·(k+1)) C-speed ops
     per doc, no per-char Python. The first cut was "zero-Python"
@@ -281,7 +245,6 @@ def winnow_fingerprints(col: Column, k: int = 5, w: int = 4) -> Column:
     global minimum (one window)."""
     if k < 1 or w < 1:
         raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-    mod = np.int64(FINGERPRINT_MOD)
     shift = np.int64(WINNOW_POS_SHIFT)
 
     @F.pandas_udf("array<struct<pos:bigint,fp:bigint>>")
@@ -293,13 +256,11 @@ def winnow_fingerprints(col: Column, k: int = 5, w: int = 4) -> Column:
             if t is None or len(t) < k:
                 out.append([])
                 continue
-            cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
-            )
+            cp = encode(t)
             m = len(cp) - k + 1
             h = np.zeros(m, dtype=np.int64)
             for j in range(k):
-                h = (h * 31 + cp[j : j + m]) % mod
+                h = mod_step(h, cp[j : j + m])
             enc = h * shift + (shift - 1 - np.arange(m, dtype=np.int64))
             if m <= w:
                 sel = enc.min(keepdims=True)

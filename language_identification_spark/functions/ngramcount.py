@@ -26,12 +26,11 @@ is not used: its first call in a JVM sets up ICU case mapping (1.5–2.5 s),
 and its Unicode version is newer than CPython's, so a few recent
 codepoints (U+A7CB, U+10D50, …) fold differently from the reference.
 
-Gram strings are decoded from the packed keys (codepoints → utf-32) —
-lossless for any Unicode codepoint (< 2^21), so output grams equal the
-oracle's ``string_split``-by-codepoint semantics. Encoding and decoding
-use ``surrogatepass``, so a lone surrogate is one codepoint as it is to
-the ``str`` oracles (Arrow strings are UTF-8, so none reaches the
-kernels through Spark).
+Texts are tiled, windowed, encoded and decoded by ``codepoints`` (one
+buffer per group, windows never crossing a text). Gram strings are
+decoded from the packed keys — lossless for any Unicode codepoint
+(< 2^21), so output grams equal the oracle's ``string_split``-by-
+codepoint semantics, a lone surrogate included.
 
 The Cavnar–Trenkle rank profile (``rank_profile``, the twin of the
 oracle's ``ct_profile``) counts 1..5-gram windows, too wide for one
@@ -50,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .codepoints import decode, encode, tile, windows
+
 _SHIFT = 21  # bits per codepoint; max codepoint 0x10FFFF < 2^21
 _MASK = np.uint64((1 << _SHIFT) - 1)
 _S1, _S2 = np.uint64(_SHIFT), np.uint64(2 * _SHIFT)
@@ -60,47 +61,28 @@ def _pack_window_keys(texts: list[str], n: int, pad: bool) -> np.ndarray:
     preserved), windows never crossing text boundaries. ``pad=True``
     applies the reference sentinel convention ``'_'*(n-1) + t + '_'``;
     with ``pad=False`` texts shorter than n contribute nothing."""
-    if pad:
-        head = "_" * (n - 1)
-        parts = [head + t + "_" for t in texts]
-    else:
-        parts = texts
-    m = len(parts)
-    lens = np.fromiter((len(t) for t in parts), dtype=np.int64, count=m)
-    total_chars = int(lens.sum())
-    if total_chars == 0:
+    cp, starts, lens = tile(texts, "_" * (n - 1), "_") if pad else tile(texts)
+    idx, _, _ = windows(starts, lens, n)
+    if len(idx) == 0:
         return np.empty(0, dtype=np.uint64)
-    big = "".join(parts)
-    cp = np.frombuffer(big.encode("utf-32-le", "surrogatepass"), dtype=np.uint32).astype(np.uint64)
-    L = len(cp)
-    if L < n:
-        return np.empty(0, dtype=np.uint64)
-    W = L - n + 1
+    cp = cp.astype(np.uint64)
+    W = len(cp) - n + 1
     key = cp[:W].copy()
     for j in range(1, n):
-        key = (key << np.uint64(_SHIFT)) | cp[j : j + W]
-    counts = np.maximum(lens - (n - 1), 0)
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.uint64)
-    offs = np.zeros(m, dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-    bounds = np.zeros(m, dtype=np.int64)
-    np.cumsum(counts[:-1], out=bounds[1:])
-    base = np.arange(total, dtype=np.int64) + np.repeat(offs - bounds, counts)
-    return key[base]
+        key = (key << _S1) | cp[j : j + W]
+    return key[idx]
 
 
 def _decode_keys(keys: np.ndarray, n: int) -> list[str]:
-    """Packed uint64 keys → n-char gram strings, one utf-32 decode for
-    the whole (distinct) key set."""
+    """Packed uint64 keys → n-char gram strings, one decode for the whole
+    (distinct) key set."""
     u = len(keys)
     if u == 0:
         return []
-    mat = np.empty((u, n), dtype="<u4")
+    mat = np.empty((u, n), dtype=np.uint32)
     for j in range(n):
-        mat[:, n - 1 - j] = ((keys >> np.uint64(j * _SHIFT)) & _MASK).astype(np.uint32)
-    text = mat.tobytes().decode("utf-32-le", "surrogatepass")
+        mat[:, n - 1 - j] = (keys >> np.uint64(j * _SHIFT)) & _MASK
+    text = decode(mat)
     return [text[i * n : (i + 1) * n] for i in range(u)]
 
 
@@ -119,9 +101,7 @@ def rank_profile(text: str, max_size: int = 400) -> list[tuple[str, int]]:
     windows of ``'_'*(n-1) + text.lower() + '_'*(n-1)`` for n = 1..5,
     sorted by (-count, gram), first ``max_size`` kept."""
     low = text.lower()  # Python case folding, as the oracle
-    cp = np.frombuffer(
-        ("____" + low + "____").encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-    )
+    cp = encode("____" + low + "____")
     alpha, inv = np.unique(cp, return_inverse=True)
     d = inv.astype(np.uint64) + np.uint64(1)
     # every n's padded windows are the windows of the 4-padded string
@@ -153,8 +133,7 @@ def rank_profile(text: str, max_size: int = 400) -> list[tuple[str, int]]:
         [w1 >> _S1, w1 & _MASK, w2 >> _S2, (w2 >> _S1) & _MASK, w2 & _MASK], axis=1
     ).astype(np.int64)
     lens = (digits > 0).sum(axis=1)
-    mat = alpha[np.maximum(digits - 1, 0)].astype("<u4")
-    flat = mat.tobytes().decode("utf-32-le", "surrogatepass")
+    flat = decode(alpha[np.maximum(digits - 1, 0)])
     grams = [flat[5 * i : 5 * i + k] for i, k in enumerate(lens.tolist())]
     return list(zip(grams, cnt.tolist()))[:max_size]
 

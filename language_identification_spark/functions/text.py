@@ -4,9 +4,9 @@
    n-grams and whitespace tokenization.
 2. **The Gopher/C4 heuristic feature kernel** —
    :func:`py_quality_features_batch`, one vectorized pass per Arrow
-   batch. It is the only production implementation: the serving UDF
-   (pipeline/quality.make_fused_udf) and the oracle gates
-   (:func:`with_quality_features`) both run it.
+   batch over the ``codepoints`` layout. It is the only production
+   implementation: the serving UDF (pipeline/quality.make_fused_udf) and
+   the oracle gates (:func:`with_quality_features`) both run it.
 3. **Per-doc Python oracles** — :func:`py_quality_features` and its
    helpers, used by the pure-Python pipeline oracle; the kernel equals
    them bit-for-bit (tests/test_properties.py).
@@ -26,12 +26,14 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pipeline.rules import default_stopwords
+from .codepoints import POLY, tile, windows
 
 JAVA_WS = "[ \\t\\n\\x0B\\f\\r]"
 PY_WS_CLASS = "[ \t\n\x0b\f\r]"
@@ -41,6 +43,9 @@ _PY_WS_RE = re.compile(PY_WS_CLASS + "+")
 _WS_TO_SPACE = str.maketrans({c: " " for c in " \t\n\x0b\f\r"})
 SYMBOL_CLASS = "[#!$%&*+=@^~|<>]"
 _PY_SYMBOL_RE = re.compile(SYMBOL_CLASS)
+# SYMBOL_CLASS as a codepoint lookup: index min(cp, 128), the last slot
+# standing for every non-ASCII codepoint (none is in the class)
+SYMBOL_TABLE = np.array([bool(_PY_SYMBOL_RE.match(chr(c))) for c in range(129)])
 
 
 # ---------------------------------------------------------------------------
@@ -212,9 +217,6 @@ def py_quality_features_batch(norm_series, stopwords: tuple[str, ...] | None = N
     fully-pandas ``str.split(regex)`` + explode + groupby-nunique form.
     Integer counts divided identically ⇒ bit-equal floats.
     """
-    import numpy as np
-    import pandas as pd
-
     stopset = frozenset(stopwords if stopwords is not None else default_stopwords())
     s = pd.Series(norm_series).reset_index(drop=True)
     n = len(s)
@@ -399,22 +401,15 @@ def py_repetition_features(toks: list[str], n_chars: int) -> dict[str, float]:
     return out
 
 
-def batch_script_symbol_counts(texts) -> dict[str, "np.ndarray"]:
+def batch_script_symbol_counts(texts) -> dict[str, np.ndarray]:
     """Per-doc counts of the four script classes + the symbol class —
-    codepoint-range compares over one tiled utf-32 buffer (r7), replacing
-    five regex ``str.count`` sweeps. Ranges are EXACTLY the regex
-    classes' (CJK U+4E00-9FFF, Latin A-Za-z, Cyrillic U+0400-04FF, Greek
-    U+0370-03FF, the 14-char symbol set); pinned equal to the regex form
+    codepoint-range compares over one ``codepoints.tile`` buffer (r7),
+    replacing five regex ``str.count`` sweeps. Ranges are EXACTLY the
+    regex classes' (CJK U+4E00-9FFF, Latin A-Za-z, Cyrillic U+0400-04FF,
+    Greek U+0370-03FF, ``SYMBOL_TABLE``); pinned equal to the regex form
     by tests/test_misc_ops.py::test_batch_script_counts_match_regex."""
-    import numpy as np
-
     n = len(texts)
-    out_keys = ("n_cjk", "n_latin", "n_cyr", "n_greek", "n_symbol")
-    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n)
-    if int(lens.sum()) == 0:
-        return {k: np.zeros(n, dtype=np.int64) for k in out_keys}
-    big = "".join(texts)
-    cp = np.frombuffer(big.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+    cp, _, lens = tile(texts)
     # bincount of matching chars' doc index: O(matches) per class after
     # one O(chars) doc-index expansion (a full-buffer cumsum per class
     # measured 5× slower)
@@ -423,9 +418,6 @@ def batch_script_symbol_counts(texts) -> dict[str, "np.ndarray"]:
     def seg_counts(mask):
         return np.bincount(doc_idx[mask], minlength=n).astype(np.int64)
 
-    sym_table = np.zeros(129, dtype=bool)
-    for c in "#!$%&*+=@^~|<>":
-        sym_table[ord(c)] = True
     return {
         "n_cjk": seg_counts((cp >= 0x4E00) & (cp <= 0x9FFF)),
         "n_latin": seg_counts(
@@ -433,7 +425,7 @@ def batch_script_symbol_counts(texts) -> dict[str, "np.ndarray"]:
         ),
         "n_cyr": seg_counts((cp >= 0x0400) & (cp <= 0x04FF)),
         "n_greek": seg_counts((cp >= 0x0370) & (cp <= 0x03FF)),
-        "n_symbol": seg_counts(sym_table[np.minimum(cp, 128)]),
+        "n_symbol": seg_counts(SYMBOL_TABLE[np.minimum(cp, 128)]),
     }
 
 
@@ -456,8 +448,6 @@ def batch_repetition_features(
     Window identity is the 64-bit word-hash polynomial — a within-doc
     collision (~10³ windows vs 2^64) is the dedup family's accepted
     transport risk."""
-    import numpy as np
-
     from .wordhash import fnv_token_hashes
 
     n_docs = len(toks_list)
@@ -469,16 +459,14 @@ def batch_repetition_features(
         all_toks.extend(t)
     if not all_toks:
         return out
-    wlen = np.fromiter((len(w) for w in all_toks), dtype=np.int64, count=len(all_toks))
-    wh = fnv_token_hashes(all_toks, lens=wlen)
-    doc_of_tok = np.repeat(np.arange(n_docs, dtype=np.int64), ntoks)
+    wlen = np.fromiter(map(len, all_toks), dtype=np.int64, count=len(all_toks))
+    wh = fnv_token_hashes(all_toks)
     tok_start = np.zeros(n_docs, dtype=np.int64)
     np.cumsum(ntoks[:-1], out=tok_start[1:])
     # cumlen[i] = chars of tokens before global index i (per doc resets
     # handled by subtracting window-start cumlen)
     cumlen = np.concatenate([[0], np.cumsum(wlen)])
     alive = (ntoks > 0) & (nc > 0)
-    POLY = np.uint64(1000003)
     for nn in sorted(TOP_NGRAM_NS + DUP_NGRAM_NS):
         key = (
             f"top_{nn}gram_char_frac" if nn in TOP_NGRAM_NS else f"dup_{nn}gram_char_frac"
@@ -486,14 +474,9 @@ def batch_repetition_features(
         has_win = alive & (ntoks >= nn)
         if not has_win.any():
             continue
-        counts = np.where(has_win, ntoks - (nn - 1), 0)
-        total = int(counts.sum())
-        bounds = np.concatenate([[0], np.cumsum(counts)])
         # base = global token index of each window's first word
-        base = (
-            np.arange(total, dtype=np.int64)
-            + np.repeat(tok_start - bounds[:-1], counts)
-        )
+        base, counts, _ = windows(tok_start, np.where(has_win, ntoks, 0), nn)
+        total = len(base)
         with np.errstate(over="ignore"):
             g = wh[base].copy()
             for j in range(1, nn):

@@ -13,12 +13,11 @@ its ``split`` child per row, and every lambda runs interpreted per
 element — measured 6.7 s for one k=4 pass over the sf1.0 corpus, the
 single largest cost in ``span_dedup``. This module computes the same
 shape (one ``array<long>`` of window hashes per doc) in ONE numpy pass
-per Arrow batch (guide §4.2): tokens of the whole batch tile one
-codepoint buffer, per-word FNV-1a runs as ``max_word_len`` masked
-vector rounds, and window hashes are a polynomial combine over shifted
-views with an fmix64 finalizer. Measured 2.7 s for the same pass
-(2.5×), with no JVM↔Python payload beyond the text in and 8-byte
-hashes out.
+per Arrow batch (guide §4.2): the layout, the per-word FNV-1a fold, the
+window gather and the hash primitives come from ``codepoints``; window
+hashes are a polynomial combine of word hashes with an fmix64 finalizer.
+Measured 2.7 s for the same pass (2.5×), with no JVM↔Python payload
+beyond the text in and 8-byte hashes out.
 
 Tokenization replicates ``functions.text.words`` (Spark ``split`` =
 ``Pattern.split(str, -1)``): leading AND trailing empty tokens kept,
@@ -35,22 +34,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from .codepoints import FNV_OFFSET, POLY, fmix64, fnv1a_step, fold, tile, windows
+
 _WS_RE = re.compile("[ \t\n\x0b\f\r]+")
-
-_FNV_OFFSET = np.uint64(0xCBF29CE484222325)
-_FNV_PRIME = np.uint64(0x100000001B3)
-_POLY = np.uint64(1000003)
-_FMIX1 = np.uint64(0xFF51AFD7ED558CCD)
-_FMIX2 = np.uint64(0xC4CEB9FE1A85EC53)
-
-
-def _fmix64(h: np.ndarray) -> np.ndarray:
-    h ^= h >> np.uint64(33)
-    h *= _FMIX1
-    h ^= h >> np.uint64(33)
-    h *= _FMIX2
-    h ^= h >> np.uint64(33)
-    return h
 
 
 def java_ws_tokens(t) -> list[str]:
@@ -63,28 +49,11 @@ def java_ws_tokens(t) -> list[str]:
     return _WS_RE.split(t)
 
 
-def fnv_token_hashes(all_toks: list[str], lens: np.ndarray | None = None) -> np.ndarray:
-    """uint64 FNV-1a over codepoints, one hash per token, vectorized as
-    ``max_token_len`` masked rounds over one tiled codepoint buffer.
-    Pass ``lens`` (int64 token lengths) if the caller already has them —
-    the per-token ``len()`` sweep is a measurable share of the pass."""
-    nw = len(all_toks)
-    if nw == 0:
-        return np.empty(0, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        big = "\x00".join(all_toks)
-        cp = np.frombuffer(
-            big.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-        ).astype(np.uint64)
-        if lens is None:
-            lens = np.fromiter((len(w) for w in all_toks), dtype=np.int64, count=nw)
-        starts = np.zeros(nw, dtype=np.int64)
-        np.cumsum(lens[:-1] + 1, out=starts[1:])
-        acc = np.full(nw, _FNV_OFFSET, dtype=np.uint64)
-        for p in range(int(lens.max())):
-            m = lens > p
-            acc[m] = (acc[m] ^ cp[starts[m] + p]) * _FNV_PRIME
-    return acc
+def fnv_token_hashes(all_toks: list[str]) -> np.ndarray:
+    """uint64 FNV-1a over codepoints, one hash per token — one
+    ``codepoints.fold`` over the tiled tokens."""
+    cp, starts, lens = tile(all_toks)
+    return fold(cp, starts, lens, FNV_OFFSET, fnv1a_step)
 
 
 def batch_word_gram_hashes(texts, k: int) -> list[np.ndarray]:
@@ -99,36 +68,19 @@ def batch_word_gram_hashes(texts, k: int) -> list[np.ndarray]:
         toks = java_ws_tokens(t)
         docs_ntoks[i] = len(toks)
         all_toks.extend(toks)
-    nw = len(all_toks)
-    empty = np.empty(0, dtype=np.int64)
-    if nw == 0:
-        return [empty] * n
+    tok_start = np.zeros(n, dtype=np.int64)
+    np.cumsum(docs_ntoks[:-1], out=tok_start[1:])
+    # base[j] = global token index of window j's first word
+    base, _, bounds = windows(tok_start, docs_ntoks, k)
+    if len(base) == 0:
+        return [np.empty(0, dtype=np.int64)] * n
+    acc = fnv_token_hashes(all_toks)
     with np.errstate(over="ignore"):
-        big = "\x00".join(all_toks)
-        cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-        lens = np.fromiter((len(w) for w in all_toks), dtype=np.int64, count=nw)
-        starts = np.zeros(nw, dtype=np.int64)
-        np.cumsum(lens[:-1] + 1, out=starts[1:])
-        acc = np.full(nw, _FNV_OFFSET, dtype=np.uint64)
-        for p in range(int(lens.max())):
-            m = lens > p
-            acc[m] = (acc[m] ^ cp[starts[m] + p]) * _FNV_PRIME
-        counts = np.maximum(docs_ntoks - (k - 1), 0)
-        offs = np.zeros(n, dtype=np.int64)
-        np.cumsum(docs_ntoks[:-1], out=offs[1:])
-        total = int(counts.sum())
-        if total == 0:
-            return [empty] * n
-        bounds = np.zeros(n, dtype=np.int64)
-        np.cumsum(counts[:-1], out=bounds[1:])
-        # base[j] = global token index of window j's first word
-        base = np.arange(total, dtype=np.int64) + np.repeat(offs - bounds, counts)
-        g = acc[base].copy()
+        g = acc[base]
         for j in range(1, k):
-            g = g * _POLY + acc[base + j]
-        g = _fmix64(g).astype(np.int64)
-    cum = np.concatenate([bounds, [total]])
-    return [g[cum[i] : cum[i + 1]] for i in range(n)]
+            g = g * POLY + acc[base + j]
+        g = fmix64(g).astype(np.int64)
+    return np.split(g, bounds[1:])
 
 
 def word_gram_hashes_udf(k: int):
@@ -147,52 +99,27 @@ def batch_char_gram_hashes(texts, n: int, distinct: bool = True) -> list[np.ndar
     sorted-distinct by default (shingle SETS are what Jaccard and
     MinHash consume). Texts shorter than n get an empty array.
 
-    Same batch-tiling as :func:`batch_word_gram_hashes`: one codepoint
-    buffer for the whole batch (docs joined by one separator char), the
-    n-char polynomial roll computed buffer-wide, per-doc windows gathered
-    by range index, fmix64 finalizer. The JVM equivalent
+    Same layout as :func:`batch_word_gram_hashes` (``codepoints.tile``):
+    the n-char polynomial roll is computed buffer-wide, per-doc windows
+    are gathered by range index, fmix64 finalizer. The JVM equivalent
     (``char_ngrams`` zip_with chain + ``xxhash64``) re-evaluates its
     ``split`` child per slice inside CodegenFallback eval — this is the
     measured ~3× cheaper form at web-doc lengths."""
-    m = len(texts)
-    lens = np.zeros(m, dtype=np.int64)
-    parts: list[str] = []
-    for i, t in enumerate(texts):
-        if isinstance(t, str):
-            lens[i] = len(t)
-            parts.append(t)
-        else:
-            parts.append("")
-    empty = np.empty(0, dtype=np.int64)
-    if int(lens.sum()) == 0:
-        return [empty] * m
+    cp, starts, lens = tile(texts)
+    idx, _, bounds = windows(starts, lens, n)
+    if len(idx) == 0:
+        return [np.empty(0, dtype=np.int64)] * len(texts)
+    cp = cp.astype(np.uint64)
     with np.errstate(over="ignore"):
-        big = "\x00".join(parts)
-        cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-        L = len(cp)
-        if L < n:
-            return [empty] * m
         # buffer-wide n-char polynomial roll; cross-doc windows are never
-        # gathered (base indices stay inside each doc's span)
-        W = L - n + 1
+        # gathered
+        W = len(cp) - n + 1
         g = cp[:W].copy()
         for j in range(1, n):
-            g = g * _POLY + cp[j : j + W]
-        g = _fmix64(g)
-        offs = np.zeros(m, dtype=np.int64)
-        np.cumsum(lens[:-1] + 1, out=offs[1:])
-        counts = np.maximum(lens - (n - 1), 0)
-        total = int(counts.sum())
-        if total == 0:
-            return [empty] * m
-        bounds = np.zeros(m, dtype=np.int64)
-        np.cumsum(counts[:-1], out=bounds[1:])
-        base = np.arange(total, dtype=np.int64) + np.repeat(offs - bounds, counts)
-        h = g[base].astype(np.int64)
-    cum = np.concatenate([bounds, [total]])
-    if distinct:
-        return [np.unique(h[cum[i] : cum[i + 1]]) for i in range(m)]
-    return [h[cum[i] : cum[i + 1]] for i in range(m)]
+            g = g * POLY + cp[j : j + W]
+        h = fmix64(g[idx]).astype(np.int64)
+    per_doc = np.split(h, bounds[1:])
+    return [np.unique(d) for d in per_doc] if distinct else per_doc
 
 
 def char_gram_hashes_udf(n: int, distinct: bool = True):

@@ -6,9 +6,9 @@ char-n-gram hashing + softmax inference, never per-row Python)".
 
 Design (Spark-first, no SGD needed):
 - Features: char {1,2,3}-grams of the lowercased text, hashed into ``DIM``
-  buckets. Hashing is FULLY numpy-vectorized: the text becomes a codepoint
-  array (``utf-32-le`` reinterpret), n-gram hashes are polynomial rolls over
-  shifted views, finalized with the murmur3 fmix64 avalanche — zero
+  buckets. Hashing is FULLY numpy-vectorized over the ``codepoints``
+  layout: n-gram hashes are polynomial rolls over shifted views of the
+  batch buffer, finalized with the murmur3 fmix64 avalanche — zero
   per-gram Python. (An earlier per-gram FNV loop measured ~5× slower.)
 - Training: ``mapInPandas`` feature extraction (per-language bincount per
   Arrow batch → shuffle carries at most L×DIM rows per task) →
@@ -33,46 +33,22 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from ..functions.codepoints import POLY, fmix64, tile, windows
+
 DIM = 65536  # hash buckets (2^16): dense W is L×65536 float64 → ~0.5 MB/lang
 ALPHA = 0.1  # add-alpha smoothing for NB bucket probabilities
-
-_POLY = np.uint64(1000003)
-_FMIX1 = np.uint64(0xFF51AFD7ED558CCD)
-_FMIX2 = np.uint64(0xC4CEB9FE1A85EC53)
-_UNDERSCORE = np.uint32(95)
-
-
-def _fmix64(h: np.ndarray) -> np.ndarray:
-    h = h.copy()
-    h ^= h >> np.uint64(33)
-    h *= _FMIX1
-    h ^= h >> np.uint64(33)
-    h *= _FMIX2
-    h ^= h >> np.uint64(33)
-    return h
 
 
 def doc_bucket_ids(text: str, dim: int = DIM) -> np.ndarray:
     """All hashed {1,2,3}-gram bucket ids of the lowercased text, one entry
-    per occurrence (duplicates preserved). Pure numpy.
+    per occurrence (duplicates preserved), n = 1 ids first: the one-doc
+    slice of :func:`batch_bucket_ids`.
 
     Padding mirrors the reference sentinel convention
     (statistical_models.py:23): n-grams run over ``'_'*(n-1) + text + '_'``.
     """
-    low = text.lower()
-    cp = np.frombuffer(low.encode("utf-32-le"), dtype=np.uint32)
-    # padded = '__' + text + '_' ; slices give each n's padded window
-    padded = np.empty(len(cp) + 3, dtype=np.uint64)
-    padded[:2] = _UNDERSCORE
-    padded[-1] = _UNDERSCORE
-    padded[2:-1] = cp
-    u1 = padded[2:]                       # text + '_'          (n=1 window)
-    h1 = u1
-    u2 = padded[1:]                       # '_' + text + '_'    (n=2 window)
-    h2 = u2[:-1] * _POLY + u2[1:]
-    h3 = (padded[:-2] * _POLY + padded[1:-1]) * _POLY + padded[2:]
-    ids = np.concatenate([_fmix64(h1), _fmix64(h2), _fmix64(h3)])
-    return (ids % np.uint64(dim)).astype(np.int64)
+    ids1, ids2, ids3, _, _ = batch_bucket_ids([text], dim)
+    return np.concatenate([ids1, ids2, ids3])
 
 
 def batch_chunks(texts, max_chars: int = 16_384, max_docs: int = 2048):
@@ -111,34 +87,27 @@ def batch_bucket_ids(
     vectorized hash passes for the entire Arrow batch, no per-document
     Python beyond lowercasing.
 
-    Layout: every padded segment ``'__' + text + '_'`` tiles one big
-    codepoint buffer (docs joined with ``'___'`` = closing ``'_'`` +
-    opening ``'__'``); each n's rolling hash is computed over the WHOLE
-    buffer and the per-doc windows are gathered with one vectorized
-    range-index (each doc contributes exactly ``len+1`` grams per n, so
-    all three blocks share the same reduceat boundaries).
+    Layout: ``codepoints.tile`` with segments ``'__' + text + '_'``; each
+    n's rolling hash is computed over the WHOLE buffer and the per-doc
+    windows are gathered with ``codepoints.windows`` (each doc contributes
+    exactly ``len+1`` grams per n, so all three blocks share the same
+    reduceat boundaries).
 
     Returns ``(ids1, ids2, ids3, bounds, counts)``: per-n bucket-id arrays
     laid out doc-major, the shared ``np.add.reduceat`` segment boundaries,
     and per-doc gram counts (``len+1``).
     """
-    lows = [t.lower() if isinstance(t, str) else "" for t in texts]
-    big = "__" + "___".join(lows) + "_"
-    G = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    n = len(lows)
-    lens = np.fromiter((len(t) for t in lows), dtype=np.int64, count=n)
-    offsets = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1] + 3, out=offsets[1:])
-    counts = lens + 1
-    cum = np.cumsum(counts)
-    bounds = np.concatenate([np.zeros(1, dtype=np.int64), cum[:-1]])
-    # base[j] = offset of j's doc + within-doc position (0..len)
-    base = np.arange(int(cum[-1]), dtype=np.int64) + np.repeat(offsets - bounds, counts)
-    h1 = _fmix64(G[base + 2])
-    g2 = G[:-1] * _POLY + G[1:]
-    h2 = _fmix64(g2[base + 1])
-    g3 = (G[:-2] * _POLY + G[1:-1]) * _POLY + G[2:]
-    h3 = _fmix64(g3[base])
+    G, starts, lens = tile(
+        [t.lower() if isinstance(t, str) else "" for t in texts], "__", "_"
+    )
+    G = G.astype(np.uint64)
+    # base[j] = start of j's doc + within-doc position (0..len)
+    base, counts, bounds = windows(starts, lens, 3)
+    h1 = fmix64(G[base + 2])
+    g2 = G[:-1] * POLY + G[1:]
+    h2 = fmix64(g2[base + 1])
+    g3 = (G[:-2] * POLY + G[1:-1]) * POLY + G[2:]
+    h3 = fmix64(g3[base])
     d = np.uint64(dim)
     return (
         (h1 % d).astype(np.int64),
@@ -149,7 +118,7 @@ def batch_bucket_ids(
     )
 
 
-def doc_bucket_counts(text: str, dim: int = DIM, cache: dict | None = None) -> dict[int, int]:
+def doc_bucket_counts(text: str, dim: int = DIM) -> dict[int, int]:
     """(bucket → count) for one document — oracle-side training helper."""
     ids = doc_bucket_ids(text, dim)
     vals, cnts = np.unique(ids, return_counts=True)

@@ -13,6 +13,9 @@ Semantics (pinned; the oracle and the Spark UDF call the same functions):
 - P(next|cur) = (cnt(cur,next) + k) / (cnt(cur,·) + k·V), V = |charset|+1
   (the +1 is a dedicated OOV id; unseen chars map to it).
 - ppl(doc) = exp(-mean log P over the doc's transitions); empty docs → +inf.
+
+Counting and scoring tile a whole batch of ``'_' + text + '_'`` segments
+with ``codepoints.tile`` and read its 2-windows with ``codepoints.windows``.
 """
 
 from __future__ import annotations
@@ -22,24 +25,38 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from ..functions.codepoints import tile, windows
+
 K_SMOOTH = 0.5
+
+
+def _bigram_windows(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The tiled ``'_' + t.lower() + '_'`` buffer of a batch (non-``str``
+    entries read as ``""``) and its 2-windows → ``(cp, idx, counts,
+    bounds)``; each doc has ``len + 1`` transitions."""
+    lows = [t.lower() if isinstance(t, str) else "" for t in texts]
+    cp, starts, lens = tile(lows, "_", "_")
+    return (cp, *windows(starts, lens, 2))
+
+
+def _batch_bigram_keys(texts) -> np.ndarray:
+    """uint64 keys (cur_cp << 32 | nxt_cp) of every transition of a batch,
+    doc-major."""
+    cp, idx, _, _ = _bigram_windows(texts)
+    c = cp.astype(np.uint64)
+    return (c[idx] << np.uint64(32)) | c[idx + 1]
 
 
 def doc_bigram_keys(text: str) -> np.ndarray:
     """uint64 keys (cur_cp << 32 | nxt_cp) of '_text_' transitions — numpy,
     no per-char Python."""
-    cp = np.frombuffer(("_" + text.lower() + "_").encode("utf-32-le"), dtype=np.uint32)
-    c = cp.astype(np.uint64)
-    return (c[:-1] << np.uint64(32)) | c[1:]
+    return _batch_bigram_keys([text])
 
 
 def bigram_key_counts(texts) -> tuple[np.ndarray, np.ndarray]:
     """Distinct packed transition keys of a batch and their counts — the
     one bigram counting kernel (non-``str`` entries count as ``""``)."""
-    chunks = [doc_bigram_keys(t if isinstance(t, str) else "") for t in texts]
-    if not chunks:
-        return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64)
-    return np.unique(np.concatenate(chunks), return_counts=True)
+    return np.unique(_batch_bigram_keys(texts), return_counts=True)
 
 
 def bigram_frame(keys, cnts) -> pd.DataFrame:
@@ -89,12 +106,6 @@ class BigramLM:
             lut[ord(c)] = i
         return cls(char_ids=char_ids, logprob=logprob, lut=lut, k=k)
 
-    def _ids(self, text: str) -> np.ndarray:
-        t = "_" + text.lower() + "_"
-        cps = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-        cps[cps >= len(self.lut)] = len(self.lut) - 1  # clamp to OOV slot
-        return self.lut[cps]
-
     def perplexity(self, text: str) -> float:
         """Single-doc convenience wrapper over :meth:`perplexity_batch` —
         delegation (not a parallel implementation) is what guarantees the
@@ -104,12 +115,12 @@ class BigramLM:
 
     def perplexity_batch(self, texts) -> np.ndarray:
         """WHOLE-BATCH, CHUNKED perplexity: every padded segment
-        ``'_' + text + '_'`` tiles one codepoint buffer (docs joined with
-        ``'__'``), transition log-probs come from one fancy-indexed lookup
-        over the buffer, and per-doc means are ``np.add.reduceat`` segment
-        sums — no per-document Python. Cache-sized chunks (see
-        hashed_ngram.batch_chunks) keep 32 parallel workers off the DRAM
-        bandwidth wall; chunking is value-invariant. Empty docs → +inf
+        ``'_' + text + '_'`` tiles one codepoint buffer, transition
+        log-probs come from one fancy-indexed lookup over the buffer, and
+        per-doc means are ``np.add.reduceat`` segment sums — no per-
+        document Python. Cache-sized chunks (see hashed_ngram.batch_chunks)
+        keep 32 parallel workers off the DRAM bandwidth wall; chunking is
+        value-invariant. Empty docs → +inf
         (matching :meth:`perplexity`)."""
         from .hashed_ngram import batch_chunks
 
@@ -124,29 +135,10 @@ class BigramLM:
         return out
 
     def _perplexity_chunk(self, texts) -> np.ndarray:
-        lows = [(t if isinstance(t, str) else "").lower() for t in texts]
-        n = len(lows)
-        big = "_" + "__".join(lows) + "_"
-        cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-        np.minimum(cp, len(self.lut) - 1, out=cp)  # clamp to the OOV slot
-        ids = self.lut[cp]
+        cp, pos, counts, bounds = _bigram_windows(texts)
+        ids = self.lut[np.minimum(cp, len(self.lut) - 1)]  # clamp to the OOV slot
         lp = self.logprob[ids[:-1], ids[1:]]
-        lens = np.fromiter((len(t) for t in lows), dtype=np.int64, count=n)
-        offsets = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1] + 2, out=offsets[1:])
-        counts = lens + 1  # transitions per padded doc
-        cum = np.cumsum(counts)
-        bounds = np.concatenate([np.zeros(1, dtype=np.int64), cum[:-1]])
-        pos = np.arange(int(cum[-1]), dtype=np.int64) + np.repeat(offsets - bounds, counts)
         sums = np.add.reduceat(lp[pos], bounds)
         ppl = np.exp(-(sums / counts))
-        ppl[lens == 0] = np.inf
+        ppl[counts == 1] = np.inf  # empty doc: only the '__' transition
         return ppl
-
-    def to_table(self) -> pd.DataFrame:
-        chars = sorted(self.char_ids, key=self.char_ids.get)
-        rows, cols = np.nonzero(np.isfinite(self.logprob))
-        return pd.DataFrame(
-            {"cur_id": rows, "nxt_id": cols, "logprob": self.logprob[rows, cols],
-             "v": len(chars) + 1}
-        ), pd.DataFrame({"char": chars, "id": range(len(chars))})

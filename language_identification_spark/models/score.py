@@ -61,17 +61,6 @@ class VectorizedBagScorer:
             out.append(self.langs[int(np.argmax(self.score_counts(grams)))])
         return out
 
-    def _predict_bigram(self, texts) -> list[str]:
-        out = []
-        for t in texts:
-            t = "_" + (t if isinstance(t, str) else "") + "_"
-            grams: dict[str, int] = {}
-            for i in range(len(t) - 1):
-                g = t[i : i + 2]
-                grams[g] = grams.get(g, 0) + 1
-            out.append(self.langs[int(np.argmax(self.score_counts(grams)))])
-        return out
-
 
 def make_ngram_predict_udf(spark: SparkSession, language_models: dict, n: int, smoothing: float):
     """Scalar pandas UDF: text → predicted lang (NgramModel.predict parity)."""
@@ -91,22 +80,13 @@ def make_ngram_predict_udf(spark: SparkSession, language_models: dict, n: int, s
 
 def make_markov_predict_udf(spark: SparkSession, language_models: dict, smoothing: float):
     """Markov chain predict (statistical_models.py:131-147) — flatten the
-    nested cur→nxt dicts to 2-char grams, then it's the same bag scorer."""
+    nested cur→nxt dicts to 2-char grams; the '_' + t + '_' transitions
+    are then the padded char 2-grams, so it is the n = 2 bag scorer."""
     flat = {
         lang: {cur + nxt: p for cur, nxts in m.items() for nxt, p in nxts.items()}
         for lang, m in language_models.items()
     }
-    bc = spark.sparkContext.broadcast((flat, smoothing))
-    state: dict = {}
-
-    @F.pandas_udf(T.StringType())
-    def predict(texts: pd.Series) -> pd.Series:
-        if "scorer" not in state:
-            models, sm = bc.value
-            state["scorer"] = VectorizedBagScorer(models, sm)
-        return pd.Series(state["scorer"]._predict_bigram(texts.tolist()))
-
-    return predict
+    return make_ngram_predict_udf(spark, flat, 2, smoothing)
 
 
 def make_char_freq_predict_udf(spark: SparkSession, language_profiles: dict, smoothing: float):

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.codepoints import FNV_OFFSET, encode, fnv1a_step
 from ..functions.wordhash import char_gram_hashes_udf
 from .cache import local_checkpoint, scoped_persist
 from .cache import pair_cache_scope  # noqa: F401  (re-export: bench.py, perfbench)
@@ -556,17 +557,13 @@ def minhash_near_duplicates(
     return out
 
 
-FNV_OFFSET = 0xCBF29CE484222325
-FNV_PRIME = 0x100000001B3
-
-
 def simhash_64(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
     """(id, simhash BIGINT) — 64-bit simhash over the char n-gram multiset.
 
     Fully vectorized pandas UDF (same pattern as hashed_ngram's featurizer):
-    the text becomes a codepoint array (utf-32-le reinterpret); the FNV-1a
+    the text becomes a codepoint array (``codepoints.encode``); the FNV-1a
     fold runs as n whole-array xor-multiply rounds over shifted views (one
     uint64 op per round, wraparound multiply = mod 2^64); bit unpack /
     accumulate / sign are single numpy broadcasts. No per-gram Python.
@@ -577,8 +574,6 @@ def simhash_64(
     __spark_entry__.oracle_sql()["simhash_sigs"]). len(text) < n → 0.
     """
     shifts = np.arange(64, dtype=np.uint64)
-    off = np.uint64(FNV_OFFSET)
-    prime = np.uint64(FNV_PRIME)
 
     @F.pandas_udf("long")
     def sh(texts: pd.Series) -> pd.Series:
@@ -588,11 +583,11 @@ def simhash_64(
                 t = t if isinstance(t, str) else ""
                 if len(t) < n:
                     continue
-                cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
+                cp = encode(t)
                 n_grams = len(cp) - n + 1
-                h = np.full(n_grams, off, dtype=np.uint64)
+                h = np.full(n_grams, FNV_OFFSET, dtype=np.uint64)
                 for k in range(n):
-                    h = (h ^ cp[k : k + n_grams]) * prime
+                    h = fnv1a_step(h, cp[k : k + n_grams])
                 bits = ((h[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
                 acc = bits.sum(axis=0) * 2 - n_grams  # Σ(2b-1) = 2Σb - G
                 sig = ((acc > 0).astype(np.uint64) << shifts).sum(dtype=np.uint64)

@@ -40,7 +40,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-FOLD_MOD = 1_000_000_007
+from ..functions.codepoints import FOLD_MOD, fold, mod_step, tile
+
 WS = "[ \\t\\n]+"
 
 
@@ -147,10 +148,9 @@ def token_buckets(col: Column, n_buckets: int) -> Column:
 def token_buckets_udf(n_buckets: int):
     """Vectorized twin of :func:`token_buckets` (r7): the SQL form runs
     an interpreted ``aggregate`` lambda PER CHARACTER (HOFs are
-    CodegenFallback); this one folds every token of the Arrow batch in
-    ``max_token_len`` masked numpy rounds. Exact: acc < 1e9+7, so
-    acc*31 + codepoint < 2^63 — int64 arithmetic equals the SQL fold
-    value for value."""
+    CodegenFallback); this one folds every token of the Arrow batch with
+    one ``codepoints.fold`` — int64 arithmetic equals the SQL fold value
+    for value."""
     ws_re = _re.compile("[ \t\n]+")
 
     @F.pandas_udf("array<int>")
@@ -158,7 +158,6 @@ def token_buckets_udf(n_buckets: int):
         n = len(texts)
         docs_ntoks = np.zeros(n, dtype=np.int64)
         all_toks: list[str] = []
-        empty = np.empty(0, dtype=np.int32)
         for i, t in enumerate(texts):
             if not isinstance(t, str):
                 continue
@@ -170,27 +169,10 @@ def token_buckets_udf(n_buckets: int):
             toks = ws_re.split(s)
             docs_ntoks[i] = len(toks)
             all_toks.extend(toks)
-        nw = len(all_toks)
-        if nw == 0:
-            return pd.Series([empty if isinstance(t, str) else None for t in texts])
-        big = "\x00".join(all_toks)
-        cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-        lens = np.fromiter((len(w) for w in all_toks), dtype=np.int64, count=nw)
-        starts = np.zeros(nw, dtype=np.int64)
-        np.cumsum(lens[:-1] + 1, out=starts[1:])
-        acc = np.zeros(nw, dtype=np.int64)
-        for p in range(int(lens.max())):
-            m = lens > p
-            acc[m] = (acc[m] * 31 + cp[starts[m] + p]) % FOLD_MOD
-        b = (acc % n_buckets).astype(np.int32)
-        cum = np.concatenate([[0], np.cumsum(docs_ntoks)])
-        out = []
-        for i, t in enumerate(texts):
-            if not isinstance(t, str):
-                out.append(None)
-            else:
-                out.append(b[cum[i] : cum[i + 1]])
-        return pd.Series(out)
+        cp, starts, lens = tile(all_toks)
+        b = (fold(cp, starts, lens, np.int64(0), mod_step) % n_buckets).astype(np.int32)
+        per_doc = np.split(b, np.cumsum(docs_ntoks)[:-1])
+        return pd.Series([d if isinstance(t, str) else None for d, t in zip(per_doc, texts)])
 
     return buckets
 

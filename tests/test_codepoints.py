@@ -1,4 +1,7 @@
-"""Literal pins of the whole-batch codepoint kernels' hash values.
+"""The one codepoint module (functions/codepoints.py): its layout, window
+gather and fold against plain per-segment Python loops; the package
+holds no second copy of them; and literal pins of the whole-batch
+kernels' hash values.
 
 The dedup and langid families consume these hashes as transport values,
 so a change to the codepoint layout must leave every value as it is.
@@ -8,10 +11,15 @@ and the sha256 of its int64 bytes.
 
 from __future__ import annotations
 
+import ast
 import hashlib
+from pathlib import Path
 
 import numpy as np
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
+from language_identification_spark.functions import codepoints as cps
 from language_identification_spark.functions.wordhash import (
     batch_char_gram_hashes,
     batch_word_gram_hashes,
@@ -130,3 +138,107 @@ def test_bucket_ids_pinned_and_equal_per_doc():
     for i, t in enumerate(TEXTS):
         want = np.concatenate([per_n[cum[i] : cum[i + 1]] for per_n in ids])
         assert np.array_equal(doc_bucket_ids(t if isinstance(t, str) else ""), want)
+
+
+# --------------------------------------------------------- one module
+
+PKG = Path(__file__).resolve().parents[1] / "language_identification_spark"
+CODEPOINTS = PKG / "functions" / "codepoints.py"
+# FNV offset and prime, POLY, the fold modulus, the two fmix64 multipliers
+HASH_CONSTANTS = {
+    0xCBF29CE484222325, 0x100000001B3, 1000003, 1_000_000_007,
+    0xFF51AFD7ED558CCD, 0xC4CEB9FE1A85EC53,
+}
+
+
+def _package_nodes():
+    for path in sorted(PKG.rglob("*.py")):
+        if path != CODEPOINTS:
+            for node in ast.walk(ast.parse(path.read_text(), str(path))):
+                yield f"{path.relative_to(PKG)}:{getattr(node, 'lineno', 0)}", node
+
+
+def _is_call(node, *attrs):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in attrs
+    )
+
+
+def _is_utf32(node):
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.lower().replace("_", "-").startswith("utf-32")
+    )
+
+
+def test_one_codepoint_module():
+    """No module outside functions/codepoints.py encodes or decodes
+    utf-32, gathers per-segment windows (``arange + repeat``) or spells a
+    hash constant."""
+    hits = []
+    for where, node in _package_nodes():
+        if _is_call(node, "encode", "decode") and any(
+            _is_utf32(a) for a in [*node.args, *(k.value for k in node.keywords)]
+        ):
+            hits.append(f"{where} utf-32 .{node.func.attr}(")
+        if (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Add)
+            and _is_call(node.left, "arange")
+            and _is_call(node.right, "repeat")
+        ):
+            hits.append(f"{where} window gather")
+        if isinstance(node, ast.Constant) and isinstance(node.value, int) and (
+            node.value in HASH_CONSTANTS
+        ):
+            hits.append(f"{where} hash constant {node.value:#x}")
+    assert hits == []
+
+
+# ------------------------------------------------ layout vs plain loops
+
+_SPECIAL = st.sampled_from(["\x00", "\ud800", "\udfff", "😀", "語", "_", " "])
+_TEXT = st.text(alphabet=st.one_of(st.characters(), _SPECIAL), max_size=40)
+_TEXTS = st.lists(st.one_of(st.none(), st.just(""), _TEXT), max_size=12)
+_PAD = st.sampled_from(["", "_", "__", "____"])
+_MASK64 = (1 << 64) - 1
+
+
+@given(_TEXTS, _PAD, _PAD, st.integers(min_value=1, max_value=6))
+@example([None, "", "\x00", "\ud800x\udfff", "😀😀"], "__", "_", 3)
+@example([], "", "", 1)
+@settings(max_examples=300, deadline=None)
+def test_tile_windows_fold_match_per_segment_loops(texts, head, tail, n):
+    segs = [head + (t if isinstance(t, str) else "") + tail for t in texts]
+    cp, starts, lens = cps.tile(texts, head, tail)
+    assert cp.dtype == np.uint32
+    assert cp.tolist() == [ord(c) for seg in segs for c in seg]
+    assert lens.tolist() == [len(seg) for seg in segs]
+    assert starts.tolist() == [sum(map(len, segs[:i])) for i in range(len(segs))]
+    for seg, s0, ln in zip(segs, starts, lens):
+        assert cps.decode(cp[s0 : s0 + ln]) == seg
+        assert cps.encode(seg).tolist() == [ord(c) for c in seg]
+
+    idx, counts, bounds = cps.windows(starts, lens, n)
+    want_idx, want_counts, want_bounds = [], [], []
+    for s0, ln in zip(starts.tolist(), lens.tolist()):
+        want_bounds.append(len(want_idx))
+        w = [s0 + j for j in range(ln - n + 1)]
+        want_idx.extend(w)
+        want_counts.append(len(w))
+    assert idx.tolist() == want_idx
+    assert counts.tolist() == want_counts
+    assert bounds.tolist() == want_bounds
+
+    mod = cps.fold(cp, starts, lens, np.int64(0), cps.mod_step)
+    fnv = cps.fold(cp, starts, lens, cps.FNV_OFFSET, cps.fnv1a_step)
+    assert mod.dtype == np.int64 and fnv.dtype == np.uint64
+    for seg, m, f in zip(segs, mod.tolist(), fnv.tolist()):
+        acc_m, acc_f = 0, int(cps.FNV_OFFSET)
+        for c in seg:
+            acc_m = (acc_m * 31 + ord(c)) % cps.FOLD_MOD
+            acc_f = ((acc_f ^ ord(c)) * int(cps.FNV_PRIME)) & _MASK64
+        assert (m, f) == (acc_m, acc_f)

@@ -168,6 +168,32 @@ def test_repetition_features_invariants(s):
         assert all(f[f"dup_{n}gram_char_frac"] == 0.0 for n in range(5, 11))
 
 
+def _union_find(edges, nodes):
+    """id → min id of its component (pure-Python oracle)."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # canonical = min id per component
+    comp: dict[int, list[int]] = {}
+    for n in nodes:
+        comp.setdefault(find(n), []).append(n)
+    out = {}
+    for members in comp.values():
+        m = min(members)
+        for n in members:
+            out[n] = m
+    return out
+
+
 def test_dedup_components_random_graphs_vs_union_find(spark):
     """r5 (judge ask): components on seeded Erdős–Rényi graphs (~2k nodes,
     includes long paths and isolated edges) must equal a pure-Python
@@ -176,30 +202,6 @@ def test_dedup_components_random_graphs_vs_union_find(spark):
 
     from language_identification_spark.operators import dedup
     from language_identification_spark.operators.cache import pair_cache_scope
-
-    def union_find(edges, nodes):
-        parent = {n: n for n in nodes}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # canonical = min id per component
-        comp: dict[int, list[int]] = {}
-        for n in nodes:
-            comp.setdefault(find(n), []).append(n)
-        out = {}
-        for members in comp.values():
-            m = min(members)
-            for n in members:
-                out[n] = m
-        return out
 
     rng = random.Random(20250817)
     n_nodes = 2000
@@ -215,7 +217,7 @@ def test_dedup_components_random_graphs_vs_union_find(spark):
     edges = sorted(edges)
     nodes = sorted({x for e in edges for x in e})
 
-    exp = union_find(edges, nodes)
+    exp = _union_find(edges, nodes)
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     with pair_cache_scope():
         got = dict(
@@ -223,6 +225,35 @@ def test_dedup_components_random_graphs_vs_union_find(spark):
             for r in dedup.dedup_components(pairs).collect()
         )
     assert got == exp
+
+
+def test_dedup_components_mixed_width_ids(spark):
+    """Pairs with ``id_a int, id_b bigint``: the explode-of-structs
+    symmetrization unifies the two id types to bigint (as the old
+    ``unionAll`` did), so ids past 2^31 on the bigint side survive and the
+    components equal the union-find oracle."""
+    import random
+
+    from language_identification_spark.operators import dedup
+    from language_identification_spark.operators.cache import pair_cache_scope
+
+    rng = random.Random(20251018)
+    edges = set()
+    for _ in range(600):
+        a, b = rng.randrange(800), rng.randrange(800)
+        if a != b:
+            edges.add((min(a, b), max(a, b)))
+    path = list(range(5000, 5064))
+    edges.update(zip(path, path[1:]))
+    edges.update((a, (1 << 40) + a) for a in range(0, 800, 97))
+    edges = sorted(edges)
+    nodes = sorted({x for e in edges for x in e})
+    pairs = spark.createDataFrame(edges, "id_a int, id_b bigint")
+    with pair_cache_scope():
+        out = dedup.dedup_components(pairs)
+        assert dict(out.dtypes) == {"id": "bigint", "canonical_id": "bigint"}
+        got = {r["id"]: r["canonical_id"] for r in out.collect()}
+    assert got == _union_find(edges, nodes)
 
 
 def test_dedup_components_path_log_rounds(spark):
