@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 
 from ..functions.codepoints import tile, windows
+from .hashed_ngram import batch_chunks
 
 K_SMOOTH = 0.5
 
@@ -44,7 +45,7 @@ def _batch_bigram_keys(texts) -> np.ndarray:
     doc-major."""
     cp, idx, _, _ = _bigram_windows(texts)
     c = cp.astype(np.uint64)
-    return (c[idx] << np.uint64(32)) | c[idx + 1]
+    return ((c[:-1] << np.uint64(32)) | c[1:])[idx]
 
 
 def doc_bigram_keys(text: str) -> np.ndarray:
@@ -55,8 +56,11 @@ def doc_bigram_keys(text: str) -> np.ndarray:
 
 def bigram_key_counts(texts) -> tuple[np.ndarray, np.ndarray]:
     """Distinct packed transition keys of a batch and their counts — the
-    one bigram counting kernel (non-``str`` entries count as ``""``)."""
-    return np.unique(_batch_bigram_keys(texts), return_counts=True)
+    one bigram counting kernel (non-``str`` entries count as ``""``).
+    Keys are built over cache-sized chunks (``batch_chunks``): one tile of
+    a whole batch of long pages measured slower than a loop over docs."""
+    keys = [_batch_bigram_keys(c) for c in batch_chunks(list(texts))]
+    return np.unique(np.concatenate(keys or [np.empty(0, np.uint64)]), return_counts=True)
 
 
 def bigram_frame(keys, cnts) -> pd.DataFrame:
@@ -122,8 +126,6 @@ class BigramLM:
         keep 32 parallel workers off the DRAM bandwidth wall; chunking is
         value-invariant. Empty docs → +inf
         (matching :meth:`perplexity`)."""
-        from .hashed_ngram import batch_chunks
-
         n = len(texts)
         if n == 0:
             return np.zeros(0, dtype=np.float64)
