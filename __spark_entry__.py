@@ -123,8 +123,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         token_count_bpe,
         token_count_ws,
     )
+    from language_identification_spark.functions.ngramcount import char_ngram_counts
     from language_identification_spark.functions.text import char_ngrams
+    from language_identification_spark.models.score import (
+        make_cavnar_trenkle_predict_udf,
+        make_char_freq_predict_udf,
+        make_dunning_predict_udf,
+        make_markov_predict_udf,
+        score_ngram_relational,
+    )
     from language_identification_spark.models.train import (
+        CHARFREQ_SMOOTHING,
+        DUNNING_SMOOTHING,
+        MARKOV_SMOOTHING,
+        NGRAM_SMOOTHING,
+        model_table_to_dict,
+        train_cavnar_trenkle,
         train_char_freq,
         train_dunning,
         train_markov,
@@ -150,10 +164,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # A2: char bigram counts per lang, reference '_' padding —
         # vectorized partial-count pass (functions/ngramcount, r7),
         # totals identical to the explode → groupBy form
-        from language_identification_spark.functions.ngramcount import (
-            char_ngram_counts,
-        )
-
         d = _t(spark, sf, "documents")
         return char_ngram_counts(
             d.select("lang", "text"), 2, key_col="lang", lower=True, pad=True
@@ -173,33 +183,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return m.select("lang", "feat", F.round("prob", 12).alias("prob"))
 
     def ngram_lm_predict(spark, sf):
-        # J1/W1: train unigram LM on the corpus, predict every doc
-        # relationally (explode → broadcast join → sum(log) → argmax).
+        # J1/W1: train unigram LM on the corpus, predict every doc with
+        # the broadcast-model serving UDF
         d = _t(spark, sf, "documents")
-        model = train_ngram_lm(d, n=1)
-        # grams stay the JVM explode → groupBy form: an Arrow pass that
-        # emitted exact per-doc tf rows removed this shuffle but MEASURED
-        # SLOWER end-to-end at sf1.0 (8.7 s vs 4.3 s in the frozen bench)
-        # — 3M (doc, gram, tf) rows crossing the Python→JVM Arrow
-        # boundary cost more than the all-JVM explode+hashagg of 15M gram
-        # rows.
-        grams = (
-            d.select("doc_id", F.explode(char_ngrams(F.col("text"), 1)).alias("ngram"))
-            .groupBy("doc_id", "ngram")
-            .agg(F.count("*").alias("tf"))
-        )
-        scored = (
-            grams.join(F.broadcast(model), "ngram")
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.round(
-                    F.sum(F.col("tf") * F.log(F.col("prob") + F.lit(1e-8))), 6
-                ).alias("score")
-            )
-        )
-        return scored.groupBy("doc_id").agg(
-            F.expr("min_by(lang, struct(-score, lang))").alias("lang_pred")
-        )
+        return score_ngram_relational(d, train_ngram_lm(d, n=1), 1, NGRAM_SMOOTHING)
 
     def dataset_stats(spark, sf):
         d = _t(spark, sf, "documents")
@@ -239,10 +226,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def top_ngrams_per_lang(spark, sf):
         # W3: top-20 trigram profile per lang ordered by (-cnt, ngram)
-        from language_identification_spark.functions.ngramcount import (
-            char_ngram_counts,
-        )
-
         d = _t(spark, sf, "documents")
         counts = char_ngram_counts(
             d.select("lang", "text"), 3, key_col="lang", lower=True, pad=True
@@ -258,10 +241,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def vocab_topk(spark, sf):
         # W4: global top-100 bigrams (CountVectorizer max_features analogue)
-        from language_identification_spark.functions.ngramcount import (
-            char_ngram_counts,
-        )
-
         d = _t(spark, sf, "documents")
         return (
             char_ngram_counts(d.select("text"), 2, lower=True, pad=True)
@@ -1674,185 +1653,46 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def cavnar_profile(spark, sf):
         # A6: top-400 1..5-gram rank profile per lang over the ' '-joined
         # concatenation in doc_id order (applyInPandas trainer vs SQL oracle)
-        from language_identification_spark.models.train import train_cavnar_trenkle
-
         d = _t(spark, sf, "documents")
         return train_cavnar_trenkle(d, order_col="doc_id")
 
+    def _score_head(d, udf):
+        # the four per-doc reference scorers predict the first 300 docs
+        return d.filter(F.col("doc_id") < 300).select(
+            "doc_id", udf(F.col("text")).alias("lang_pred")
+        )
+
     def cavnar_predict(spark, sf):
-        # J4 serving semantics (reference lieterature.py:37-57): the doc's
-        # own top-400 rank profile (1..5-grams, symmetric '_'*(n-1) pad,
-        # sorted by -cnt then gram), out-of-place distance vs each lang
-        # profile = Σ coalesce(abs(i - j), 400), argmin per doc with
-        # sorted-lang tie-break. Fully relational doc side; the lang
-        # profiles reuse the gated applyInPandas trainer (A6).
-        from pyspark.sql import Window
-
-        from language_identification_spark.models.train import train_cavnar_trenkle
-
+        # J4 (reference lieterature.py:37-57): out-of-place distance of
+        # each doc's top-400 rank profile to the lang profiles of the
+        # gated applyInPandas trainer (A6), argmin with sorted-lang ties
         d = _t(spark, sf, "documents")
-        lang_prof = train_cavnar_trenkle(d, order_col="doc_id").select(
-            "lang", "ngram", F.col("rank").alias("j")
+        prof = train_cavnar_trenkle(d, order_col="doc_id")
+        udf = make_cavnar_trenkle_predict_udf(
+            spark, model_table_to_dict(prof, "cavnar_trenkle")
         )
-        sub = d.filter(F.col("doc_id") < 300)
-        low = F.lower(F.col("text"))
-        parts = []
-        for n in range(1, 6):
-            pad = F.concat(F.lit("_" * (n - 1)), low, F.lit("_" * (n - 1)))
-            parts.append(
-                sub.select(
-                    "doc_id",
-                    F.explode(char_ngrams(pad, n, reference_pad=False)).alias("ngram"),
-                )
-            )
-        allg = parts[0]
-        for p in parts[1:]:
-            allg = allg.unionAll(p)
-        counts = allg.groupBy("doc_id", "ngram").agg(F.count("*").alias("cnt"))
-        w = Window.partitionBy("doc_id").orderBy(
-            F.col("cnt").desc(), F.col("ngram").asc()
-        )
-        doc_prof = (
-            counts.withColumn("i", F.row_number().over(w) - 1)
-            .filter(F.col("i") < 400)
-            .select("doc_id", "ngram", "i")
-        )
-        langs = d.select("lang").distinct()
-        dist = (
-            doc_prof.crossJoin(F.broadcast(langs))
-            .join(F.broadcast(lang_prof), ["lang", "ngram"], "left")
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.sum(
-                    F.coalesce(F.abs(F.col("i") - F.col("j")), F.lit(400))
-                ).alias("distance")
-            )
-        )
-        return dist.groupBy("doc_id").agg(
-            F.expr("min_by(lang, struct(distance, lang))").alias("lang_pred")
-        )
+        return _score_head(d, udf)
 
     def dunning_predict(spark, sf):
-        # J5: left join with raw-0.5 fallback, length-normalized log-prob,
-        # argmax per doc (docs subset to bound the cross join)
+        # J5: length-normalized log-likelihood, raw-0.5 miss fallback
         d = _t(spark, sf, "documents")
-        model = train_dunning(d)
-        sub = d.filter(F.col("doc_id") < 300)
-        low = F.lower(F.col("text"))
-        uni = sub.select(
-            "doc_id", F.explode(char_ngrams(low, 1, reference_pad=False)).alias("raw")
-        ).select("doc_id", F.concat(F.lit("c_"), F.col("raw")).alias("feat"))
-        pad = F.concat(F.lit("_"), low, F.lit("_"))
-        bg = sub.select(
-            "doc_id", F.explode(char_ngrams(pad, 2, reference_pad=False)).alias("raw")
-        ).select("doc_id", F.concat(F.lit("bg_"), F.col("raw")).alias("feat"))
-        feats = uni.unionAll(bg).groupBy("doc_id", "feat").agg(F.count("*").alias("cnt"))
-        langs = d.select("lang").distinct()
-        scored = (
-            feats.crossJoin(F.broadcast(langs))
-            .join(F.broadcast(model), ["lang", "feat"], "left")
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.round(
-                    F.sum(F.col("cnt") * F.log(F.coalesce(F.col("prob"), F.lit(0.5))))
-                    / F.sum("cnt"),
-                    6,
-                ).alias("score")
-            )
-        )
-        return scored.groupBy("doc_id").agg(
-            F.expr("min_by(lang, struct(-score, lang))").alias("lang_pred")
-        )
+        model = model_table_to_dict(train_dunning(d), "dunning")
+        return _score_head(d, make_dunning_predict_udf(spark, model, DUNNING_SMOOTHING))
 
     def markov_predict(spark, sf):
-        # J2 serving semantics (reference statistical_models.py:131-147):
-        # Σ log(prob + s) over transition OCCURRENCES present in the lang
-        # model; langs with no matched transition score 0 (the reference
-        # quirk — an unmatched lang can win over all-negative log sums).
+        # J2 (reference statistical_models.py:131-147): Σ log(prob + s)
+        # over transition occurrences present in the lang model; a lang
+        # with no matched transition scores 0 (the reference quirk)
         d = _t(spark, sf, "documents")
-        from language_identification_spark.models.train import train_markov
-
-        model = train_markov(d)
-        sub = d.filter(F.col("doc_id") < 300)
-        padded = F.concat(F.lit("_"), F.col("text"), F.lit("_"))
-        bg = sub.select(
-            "doc_id",
-            F.explode(char_ngrams(padded, 2, reference_pad=False)).alias("bg"),
-        ).select(
-            "doc_id",
-            F.substring("bg", 1, 1).alias("cur"),
-            F.substring("bg", 2, 1).alias("nxt"),
-        )
-        tf = bg.groupBy("doc_id", "cur", "nxt").agg(F.count("*").alias("tf"))
-        matched = (
-            tf.join(F.broadcast(model), ["cur", "nxt"])
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.round(
-                    F.sum(F.col("tf") * F.log(F.col("prob") + F.lit(1e-10))), 6
-                ).alias("score")
-            )
-        )
-        langs = d.select("lang").distinct()
-        grid = sub.select("doc_id").crossJoin(F.broadcast(langs))
-        full = grid.join(matched, ["doc_id", "lang"], "left").na.fill({"score": 0.0})
-        return full.groupBy("doc_id").agg(
-            F.expr("min_by(lang, struct(-score, lang))").alias("lang_pred")
-        )
+        model = model_table_to_dict(train_markov(d), "markov")
+        return _score_head(d, make_markov_predict_udf(spark, model, MARKOV_SMOOTHING))
 
     def char_freq_predict(spark, sf):
-        # J3 serving semantics (reference statistical_models.py:76-99):
-        # cosine of the doc's smoothed char profile vs each lang profile,
-        # sim = Σ_common p_doc·p_lang / (‖p_doc‖·‖p_lang‖ + s). Both
-        # profiles carry the defaultdict quirk (+s per seen key).
-        from pyspark.sql import Window
-
+        # J3 (reference statistical_models.py:76-99): cosine of the doc's
+        # smoothed char profile vs each lang profile
         d = _t(spark, sf, "documents")
-        from language_identification_spark.models.train import train_char_freq
-
-        model = train_char_freq(d)
-        lnorm = model.groupBy("lang").agg(
-            F.sqrt(F.sum(F.col("prob") * F.col("prob"))).alias("lnorm")
-        )
-        sub = d.filter(F.col("doc_id") < 300)
-        chars = sub.select(
-            "doc_id",
-            F.explode(
-                char_ngrams(F.lower(F.col("text")), 1, reference_pad=False)
-            ).alias("char"),
-        )
-        cnts = chars.groupBy("doc_id", "char").agg(F.count("*").alias("cnt"))
-        w = Window.partitionBy("doc_id")
-        total = F.sum("cnt").over(w) + F.lit(1e-10) * F.count("*").over(w)
-        dprof = cnts.select(
-            "doc_id", "char", ((F.col("cnt") + F.lit(1e-10)) / total).alias("p")
-        )
-        dnorm = dprof.groupBy("doc_id").agg(
-            F.sqrt(F.sum(F.col("p") * F.col("p"))).alias("dnorm")
-        )
-        num = (
-            dprof.join(F.broadcast(model), "char")
-            .groupBy("doc_id", "lang")
-            .agg(F.sum(F.col("p") * F.col("prob")).alias("num"))
-        )
-        langs = d.select("lang").distinct()
-        scored = (
-            dnorm.crossJoin(F.broadcast(langs))
-            .join(F.broadcast(lnorm), "lang")
-            .join(num, ["doc_id", "lang"], "left")
-            .select(
-                "doc_id",
-                "lang",
-                F.round(
-                    F.coalesce(F.col("num"), F.lit(0.0))
-                    / (F.col("dnorm") * F.col("lnorm") + F.lit(1e-10)),
-                    6,
-                ).alias("sim"),
-            )
-        )
-        return scored.groupBy("doc_id").agg(
-            F.expr("min_by(lang, struct(-sim, lang))").alias("lang_pred")
-        )
+        model = model_table_to_dict(train_char_freq(d), "char_freq")
+        return _score_head(d, make_char_freq_predict_udf(spark, model, CHARFREQ_SMOOTHING))
 
     def tfidf_top_terms(spark, sf):
         # A13: sklearn-style smoothed idf over char bigrams, top-5 per doc
@@ -1906,10 +1746,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pyspark.sql import Window
 
         d = _t(spark, sf, "documents")
-        counts = (
-            d.select("lang", F.explode(char_ngrams(F.lower("text"), 2)).alias("feat"))
-            .groupBy("lang", "feat")
-            .agg(F.count("*").alias("cnt"))
+        counts = char_ngram_counts(
+            d.select("lang", "text"), 2, key_col="lang", lower=True, pad=True,
+            gram_col="feat",
         )
         totals = counts.groupBy("lang").agg(F.sum("cnt").alias("tot"))
         gtot = counts.groupBy("feat").agg(F.sum("cnt").alias("gcnt"))

@@ -1,17 +1,18 @@
 """Batch scoring: broadcast model + Arrow pandas UDFs.
 
 Serving pattern (north_star): model broadcast once per executor, scored over
-Arrow batches. The n-gram/Markov scorers are numpy-vectorized per batch via
-a gram → per-language log-prob *vector* map: the reference's "skip n-grams
-unseen for a language" quirk (statistical_models.py:44-45) is encoded as a
-0.0 in that vector, so ``score = Σ count(g) · vec(g)`` reproduces the math
-exactly, including the quirk. Cavnar–Trenkle and Dunning reuse the oracle
-classes directly (per-doc loops inside the Arrow batch — acceptable: their
-profiles are rank lists, not bags).
+Arrow batches — one UDF per model family, each built by ``_broadcast_udf``.
+The n-gram/Markov scorers are numpy-vectorized per batch via a gram →
+per-language log-prob *vector* map: the reference's "skip n-grams unseen
+for a language" quirk (statistical_models.py:44-45) is encoded as a 0.0 in
+that vector, so ``score = Σ count(g) · vec(g)`` reproduces the math
+exactly, including the quirk. Character frequency, Cavnar–Trenkle and
+Dunning reuse the oracle classes directly (per-doc loops inside the Arrow
+batch).
 
-Also provides the pure-relational n-gram scorer (SURVEY.md §2.4 J1):
-explode → broadcast join model table → groupBy sum → max_by. Same result as
-the UDF path; it is the DuckDB-checkable form.
+Scoring is doc-local: no gram leaves the Python worker, so a scored frame
+plans no join and no shuffle. The relational form of each scorer is its
+DuckDB oracle in ``__spark_entry__.oracle_sql()``.
 """
 
 from __future__ import annotations
@@ -20,11 +21,13 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import char_ngrams, py_char_ngrams
+from ..functions.text import py_char_ngrams
+from ..oracle.reference import CavnarTrenkle, CharFrequency, Dunning
+from .train import model_table_to_dict
 
 
 class VectorizedBagScorer:
@@ -56,26 +59,60 @@ class VectorizedBagScorer:
         out = []
         for t in texts:
             grams: dict[str, int] = {}
-            for g in py_char_ngrams(t if isinstance(t, str) else "", n):
+            for g in py_char_ngrams(t, n):
                 grams[g] = grams.get(g, 0) + 1
             out.append(self.langs[int(np.argmax(self.score_counts(grams)))])
         return out
 
 
-def make_ngram_predict_udf(spark: SparkSession, language_models: dict, n: int, smoothing: float):
-    """Scalar pandas UDF: text → predicted lang (NgramModel.predict parity)."""
-    bc = spark.sparkContext.broadcast((language_models, n, smoothing))
+def _broadcast_udf(spark: SparkSession, payload, build):
+    """Scalar pandas UDF text → predicted lang. ``payload`` is broadcast
+    once; ``build(payload)`` returns ``predict(list[str]) -> list[str]``
+    and runs once per Python worker process. NULL text scores as ""
+    (P6 str coercion at the serving boundary: the reference never sees
+    nulls, so its math stays untouched)."""
+    bc = spark.sparkContext.broadcast(payload)
     state: dict = {}
 
     @F.pandas_udf(T.StringType())
     def predict(texts: pd.Series) -> pd.Series:
-        if "scorer" not in state:  # once per Python worker process
-            models, nn, sm = bc.value
-            state["scorer"] = VectorizedBagScorer(models, sm)
-            state["n"] = nn
-        return pd.Series(state["scorer"].predict_ngram(texts.tolist(), state["n"]))
+        if "predict" not in state:
+            state["predict"] = build(bc.value)
+        return pd.Series(state["predict"](texts.fillna("").tolist()))
 
     return predict
+
+
+def _bag_predictor(payload):
+    models, n, smoothing = payload
+    scorer = VectorizedBagScorer(models, smoothing)
+    return lambda texts: scorer.predict_ngram(texts, n)
+
+
+def _char_freq_predictor(payload):
+    profiles, smoothing = payload
+    m = CharFrequency(smoothing=smoothing)
+    m.language_profiles = profiles
+    return m.predict
+
+
+def _cavnar_trenkle_predictor(payload):
+    profiles, max_profile_size = payload
+    m = CavnarTrenkle(max_profile_size=max_profile_size)
+    m.language_profiles = profiles
+    return m.predict
+
+
+def _dunning_predictor(payload):
+    models, smoothing = payload
+    m = Dunning(smoothing=smoothing)
+    m.language_models = models
+    return m.predict
+
+
+def make_ngram_predict_udf(spark: SparkSession, language_models: dict, n: int, smoothing: float):
+    """Scalar pandas UDF: text → predicted lang (NgramModel.predict parity)."""
+    return _broadcast_udf(spark, (language_models, n, smoothing), _bag_predictor)
 
 
 def make_markov_predict_udf(spark: SparkSession, language_models: dict, smoothing: float):
@@ -92,66 +129,21 @@ def make_markov_predict_udf(spark: SparkSession, language_models: dict, smoothin
 def make_char_freq_predict_udf(spark: SparkSession, language_profiles: dict, smoothing: float):
     """CharacterFrequency.predict parity (statistical_models.py:76-99):
     cosine of the doc's smoothed char profile vs each language profile."""
-    bc = spark.sparkContext.broadcast((language_profiles, smoothing))
-    state: dict = {}
-
-    @F.pandas_udf(T.StringType())
-    def predict(texts: pd.Series) -> pd.Series:
-        if "m" not in state:
-            from ..oracle.reference import CharFrequency
-
-            profiles, sm = bc.value
-            m = CharFrequency(smoothing=sm)
-            m.language_profiles = profiles
-            state["m"] = m
-        # P6 str coercion at the serving boundary: NULL text scores as ""
-        # (the reference never sees nulls; its math stays untouched).
-        return pd.Series(state["m"].predict(texts.fillna("").tolist()))
-
-    return predict
+    return _broadcast_udf(spark, (language_profiles, smoothing), _char_freq_predictor)
 
 
 def make_cavnar_trenkle_predict_udf(spark: SparkSession, profiles: dict, max_profile_size: int = 400):
-    bc = spark.sparkContext.broadcast(profiles)
-    state: dict = {}
-
-    @F.pandas_udf(T.StringType())
-    def predict(texts: pd.Series) -> pd.Series:
-        if "m" not in state:
-            from ..oracle.reference import CavnarTrenkle
-
-            m = CavnarTrenkle(max_profile_size=max_profile_size)
-            m.language_profiles = bc.value
-            state["m"] = m
-        return pd.Series(state["m"].predict(texts.fillna("").tolist()))
-
-    return predict
+    """CavnarTrenkle.predict parity (lieterature.py:37-57): out-of-place
+    distance of the doc's rank profile to each language profile."""
+    return _broadcast_udf(spark, (profiles, max_profile_size), _cavnar_trenkle_predictor)
 
 
 def make_dunning_predict_udf(spark: SparkSession, language_models: dict, smoothing: float = 0.5):
-    bc = spark.sparkContext.broadcast((language_models, smoothing))
-    state: dict = {}
-
-    @F.pandas_udf(T.StringType())
-    def predict(texts: pd.Series) -> pd.Series:
-        if "m" not in state:
-            from ..oracle.reference import Dunning
-
-            models, sm = bc.value
-            m = Dunning(smoothing=sm)
-            m.language_models = models
-            state["m"] = m
-        return pd.Series(m_predict(state["m"], texts))
-
-    def m_predict(m, texts):
-        return m.predict(texts.fillna("").tolist())
-
-    return predict
+    """Dunning.predict parity: length-normalized log-likelihood with the
+    raw-``smoothing`` miss fallback."""
+    return _broadcast_udf(spark, (language_models, smoothing), _dunning_predictor)
 
 
-# ---------------------------------------------------------------------------
-# Pure-relational n-gram scorer (J1) — DuckDB-checkable.
-# ---------------------------------------------------------------------------
 def score_ngram_relational(
     docs: DataFrame,
     model: DataFrame,
@@ -160,23 +152,10 @@ def score_ngram_relational(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, lang_pred) via explode → broadcast join → sum(log) → max_by.
-
-    Inner join ⇒ unseen n-grams contribute nothing (the reference quirk,
-    statistical_models.py:44-45). Ties broken by first lang in sorted order
-    via max_by on (score, lang) struct ordering — matches the oracle's
-    pinned sorted-langs iteration.
-    """
-    grams = docs.select(
-        F.col(id_col), F.explode(char_ngrams(F.col(text_col), n)).alias("ngram")
-    ).groupBy(id_col, "ngram").agg(F.count("*").alias("tf"))
-    scored = (
-        grams.join(F.broadcast(model), "ngram")
-        .groupBy(id_col, "lang")
-        .agg(F.sum(F.col("tf") * F.log(F.col("prob") + F.lit(smoothing))).alias("score"))
-    )
-    # argmax with lexicographically-smallest lang on exact ties (the oracle
-    # iterates sorted langs and Python max keeps the first maximum).
-    return scored.groupBy(id_col).agg(
-        F.expr("min_by(lang, struct(-score, lang))").alias("lang_pred")
-    )
+    """(id_col, lang_pred) for a ``train_ngram_lm`` model TABLE: the table
+    is collected and scored by ``make_ngram_predict_udf``, so the answer
+    is ``NgramLM.predict``'s exactly (unseen n-grams skipped, ties to the
+    first lang in sorted order)."""
+    lms = model_table_to_dict(model, "ngram")
+    udf = make_ngram_predict_udf(docs.sparkSession, lms, n, smoothing)
+    return docs.select(id_col, udf(F.col(text_col)).alias("lang_pred"))

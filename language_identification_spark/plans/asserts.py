@@ -18,11 +18,6 @@ def explain_str(df: DataFrame) -> str:
     )
 
 
-def assert_broadcast_join(df: DataFrame) -> None:
-    plan = explain_str(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-
-
 def assert_no_shuffle(df: DataFrame) -> None:
     """The serving pipeline must stay narrow — any Exchange at 100 TB is a
     design regression."""

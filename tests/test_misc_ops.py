@@ -42,31 +42,6 @@ def test_cavnar_dunning_udf_parity(spark, pages_pdf):
     assert got == want
 
 
-def test_cavnar_predict_relational_matches_oracle(spark, sf_dir):
-    """The fully-relational J4 gate query (explode → rank window → left
-    join → Σ coalesce(abs(i-j),400) → min_by) must agree with the
-    reference-math oracle on the same docs — so the DuckDB gate and the
-    parity-tested UDF are pinned to each other through one query."""
-    import pandas as pd
-
-    import __spark_entry__ as entrymod
-
-    got = {
-        r["doc_id"]: r["lang_pred"]
-        for r in entrymod.queries()["cavnar_predict"](spark, sf_dir).collect()
-    }
-    docs = (
-        pd.read_parquet(f"{sf_dir}/documents.parquet")
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    ct = ref.CavnarTrenkle()
-    ct.train(docs["text"].tolist(), docs["lang"].tolist())
-    sub = docs[docs["doc_id"] < 300]
-    want = dict(zip(sub["doc_id"], ct.predict(sub["text"].tolist())))
-    assert got == want
-
-
 def test_write_bucketed_partition_pruning(spark, pages_df, tmp_path):
     loc = str(tmp_path)
     write_bucketed(pages_df.select("url", "text", "lang"), loc, "pages_b", n_buckets=8)

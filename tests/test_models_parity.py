@@ -164,37 +164,44 @@ def test_relational_ngram_scorer_matches_oracle(spark, corpus_df, train_pdf, tes
     )
     got = {r["doc_idx"]: r["lang_pred"] for r in out.collect()}
     want = dict(zip(test_pdf["doc_idx"], ng.predict(test_pdf["text"].tolist())))
-    # float-sum ordering can differ JVM-side; allow ≤0.5% disagreement
-    diff = sum(1 for k in want if got.get(k) != want[k])
-    assert diff <= max(1, len(want) // 200), f"{diff}/{len(want)} mismatches"
+    assert got == want
 
 
-def test_relational_predict_gates_match_udfs(spark, sf_dir):
-    """The markov_predict / char_freq_predict contract queries (relational
-    J2/J3 serving, DuckDB-gated) must agree with the parity-tested UDF
-    scorers on the driver testdata. Scores are rounded to 6 decimals before
-    the argmax in the relational form, so allow ≤0.5% tie-flip drift."""
+# registry predict query → (reference model, scored docs: all or doc_id < 300)
+PREDICT_GATES = {
+    "ngram_lm_predict": (lambda: ref.NgramLM(n=1), None),
+    "markov_predict": (ref.MarkovChain, 300),
+    "char_freq_predict": (ref.CharFrequency, 300),
+    "cavnar_predict": (ref.CavnarTrenkle, 300),
+    "dunning_predict": (ref.Dunning, 300),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PREDICT_GATES))
+def test_predict_gate_matches_reference(spark, sf_dir, name):
+    """Each DuckDB-gated registry predict query equals its reference
+    model's ``predict`` exactly, trained on the same docs in doc_id
+    order — so the DuckDB oracle and the reference math are pinned to
+    each other through the one serving scorer."""
+    import pandas as pd
+
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sub = docs.filter(F.col("doc_id") < 300)
-
-    mk_dict = tr.model_table_to_dict(tr.train_markov(docs), "markov")
-    udf = sc.make_markov_predict_udf(spark, mk_dict, 1e-10)
-    want = {r["doc_id"]: r["p"] for r in sub.select("doc_id", udf(F.col("text")).alias("p")).collect()}
-    got = {r["doc_id"]: r["lang_pred"] for r in qs["markov_predict"](spark, sf_dir).collect()}
-    assert set(got) == set(want)
-    diff = sum(1 for k in want if got[k] != want[k])
-    assert diff <= max(1, len(want) // 200), f"{diff}/{len(want)}"
-
-    cf_dict = tr.model_table_to_dict(tr.train_char_freq(docs), "char_freq")
-    udf = sc.make_char_freq_predict_udf(spark, cf_dict, 1e-10)
-    want = {r["doc_id"]: r["p"] for r in sub.select("doc_id", udf(F.col("text")).alias("p")).collect()}
-    got = {r["doc_id"]: r["lang_pred"] for r in qs["char_freq_predict"](spark, sf_dir).collect()}
-    assert set(got) == set(want)
-    diff = sum(1 for k in want if got[k] != want[k])
-    assert diff <= max(1, len(want) // 200), f"{diff}/{len(want)}"
+    make, head = PREDICT_GATES[name]
+    docs = (
+        pd.read_parquet(f"{sf_dir}/documents.parquet")
+        .sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    m = make()
+    m.train(docs["text"].tolist(), docs["lang"].tolist())
+    sub = docs if head is None else docs[docs["doc_id"] < head]
+    want = dict(zip(sub["doc_id"], m.predict(sub["text"].tolist())))
+    got = {
+        r["doc_id"]: r["lang_pred"]
+        for r in entrymod.queries()[name](spark, sf_dir).collect()
+    }
+    assert got == want
 
 
 def test_oracle_separates_languages(train_pdf, test_pdf):

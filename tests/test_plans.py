@@ -3,6 +3,7 @@ the results."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from language_identification_spark.models.score import score_ngram_relational
@@ -12,10 +13,10 @@ from language_identification_spark.pipeline.quality import (
     train_quality_models,
 )
 from language_identification_spark.plans.asserts import (
-    assert_broadcast_join,
     assert_no_shuffle,
     assert_pushed_filter,
     count_exchanges,
+    physical_plan,
 )
 
 
@@ -107,11 +108,29 @@ def test_lineage_commits_are_local_table_scans(spark, pages_df, tmp_path, monkey
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
-def test_model_join_is_broadcast(spark, pages_df):
-    df = pages_df.select("text", F.col("lang"), F.monotonically_increasing_id().alias("doc_id"))
-    model = train_ngram_lm(df, n=1)
-    out = score_ngram_relational(df, model, n=1, smoothing=1e-8)
-    assert_broadcast_join(out)
+@pytest.mark.parametrize(
+    "name",
+    ["cavnar_predict", "char_freq_predict", "dunning_predict", "markov_predict",
+     "ngram_lm_predict", "score_ngram_relational"],
+)
+def test_langid_scoring_is_doc_local(spark, sf_dir, pages_df, name):
+    """Every langid predict frame scores each doc inside ONE Arrow UDF
+    over a broadcast model: no gram rows are joined to the model and
+    nothing shuffles on the scored side."""
+    import re
+
+    import __spark_entry__ as entrymod
+
+    if name == "score_ngram_relational":
+        df = pages_df.select(
+            "text", "lang", F.monotonically_increasing_id().alias("doc_id")
+        )
+        out = score_ngram_relational(df, train_ngram_lm(df, n=1), n=1, smoothing=1e-8)
+    else:
+        out = entrymod.queries()[name](spark, sf_dir)
+    plan = physical_plan(out)
+    assert len(re.findall(r"ArrowEvalPython", plan)) == 1, plan
+    assert "Join" not in plan and "Exchange" not in plan, plan
 
 
 def test_filter_pushdown_to_scan(spark, sf_dir):
@@ -160,18 +179,6 @@ def test_lsh_topk_broadcasts_probe_side(spark, sf_dir):
     plan = explain_str(out)
     # exploded probe buckets stay on the broadcast side; the corpus is
     # scanned, never shuffled, before the candidate join
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_cavnar_predict_broadcasts_lang_profile(spark, sf_dir):
-    """J4 relational serving: the (≤ L×400-row) lang profile must reach
-    the doc-side grams via a BROADCAST join — shuffling the exploded doc
-    grams against it would move the corpus."""
-    import __spark_entry__ as entrymod
-    from language_identification_spark.plans.asserts import explain_str
-
-    df = entrymod.queries()["cavnar_predict"](spark, sf_dir)
-    plan = explain_str(df)
     assert "BroadcastHashJoin" in plan, plan
 
 
