@@ -124,7 +124,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         token_count_ws,
     )
     from language_identification_spark.functions.ngramcount import char_ngram_counts
-    from language_identification_spark.functions.text import char_ngrams
+    from language_identification_spark.functions.text import char_ngrams_sql
     from language_identification_spark.models.score import (
         make_cavnar_trenkle_predict_udf,
         make_char_freq_predict_udf,
@@ -614,16 +614,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).select(F.col("t").alias("term"), F.col("cnt").alias("n"))
 
     def pii_scrub(spark, sf):
-        # r5 net-new: the native (JVM codegen) twin of the pandas-UDF
-        # scrubber (functions/scrub.py) — same SCRUB_RULES constants,
-        # Java∩RE2 dialect, so this gate is a FULL byte-identical DuckDB
-        # check of the 100 TB fast path. PII is PLANTED deterministically
-        # from doc_id (the fixture discipline): email/phone/IP/slur modes
-        # incl. a case-insensitivity probe ("GROBNAK").
-        from language_identification_spark.functions.scrub import (
-            pii_hits_native,
-            scrub_native,
-        )
+        # r5 net-new: the serving scrub kernel (functions/scrub.py) as
+        # one Arrow UDF — the DuckDB twin is generated from the same
+        # ASCII-pinned SCRUB_RULES, so this gate is a FULL byte-identical
+        # check of the code that scrubs served pages. PII is PLANTED
+        # deterministically from doc_id (the fixture discipline):
+        # email/phone/IP/slur modes incl. a case-insensitivity probe
+        # ("GROBNAK").
+        from language_identification_spark.functions.scrub import scrub_pii
 
         d = _t(spark, sf, "documents")
         did = F.col("doc_id")
@@ -647,10 +645,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.lit("")
             ),
         )
-        return d.select(
-            "doc_id",
-            scrub_native(raw).alias("scrubbed"),
-            pii_hits_native(raw).cast("long").alias("n_pii"),
+        return d.select("doc_id", scrub_pii(raw).alias("r")).select(
+            "doc_id", "r.scrubbed", "r.n_pii"
         )
 
     def quality_percentile_filter(spark, sf):
@@ -1417,15 +1413,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # gate — the build-once/consume-later lifecycle; half the 'added'
         # urls carry content already in the corpus and must drop even
         # though their url is new); survivors pay quality filtering
-        # (word bounds) + native PII scrub. The Bloom stage is exact by
-        # the no-false-negative argument, so the DuckDB twin is a plain
-        # NOT IN on text.
+        # (word bounds) + the serving PII scrub. The Bloom stage is exact
+        # by the no-false-negative argument, so the DuckDB twin is a
+        # plain NOT IN on text.
         import os
         import tempfile
 
-        from language_identification_spark.functions.scrub import (
-            scrub_native,
-        )
+        from language_identification_spark.functions.scrub import scrub_pii
         from language_identification_spark.functions.text import words
         from language_identification_spark.operators import snapshots
         from language_identification_spark.operators.bloom import (
@@ -1480,7 +1474,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "doc_id",
                 "status",
                 "n_words",
-                scrub_native(F.col("text")).alias("scrubbed"),
+                scrub_pii(F.col("text")).scrubbed.alias("scrubbed"),
             )
         )
 
@@ -1699,7 +1693,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = _t(spark, sf, "documents")
         n_docs = d.count()
         tf = (
-            d.select("doc_id", F.explode(char_ngrams(F.lower("text"), 2)).alias("term"))
+            d.select(
+                "doc_id", F.explode(F.expr(char_ngrams_sql("lower(text)", 2))).alias("term")
+            )
             .groupBy("doc_id", "term")
             .agg(F.count("*").alias("tf"))
         )

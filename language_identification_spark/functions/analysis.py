@@ -58,26 +58,15 @@ def token_count_bpe(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_REGEX))
 
 
-def doc_fingerprint_sql(col: Column) -> Column:
-    """All-SQL rolling-hash fold — the oracle-twin reference form (the
-    DuckDB twin is the same list_reduce); interpreted per char, so the
-    serving path is :func:`doc_fingerprint` (value-identical, pinned by
-    tests/test_misc_ops.py::test_doc_fingerprint_udf_matches_sql)."""
-    return F.aggregate(
-        F.transform(F.split(col, ""), lambda c: F.ascii(c)),
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * 31 + x) % FINGERPRINT_MOD,
-    )
-
-
 def doc_fingerprint(col: Column) -> Column:
     """Deterministic rolling-hash fingerprint: fold (acc*31 + codepoint)
     mod 1e9+7 over the characters. Same value in DuckDB via list_reduce.
 
     r7: one ``codepoints.fold`` per Arrow batch — the SQL ``aggregate``
     HOF evaluated an interpreted lambda per character. NULL text stays
-    NULL (the SQL form's propagation). Non-deterministic mark per guide
-    §4.4 (pure function; prevents filter-pushdown double evaluation)."""
+    NULL (the DuckDB twin's list fold gives 0; the gate tables hold no
+    NULL text). Non-deterministic mark per guide §4.4 (pure function;
+    prevents filter-pushdown double evaluation)."""
     @F.pandas_udf("long")
     def fp(texts: pd.Series) -> pd.Series:
         cp, starts, lens = tile(texts)

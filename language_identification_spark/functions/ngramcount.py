@@ -2,7 +2,7 @@
 
 The model trainers and n-gram gates all share one shape: explode char
 n-grams → groupBy(key, ngram) → count. The explode side built gram
-arrays with the ``char_ngrams`` zip_with chain — a CodegenFallback
+arrays with the ``char_ngrams_sql`` zip_with chain — a CodegenFallback
 expression that re-evaluates its ``split`` child per slice and runs
 interpreted per element — and then hash-aggregated one row per gram
 occurrence (~15M rows at sf1.0 for bigrams).
@@ -151,7 +151,7 @@ def fold_case(texts: pd.Series) -> pd.Series:
 def keyed_texts(pdf: pd.DataFrame, text_col: str, key_col: str | None, lower: bool):
     """(key, texts) groups of one Arrow batch — one group with key
     ``None`` when ``key_col`` is None. NULL text is dropped (it
-    contributes no gram, as ``explode(char_ngrams(NULL))`` dropped the
+    contributes no gram, as ``explode(char_ngrams_sql(NULL))`` dropped the
     row; empty text keeps its sentinel grams) and, with ``lower``, every
     text is case-folded by ``fold_case``."""
     texts = pdf[text_col]
@@ -176,7 +176,7 @@ def char_ngram_counts(
     gram_col: str = "ngram",
 ) -> DataFrame:
     """(key_col?, gram_col, cnt) exact char-n-gram occurrence counts —
-    the drop-in replacement for ``explode(char_ngrams(...)) → groupBy →
+    the drop-in replacement for ``explode(char_ngrams_sql(...)) → groupBy →
     count()``. Partial counts per (batch, key) via numpy, one map-side-
     combinable ``sum`` shuffle. n ≤ 3 (the packed-key domain).
 

@@ -1,13 +1,23 @@
 """PII / toxicity scrubber — compiled-regex, byte-identical by construction.
 
 The SAME module (same compiled patterns, same application order) runs in:
-- the pure-Python oracle (``oracle/pipeline.py``), and
-- the Spark pandas UDF (``pipeline/quality.py``) via :func:`scrub_series`.
+- the pure-Python oracle (``oracle/pipeline.py``) via :func:`scrub_text`,
+- the serving pandas UDF (``pipeline/quality.py``) via :func:`scrub_series`,
+- the registry gates ``pii_scrub`` / ``refresh_pipeline`` via
+  :data:`scrub_pii`, an Arrow UDF over :func:`scrub_series`.
 
-so ``scrubbed_text`` is byte-identical per url between the two, satisfying
-the north_rule's byte-identity check. Patterns are compiled once at module
-import — executors pay compilation once per Python worker process, never
-per batch or per row.
+so ``scrubbed_text`` is byte-identical per url between the oracle and the
+serving path, and the gates check the kernel that serves pages. Patterns
+are compiled once at module import — executors pay compilation once per
+Python worker process, never per batch or per row.
+
+Every pattern is compiled with ``re.ASCII``: ``\\d`` is ``[0-9]``, ``\\b``
+is an ASCII word boundary and IGNORECASE folds ASCII letters only —
+what RE2 means by them. Without it Python's Unicode ``\\d``/``\\b`` scrub
+Arabic-Indic or full-width digits as phones/IPs, and stop a slur match
+before a non-ASCII letter that RE2 treats as a boundary. The DuckDB twin
+(:func:`oracle_sql_exprs`) is generated from the same pattern strings,
+so the two engines agree byte for byte.
 
 No reference counterpart (net-new per BASELINE.json north_star: "compiled
 regex PII/toxicity scrubber (emails, phones, IPs, slur lexicon)").
@@ -18,6 +28,8 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Fake slur lexicon: synthetic placeholder tokens (see fixtures/pages.py).
 # A real deployment swaps this tuple for a curated lexicon; the machinery
@@ -27,19 +39,22 @@ SLUR_LEXICON = ("grobnak", "zilftwerp", "quvvorn")
 # Application order is part of the contract: email → phone → ip → slur.
 SCRUB_RULES: list[tuple[re.Pattern, str]] = [
     (
-        re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"),
+        re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", re.ASCII),
         "<EMAIL>",
     ),
     (
-        re.compile(r"\+?\d{1,3}[-.]\d{3}[-.]\d{3,4}(?:[-.]\d{4})?"),
+        re.compile(r"\+?\d{1,3}[-.]\d{3}[-.]\d{3,4}(?:[-.]\d{4})?", re.ASCII),
         "<PHONE>",
     ),
     (
-        re.compile(r"\b(?:\d{1,3}\.){3}\d{1,3}\b"),
+        re.compile(r"\b(?:\d{1,3}\.){3}\d{1,3}\b", re.ASCII),
         "<IP>",
     ),
     (
-        re.compile(r"\b(?:" + "|".join(map(re.escape, SLUR_LEXICON)) + r")\b", re.IGNORECASE),
+        re.compile(
+            r"\b(?:" + "|".join(map(re.escape, SLUR_LEXICON)) + r")\b",
+            re.ASCII | re.IGNORECASE,
+        ),
         "<TOX>",
     ),
 ]
@@ -68,22 +83,39 @@ def pii_hit_count(s: str) -> int:
     return sum(len(pat.findall(s)) for pat, _ in SCRUB_RULES)
 
 
-# --- native (JVM codegen) twin -------------------------------------------
-#
-# The pandas-UDF path above exists for the north rule's byte-identity
-# contract with the pure-Python oracle. At 100 TB the scrub should not
-# leave the JVM at all: every SCRUB_RULES pattern happens to sit in the
-# common subset of Python re, Java regex (Spark), and RE2 (DuckDB) —
-# ASCII \d/\b, no lookaround, no backrefs — so the same chain compiles
-# to whole-stage-codegen `regexp_replace` and fuses into the page scan.
-# Cross-engine identity is pinned three ways: native-vs-pandas-UDF on the
-# fixture (test_misc_ops), and the FULL `pii_scrub` driver gate whose
-# DuckDB oracle is generated from the SAME pattern constants below.
+SCRUB_STRUCT = T.StructType(
+    [
+        T.StructField("scrubbed", T.StringType()),
+        T.StructField("n_pii", T.LongType()),
+    ]
+)
 
-def _native_rules() -> list[tuple[str, str]]:
+
+@F.pandas_udf(SCRUB_STRUCT)
+def _scrub_pii(texts: pd.Series) -> pd.DataFrame:
+    """Per doc: ``scrubbed`` (:func:`scrub_series`) and ``n_pii``
+    (:func:`pii_hit_count` over the ORIGINAL text). NULL text gives NULL
+    in both fields."""
+    present = texts.notna().to_numpy()
+    scrubbed = scrub_series(texts.fillna("")).astype(object)
+    scrubbed[~present] = None
+    n_pii = pd.array(
+        [pii_hit_count(t) if p else None for t, p in zip(texts, present)],
+        dtype="Int64",
+    )
+    return pd.DataFrame({"scrubbed": scrubbed, "n_pii": n_pii})
+
+
+# Pure, but marked non-deterministic so the optimizer runs it once above
+# a Union instead of copying it into every branch (one Arrow pass).
+scrub_pii = _scrub_pii.asNondeterministic()
+
+
+def _rule_patterns() -> list[tuple[str, str]]:
     """(pattern, replacement) pairs as plain strings, in contract order —
-    the single source the Spark chain AND the DuckDB oracle build from.
-    The slur rule carries its IGNORECASE as an inline (?i) flag."""
+    the source the DuckDB oracle builds from. The slur rule carries its
+    IGNORECASE as an inline (?i) flag; ``re.ASCII`` needs no flag, RE2
+    classes are ASCII already."""
     out = []
     for pat, repl in SCRUB_RULES:
         p = pat.pattern
@@ -93,37 +125,12 @@ def _native_rules() -> list[tuple[str, str]]:
     return out
 
 
-def scrub_native(col):
-    """Native `regexp_replace` chain identical to :func:`scrub_text` /
-    :func:`scrub_series` — the JVM fast path (zero Python in the plan).
-    Null text passes through as null, matching SQL semantics."""
-    from pyspark.sql import functions as F
-
-    for p, repl in _native_rules():
-        col = F.regexp_replace(col, p, repl)
-    return col
-
-
-def pii_hits_native(col):
-    """Native match count twin of :func:`pii_hit_count`: sum of
-    per-rule `regexp_count` over the ORIGINAL text (each rule counts the
-    raw input, same as pii_hit_count's findall-per-rule — replacements
-    do not cascade into later rules' counts for these disjoint
-    patterns)."""
-    from pyspark.sql import functions as F
-
-    total = F.lit(0)
-    for p, _ in _native_rules():
-        total = total + F.regexp_count(col, F.lit(p))
-    return total
-
-
 def oracle_sql_exprs(text_expr: str) -> tuple[str, str]:
-    """DuckDB twins of :func:`scrub_native` / :func:`pii_hits_native`
-    over ``text_expr``, generated from the same pattern constants."""
+    """DuckDB twins of :func:`scrub_text` / :func:`pii_hit_count` over
+    ``text_expr``, generated from the same pattern constants."""
     s = text_expr
     hits = []
-    for p, repl in _native_rules():
+    for p, repl in _rule_patterns():
         pq = p.replace("'", "''")
         rq = repl.replace("'", "''")
         hits.append(

@@ -1,7 +1,7 @@
 """Text primitives:
 
-1. **Spark Column expressions** (JVM-side, whole-stage-codegen'd) — char
-   n-grams and whitespace tokenization.
+1. **Spark SQL expressions** (JVM-side) — char n-grams and whitespace
+   tokenization.
 2. **The Gopher/C4 heuristic feature kernel** —
    :func:`py_quality_features_batch`, one vectorized pass per Arrow
    batch over the ``codepoints`` layout. It is the only production
@@ -51,10 +51,10 @@ SYMBOL_TABLE = np.array([bool(_PY_SYMBOL_RE.match(chr(c))) for c in range(129)])
 # ---------------------------------------------------------------------------
 # Spark Column expressions (JVM side)
 # ---------------------------------------------------------------------------
-def char_ngrams(col: Column, n: int, reference_pad: bool = True) -> Column:
-    """Array of character n-grams with the reference's sentinel padding.
-
-    Pure SQL expression so Catalyst keeps it inside codegen — no Python
+def char_ngrams_sql(text_sql: str, n: int, reference_pad: bool = True) -> str:
+    """SQL array of the character n-grams of ``text_sql`` with the
+    reference's sentinel padding (use ``F.expr`` for a Column; the DuckDB
+    oracles use their own equivalent expansion). Pure SQL, no Python
     worker involved.
 
     One ``split(text, '')`` pass materializes the char array; n≥2 builds
@@ -64,41 +64,20 @@ def char_ngrams(col: Column, n: int, reference_pad: bool = True) -> Column:
     O(i) on multi-byte data), i.e. O(len²) per doc — measured 3-5× slower
     at web-page lengths for every n.
     """
-    if reference_pad:
-        padded = F.concat(F.lit("_" * (n - 1)), col, F.lit("_"))
-    else:
-        padded = col
-    # split('', '') yields [''] — guard the unpadded-empty/short case. The
-    # padded variant always carries ≥ n sentinel chars, never empty.
-    chars = F.split(padded, "")
-    if n == 1:
-        grams = chars
-    else:
-        size = F.size(chars)
-        grams = F.slice(chars, 1, size - (n - 1))
-        for k in range(1, n):
-            grams = F.zip_with(
-                grams,
-                F.slice(chars, k + 1, size - (n - 1)),
-                lambda a, b: F.concat(a, b),
-            )
-    if reference_pad:
-        return grams
-    return F.when(F.length(padded) < n, F.array().cast("array<string>")).otherwise(grams)
-
-
-def char_ngrams_sql(text_sql: str, n: int, reference_pad: bool = True) -> str:
-    """Same as :func:`char_ngrams` but as a SQL snippet (composable in
-    spark.sql; the DuckDB oracles use their own equivalent expansion).
-    Same zip_with-over-shifted-slices form as the Column version."""
     p = f"concat('{'_' * (n - 1)}', {text_sql}, '_')" if reference_pad else text_sql
     ch = f"split({p}, '')"
     if n == 1:
-        return ch
-    g = f"slice({ch}, 1, size({ch}) - {n - 1})"
-    for k in range(1, n):
-        g = f"zip_with({g}, slice({ch}, {k + 1}, size({ch}) - {n - 1}), (a, b) -> concat(a, b))"
-    return g
+        g = ch
+    else:
+        g = f"slice({ch}, 1, size({ch}) - {n - 1})"
+        for k in range(1, n):
+            g = f"zip_with({g}, slice({ch}, {k + 1}, size({ch}) - {n - 1}), (a, b) -> concat(a, b))"
+    if reference_pad:
+        return g
+    # split('', '') yields [''] and slice rejects a negative length:
+    # guard the unpadded short case. The padded variant always carries
+    # ≥ n sentinel chars.
+    return f"CASE WHEN length({p}) < {n} THEN CAST(array() AS array<string>) ELSE {g} END"
 
 
 def words(col: Column) -> Column:

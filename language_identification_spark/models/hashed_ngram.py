@@ -221,29 +221,3 @@ class HashedNgramNB:
     def predict_labels(self, texts) -> tuple[list[str], np.ndarray]:
         preds, confs = self.score_batch(texts)
         return [self.langs[i] for i in preds], confs
-
-    # --- serialization as a plain table (model registry / Iceberg-able) ---
-    def to_table(self) -> pd.DataFrame:
-        rows = []
-        for i, lg in enumerate(self.langs):
-            floor = self.W[i].min()
-            nz = np.nonzero(self.W[i] > floor)[0]
-            rows.append(
-                pd.DataFrame(
-                    {"lang": lg, "bucket": nz, "logprob": self.W[i, nz],
-                     "log_prior": self.log_prior[i], "floor": floor}
-                )
-            )
-        return pd.concat(rows, ignore_index=True)
-
-    @classmethod
-    def from_table(cls, pdf: pd.DataFrame, dim: int = DIM) -> "HashedNgramNB":
-        langs = sorted(pdf["lang"].unique())
-        W = np.zeros((len(langs), dim), dtype=np.float64)
-        log_prior = np.zeros(len(langs), dtype=np.float64)
-        for i, lg in enumerate(langs):
-            sub = pdf[pdf["lang"] == lg]
-            W[i, :] = sub["floor"].iloc[0]
-            W[i, sub["bucket"].to_numpy()] = sub["logprob"].to_numpy()
-            log_prior[i] = sub["log_prior"].iloc[0]
-        return cls(langs=langs, W=W, log_prior=log_prior, dim=dim)

@@ -110,13 +110,6 @@ class BigramLM:
             lut[ord(c)] = i
         return cls(char_ids=char_ids, logprob=logprob, lut=lut, k=k)
 
-    def perplexity(self, text: str) -> float:
-        """Single-doc convenience wrapper over :meth:`perplexity_batch` —
-        delegation (not a parallel implementation) is what guarantees the
-        two public APIs are bit-identical: the *_batch functions are the
-        bit-pinned contract and this inherits it."""
-        return float(self.perplexity_batch([text])[0])
-
     def perplexity_batch(self, texts) -> np.ndarray:
         """WHOLE-BATCH, CHUNKED perplexity: every padded segment
         ``'_' + text + '_'`` tiles one codepoint buffer, transition
@@ -124,8 +117,7 @@ class BigramLM:
         per-doc means are ``np.add.reduceat`` segment sums — no per-
         document Python. Cache-sized chunks (see hashed_ngram.batch_chunks)
         keep 32 parallel workers off the DRAM bandwidth wall; chunking is
-        value-invariant. Empty docs → +inf
-        (matching :meth:`perplexity`)."""
+        value-invariant. Empty docs → +inf."""
         n = len(texts)
         if n == 0:
             return np.zeros(0, dtype=np.float64)

@@ -78,13 +78,12 @@ def train_markov(
     """(lang, cur, nxt, prob) — transition LM, normalized per (lang, cur)
     (statistical_models.py:107-129). Padding is '_text_' (n=2 grams of the
     single-underscore-padded text)."""
-    padded = F.concat(F.lit("_"), F.col(text_col), F.lit("_"))
     # a bigram string IS its (cur, nxt) pair, so per-(lang, bigram)
     # counts are per-(lang, cur, nxt) counts — split on the SMALL count
     # table, not per occurrence
     counts = char_ngram_counts(
-        df.select(F.col(lang_col).alias("lang"), padded.alias("text")),
-        2, key_col="lang", lower=False, pad=False, gram_col="bg",
+        df.select(F.col(lang_col).alias("lang"), F.col(text_col).alias("text")),
+        2, key_col="lang", lower=False, pad=True, gram_col="bg",
     ).select(
         "lang",
         F.substring("bg", 1, 1).alias("cur"),

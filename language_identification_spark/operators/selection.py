@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 
 from ..functions.codepoints import FOLD_MOD, fold, mod_step, tile
 
-WS = "[ \\t\\n]+"
 
 
 # --------------------------------------------------------------- buckets
@@ -128,29 +127,13 @@ def quantile_buckets_sql(
 
 # ------------------------------------------------------------------ DSIR
 
-def token_buckets(col: Column, n_buckets: int) -> Column:
-    """Per-token hash buckets: the repo's rolling (acc*31+cp) % 1e9+7
-    fold applied to each whitespace token, mod ``n_buckets``. Same
-    value in DuckDB via list_transform + list_reduce (see
-    :func:`_fold_sql`). SQL form — the oracle-twin reference; the
-    serving path uses :func:`token_buckets_udf` (identical values,
-    pinned by tests/test_misc_ops.py::test_token_buckets_udf_matches_sql)."""
-    toks = F.split(F.trim(col), WS)
-    toks = F.when(F.trim(col) == "", F.array().cast("array<string>")).otherwise(toks)
-    fold = lambda t: F.aggregate(  # noqa: E731
-        F.transform(F.split(t, ""), lambda c: F.ascii(c)),
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * 31 + x) % FOLD_MOD,
-    )
-    return F.transform(toks, lambda t: (fold(t) % n_buckets).cast("int"))
-
-
 def token_buckets_udf(n_buckets: int):
-    """Vectorized twin of :func:`token_buckets` (r7): the SQL form runs
-    an interpreted ``aggregate`` lambda PER CHARACTER (HOFs are
-    CodegenFallback); this one folds every token of the Arrow batch with
-    one ``codepoints.fold`` — int64 arithmetic equals the SQL fold value
-    for value."""
+    """Per-token hash buckets: the repo's rolling (acc*31+cp) % 1e9+7
+    fold applied to each whitespace token of the ``trim``-ed text, mod
+    ``n_buckets``; NULL text gives NULL, empty-after-trim text ``[]``.
+    Every token of the Arrow batch folds in one ``codepoints.fold``; the
+    DuckDB twin is :func:`_fold_sql` (pinned token by token by
+    tests/test_misc_ops.py::test_token_buckets_udf_matches_sql)."""
     ws_re = _re.compile("[ \t\n]+")
 
     @F.pandas_udf("array<int>")

@@ -446,40 +446,71 @@ def test_certified_top_terms_matches_exact_on_fixture(spark, sf_dir):
     ]
 
 
-def test_scrub_native_matches_python_module(spark, pages_df):
-    """r5 native-scrub twin: the JVM regexp_replace chain must be
-    byte-identical to the pandas-UDF/oracle module (same SCRUB_RULES)
-    over the fixture corpus — which plants emails/phones/IPs/slurs —
-    and the native hit count must equal pii_hit_count."""
+# (input, scrubbed) pairs on which the engines disagreed while Python's
+# \d and \b were Unicode: non-ASCII digits are no phone or IP, a
+# non-ASCII letter is a word boundary, and IGNORECASE does not fold the
+# Kelvin sign (U+212A) to 'k'
+_ARABIC_PHONE = "call \u0660\u0661\u0662-\u0663\u0664\u0665-\u0666\u0667\u0668\u0669 now"
+SCRUB_DIALECT_CASES = [
+    (_ARABIC_PHONE, _ARABIC_PHONE),
+    ("ip \uff11.\uff12.\uff13.\uff14", "ip \uff11.\uff12.\uff13.\uff14"),
+    ("x grobnak\u00fc y", "x <TOX>\u00fc y"),
+    ("\u00e9GROBNAK", "\u00e9<TOX>"),
+    ("a 10.0.0.1\u00e9", "a <IP>\u00e9"),
+    ("x grobna\u212a y", "x grobna\u212a y"),
+]
+
+
+def test_scrub_pii_matches_duckdb_oracle(spark, pages_df):
+    """The registry scrub UDF (the serving kernel) equals its DuckDB twin
+    (``oracle_sql_exprs``, built from the same SCRUB_RULES) on scrubbed
+    text and hit count: the dialect probes, NULL, empty and the fixture
+    corpus, which plants emails/phones/IPs/slurs. Every rule is
+    ASCII-pinned, which is why the engines agree."""
+    import re
+
+    import duckdb
+
     from language_identification_spark.functions.scrub import (
-        pii_hit_count,
-        pii_hits_native,
-        scrub_native,
-        scrub_text,
+        SCRUB_RULES,
+        oracle_sql_exprs,
+        scrub_pii,
     )
 
-    rows = pages_df.select(
-        "text",
-        scrub_native(F.col("text")).alias("native"),
-        pii_hits_native(F.col("text")).alias("n"),
-    ).collect()
-    assert len(rows) > 0
-    planted = 0
-    for r in rows:
-        assert r["native"] == scrub_text(r["text"])
-        assert r["n"] == pii_hit_count(r["text"])
-        planted += r["n"]
-    assert planted > 0, "fixture plants PII; zero hits means a dead test"
-
-
-def test_scrub_native_cases(spark):
-    """Edge pins for the native chain: null passthrough, empty string,
-    case-insensitive slur, adjacent rules, count on the ORIGINAL text
-    (an email's digits must not double-count as a phone)."""
-    from language_identification_spark.functions.scrub import (
-        pii_hits_native,
-        scrub_native,
+    assert all(pat.flags & re.ASCII for pat, _ in SCRUB_RULES)
+    texts = [t for t, _ in SCRUB_DIALECT_CASES] + [None, ""]
+    texts += [r["text"] for r in pages_df.select("text").collect()]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, t string")
+    got = {
+        r["i"]: (r["scrubbed"], r["n_pii"])
+        for r in df.select("i", scrub_pii(F.col("t")).alias("r"))
+        .select("i", "r.scrubbed", "r.n_pii")
+        .collect()
+    }
+    con = duckdb.connect()
+    con.register("docs", df.toPandas())
+    scrubbed, n_pii = oracle_sql_exprs("t")
+    want = {
+        i: (s, n)
+        for i, s, n in con.sql(
+            f"SELECT i, {scrubbed}, ({n_pii})::BIGINT FROM docs"
+        ).fetchall()
+    }
+    assert got == want
+    for i, (t, scrubbed_want) in enumerate(SCRUB_DIALECT_CASES):
+        assert got[i][0] == scrubbed_want, t
+    n = len(SCRUB_DIALECT_CASES)
+    assert got[n] == (None, None) and got[n + 1] == ("", 0)
+    assert sum(got[i][1] for i in range(n + 2, len(texts))) > 0, (
+        "fixture plants PII; zero hits means a dead test"
     )
+
+
+def test_scrub_pii_cases(spark):
+    """Edge pins for the registry scrub UDF: null passthrough, empty
+    string, case-insensitive slur, adjacent rules, count on the ORIGINAL
+    text (an email's digits must not double-count as a phone)."""
+    from language_identification_spark.functions.scrub import scrub_pii
 
     rows = [
         ("mail a.b+c@ex-1.org or GROBNAK!",),
@@ -491,13 +522,11 @@ def test_scrub_native_cases(spark):
     ]
     got = (
         spark.createDataFrame(rows, "t string")
-        .select(
-            scrub_native(F.col("t")).alias("s"),
-            pii_hits_native(F.col("t")).alias("n"),
-        )
+        .select(scrub_pii(F.col("t")).alias("r"))
+        .select("r.scrubbed", "r.n_pii")
         .collect()
     )
-    assert [(r["s"], r["n"]) for r in got] == [
+    assert [(r["scrubbed"], r["n_pii"]) for r in got] == [
         ("mail <EMAIL> or <TOX>!", 2),
         ("ip <IP>, phone <PHONE>", 2),
         ("<TOX> <TOX> <TOX>", 3),
@@ -801,35 +830,46 @@ def test_dsir_weights_semantics(spark):
     assert w[3] == 2 * w[0]
 
 
-def test_token_buckets_cross_engine_fold(spark):
-    """The per-token fold Spark computes equals the DuckDB twin
-    (_fold_sql) token by token — the primitive both gate engines build
-    their DSIR buckets from."""
+def _duck_token_buckets(texts, n_buckets):
+    """DuckDB per-text bucket lists: the tokenization of
+    ``dsir_weights_sql`` folded by ``_fold_sql`` — the twin the DSIR gate
+    runs."""
     import duckdb
 
+    from language_identification_spark.operators.selection import _fold_sql
+
+    con = duckdb.connect()
+    sql = f"""
+      SELECT list_transform(
+               CASE WHEN trim(t) = '' THEN []::VARCHAR[]
+                    ELSE string_split_regex(trim(t), '[ \\t\\n]+') END,
+               tok -> ({_fold_sql('tok')} % {n_buckets})::INT)
+      FROM (SELECT ?::VARCHAR AS t)
+    """
+    return [con.sql(sql, params=[t]).fetchone()[0] for t in texts]
+
+
+def test_token_buckets_cross_engine_fold(spark):
+    """The per-token fold the DSIR UDF computes equals the DuckDB twin
+    (_fold_sql) token by token — the primitive both gate engines build
+    their DSIR buckets from."""
     from language_identification_spark.operators.selection import (
-        _fold_sql,
-        token_buckets,
+        token_buckets_udf,
     )
-    from pyspark.sql import functions as F
 
     toks = ["hello", "wörld", "汉字", "x", ""]
     df = spark.createDataFrame([(t,) for t in toks], "t string")
     spark_got = {
         r["t"]: r["b"]
         for r in df.select(
-            "t", F.try_element_at(token_buckets(F.col("t"), 4096), F.lit(1)).alias("b")
+            "t", F.try_element_at(token_buckets_udf(4096)(F.col("t")), F.lit(1)).alias("b")
         ).collect()
     }
-    con = duckdb.connect()
-    for t in toks:
+    for t, duck in zip(toks, _duck_token_buckets(toks, 4096)):
         if t == "":
-            assert spark_got[t] is None  # empty text -> empty array
+            assert spark_got[t] is None and duck == []  # empty text -> empty array
             continue
-        duck = con.sql(
-            f"SELECT ({_fold_sql('?')} % 4096)::INT"
-        , params=[t]).fetchone()[0]
-        assert spark_got[t] == duck, (t, spark_got[t], duck)
+        assert [spark_got[t]] == duck, (t, spark_got[t], duck)
 
 
 def test_extract_links_cases(spark):
@@ -1558,12 +1598,12 @@ def test_wordhash_tokens_match_spark_words(spark):
 
 def test_char_ngram_counts_match_explode_form(spark):
     """r7: the vectorized partial-count pass must produce EXACTLY the
-    rows of explode(char_ngrams) -> groupBy -> count, for every
+    rows of explode(char_ngrams_sql) -> groupBy -> count, for every
     (n, pad, lower, keyed/global) combination the trainers/gates use."""
     from language_identification_spark.functions.ngramcount import (
         char_ngram_counts,
     )
-    from language_identification_spark.functions.text import char_ngrams
+    from language_identification_spark.functions.text import char_ngrams_sql
 
     rows = [
         ("en", "hello world"),
@@ -1581,12 +1621,19 @@ def test_char_ngram_counts_match_explode_form(spark):
         ("hr", "ǅ"),
     ]
     df = spark.createDataFrame(rows * 3, "lang string, text string")
+    # unpadded text shorter than n has no gram (slice must not see a
+    # negative length)
+    short = df.filter("text = 'a'").select(
+        F.expr(char_ngrams_sql("text", 3, reference_pad=False)).alias("g")
+    )
+    assert [r["g"] for r in short.collect()] == [[]] * 3
     for n in (1, 2, 3):
         for pad in (True, False):
             for lower in (True, False):
-                src = F.lower(F.col("text")) if lower else F.col("text")
+                src = "lower(text)" if lower else "text"
+                grams = F.expr(char_ngrams_sql(src, n, reference_pad=pad))
                 old = (
-                    df.select("lang", F.explode(char_ngrams(src, n, reference_pad=pad)).alias("g"))
+                    df.select("lang", F.explode(grams).alias("g"))
                     .groupBy("lang", "g").count()
                 )
                 new = char_ngram_counts(df, n, key_col="lang", lower=lower, pad=pad, gram_col="g")
@@ -1595,7 +1642,7 @@ def test_char_ngram_counts_match_explode_form(spark):
                 assert got == want, (n, pad, lower)
     # global (no key) mode
     old = (
-        df.select(F.explode(char_ngrams(F.lower("text"), 2)).alias("g"))
+        df.select(F.explode(F.expr(char_ngrams_sql("lower(text)", 2))).alias("g"))
         .groupBy("g").count()
     )
     new = char_ngram_counts(df, 2, lower=True, pad=True, gram_col="g")
@@ -1645,11 +1692,10 @@ def test_word_counts_match_python_lower_split(spark, pages_pdf):
 
 
 def test_token_buckets_udf_matches_sql(spark):
-    """r7: the vectorized fold UDF must emit exactly the SQL
-    token_buckets values (same trim/split/fold/mod semantics), including
+    """r7: the vectorized fold UDF must emit exactly the DuckDB twin's
+    token bucket lists (same trim/split/fold/mod semantics), including
     empty-after-trim, leading/trailing ws tokens, and NULL text."""
     from language_identification_spark.operators.selection import (
-        token_buckets,
         token_buckets_udf,
     )
 
@@ -1659,11 +1705,10 @@ def test_token_buckets_udf_matches_sql(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
     for nb in (7, 1024):
-        sql = {r["i"]: r["b"] and list(r["b"]) for r in df.select(
-            "i", token_buckets(F.col("t"), nb).alias("b")).collect()}
         udf = {r["i"]: r["b"] and list(r["b"]) for r in df.select(
             "i", token_buckets_udf(nb)(F.col("t")).alias("b")).collect()}
-        assert sql == udf, (nb, sql, udf)
+        duck = dict(enumerate(_duck_token_buckets(texts, nb)))
+        assert udf == duck, (nb, udf, duck)
 
 
 def test_batch_repetition_matches_per_doc():
@@ -1765,17 +1810,25 @@ def test_quality_score_udf_matches_regex(spark):
 
 
 def test_doc_fingerprint_udf_matches_sql(spark):
-    """r7: the vectorized fingerprint must equal the SQL list-fold form
-    value for value, including empty, NULL, unicode, and long texts."""
-    from language_identification_spark.functions.analysis import (
-        doc_fingerprint,
-        doc_fingerprint_sql,
-    )
+    """r7: the vectorized fingerprint must equal the DuckDB
+    ``fingerprints`` oracle value for value, including empty, unicode,
+    and long texts. NULL text (absent from the gate tables) is pinned
+    apart: the UDF keeps it NULL, the DuckDB list fold gives 0."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from language_identification_spark.functions.analysis import doc_fingerprint
 
     texts = ["", None, "hello", "的一是了我", "x" * 5000, "mixed 的 text", "a"]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
-    got = {r["i"]: r["f"] for r in df.select("i", doc_fingerprint(F.col("t")).alias("f")).collect()}
-    want = {r["i"]: r["f"] for r in df.select("i", doc_fingerprint_sql(F.col("t")).alias("f")).collect()}
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["f"]
+        for r in df.select("doc_id", doc_fingerprint(F.col("text")).alias("f")).collect()
+    }
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    want = dict(con.sql(entrymod.oracle_sql()["fingerprints"]).fetchall())
+    assert got.pop(1) is None and want.pop(1) == 0
     assert got == want, (got, want)
 
 

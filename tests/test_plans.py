@@ -133,6 +133,19 @@ def test_langid_scoring_is_doc_local(spark, sf_dir, pages_df, name):
     assert "Join" not in plan and "Exchange" not in plan, plan
 
 
+@pytest.mark.parametrize("name", ["pii_scrub", "refresh_pipeline"])
+def test_pii_gates_run_the_serving_scrub(spark, sf_dir, name):
+    """The PII gates scrub with the serving kernel: one Arrow UDF in the
+    executed plan and no JVM regexp_replace chain beside it."""
+    import re
+
+    import __spark_entry__ as entrymod
+
+    plan = physical_plan(entrymod.queries()[name](spark, sf_dir))
+    assert len(re.findall(r"ArrowEvalPython", plan)) == 1, plan
+    assert "regexp_replace" not in plan.lower(), plan
+
+
 def test_filter_pushdown_to_scan(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     q = docs.filter(F.col("doc_id") < 100).select("doc_id", "lang")
