@@ -822,8 +822,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # script_mixing) — mixed-script spam signal. Mixing is PLANTED
         # natively: every 4th doc gains a Cyrillic tail, every 9th a
         # Greek tail (both when doc_id%36==0). The oracle recomputes all
-        # counts from the shared *_DUCK class constants and the same
-        # fixed-order argmax CASE.
+        # counts from its own RE2 spellings of the script classes and the
+        # same fixed-order argmax CASE.
         from language_identification_spark.functions.analysis import (
             script_mixing,
         )
@@ -2228,20 +2228,10 @@ def oracle_sql() -> dict[str, str]:
 
         return MOJIBAKE_CLASS
 
-    def _cjk_duck():
-        from language_identification_spark.functions.analysis import CJK_DUCK
-
-        return CJK_DUCK
-
-    def _cyr_duck():
-        from language_identification_spark.functions.analysis import CYR_DUCK
-
-        return CYR_DUCK
-
-    def _greek_duck():
-        from language_identification_spark.functions.analysis import GREEK_DUCK
-
-        return GREEK_DUCK
+    # the twin spells its own script classes (RE2 escapes)
+    _cjk_duck = "[\\x{4e00}-\\x{9fff}]"
+    _cyr_duck = "[\\x{0400}-\\x{04ff}]"
+    _greek_duck = "[\\x{0370}-\\x{03ff}]"
 
     def _sentence_re():
         from language_identification_spark.functions.text import SENTENCE_RE
@@ -2296,11 +2286,11 @@ def oracle_sql() -> dict[str, str]:
           ),
           c AS (
             SELECT doc_id, t,
-              len(regexp_extract_all(t, '{_cjk_duck()}'))::BIGINT AS n_cjk,
+              len(regexp_extract_all(t, '{_cjk_duck}'))::BIGINT AS n_cjk,
               (len(regexp_extract_all(t, '[A-Za-z]'))
-               + len(regexp_extract_all(t, '{_cjk_duck()}'))
-               + len(regexp_extract_all(t, '{_cyr_duck()}'))
-               + len(regexp_extract_all(t, '{_greek_duck()}')))::BIGINT
+               + len(regexp_extract_all(t, '{_cjk_duck}'))
+               + len(regexp_extract_all(t, '{_cyr_duck}'))
+               + len(regexp_extract_all(t, '{_greek_duck}')))::BIGINT
                 AS n_script_letters
             FROM v
           ),
@@ -2576,13 +2566,15 @@ def oracle_sql() -> dict[str, str]:
                  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n]')) AS n_bpe_tokens
           FROM documents
         """,
+        # NULL text stays NULL, as in doc_fingerprint: list_prepend(0,
+        # NULL) alone folds to 0.
         "fingerprints": """
           SELECT doc_id,
-                 list_reduce(
+                 CASE WHEN text IS NOT NULL THEN list_reduce(
                    list_prepend(0::BIGINT,
                      list_transform(string_split(text, ''), c -> ascii(c)::BIGINT)),
                    (acc, x) -> (acc * 31 + x) % 1000000007
-                 ) AS fingerprint
+                 ) END AS fingerprint
           FROM documents
         """,
         "quality_scores": "SELECT doc_id, "
@@ -2928,7 +2920,10 @@ def oracle_sql() -> dict[str, str]:
           ),
           feat AS (
             SELECT doc_id,
-              regexp_split_to_array(t, '[ \\t\\n\\x0B\\f\\r]+') AS w,
+              -- drop the empty token a leading or trailing ws run (or
+              -- '') yields: the kernel's tokens are the non-empty runs
+              list_filter(regexp_split_to_array(t, '[ \\t\\n\\x0B\\f\\r]+'),
+                          x -> x <> '') AS w,
               string_split(t, chr(10)) AS ls
             FROM base
           )
@@ -3209,8 +3204,8 @@ def oracle_sql() -> dict[str, str]:
               AS was_fixed
           FROM documents
         """,
-        # Interpolates the shared *_DUCK script classes (functions/
-        # analysis) so the two engines count identical char ranges.
+        # Spells the script classes of functions/codepoints.SCRIPT_UNIONS
+        # in RE2 escapes.
         "script_mixing_profile": f"""
           WITH p AS (
             SELECT doc_id, text
@@ -3222,10 +3217,10 @@ def oracle_sql() -> dict[str, str]:
           c AS (
             SELECT doc_id,
               len(regexp_extract_all(t, '[A-Za-z]'))::BIGINT AS n_latin,
-              len(regexp_extract_all(t, '{_cjk_duck()}'))::BIGINT AS n_cjk,
-              len(regexp_extract_all(t, '{_cyr_duck()}'))::BIGINT
+              len(regexp_extract_all(t, '{_cjk_duck}'))::BIGINT AS n_cjk,
+              len(regexp_extract_all(t, '{_cyr_duck}'))::BIGINT
                 AS n_cyrillic,
-              len(regexp_extract_all(t, '{_greek_duck()}'))::BIGINT
+              len(regexp_extract_all(t, '{_greek_duck}'))::BIGINT
                 AS n_greek
             FROM p
           ),

@@ -1,9 +1,9 @@
 """Text-analysis columns for training-data pipelines (net-new, task brief):
 language-ID heuristic, quality scoring, token counting, fingerprinting.
 
-All native Spark SQL (whole-stage codegen; zero Python). Each has an exact
-DuckDB twin in ``__spark_entry__.oracle_sql`` — the cross-engine semantics
-below were probed empirically:
+Mostly native Spark SQL (whole-stage codegen), each with an exact DuckDB
+twin in ``__spark_entry__.oracle_sql``; the cross-engine semantics below
+were probed empirically:
 - ``split(text,'')``  == DuckDB ``string_split(text,'')`` (per-char, no
   trailing empty)
 - ``ascii(c)``        == codepoint in both engines
@@ -11,9 +11,10 @@ below were probed empirically:
 - integer arithmetic identical ⇒ the rolling-hash fingerprint matches
   bit-for-bit.
 
-The Arrow-batch serving forms (``doc_fingerprint``, the quality-score
-counts, ``winnow_fingerprints``) read their codepoints through
-``codepoints`` and fold with its ``mod_step``.
+Three are Arrow UDFs (``doc_fingerprint``, the quality-score counts,
+``winnow_fingerprints``) that read their codepoints through ``codepoints``,
+fold with its ``mod_step`` and count with its ``class_counts``; the
+script regex classes are rendered from its class table.
 """
 
 from __future__ import annotations
@@ -24,26 +25,19 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .codepoints import FOLD_MOD as FINGERPRINT_MOD
-from .codepoints import encode, fold, mod_step, tile
-from .text import SYMBOL_TABLE
+from .codepoints import (
+    CJK, CYR_CORE, GREEK_CORE, LATIN, LATIN1, SCRIPT_UNIONS, SPACE, SYMBOL,
+    char_class, class_counts, class_unions, encode, fold, mod_step, tile,
+)
 
 # BPE-ish tokenizer: letter runs | digit runs | single non-alnum non-space.
 BPE_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n]"
-
-# Unicode script ranges, written as literal char ranges so the same class
-# string works in both Java regex (Spark) and RE2 (DuckDB, via \x{...}).
-CJK_SPARK, CJK_DUCK = "[一-鿿]", "[\\x{4e00}-\\x{9fff}]"
-CYR_SPARK, CYR_DUCK = "[Ѐ-ӿ]", "[\\x{0400}-\\x{04ff}]"
-GREEK_SPARK, GREEK_DUCK = "[Ͱ-Ͽ]", "[\\x{0370}-\\x{03ff}]"
-
-# Python twins of the same ranges (shared by the oracle and the fused UDF
-# so counts are identical by construction).
-import re as _re
-
-CJK_PY = _re.compile("[一-鿿]")
-CYR_PY = _re.compile("[Ѐ-ӿ]")
-GREEK_PY = _re.compile("[Ͱ-Ͽ]")
-LATIN_PY = _re.compile("[A-Za-z]")
+# quality_score's counts ("alpha" = A-Za-z, Latin-1 and the script cores)
+_QUALITY_UNIONS = {
+    "n_alpha": (LATIN, LATIN1, CYR_CORE, GREEK_CORE, CJK),
+    "n_space": (SPACE,),
+    "n_symbol": (SYMBOL,),
+}
 
 
 def token_count_ws(col: Column) -> Column:
@@ -64,9 +58,8 @@ def doc_fingerprint(col: Column) -> Column:
 
     r7: one ``codepoints.fold`` per Arrow batch — the SQL ``aggregate``
     HOF evaluated an interpreted lambda per character. NULL text stays
-    NULL (the DuckDB twin's list fold gives 0; the gate tables hold no
-    NULL text). Non-deterministic mark per guide §4.4 (pure function;
-    prevents filter-pushdown double evaluation)."""
+    NULL, in the DuckDB twin too. Non-deterministic mark per guide §4.4
+    (pure function; prevents filter-pushdown double evaluation)."""
     @F.pandas_udf("long")
     def fp(texts: pd.Series) -> pd.Series:
         cp, starts, lens = tile(texts)
@@ -78,11 +71,10 @@ def doc_fingerprint(col: Column) -> Column:
 
 
 def script_counts(col: Column) -> dict[str, Column]:
+    """The four script letter counts, one JVM ``regexp_count`` per
+    ``codepoints.SCRIPT_UNIONS`` class string."""
     return {
-        "n_cjk": F.regexp_count(col, F.lit(CJK_SPARK)),
-        "n_cyrillic": F.regexp_count(col, F.lit(CYR_SPARK)),
-        "n_greek": F.regexp_count(col, F.lit(GREEK_SPARK)),
-        "n_latin": F.regexp_count(col, F.lit("[A-Za-z]")),
+        k: F.regexp_count(col, F.lit(char_class(v))) for k, v in SCRIPT_UNIONS.items()
     }
 
 
@@ -102,41 +94,21 @@ def lang_guess_script(col: Column) -> Column:
 
 
 def _quality_counts_udf():
-    """(n_alpha, n_space, n_symbol) counts per doc — codepoint-range
-    compares over one ``codepoints.tile`` buffer per Arrow batch (r7): the
+    """(n_alpha, n_space, n_symbol) counts per doc — the ``_QUALITY_UNIONS``
+    of one ``codepoints.class_counts`` per Arrow batch (r7): the
     regexp_count form paid three Java-regex sweeps per evaluation, and
     the percentile gates evaluate the score twice (threshold agg + the
-    broadcast-join CASE). Ranges are EXACTLY the regex classes'
-    (A-Za-z, U+00C0-00FF, U+0410-044F, U+0391-03C9, U+4E00-9FFF;
-    ``text.SYMBOL_TABLE``; the single space) — pinned equal by
+    broadcast-join CASE). Pinned against literal regex classes by
     tests/test_misc_ops.py::test_quality_score_udf_matches_regex.
     Non-deterministic mark: pushed-down filters must not duplicate the
     evaluation (guide §4.4); the function is pure."""
 
     @F.pandas_udf("n_alpha int, n_space int, n_symbol int")
     def counts(texts: pd.Series) -> pd.DataFrame:
-        n = len(texts)
         cp, _, lens = tile(texts)
-        doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-        alpha = (
-            ((cp >= 0x41) & (cp <= 0x5A))
-            | ((cp >= 0x61) & (cp <= 0x7A))
-            | ((cp >= 0xC0) & (cp <= 0xFF))
-            | ((cp >= 0x410) & (cp <= 0x44F))
-            | ((cp >= 0x391) & (cp <= 0x3C9))
-            | ((cp >= 0x4E00) & (cp <= 0x9FFF))
-        )
-
-        def seg(mask):
-            return np.bincount(doc_idx[mask], minlength=n).astype(np.int32)
-
         return pd.DataFrame(
-            {
-                "n_alpha": seg(alpha),
-                "n_space": seg(cp == 0x20),
-                "n_symbol": seg(SYMBOL_TABLE[np.minimum(cp, 128)]),
-            }
-        )
+            class_unions(class_counts(cp, lens), _QUALITY_UNIONS)
+        ).astype(np.int32)
 
     return counts.asNondeterministic()
 

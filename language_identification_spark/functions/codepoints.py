@@ -7,6 +7,8 @@ hashes with the primitives below. Texts are laid out back to back, each
 as ``head + text + tail``, with no separator between them: no window and
 no fold crosses a segment, so a separator would carry no meaning.
 
+It also holds the one codepoint-class table, read through ``class_counts``.
+
 Encoding is utf-32-le with ``surrogatepass``: a lone surrogate is one
 codepoint, as it is to the ``str`` oracles. Arrow strings are UTF-8, so
 Spark never sends one; the per-doc oracles and the Hypothesis tests do.
@@ -102,3 +104,52 @@ def fmix64(h: np.ndarray) -> np.ndarray:
     h *= _FMIX2
     h ^= h >> _S33
     return h
+
+
+# ------------------------------------------------------ codepoint classes
+# One partition of the codepoints (inclusive bounds); everything unlisted,
+# astral codepoints and lone surrogates included, is OTHER. Counters read
+# different ranges on purpose — Cyrillic is U+0400-04FF as a script but
+# U+0410-044F inside quality_score's "alpha" — so each core is kept apart
+# from the rest of its block and each counter names its union of classes.
+N_CLASSES = 10
+(OTHER, LATIN, LATIN1, CYR_CORE, CYR_REST, GREEK_CORE, GREEK_REST, CJK, SPACE,
+ SYMBOL) = range(N_CLASSES)
+CLASS_RANGES = (
+    (SPACE, 0x20, 0x20), (LATIN, 0x41, 0x5A), (LATIN, 0x61, 0x7A), (LATIN1, 0xC0, 0xFF),
+    (GREEK_REST, 0x370, 0x390), (GREEK_CORE, 0x391, 0x3C9), (GREEK_REST, 0x3CA, 0x3FF),
+    (CYR_REST, 0x400, 0x40F), (CYR_CORE, 0x410, 0x44F), (CYR_REST, 0x450, 0x4FF),
+    (CJK, 0x4E00, 0x9FFF),
+) + tuple((SYMBOL, ord(c), ord(c)) for c in "!#$%&*+<=>@^|~")
+# the script letter counts (lang_guess_script, script_mixing, is_cjk)
+SCRIPT_UNIONS = {"n_latin": (LATIN,), "n_cjk": (CJK,),
+                 "n_cyrillic": (CYR_CORE, CYR_REST), "n_greek": (GREEK_CORE, GREEK_REST)}
+# dense BMP lookup; the last slot stands for every astral codepoint
+CLASS_TABLE = np.zeros(0x10001, dtype=np.uint8)
+for _cls, _lo, _hi in CLASS_RANGES:
+    CLASS_TABLE[_lo : _hi + 1] = _cls
+
+
+def class_counts(cp, lens) -> np.ndarray:
+    """(segments × N_CLASSES) int64 count of each class in each segment of
+    a ``tile`` buffer: one table lookup and one ``bincount``."""
+    key = np.repeat(np.arange(len(lens), dtype=np.int64) * N_CLASSES, lens)
+    key += CLASS_TABLE[np.minimum(cp, 0x10000)]
+    return np.bincount(key, minlength=len(lens) * N_CLASSES).reshape(-1, N_CLASSES)
+
+
+def class_unions(counts, unions: dict) -> dict[str, np.ndarray]:
+    """Per-segment count of each named union of classes."""
+    return {k: counts[:, list(v)].sum(axis=1) for k, v in unions.items()}
+
+
+def char_class(classes) -> str:
+    """The regex character class of a union in literal characters (e.g.
+    ``[Ѐ-ӿ]``), which Java regex, RE2 and Python ``re`` read alike."""
+    spans: list[list[int]] = []
+    for lo, hi in sorted((lo, hi) for c, lo, hi in CLASS_RANGES if c in classes):
+        if spans and lo == spans[-1][1] + 1:
+            spans[-1][1] = hi
+        else:
+            spans.append([lo, hi])
+    return "[" + "".join(f"{chr(lo)}-{chr(hi)}" for lo, hi in spans) + "]"

@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pipeline.rules import default_stopwords
-from .codepoints import POLY, tile, windows
+from .codepoints import (
+    POLY, SCRIPT_UNIONS, SYMBOL, class_counts, class_unions, tile, windows,
+)
 
 JAVA_WS = "[ \\t\\n\\x0B\\f\\r]"
 PY_WS_CLASS = "[ \t\n\x0b\f\r]"
@@ -41,11 +43,7 @@ _PY_WS_RE = re.compile(PY_WS_CLASS + "+")
 # every ws-class char → ' ': translate + split(' ') + drop-empties is
 # token-identical to re.split(ws+) and ~3× faster (all C string ops)
 _WS_TO_SPACE = str.maketrans({c: " " for c in " \t\n\x0b\f\r"})
-SYMBOL_CLASS = "[#!$%&*+=@^~|<>]"
-_PY_SYMBOL_RE = re.compile(SYMBOL_CLASS)
-# SYMBOL_CLASS as a codepoint lookup: index min(cp, 128), the last slot
-# standing for every non-ASCII codepoint (none is in the class)
-SYMBOL_TABLE = np.array([bool(_PY_SYMBOL_RE.match(chr(c))) for c in range(129)])
+_SCRIPT_SYMBOL_UNIONS = {**SCRIPT_UNIONS, "n_symbol": (SYMBOL,)}
 
 
 # ---------------------------------------------------------------------------
@@ -186,11 +184,12 @@ def py_quality_features_batch(norm_series, stopwords: tuple[str, ...] | None = N
     features: the fused serving UDF and :func:`with_quality_features`
     both call it.
 
-    Batch form, measured against alternatives at web-doc lengths: char and
-    symbol counts are vectorized pandas str ops; tokenization keeps a
-    per-row loop — word identity (the ``set()``) is irreducibly per-doc —
-    but via ``str.translate`` + ``str.split(' ')`` (all C calls; maximal
-    non-ws runs are identical to the ``\\s+`` regex split after mapping
+    Batch form, measured against alternatives at web-doc lengths: char
+    counts are a vectorized pandas str op, script and symbol counts one
+    ``codepoints.class_counts``; tokenization keeps a per-row loop — word
+    identity (the ``set()``) is irreducibly per-doc — but via
+    ``str.translate`` + ``str.split(' ')`` (all C calls; maximal non-ws
+    runs are identical to the ``\\s+`` regex split after mapping
     every ws-class char to ``' '`` and dropping empties), which measured
     ~1.7× faster than both the triple-regex per-doc form it replaces AND a
     fully-pandas ``str.split(regex)`` + explode + groupby-nunique form.
@@ -205,7 +204,7 @@ def py_quality_features_batch(norm_series, stopwords: tuple[str, ...] | None = N
     sc = batch_script_symbol_counts(s.tolist())
     sym_cnt = sc["n_symbol"]
     n_cjk = sc["n_cjk"]
-    n_scripts = n_cjk + sc["n_latin"] + sc["n_cyr"] + sc["n_greek"]
+    n_scripts = sum(sc[k] for k in SCRIPT_UNIONS)
     char_div = np.empty(n, dtype=np.float64)
     n_words = np.empty(n, dtype=np.int64)
     distinct = np.empty(n, dtype=np.int64)
@@ -278,21 +277,15 @@ def py_distinct_char_ngram_ratio(s: str, n: int = CHAR_DIVERSITY_N) -> float:
 
 
 def py_script_features(norm: str) -> dict:
-    """Per-doc oracle of the kernel's script-routing fields
-    (:func:`batch_script_symbol_counts`)."""
-    from .analysis import CJK_PY, CYR_PY, GREEK_PY, LATIN_PY
-
-    n_cjk = len(CJK_PY.findall(norm))
-    total = (
-        n_cjk
-        + len(LATIN_PY.findall(norm))
-        + len(CYR_PY.findall(norm))
-        + len(GREEK_PY.findall(norm))
-    )
+    """Per-doc form of the kernel's script-routing fields, plus its symbol
+    count: the unions of one ``class_counts`` row."""
+    sc = {k: int(v[0]) for k, v in batch_script_symbol_counts([norm]).items()}
+    total = sum(sc[k] for k in SCRIPT_UNIONS)
     return {
-        "n_cjk": n_cjk,
+        "n_cjk": sc["n_cjk"],
         "n_script_letters": total,
-        "is_cjk": n_cjk * 2 > total,
+        "is_cjk": sc["n_cjk"] * 2 > total,
+        "n_symbol": sc["n_symbol"],
     }
 
 
@@ -302,10 +295,10 @@ def py_quality_features(norm: str, stopwords: tuple[str, ...] | None = None) -> 
     n_words = len(ws)
     n_chars = len(norm)
     mean_wl = (sum(len(t) for t in ws) / n_words) if n_words else 0.0
-    sym = len(_PY_SYMBOL_RE.findall(norm))
     n_stop = sum(1 for t in ws if t in stopset)
     n_lines, n_bullet, n_ellipsis, n_dup = _py_line_feats(norm)
     sf = py_script_features(norm)
+    sym = sf.pop("n_symbol")
     return {
         "n_chars": n_chars,
         "n_words": n_words,
@@ -381,31 +374,12 @@ def py_repetition_features(toks: list[str], n_chars: int) -> dict[str, float]:
 
 
 def batch_script_symbol_counts(texts) -> dict[str, np.ndarray]:
-    """Per-doc counts of the four script classes + the symbol class —
-    codepoint-range compares over one ``codepoints.tile`` buffer (r7),
-    replacing five regex ``str.count`` sweeps. Ranges are EXACTLY the
-    regex classes' (CJK U+4E00-9FFF, Latin A-Za-z, Cyrillic U+0400-04FF,
-    Greek U+0370-03FF, ``SYMBOL_TABLE``); pinned equal to the regex form
-    by tests/test_misc_ops.py::test_batch_script_counts_match_regex."""
-    n = len(texts)
+    """Per-doc counts of the four script unions (``codepoints.SCRIPT_UNIONS``)
+    and the symbol class, from one ``codepoints.class_counts`` over one
+    ``tile`` buffer. Pinned against literal regex classes by
+    tests/test_misc_ops.py::test_batch_script_counts_match_regex."""
     cp, _, lens = tile(texts)
-    # bincount of matching chars' doc index: O(matches) per class after
-    # one O(chars) doc-index expansion (a full-buffer cumsum per class
-    # measured 5× slower)
-    doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-
-    def seg_counts(mask):
-        return np.bincount(doc_idx[mask], minlength=n).astype(np.int64)
-
-    return {
-        "n_cjk": seg_counts((cp >= 0x4E00) & (cp <= 0x9FFF)),
-        "n_latin": seg_counts(
-            ((cp >= 0x41) & (cp <= 0x5A)) | ((cp >= 0x61) & (cp <= 0x7A))
-        ),
-        "n_cyr": seg_counts((cp >= 0x0400) & (cp <= 0x04FF)),
-        "n_greek": seg_counts((cp >= 0x0370) & (cp <= 0x03FF)),
-        "n_symbol": seg_counts(SYMBOL_TABLE[np.minimum(cp, 128)]),
-    }
+    return class_unions(class_counts(cp, lens), _SCRIPT_SYMBOL_UNIONS)
 
 
 def batch_repetition_features(

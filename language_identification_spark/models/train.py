@@ -139,7 +139,8 @@ def train_cavnar_trenkle(
         import pandas as pd
 
         pdf = pdf.sort_values(order_col)
-        combined = " ".join(pdf[text_col].tolist())
+        # NULL texts join as nothing, as string_agg skips them
+        combined = " ".join(pdf[text_col].dropna().tolist())
         prof = rank_profile(combined, max_profile_size)
         return pd.DataFrame(
             {

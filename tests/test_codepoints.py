@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import ast
 import hashlib
+import re
 from pathlib import Path
 
 import numpy as np
@@ -196,6 +197,75 @@ def test_one_codepoint_module():
         ):
             hits.append(f"{where} hash constant {node.value:#x}")
     assert hits == []
+
+
+def _spans(classes):
+    """The contiguous codepoint spans of a union of classes."""
+    out: list[tuple[int, int]] = []
+    for lo, hi in sorted((lo, hi) for c, lo, hi in cps.CLASS_RANGES if c in classes):
+        if out and lo == out[-1][1] + 1:
+            out[-1] = (out[-1][0], hi)
+        else:
+            out.append((lo, hi))
+    return out
+
+
+# Range tests (both bounds of a class or script span in one expression)
+# and the classed non-ASCII scripts a regex range may not overlap. ASCII
+# and Latin-1 regex ranges are left out: the tokenizer, URL and mojibake
+# grammars spell their own.
+_CLASS_BOUNDS = {
+    (lo, hi)
+    for union in [*((c,) for c in range(cps.N_CLASSES)), *cps.SCRIPT_UNIONS.values()]
+    for lo, hi in _spans(union)
+    if lo < hi
+}
+_SCRIPT_SPANS = [
+    (lo, hi) for c, lo, hi in cps.CLASS_RANGES
+    if c in (cps.CYR_CORE, cps.CYR_REST, cps.GREEK_CORE, cps.GREEK_REST, cps.CJK)
+]
+_CP = r"(\\x\{[0-9a-fA-F]+\}|\\u[0-9a-fA-F]{4}|[^\\\[\]])"
+_REGEX_RANGE = re.compile(_CP + "-" + _CP)
+_REGEX_CLASS = re.compile(r"\[([^\]]+)\]")
+
+
+def _cp_of(tok: str) -> int:
+    return int(tok.strip("\\xu{}"), 16) if len(tok) > 1 else ord(tok)
+
+
+def test_one_codepoint_class_table():
+    """No module outside functions/codepoints.py tests a codepoint against
+    both bounds of a class range, or spells a regex range inside the
+    Cyrillic, Greek or CJK classes: every script, alpha, space and symbol
+    counter reads codepoints.CLASS_RANGES."""
+    hits = []
+    for where, node in _package_nodes():
+        if isinstance(node, (ast.BoolOp, ast.BinOp, ast.Compare)):
+            ints = {
+                c.value for c in ast.walk(node)
+                if isinstance(c, ast.Constant) and type(c.value) is int
+            }
+            for lo, hi in _CLASS_BOUNDS:
+                if {lo, hi} <= ints:
+                    hits.append(f"{where} range test {lo:#x}-{hi:#x}")
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            for body in _REGEX_CLASS.findall(node.value):
+                for a, b in _REGEX_RANGE.findall(body):
+                    lo, hi = _cp_of(a), _cp_of(b)
+                    if any(lo <= s_hi and s_lo <= hi for s_lo, s_hi in _SCRIPT_SPANS):
+                        hits.append(f"{where} regex range {node.value!r}")
+    assert hits == []
+
+
+def test_script_classes_render_the_table():
+    """The JVM script classes are the literal ranges the Spark and DuckDB
+    twins spell."""
+    assert {k: cps.char_class(v) for k, v in cps.SCRIPT_UNIONS.items()} == {
+        "n_latin": "[A-Za-z]",
+        "n_cjk": "[\u4e00-\u9fff]",
+        "n_cyrillic": "[\u0400-\u04ff]",
+        "n_greek": "[\u0370-\u03ff]",
+    }
 
 
 # ------------------------------------------------ layout vs plain loops

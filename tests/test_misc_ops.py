@@ -1744,37 +1744,49 @@ def test_batch_repetition_matches_per_doc():
             assert got[k][i] == v, (k, i, t[:40], got[k][i], v)
 
 
-def test_batch_script_counts_match_regex():
-    """r7: codepoint-range script/symbol counts must equal the regex
-    class counts character for character."""
-    import pandas as pd
+# Every class bound on both sides, plus U+FFFF, an astral emoji, NUL and
+# a lone surrogate (a Python list can carry one; Arrow strings cannot).
+RANGE_EDGES = [
+    "\u036f\u0370", "\u0390\u0391", "\u03c9\u03ca", "\u03ff\u0400",
+    "\u040f\u0410", "\u044f\u0450", "\u04ff\u0500", "\u00bf\u00c0",
+    "\u00ff\u0100", "\u4dff\u4e00", "\u9fff\ua000", "@AZ[`az{",
+    "\uffff", "\U0001f600", "\x00",
+]
 
-    from language_identification_spark.functions.analysis import (
-        CJK_PY, CYR_PY, GREEK_PY, LATIN_PY,
-    )
+
+def test_batch_script_counts_match_regex():
+    """r7: the script/symbol counts equal literal regex classes character
+    for character, spelled here and not taken from the package."""
+    import re
+
     from language_identification_spark.functions.text import (
-        SYMBOL_CLASS,
         batch_script_symbol_counts,
     )
 
+    classes = {
+        "n_cjk": "[\u4e00-\u9fff]",
+        "n_latin": "[A-Za-z]",
+        "n_cyrillic": "[\u0400-\u04ff]",
+        "n_greek": "[\u0370-\u03ff]",
+        "n_symbol": "[#!$%&*+=@^~|<>]",
+    }
     texts = [
         "", "plain ascii text!", "的一是了我 ascii 混合", "Ѐѡӿ cyr", "Ͱπῶ greek",
         "symbols #!$%&*+=@^~|<> here", "edge ䷿一鿿ꀀ",
         "ϿЀӿԀ", "ͯͰ", "@@@", "ÀÖøÿ latin-1 letters",
+        *RANGE_EDGES, "\ud800", "a\udfffЀ", "".join(RANGE_EDGES),
     ]
-    s = pd.Series(texts)
     got = batch_script_symbol_counts(texts)
-    assert list(got["n_cjk"]) == list(s.str.count(CJK_PY))
-    assert list(got["n_latin"]) == list(s.str.count(LATIN_PY))
-    assert list(got["n_cyr"]) == list(s.str.count(CYR_PY))
-    assert list(got["n_greek"]) == list(s.str.count(GREEK_PY))
-    assert list(got["n_symbol"]) == list(s.str.count(SYMBOL_CLASS))
+    assert set(got) == set(classes)
+    for k, cls in classes.items():
+        assert got[k].tolist() == [len(re.findall(cls, t)) for t in texts], k
 
 
 def test_quality_score_udf_matches_regex(spark):
     """r7: the vectorized quality_score must equal the all-regexp form
     value for value, including range edges (x/÷ inside À-ÿ, U+03A2
-    inside Α-ω, CJK bounds), NULL text, and empty text."""
+    inside Α-ω, every class bound on both sides), NULL text, and empty
+    text."""
     from pyspark.sql import Column
 
     from language_identification_spark.functions.analysis import quality_score
@@ -1795,6 +1807,7 @@ def test_quality_score_udf_matches_regex(spark):
         None, "", "plain text here", "×÷ are in the À-ÿ range", "΢ω greek edge",
         "一鿿ꀀ cjk bounds", "#!$%&*+=@^~|<> symbols", "   spaces   ",
         "Ѐяѐ cyr edge", "mixed 的一 Ѐ text ~|", "\t\nweird ws\x0b",
+        *RANGE_EDGES, "".join(RANGE_EDGES),
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
     got = {r["i"]: r["q"] for r in df.select("i", quality_score(F.col("t")).alias("q")).collect()}
@@ -1812,8 +1825,7 @@ def test_quality_score_udf_matches_regex(spark):
 def test_doc_fingerprint_udf_matches_sql(spark):
     """r7: the vectorized fingerprint must equal the DuckDB
     ``fingerprints`` oracle value for value, including empty, unicode,
-    and long texts. NULL text (absent from the gate tables) is pinned
-    apart: the UDF keeps it NULL, the DuckDB list fold gives 0."""
+    long and NULL texts (NULL stays NULL in both)."""
     import duckdb
 
     import __spark_entry__ as entrymod
@@ -1828,8 +1840,35 @@ def test_doc_fingerprint_udf_matches_sql(spark):
     con = duckdb.connect()
     con.register("documents", df.toPandas())
     want = dict(con.sql(entrymod.oracle_sql()["fingerprints"]).fetchall())
-    assert got.pop(1) is None and want.pop(1) == 0
+    assert got[1] is None
     assert got == want, (got, want)
+
+
+def test_gopher_scores_twin_drops_empty_tokens(spark, tmp_path):
+    """The ``gopher_scores`` DuckDB twin tokenizes like the serving kernel
+    on texts with leading or trailing whitespace, ``""`` and whitespace
+    only (its split used to yield an empty token at each edge)."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+    from language_identification_spark.oracle.gate import gate_mismatch
+
+    texts = [" the cat sat", "the cat sat\t", "", " \t ", "\nand the end \n"]
+    # doc_id % 4 == 3 leaves the text unplanted; the others plant lines
+    pdf = pd.DataFrame({"doc_id": range(3, 3 + 4 * len(texts), 4), "text": texts})
+    pdf = pd.concat([pdf, pdf.assign(doc_id=pdf.doc_id + 1)], ignore_index=True)
+    pdf.to_parquet(tmp_path / "documents.parquet")
+    out = entrymod.queries()["gopher_scores"](spark, str(tmp_path))
+    srows = out.collect()
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    rel = con.sql(entrymod.oracle_sql()["gopher_scores"])
+    orows = rel.fetchall()
+    assert {r["doc_id"]: r["n_words"] for r in srows}[3] == 3
+    assert gate_mismatch(
+        out.columns, srows, out.toPandas(), rel.columns, orows, rel.df()
+    ) is None
 
 
 def _dunning_two_pass(df, smoothing):

@@ -111,6 +111,23 @@ def test_cavnar_trenkle_parity(train_df, train_pdf):
     assert d == m.language_profiles
 
 
+def test_cavnar_trenkle_skips_null_text(spark, train_df):
+    """A NULL text adds nothing to its language's profile, as the DuckDB
+    twin's ``string_agg`` skips it; the ' '-join used to raise on it."""
+    nulls = train_df.limit(3).select(
+        F.lit(None).cast("string").alias("text"),
+        "lang",
+        "split",
+        (F.col("doc_idx") + F.lit(0.5)).cast("double").alias("doc_idx"),
+    )
+    with_null = train_df.withColumn("doc_idx", F.col("doc_idx").cast("double"))
+    got = tr.model_table_to_dict(
+        tr.train_cavnar_trenkle(with_null.unionByName(nulls)), "cavnar_trenkle"
+    )
+    want = tr.model_table_to_dict(tr.train_cavnar_trenkle(train_df), "cavnar_trenkle")
+    assert got == want
+
+
 def test_dunning_parity(train_df, train_pdf):
     m = ref.Dunning()
     m.train(train_pdf["text"].tolist(), train_pdf["lang"].tolist())
