@@ -2200,6 +2200,28 @@ def _duck_ngrams(inner: str, text_expr: str, n: int) -> str:
     """
 
 
+# Cavnar–Trenkle 1..5-grams, ``(key, ngram)``: the reference pads each
+# string with n-1 '_' per side. Each string is padded once with four, split
+# into characters once, and the n-gram starting at character ``pos`` joins
+# ``pos`` and its n-1 window leads: linear in the string, where a ``substr``
+# at every position of a language's whole corpus string is quadratic.
+def _duck_ct_grams(src: str, key: str, text: str) -> str:
+    grams = [" || ".join(["ch"] + [f"lead(ch, {k}) OVER w" for k in range(1, n)])
+             for n in range(1, 6)]
+    return f"""
+      SELECT {key}, ngram FROM (
+        SELECT {key}, pos, last, {", ".join(f"{g} AS g{n}" for n, g in enumerate(grams, 1))}
+        FROM (
+          SELECT {key}, unnest(range(1, len(p) + 1)) AS pos,
+                 unnest(string_split(p, '')) AS ch, len(p) - 4 AS last
+          FROM (SELECT {key}, '____' || {text} || '____' AS p FROM {src})
+        )
+        WINDOW w AS (PARTITION BY {key} ORDER BY pos)
+      ), LATERAL (VALUES {", ".join(f"({n}, g{n})" for n in range(1, 6))}) AS g(n, ngram)
+      WHERE pos BETWEEN 6 - n AND last
+    """
+
+
 def oracle_sql() -> dict[str, str]:
     def _packing_mod():
         from language_identification_spark.operators import packing
@@ -2594,19 +2616,9 @@ def oracle_sql() -> dict[str, str]:
             SELECT lang, lower(string_agg(text, ' ' ORDER BY doc_id)) AS t
             FROM documents GROUP BY lang
           ),
-          grams AS (
-            """
-        + "\nUNION ALL\n".join(
-            f"""
-            SELECT c.lang, substr(p.p, i.i::INT, {n}) AS ngram
-            FROM combined c,
-                 LATERAL (SELECT '{'_' * (n - 1)}' || c.t || '{'_' * (n - 1)}' AS p) p,
-                 LATERAL unnest(range(1, len(p.p) - {n - 1} + 1)) AS i(i)
-            """
-            for n in range(1, 6)
-        )
-        + """
-          ),
+          grams AS ("""
+        + _duck_ct_grams("combined", "lang", "t")
+        + """),
           counts AS (SELECT lang, ngram, count(*) AS cnt FROM grams GROUP BY 1, 2)
           SELECT lang, ngram, cnt, rank FROM (
             SELECT lang, ngram, cnt,
@@ -2619,19 +2631,9 @@ def oracle_sql() -> dict[str, str]:
             SELECT lang, lower(string_agg(text, ' ' ORDER BY doc_id)) AS t
             FROM documents GROUP BY lang
           ),
-          lgrams AS (
-            """
-        + "\nUNION ALL\n".join(
-            f"""
-            SELECT c.lang, substr(p.p, i.i::INT, {n}) AS ngram
-            FROM combined c,
-                 LATERAL (SELECT '{'_' * (n - 1)}' || c.t || '{'_' * (n - 1)}' AS p) p,
-                 LATERAL unnest(range(1, len(p.p) - {n - 1} + 1)) AS i(i)
-            """
-            for n in range(1, 6)
-        )
-        + """
-          ),
+          lgrams AS ("""
+        + _duck_ct_grams("combined", "lang", "t")
+        + """),
           lcounts AS (SELECT lang, ngram, count(*) AS cnt FROM lgrams GROUP BY 1, 2),
           lang_prof AS (
             SELECT lang, ngram, rank AS j FROM (
@@ -2641,19 +2643,9 @@ def oracle_sql() -> dict[str, str]:
             ) WHERE rank < 400
           ),
           sub AS (SELECT doc_id, lower(text) AS t FROM documents WHERE doc_id < 300),
-          dgrams AS (
-            """
-        + "\nUNION ALL\n".join(
-            f"""
-            SELECT s.doc_id, substr(p.p, i.i::INT, {n}) AS ngram
-            FROM sub s,
-                 LATERAL (SELECT '{'_' * (n - 1)}' || s.t || '{'_' * (n - 1)}' AS p) p,
-                 LATERAL unnest(range(1, len(p.p) - {n - 1} + 1)) AS i(i)
-            """
-            for n in range(1, 6)
-        )
-        + """
-          ),
+          dgrams AS ("""
+        + _duck_ct_grams("sub", "doc_id", "t")
+        + """),
           dcounts AS (SELECT doc_id, ngram, count(*) AS cnt FROM dgrams GROUP BY 1, 2),
           doc_prof AS (
             SELECT doc_id, ngram, rk AS i FROM (

@@ -11,7 +11,7 @@ were probed empirically:
 - integer arithmetic identical ⇒ the rolling-hash fingerprint matches
   bit-for-bit.
 
-Three are Arrow UDFs (``doc_fingerprint``, the quality-score counts,
+Three are Arrow UDFs (``doc_fingerprint``, the quality score,
 ``winnow_fingerprints``) that read their codepoints through ``codepoints``,
 fold with its ``mod_step`` and count with its ``class_counts``; the
 script regex classes are rendered from its class table.
@@ -93,38 +93,43 @@ def lang_guess_script(col: Column) -> Column:
     )
 
 
-def _quality_counts_udf():
-    """(n_alpha, n_space, n_symbol) counts per doc — the ``_QUALITY_UNIONS``
+def _quality_score_udf():
+    """The unclamped [0,1] quality score per doc from the ``_QUALITY_UNIONS``
     of one ``codepoints.class_counts`` per Arrow batch (r7): the
     regexp_count form paid three Java-regex sweeps per evaluation, and
     the percentile gates evaluate the score twice (threshold agg + the
-    broadcast-join CASE). Pinned against literal regex classes by
+    broadcast-join CASE). The ratios are the float64 operations of the
+    JVM form in its order, so the score is the same double. The result is
+    a scalar because Spark evaluates a struct-returning UDF once per field
+    read. Pinned against literal regex classes by
     tests/test_misc_ops.py::test_quality_score_udf_matches_regex.
     Non-deterministic mark: pushed-down filters must not duplicate the
     evaluation (guide §4.4); the function is pure."""
 
-    @F.pandas_udf("n_alpha int, n_space int, n_symbol int")
-    def counts(texts: pd.Series) -> pd.DataFrame:
+    @F.pandas_udf("double")
+    def raw_score(texts: pd.Series) -> pd.Series:
         cp, _, lens = tile(texts)
-        return pd.DataFrame(
-            class_unions(class_counts(cp, lens), _QUALITY_UNIONS)
-        ).astype(np.int32)
+        c = class_unions(class_counts(cp, lens), _QUALITY_UNIONS)
+        n = np.maximum(lens, 1).astype(np.float64)
+        alpha_ratio = c["n_alpha"] / n
+        space_ratio = c["n_space"] / n
+        symbol_ratio = c["n_symbol"] / n
+        return pd.Series(
+            alpha_ratio * 0.6
+            + np.minimum(space_ratio * 4, 1.0) * 0.3
+            + (1 - np.minimum(symbol_ratio * 10, 1.0)) * 0.1
+        )
 
-    return counts.asNondeterministic()
+    return raw_score.asNondeterministic()
 
 
 def quality_score(col: Column) -> Column:
     """[0,1] heuristic quality score: alpha-char ratio, word-shape, and
-    punctuation balance. Counts come from one vectorized Arrow pass
-    (r7 — see :func:`_quality_counts_udf`); the ratio arithmetic and the
-    HALF_UP round stay JVM expressions, so every emitted double equals
-    the previous all-regexp form's."""
-    c = _quality_counts_udf()(col)
-    n = F.greatest(F.length(col), F.lit(1)).cast("double")
-    alpha_ratio = c["n_alpha"] / n
-    space_ratio = c["n_space"] / n
-    symbol_ratio = c["n_symbol"] / n
-    score = alpha_ratio * 0.6 + F.least(space_ratio * 4, F.lit(1.0)) * 0.3 + (1 - F.least(symbol_ratio * 10, F.lit(1.0))) * 0.1
+    punctuation balance, computed in one vectorized Arrow pass (r7 —
+    see :func:`_quality_score_udf`); the clamp and the HALF_UP round stay
+    JVM expressions, so every emitted double equals the previous
+    all-regexp form's."""
+    score = _quality_score_udf()(col)
     out = F.round(F.greatest(F.least(score, F.lit(1.0)), F.lit(0.0)), 6)
     # NULL text: the regexp_count form's null ratios fall through the
     # null-IGNORING least/greatest pair to exactly 1.0 — replicated

@@ -48,45 +48,32 @@ def confusion_matrix_long(
     ).agg(F.count("*").alias("n"))
 
 
-def confusion_matrix_pivot(
-    df: DataFrame, label_col: str = "lang", pred_col: str = "lang_pred"
-) -> DataFrame:
-    """Wide 22×22-style matrix (driver/report artifact; small by definition)."""
-    return (
-        df.groupBy(F.col(label_col).alias("label"))
-        .pivot(pred_col)
-        .count()
-        .na.fill(0)
-        .orderBy("label")
-    )
-
-
 def classification_report(
     df: DataFrame, label_col: str = "lang", pred_col: str = "lang_pred"
 ) -> DataFrame:
     """(class, precision, recall, f1, support) per class, sklearn-equivalent
-    with zero_division=0 (utils.py:211). Classes = labels ∪ predictions."""
-    classes = (
-        df.select(F.col(label_col).alias("class"))
-        .union(df.select(F.col(pred_col).alias("class")))
-        .distinct()
+    with zero_division=0 (utils.py:211). Classes = labels ∪ predictions.
+
+    One aggregate, one read of ``df``: every row enters twice, on its
+    label's side (support; tp when label == pred) and on its prediction's
+    side (pred_cnt). A NULL label or prediction makes a NULL class whose
+    counts are all 0, while the row's other side still counts."""
+    label, pred = F.col(label_col), F.col(pred_col)
+    sides = F.inline(
+        F.array(
+            F.struct(
+                label.alias("class"), F.lit(True).alias("is_label"), (label == pred).alias("hit")
+            ),
+            F.struct(
+                pred.alias("class"), F.lit(False).alias("is_label"), F.lit(False).alias("hit")
+            ),
+        )
     )
-    label_cnt = df.groupBy(F.col(label_col).alias("class")).agg(
-        F.count("*").alias("support")
-    )
-    pred_cnt = df.groupBy(F.col(pred_col).alias("class")).agg(
-        F.count("*").alias("pred_cnt")
-    )
-    tp_cnt = (
-        df.filter(F.col(label_col) == F.col(pred_col))
-        .groupBy(F.col(label_col).alias("class"))
-        .agg(F.count("*").alias("tp"))
-    )
-    out = (
-        classes.join(label_cnt, "class", "left")
-        .join(pred_cnt, "class", "left")
-        .join(tp_cnt, "class", "left")
-        .na.fill({"support": 0, "pred_cnt": 0, "tp": 0})
+    known = F.col("class").isNotNull()
+    out = df.select(sides).groupBy("class").agg(
+        F.count_if(known & F.col("is_label")).alias("support"),
+        F.count_if(known & ~F.col("is_label")).alias("pred_cnt"),
+        F.count_if(F.col("hit")).alias("tp"),
     )
     precision = F.when(F.col("pred_cnt") > 0, F.col("tp") / F.col("pred_cnt")).otherwise(0.0)
     recall = F.when(F.col("support") > 0, F.col("tp") / F.col("support")).otherwise(0.0)
@@ -123,15 +110,6 @@ def classification_report_full(
         F.sum("support").alias("support"),
     ).select(F.lit("weighted avg").alias("class"), "precision", "recall", "f1", "support")
     return rep.unionByName(macro).unionByName(weighted)
-
-
-def macro_f1(df: DataFrame, label_col: str = "lang", pred_col: str = "lang_pred") -> DataFrame:
-    rep = classification_report(df, label_col, pred_col)
-    return rep.agg(
-        F.avg("precision").alias("macro_precision"),
-        F.avg("recall").alias("macro_recall"),
-        F.avg("f1").alias("macro_f1"),
-    )
 
 
 def pr_threshold_sweep(

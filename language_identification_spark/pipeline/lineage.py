@@ -14,10 +14,10 @@ worker (the streaming job counts and commits the same way, per
 micro-batch).
 
 Resume = anti-join of the bucket universe against the lineage table
-(driver-side: the lineage table is tiny). A killed run re-processes only
-buckets without lineage rows; completed buckets are never touched, and the
-final output is byte-identical to a single-shot run (pipeline is
-deterministic per row).
+(driver-side: the table is a few rows per run, collected in one job). A
+killed run re-processes only buckets without lineage rows; completed
+buckets are never touched, and the final output is byte-identical to a
+single-shot run (pipeline is deterministic per row).
 
 Iceberg snapshots would subsume the manual bookkeeping; in this sandbox the
 catalog is parquet (see sources/catalog.py) and ``input_snapshot`` is a
@@ -38,6 +38,14 @@ from pyspark.sql import types as T
 
 from .quality import QualityModels, run_quality_pipeline
 from .rules import RULE_SPECS
+
+
+# The lineage rows run_resumable appends (lineage_frame adds ``ts``). The
+# resume lookup reads the table with it, so no job infers the schema.
+LINEAGE_SCHEMA = (
+    "bucket int, n_input long, n_kept long, drops map<string,bigint>, "
+    "run_id string, input_snapshot string, wall_s double"
+)
 
 
 def bucket_expr(url_col: str = "url", n_buckets: int = 16):
@@ -123,10 +131,14 @@ def completed_buckets(
     under a changed snapshot is a full re-run decision, not a resume)."""
     if not os.path.exists(lineage_dir):
         return set()
-    rows = spark.read.parquet(lineage_dir).filter(
-        (F.col("n_input") > 0) | (F.col("input_snapshot") == input_snapshot)
+    rows = (
+        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
+        .select("bucket", "n_input", "input_snapshot")
+        .collect()
     )
-    return {r["bucket"] for r in rows.select("bucket").distinct().collect()}
+    return {
+        r["bucket"] for r in rows if r["n_input"] > 0 or r["input_snapshot"] == input_snapshot
+    }
 
 
 def run_resumable(
@@ -178,8 +190,7 @@ def run_resumable(
     stats = lineage_frame(
         spark,
         [(b, *c, run_id, snapshot, float(wall_s)) for b, c in counts().items()],
-        "bucket int, n_input long, n_kept long, drops map<string,bigint>, "
-        "run_id string, input_snapshot string, wall_s double",
+        LINEAGE_SCHEMA,
     )
     stats.write.mode("append").parquet(lineage_dir)
     return pending

@@ -174,7 +174,9 @@ def run_quality_pipeline(
 ) -> DataFrame:
     """pages → scored/filtered output. Narrow (no shuffle) after the scan:
     one Arrow pass (:func:`make_fused_udf`), the JVM ``drop_reason`` CASE
-    and ``keep = drop_reason IS NULL``.
+    and ``keep = drop_reason IS NULL``. The output keeps every input
+    column except ``html`` and the raw ``text``: the page is served as
+    ``scrubbed_text``, so the PII the scrub removed is not stored beside it.
 
     ``heuristics`` has one legal value, ``'fused'``; anything else raises
     ``ValueError``.
@@ -183,7 +185,7 @@ def run_quality_pipeline(
         raise ValueError(f"unknown heuristics shape: {heuristics!r} (only 'fused')")
     score = make_fused_udf(spark, models)
     out = pages.withColumn("_s", score(F.col("text"))).select(
-        *[c for c in pages.columns if c not in ("html",)], "_s.*"
+        *[c for c in pages.columns if c not in ("html", "text")], "_s.*"
     )
     return out.withColumn("drop_reason", drop_reason_expr()).withColumn(
         "keep", F.col("drop_reason").isNull()

@@ -135,3 +135,26 @@ def test_observe_drops_counts_are_exact(spark):
         want = sub["drop_reason"].value_counts().to_dict()
         assert got[k] == (len(sub), int(sub["keep"].sum()), want), k
     assert got[16] == (0, 0, {})
+
+
+def test_resume_lookup_is_one_job(spark, pages_df, tmp_path):
+    """completed_buckets reads the lineage table with its declared schema
+    and filters the collected rows: one Spark job per call, no
+    schema-inference job and no distinct."""
+    models = train_quality_models(pages_df.filter("split = 'train'"))
+    lin_dir = str(tmp_path / "lineage")
+    run_resumable(
+        spark, pages_df, models, str(tmp_path / "out"), lin_dir, N_BUCKETS,
+        only_buckets={1, 2},
+    )
+    sc = spark.sparkContext
+    group = "test-resume-lookup"
+    sc.setJobGroup(group, "completed_buckets")
+    try:
+        done = completed_buckets(spark, lin_dir, input_snapshot_id(pages_df))
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert done == {1, 2}
+    assert len(jobs) == 1, jobs

@@ -1813,13 +1813,15 @@ def test_quality_score_udf_matches_regex(spark):
     got = {r["i"]: r["q"] for r in df.select("i", quality_score(F.col("t")).alias("q")).collect()}
     want = {r["i"]: r["q"] for r in df.select("i", regex_form(F.col("t")).alias("q")).collect()}
     assert got == want, (got, want)
-    # one Arrow node despite three struct-field reads
+    # one Arrow node holding one UDF call: each batch is counted once
     import re as _re2
 
     from language_identification_spark.plans.asserts import explain_str
 
     plan = explain_str(df.select(quality_score(F.col("t"))))
     assert len(_re2.findall(r"^\(\d+\) ArrowEvalPython", plan, _re2.M)) == 1, plan
+    args = _re2.search(r"^\(\d+\) ArrowEvalPython\n.*\nArguments: (.*)$", plan, _re2.M)
+    assert len(_re2.findall(r"pythonUDF\d+#", args.group(1))) == 1, plan
 
 
 def test_doc_fingerprint_udf_matches_sql(spark):

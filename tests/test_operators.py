@@ -180,8 +180,46 @@ def test_eval_operators(spark):
     assert rep["de"]["precision"] == 0.0 and rep["de"]["f1"] == 0.0
     cm = {(r["label"], r["pred"]): r["n"] for r in ev.confusion_matrix_long(pred).collect()}
     assert cm[("en", "fr")] == 1 and cm[("fr", "fr")] == 2
-    piv = ev.confusion_matrix_pivot(pred).collect()
-    assert len(piv) == 3
+    # NULL labels and predictions: the NULL class is all zeros and each
+    # half-NULL row still counts on its known side — (NULL, 'en') adds
+    # to en's pred_cnt, ('fr', NULL) to fr's support.
+    nulls = spark.createDataFrame(
+        [("en", "en"), (None, "en"), ("fr", None), (None, None)], "lang string, lang_pred string"
+    )
+    rep = {r["class"]: r for r in ev.classification_report(pred.union(nulls)).collect()}
+    assert tuple(rep[None])[1:] == (0.0, 0.0, 0.0, 0)
+    assert rep["en"]["precision"] == 0.5 and rep["en"]["support"] == 3
+    assert rep["fr"]["recall"] == 2 / 3 and rep["fr"]["support"] == 3
+    full = ev.classification_report_full(pred.union(nulls)).collect()
+    full = {r["class"]: tuple(r)[1:] for r in full}
+    assert full["macro avg"] == (0.29166666666666663, 1 / 3, 0.30952380952380953, 7)
+    assert full["weighted avg"] == (0.5, 0.5714285714285714, 0.5306122448979592, 7)
+
+
+def test_classification_report_reads_predictions_once(spark):
+    """Both reports score each input row once: an upstream pandas UDF
+    sees every row one time, and neither plans a Join."""
+    from language_identification_spark.plans.asserts import physical_plan
+
+    scored = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("string")
+    def predict(s: pd.Series) -> pd.Series:
+        scored.add(len(s))
+        return s
+
+    lang = F.when(F.col("id") % 3 == 0, "en").otherwise("fr")
+    pred = spark.range(200).select(
+        lang.alias("lang"),
+        predict(F.when(F.col("id") % 7 == 0, "en").otherwise(lang)).alias("lang_pred"),
+    )
+    for report in (ev.classification_report, ev.classification_report_full):
+        scored.value = 0
+        rep = report(pred)
+        rows = rep.collect()
+        assert scored.value == 200, (report.__name__, scored.value)
+        assert sum(r["support"] for r in rows if r["class"] in ("en", "fr")) == 200
+        assert "Join" not in physical_plan(rep)
 
 
 def test_multimodal_plumbing(pages_df):

@@ -19,6 +19,7 @@ from language_identification_spark.oracle.pipeline import (
     run_oracle_pipeline,
     train_oracle_models,
 )
+from language_identification_spark.pipeline.lineage import run_resumable
 from language_identification_spark.pipeline.quality import (
     run_quality_pipeline,
     train_quality_models,
@@ -145,7 +146,7 @@ def test_deterministic_across_partitioning(spark, pages_df, spark_models):
     assert ra == rb
 
 
-def test_output_schema(spark, pages_df, spark_models):
+def test_output_schema(spark, pages_df, spark_models, tmp_path):
     out = run_quality_pipeline(spark, pages_df, spark_models)
     cols = set(out.columns)
     assert {
@@ -153,6 +154,16 @@ def test_output_schema(spark, pages_df, spark_models):
         "perplexity", "scrubbed_text", "n_chars", "n_words",
     } <= cols
     assert "html" not in cols  # pruned: never carry the heavy binary column
+    # the raw page holds the PII the scrub removed: only scrubbed_text is
+    # served, and only it lands in the resumable job's output
+    assert "text" not in cols
+    out_dir = str(tmp_path / "out")
+    run_resumable(
+        spark, pages_df, spark_models, out_dir, str(tmp_path / "lineage"), 8,
+        only_buckets={0},
+    )
+    written = spark.read.parquet(out_dir)
+    assert "scrubbed_text" in written.columns and "text" not in written.columns
 
 
 def test_served_features_match_oracle(oracle_out, spark_out):
