@@ -358,13 +358,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 8-CJK-char prefix (char-level spam). The gate checks the new
         # script/diversity feature columns and the two cjk substitute
         # rules from raw text cross-engine; the guard ROUTING itself is
-        # gated by drop_reasons (synthesized is_cjk rows). The script
-        # columns come from the serving feature kernel; char_div is the
-        # UNGUARDED ratio (the kernel reports 1.0 for non-CJK docs).
-        from language_identification_spark.functions.text import (
-            char_diversity_udf,
-            with_quality_features,
-        )
+        # gated by drop_reasons (synthesized is_cjk rows). Every column
+        # comes from the serving feature kernel; its char_div is guarded
+        # (1.0 for non-CJK docs), as the rule that reads it.
+        from language_identification_spark.functions.text import with_quality_features
         from language_identification_spark.pipeline.rules import (
             MIN_CJK_CHARS,
             MIN_CJK_DISTINCT_CHAR_4GRAM_RATIO,
@@ -383,14 +380,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         # the sf tables are single parquet files (one input split ⇒ one
         # task); real crawl input is thousands of splits. Repartition so
-        # the per-doc feature + diversity work parallelizes — the one
-        # shuffle carries (doc_id, t) once, before the Arrow passes, not
-        # because the operator needs it at scale.
+        # the per-doc feature work parallelizes — the one shuffle carries
+        # (doc_id, t) once, before the Arrow pass, not because the
+        # operator needs it at scale.
         variants = d.select("doc_id", txt.alias("t")).repartition(32, "doc_id")
-        out = with_quality_features(variants, "t").withColumn(
-            "_div", char_diversity_udf()(F.col("t"))
-        )
-        div = F.round(F.col("_div"), 6)
+        out = with_quality_features(variants, "t")
+        div = F.round(F.col("distinct_char_4gram_ratio"), 6)
         reason = (
             F.when(
                 F.col("is_cjk") & (F.col("n_cjk") < MIN_CJK_CHARS),
@@ -2296,6 +2291,7 @@ def oracle_sql() -> dict[str, str]:
 
     _cjk_t = f"translate(lower(text), '{_CJK_FROM}', '{_CJK_TO}')"
     _is_cjk = "(n_cjk * 2 > n_script_letters)"
+    # char_div is guarded as in the serving kernel: a non-CJK doc reads 1.0
     _cjk_rules_oracle = f"""
           WITH v AS (
             SELECT doc_id,
@@ -2326,7 +2322,8 @@ def oracle_sql() -> dict[str, str]:
           )
           SELECT c.doc_id, c.n_cjk, c.n_script_letters,
                  {_is_cjk} AS is_cjk,
-                 round(coalesce(g.ratio, 1.0), 6) AS char_div,
+                 round(CASE WHEN {_is_cjk} THEN coalesce(g.ratio, 1.0)
+                            ELSE 1.0 END, 6) AS char_div,
                  CASE
                    WHEN {_is_cjk} AND c.n_cjk < {_CJK_MIN}
                      THEN 'cjk_too_few_cjk_chars'

@@ -56,7 +56,7 @@ _MASK = np.uint64((1 << _SHIFT) - 1)
 _S1, _S2 = np.uint64(_SHIFT), np.uint64(2 * _SHIFT)
 
 
-def _pack_window_keys(texts: list[str], n: int, pad: bool) -> np.ndarray:
+def pack_window_keys(texts: list[str], n: int, pad: bool) -> np.ndarray:
     """uint64 keys of every n-gram window of every text (duplicates
     preserved), windows never crossing text boundaries. ``pad=True``
     applies the reference sentinel convention ``'_'*(n-1) + t + '_'``;
@@ -73,7 +73,7 @@ def _pack_window_keys(texts: list[str], n: int, pad: bool) -> np.ndarray:
     return key[idx]
 
 
-def _decode_keys(keys: np.ndarray, n: int) -> list[str]:
+def decode_keys(keys: np.ndarray, n: int) -> list[str]:
     """Packed uint64 keys → n-char gram strings, one decode for the whole
     (distinct) key set."""
     u = len(keys)
@@ -89,11 +89,11 @@ def _decode_keys(keys: np.ndarray, n: int) -> list[str]:
 def grouped_gram_counts(texts: list[str], n: int, pad: bool) -> tuple[list[str], np.ndarray]:
     """(grams, counts) of one group of texts — np.unique over the packed
     window keys."""
-    keys = _pack_window_keys(texts, n, pad)
+    keys = pack_window_keys(texts, n, pad)
     if len(keys) == 0:
         return [], np.empty(0, dtype=np.int64)
     vals, cnts = np.unique(keys, return_counts=True)
-    return _decode_keys(vals, n), cnts.astype(np.int64)
+    return decode_keys(vals, n), cnts.astype(np.int64)
 
 
 def rank_profile(text: str, max_size: int = 400) -> list[tuple[str, int]]:

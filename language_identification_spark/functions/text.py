@@ -135,19 +135,6 @@ def with_quality_features(df: DataFrame, text_col: str) -> DataFrame:
     return df.withColumn("_qf", feats(F.col(text_col))).select(*df.columns, "_qf.*")
 
 
-def char_diversity_udf(n: int = CHAR_DIVERSITY_N):
-    """``distinct_char_4gram_ratio`` on its own and unguarded: computed
-    for every doc, where the kernel reports 1.0 for non-CJK docs."""
-
-    @F.pandas_udf("double")
-    def div(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [py_distinct_char_ngram_ratio(x, n) for x in texts.fillna("")]
-        )
-
-    return div
-
-
 # Gopher-style line heuristics — pinned, no trimming, so the batch
 # kernel, the per-doc oracle and the DuckDB oracle SQL evaluate
 # byte-identical predicates.

@@ -55,8 +55,9 @@ VOCAB_SIZE = 50_000  # configs.yaml max_features
 def _grams_sql(ngram_range: tuple[int, int]) -> str:
     """SQL building one array of all n-grams for n in [a, b] over
     lower(text) — reference padding, same expression family as the
-    statistical trainers."""
-    parts = [char_ngrams_sql("lower(text)", n) for n in
+    statistical trainers. A NULL text scores as "", the rule of the
+    broadcast-model scorers."""
+    parts = [char_ngrams_sql("lower(coalesce(text, ''))", n) for n in
              range(ngram_range[0], ngram_range[1] + 1)]
     arr = parts[0] if len(parts) == 1 else "concat(" + ", ".join(parts) + ")"
     return f"SELECT *, {arr} AS grams FROM __THIS__"
@@ -100,8 +101,9 @@ def build_pipeline(model_name: str, vocab_size: int = VOCAB_SIZE) -> Pipeline:
 
 def train_classical(train_df: DataFrame, model_name: str,
                     vocab_size: int = VOCAB_SIZE) -> PipelineModel:
-    """train_df: (text, lang). Returns a fitted PipelineModel."""
-    return build_pipeline(model_name, vocab_size).fit(train_df)
+    """train_df: (text, lang). Returns a fitted PipelineModel. NULL texts
+    are skipped, as the other trainers skip them."""
+    return build_pipeline(model_name, vocab_size).fit(train_df.filter("text IS NOT NULL"))
 
 
 def feature_importances(spark, model: PipelineModel, top_k: int = 20) -> DataFrame:

@@ -15,7 +15,8 @@ Semantics (pinned; the oracle and the Spark UDF call the same functions):
 - ppl(doc) = exp(-mean log P over the doc's transitions); empty docs → +inf.
 
 Counting and scoring tile a whole batch of ``'_' + text + '_'`` segments
-with ``codepoints.tile`` and read its 2-windows with ``codepoints.windows``.
+with ``codepoints.tile`` and read its 2-windows with ``codepoints.windows``;
+counting packs each window into ``ngramcount``'s 21-bit-per-codepoint key.
 """
 
 from __future__ import annotations
@@ -26,53 +27,44 @@ import numpy as np
 import pandas as pd
 
 from ..functions.codepoints import tile, windows
+from ..functions.ngramcount import decode_keys, pack_window_keys
 from .hashed_ngram import batch_chunks
 
 K_SMOOTH = 0.5
+
+
+def _lowered(texts) -> list[str]:
+    """``t.lower()`` of each text; non-``str`` entries read as ``""``."""
+    return [t.lower() if isinstance(t, str) else "" for t in texts]
 
 
 def _bigram_windows(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """The tiled ``'_' + t.lower() + '_'`` buffer of a batch (non-``str``
     entries read as ``""``) and its 2-windows → ``(cp, idx, counts,
     bounds)``; each doc has ``len + 1`` transitions."""
-    lows = [t.lower() if isinstance(t, str) else "" for t in texts]
-    cp, starts, lens = tile(lows, "_", "_")
+    cp, starts, lens = tile(_lowered(texts), "_", "_")
     return (cp, *windows(starts, lens, 2))
 
 
-def _batch_bigram_keys(texts) -> np.ndarray:
-    """uint64 keys (cur_cp << 32 | nxt_cp) of every transition of a batch,
-    doc-major."""
-    cp, idx, _, _ = _bigram_windows(texts)
-    c = cp.astype(np.uint64)
-    return ((c[:-1] << np.uint64(32)) | c[1:])[idx]
-
-
-def doc_bigram_keys(text: str) -> np.ndarray:
-    """uint64 keys (cur_cp << 32 | nxt_cp) of '_text_' transitions — numpy,
-    no per-char Python."""
-    return _batch_bigram_keys([text])
-
-
 def bigram_key_counts(texts) -> tuple[np.ndarray, np.ndarray]:
-    """Distinct packed transition keys of a batch and their counts — the
-    one bigram counting kernel (non-``str`` entries count as ``""``).
-    Keys are built over cache-sized chunks (``batch_chunks``): one tile of
-    a whole batch of long pages measured slower than a loop over docs."""
-    keys = [_batch_bigram_keys(c) for c in batch_chunks(list(texts))]
+    """Distinct transition keys of a batch's ``'_' + t.lower() + '_'``
+    and their counts — the one bigram counting kernel (non-``str``
+    entries count as ``""``). Keys are ``ngramcount``'s packed 2-gram
+    windows (21 bits per codepoint), built over cache-sized chunks
+    (``batch_chunks``): one tile of a whole batch of long pages measured
+    slower than a loop over docs."""
+    keys = [pack_window_keys(_lowered(c), 2, True) for c in batch_chunks(list(texts))]
     return np.unique(np.concatenate(keys or [np.empty(0, np.uint64)]), return_counts=True)
 
 
 def bigram_frame(keys, cnts) -> pd.DataFrame:
     """Packed keys + counts → the (cur, nxt, cnt) table
     :meth:`BigramLM.from_counts` takes."""
-    keys = np.asarray(keys, dtype=np.uint64)
-    cur = [chr(k) for k in (keys >> np.uint64(32)).tolist()]
-    nxt = [chr(k) for k in (keys & np.uint64(0xFFFFFFFF)).tolist()]
+    grams = decode_keys(np.asarray(keys, dtype=np.uint64), 2)
     return pd.DataFrame(
         {
-            "cur": pd.Series(cur, dtype="object"),
-            "nxt": pd.Series(nxt, dtype="object"),
+            "cur": pd.Series([g[0] for g in grams], dtype="object"),
+            "nxt": pd.Series([g[1] for g in grams], dtype="object"),
             "cnt": np.asarray(cnts, dtype=np.int64),
         }
     )

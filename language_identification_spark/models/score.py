@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from ..functions.text import py_char_ngrams
 from ..oracle.reference import CavnarTrenkle, CharFrequency, Dunning
-from .train import model_table_to_dict
+from .train import CT_PROFILE_SIZE, DUNNING_SMOOTHING, model_table_to_dict
 
 
 class VectorizedBagScorer:
@@ -89,24 +89,13 @@ def _bag_predictor(payload):
     return lambda texts: scorer.predict_ngram(texts, n)
 
 
-def _char_freq_predictor(payload):
-    profiles, smoothing = payload
-    m = CharFrequency(smoothing=smoothing)
-    m.language_profiles = profiles
-    return m.predict
-
-
-def _cavnar_trenkle_predictor(payload):
-    profiles, max_profile_size = payload
-    m = CavnarTrenkle(max_profile_size=max_profile_size)
-    m.language_profiles = profiles
-    return m.predict
-
-
-def _dunning_predictor(payload):
-    models, smoothing = payload
-    m = Dunning(smoothing=smoothing)
-    m.language_models = models
+def _oracle_predictor(payload):
+    """``predict`` of an oracle model class over broadcast tables:
+    ``payload`` is (class, its constructor argument, the name of its
+    model attribute, the tables)."""
+    cls, arg, attr, tables = payload
+    m = cls(arg)
+    setattr(m, attr, tables)
     return m.predict
 
 
@@ -129,19 +118,24 @@ def make_markov_predict_udf(spark: SparkSession, language_models: dict, smoothin
 def make_char_freq_predict_udf(spark: SparkSession, language_profiles: dict, smoothing: float):
     """CharacterFrequency.predict parity (statistical_models.py:76-99):
     cosine of the doc's smoothed char profile vs each language profile."""
-    return _broadcast_udf(spark, (language_profiles, smoothing), _char_freq_predictor)
+    payload = (CharFrequency, smoothing, "language_profiles", language_profiles)
+    return _broadcast_udf(spark, payload, _oracle_predictor)
 
 
-def make_cavnar_trenkle_predict_udf(spark: SparkSession, profiles: dict, max_profile_size: int = 400):
+def make_cavnar_trenkle_predict_udf(spark: SparkSession, profiles: dict):
     """CavnarTrenkle.predict parity (lieterature.py:37-57): out-of-place
     distance of the doc's rank profile to each language profile."""
-    return _broadcast_udf(spark, (profiles, max_profile_size), _cavnar_trenkle_predictor)
+    payload = (CavnarTrenkle, CT_PROFILE_SIZE, "language_profiles", profiles)
+    return _broadcast_udf(spark, payload, _oracle_predictor)
 
 
-def make_dunning_predict_udf(spark: SparkSession, language_models: dict, smoothing: float = 0.5):
+def make_dunning_predict_udf(
+    spark: SparkSession, language_models: dict, smoothing: float = DUNNING_SMOOTHING
+):
     """Dunning.predict parity: length-normalized log-likelihood with the
     raw-``smoothing`` miss fallback."""
-    return _broadcast_udf(spark, (language_models, smoothing), _dunning_predictor)
+    payload = (Dunning, smoothing, "language_models", language_models)
+    return _broadcast_udf(spark, payload, _oracle_predictor)
 
 
 def score_ngram_relational(
@@ -150,7 +144,6 @@ def score_ngram_relational(
     n: int,
     smoothing: float,
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id_col, lang_pred) for a ``train_ngram_lm`` model TABLE: the table
     is collected and scored by ``make_ngram_predict_udf``, so the answer
@@ -158,4 +151,4 @@ def score_ngram_relational(
     first lang in sorted order)."""
     lms = model_table_to_dict(model, "ngram")
     udf = make_ngram_predict_udf(docs.sparkSession, lms, n, smoothing)
-    return docs.select(id_col, udf(F.col(text_col)).alias("lang_pred"))
+    return docs.select(id_col, udf(F.col("text")).alias("lang_pred"))

@@ -12,7 +12,10 @@ these plans keep it to a single pass.
 Smoothing quirk replicated exactly (SURVEY.md §2.3 A3): the reference's
 ``defaultdict(lambda: smoothing)`` means every *seen* key carries
 ``count + smoothing`` and the normalization total gains one ``smoothing``
-per distinct key ⇒ prob = (cnt + s) / (Σcnt + s·|keys|).
+per distinct key ⇒ prob = (cnt + s) / (Σcnt + s·|keys|), written once in
+``_smoothed``. Dunning smooths over the global vocabulary instead.
+The trainers read the ``text`` and ``lang`` columns and the module's
+reference constants.
 """
 
 from __future__ import annotations
@@ -32,49 +35,42 @@ NGRAM_SMOOTHING = 1e-8   # statistical_models.py:8
 CHARFREQ_SMOOTHING = 1e-10  # statistical_models.py:52
 MARKOV_SMOOTHING = 1e-10    # statistical_models.py:102
 DUNNING_SMOOTHING = 0.5     # lieterature.py:61
+CT_PROFILE_SIZE = 400       # configs.yaml:56
 
 
-def train_ngram_lm(
-    df: DataFrame, n: int = 1, smoothing: float = NGRAM_SMOOTHING,
-    text_col: str = "text", lang_col: str = "lang",
-) -> DataFrame:
+def _smoothed(counts: DataFrame, part: list[str], smoothing: float) -> DataFrame:
+    """``counts`` with ``cnt`` replaced by ``prob`` = (cnt + s) /
+    (Σcnt + s·|keys|) over each ``part`` group: the reference's
+    defaultdict rule, shared by the n-gram, char-frequency and Markov
+    trainers."""
+    w = Window.partitionBy(*part)
+    total = F.sum("cnt").over(w) + F.lit(smoothing) * F.count("*").over(w)
+    return counts.select(
+        *[c for c in counts.columns if c != "cnt"],
+        ((F.col("cnt") + F.lit(smoothing)) / total).alias("prob"),
+    )
+
+
+def train_ngram_lm(df: DataFrame, n: int = 1) -> DataFrame:
     """(lang, ngram, prob) — char n-gram LM (statistical_models.py:14-32).
 
     Counts via the vectorized partial-count pass (functions/ngramcount,
     r7): exact integer totals identical to the explode → groupBy form,
     so the normalized probabilities are bit-identical."""
-    counts = char_ngram_counts(
-        df.select(F.col(lang_col).alias("lang"), F.col(text_col).alias("text")),
-        n, key_col="lang", lower=False, pad=True,
-    )
-    w = Window.partitionBy("lang")
-    total = F.sum("cnt").over(w) + F.lit(smoothing) * F.count("*").over(w)
-    return counts.select(
-        "lang", "ngram", ((F.col("cnt") + F.lit(smoothing)) / total).alias("prob")
-    )
+    counts = char_ngram_counts(df, n, key_col="lang", lower=False, pad=True)
+    return _smoothed(counts, ["lang"], NGRAM_SMOOTHING)
 
 
-def train_char_freq(
-    df: DataFrame, smoothing: float = CHARFREQ_SMOOTHING,
-    text_col: str = "text", lang_col: str = "lang",
-) -> DataFrame:
+def train_char_freq(df: DataFrame) -> DataFrame:
     """(lang, char, prob) — char profile of the Python-``str.lower``ed
     text (statistical_models.py:57-74)."""
     counts = char_ngram_counts(
-        df.select(F.col(lang_col).alias("lang"), F.col(text_col).alias("text")),
-        1, key_col="lang", lower=True, pad=False, gram_col="char",
+        df, 1, key_col="lang", lower=True, pad=False, gram_col="char"
     )
-    w = Window.partitionBy("lang")
-    total = F.sum("cnt").over(w) + F.lit(smoothing) * F.count("*").over(w)
-    return counts.select(
-        "lang", "char", ((F.col("cnt") + F.lit(smoothing)) / total).alias("prob")
-    )
+    return _smoothed(counts, ["lang"], CHARFREQ_SMOOTHING)
 
 
-def train_markov(
-    df: DataFrame, smoothing: float = MARKOV_SMOOTHING,
-    text_col: str = "text", lang_col: str = "lang",
-) -> DataFrame:
+def train_markov(df: DataFrame) -> DataFrame:
     """(lang, cur, nxt, prob) — transition LM, normalized per (lang, cur)
     (statistical_models.py:107-129). Padding is '_text_' (n=2 grams of the
     single-underscore-padded text)."""
@@ -82,27 +78,17 @@ def train_markov(
     # counts are per-(lang, cur, nxt) counts — split on the SMALL count
     # table, not per occurrence
     counts = char_ngram_counts(
-        df.select(F.col(lang_col).alias("lang"), F.col(text_col).alias("text")),
-        2, key_col="lang", lower=False, pad=True, gram_col="bg",
+        df, 2, key_col="lang", lower=False, pad=True, gram_col="bg"
     ).select(
         "lang",
         F.substring("bg", 1, 1).alias("cur"),
         F.substring("bg", 2, 1).alias("nxt"),
         "cnt",
     )
-    w = Window.partitionBy("lang", "cur")
-    total = F.sum("cnt").over(w) + F.lit(smoothing) * F.count("*").over(w)
-    return counts.select(
-        "lang", "cur", "nxt",
-        ((F.col("cnt") + F.lit(smoothing)) / total).alias("prob"),
-    )
+    return _smoothed(counts, ["lang", "cur"], MARKOV_SMOOTHING)
 
 
-def train_cavnar_trenkle(
-    df: DataFrame, max_profile_size: int = 400,
-    text_col: str = "text", lang_col: str = "lang", order_col: str = "doc_idx",
-    max_chars_per_lang: int | None = None,
-) -> DataFrame:
+def train_cavnar_trenkle(df: DataFrame, order_col: str = "doc_idx") -> DataFrame:
     """(lang, ngram, cnt, rank) — top-400 1..5-gram rank profile.
 
     The reference trains on the ' '-joined concatenation of a language's
@@ -112,39 +98,18 @@ def train_cavnar_trenkle(
     profiles are tiny) and build each profile with the whole-array numpy
     kernel ``functions.ngramcount.rank_profile`` — no per-character
     Python loop — pinned equal to the oracle's ``ct_profile``.
-
-    ``max_chars_per_lang`` is the SCALE mode: exact concatenation puts a
-    whole language's corpus in one executor's Python string (at web scale
-    "English" is half the corpus — OOM by design), so the bounded mode
-    keeps only the deterministic dataset-order PREFIX of each language up
-    to the char budget before concatenating (a cumulative-length window;
-    the first document always survives). Rank profiles saturate quickly —
-    top-400 n-grams of a few MB of text match the full-corpus profile in
-    practice — and ``None`` keeps the exact reference semantics.
     """
-    if max_chars_per_lang is not None:
-        w = (
-            Window.partitionBy(lang_col)
-            .orderBy(order_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        prior = F.coalesce(F.sum(F.length(text_col)).over(w), F.lit(0))
-        df = (
-            df.withColumn("_prior_chars", prior)
-            .filter(F.col("_prior_chars") < max_chars_per_lang)
-            .drop("_prior_chars")
-        )
 
     def build(pdf):
         import pandas as pd
 
         pdf = pdf.sort_values(order_col)
         # NULL texts join as nothing, as string_agg skips them
-        combined = " ".join(pdf[text_col].dropna().tolist())
-        prof = rank_profile(combined, max_profile_size)
+        combined = " ".join(pdf["text"].dropna().tolist())
+        prof = rank_profile(combined, CT_PROFILE_SIZE)
         return pd.DataFrame(
             {
-                "lang": pdf[lang_col].iloc[0],
+                "lang": pdf["lang"].iloc[0],
                 "ngram": [g for g, _ in prof],
                 "cnt": [c for _, c in prof],
                 "rank": range(len(prof)),
@@ -152,16 +117,13 @@ def train_cavnar_trenkle(
         )
 
     return (
-        df.select(lang_col, order_col, text_col)
-        .groupBy(lang_col)
+        df.select("lang", order_col, "text")
+        .groupBy("lang")
         .applyInPandas(build, schema="lang string, ngram string, cnt long, rank long")
     )
 
 
-def train_dunning(
-    df: DataFrame, smoothing: float = DUNNING_SMOOTHING,
-    text_col: str = "text", lang_col: str = "lang",
-) -> DataFrame:
+def train_dunning(df: DataFrame) -> DataFrame:
     """(lang, feat, prob) — char unigram ('c_x') + bigram ('bg_xy') features,
     globally-unioned vocabulary, additive smoothing over |V|
     (lieterature.py:83-113).
@@ -181,8 +143,6 @@ def train_dunning(
     CJK-heavy web corpus (|V| ~ 10⁷ observed bigrams) still only a model
     BUILD cost: the grid never joins back to documents (serving
     broadcasts per-lang dicts)."""
-    src = df.select(F.col(lang_col).alias("lang"), F.col(text_col).alias("text"))
-
     def partial(pdfs):
         import pandas as pd
 
@@ -199,7 +159,8 @@ def train_dunning(
                 })
 
     counts = (
-        src.mapInPandas(partial, schema="lang string, feat string, cnt long")
+        df.select("lang", "text")
+        .mapInPandas(partial, schema="lang string, feat string, cnt long")
         .groupBy("lang", "feat")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -215,8 +176,8 @@ def train_dunning(
     return grid.select(
         "lang", "feat",
         (
-            (F.col("cnt") + F.lit(smoothing))
-            / (F.col("total") + F.lit(smoothing) * F.col("vocab_size"))
+            (F.col("cnt") + F.lit(DUNNING_SMOOTHING))
+            / (F.col("total") + F.lit(DUNNING_SMOOTHING) * F.col("vocab_size"))
         ).alias("prob"),
     )
 

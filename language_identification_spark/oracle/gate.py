@@ -1,6 +1,7 @@
-"""The one gate comparator: does a ``queries()`` result equal its
-``oracle_sql()`` twin? Used by ``tests/test_entry.py`` and
-``scripts/check_gates.py`` so both apply the same, strict rule:
+"""The one gate runner and comparator: does a ``queries()`` result equal
+its ``oracle_sql()`` twin? Used by ``tests/test_entry.py`` and
+``scripts/check_gates.py`` so both run each side once and apply the
+same, strict rule:
 
 - the same column names (order-insensitive) and the same row count;
 - the same values, row-order-insensitive, with floats compared by
@@ -14,6 +15,15 @@
 from __future__ import annotations
 
 import math
+import os
+
+from ..operators.cache import pair_cache_scope
+
+# the sf tables, registered in DuckDB as views named by file stem
+TABLES = [
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings",
+]
 
 
 def _norm_cell(v) -> str:
@@ -68,3 +78,36 @@ def gate_mismatch(scols, srows, spdf, ocols, orows, opdf) -> str | None:
         _pandas_canon(spdf),
         _pandas_canon(opdf),
     )
+
+
+def duck_views(sf_dir: str):
+    """A DuckDB connection with a view over each sf table in ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def run_gate(spark, con, query, sf_dir: str, oracle: str | None):
+    """Run one gate with each side executed once → (error or None, Spark
+    row count, oracle row count or None when there is no oracle).
+
+    The query is built and collected inside ``pair_cache_scope``; its
+    pandas frame is the collected rows rebuilt under the query's schema,
+    the frame ``toPandas()`` returns. The oracle's result is stored once
+    in a temp table and read back as rows and as a frame."""
+    with pair_cache_scope():
+        sdf = query(spark, sf_dir)
+        srows = sdf.collect()
+    if oracle is None:
+        return None, len(srows), None
+    spdf = spark.createDataFrame(srows, sdf.schema).toPandas()
+    con.execute(f"CREATE OR REPLACE TEMP TABLE gate_oracle AS {oracle}")
+    res = con.table("gate_oracle")
+    orows = res.fetchall()
+    err = gate_mismatch(sdf.columns, srows, spdf, res.columns, orows, res.df())
+    return err, len(srows), len(orows)

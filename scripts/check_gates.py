@@ -15,22 +15,15 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     want = sys.argv[1:]
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
-    from language_identification_spark.operators.cache import pair_cache_scope
-    from language_identification_spark.oracle.gate import gate_mismatch
+    from language_identification_spark.oracle.gate import duck_views, run_gate
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -40,47 +33,25 @@ def main():
         .appName("check_gates")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-
+    con = duck_views(sf_dir)
     qs = entry.queries()
     oracles = entry.oracle_sql()
     names = want or list(qs)
     n_bad = 0
     for name in names:
         try:
-            # persists a query registers are released once it is collected
-            with pair_cache_scope():
-                sdf = qs[name](spark, sf_dir)
-                scols = sdf.columns
-                srows = sdf.collect()
-                spdf = sdf.toPandas() if name in oracles else None
+            err, n_spark, n_oracle = run_gate(spark, con, qs[name], sf_dir, oracles.get(name))
         except Exception as e:
-            print(f"{name}: SPARK ERROR {type(e).__name__}: {e}")
+            print(f"{name}: ERROR {type(e).__name__}: {e}")
             n_bad += 1
             continue
-        if name not in oracles:
-            print(f"{name}: no_oracle (rows={len(srows)})")
+        if n_oracle is None:
+            print(f"{name}: no_oracle (rows={n_spark})")
             continue
-        try:
-            rel = con.execute(oracles[name])
-            ocols = [d[0] for d in rel.description]
-            orows = rel.fetchall()
-            opdf = con.execute(oracles[name]).df()
-        except Exception as e:
-            print(f"{name}: ORACLE ERROR {type(e).__name__}: {e}")
-            n_bad += 1
-            continue
-        err = gate_mismatch(scols, srows, spdf, ocols, orows, opdf)
         n_bad += 0 if err is None else 1
         print(
             f"{name}: {'PASS' if err is None else 'FAIL ' + err}"
-            f" rows={len(srows)}/{len(orows)}"
+            f" rows={n_spark}/{n_oracle}"
         )
     spark.stop()
     sys.exit(1 if n_bad else 0)

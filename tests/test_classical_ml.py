@@ -94,3 +94,20 @@ def test_feature_importances_golden(spark):
     )
     want = pd.read_parquet(golden_path)
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_classical_null_text(spark):
+    """Training skips a NULL text, as the other trainers do (MLlib's
+    CountVectorizer raises "tokens is null" on a NULL gram array), and
+    prediction scores a NULL text as "" and keeps it NULL in the output."""
+    rows = [("hello world", "en"), ("hallo welt", "de"), (None, "en"), ("the cat", "en")]
+    df = spark.createDataFrame(rows, "text string, lang string")
+    model = train_classical(df, "nb_unigram", vocab_size=100)
+    want = train_classical(df.filter("text IS NOT NULL"), "nb_unigram", vocab_size=100)
+    # CountVectorizer's equal-count tie order varies run to run
+    assert sorted(model.stages[1].vocabulary) == sorted(want.stages[1].vocabulary)
+    assert (model.stages[-1].pi.toArray() == want.stages[-1].pi.toArray()).all()
+
+    probe = spark.createDataFrame([(0, None), (1, "")], "id int, text string")
+    got = {r["id"]: (r["text"], r["lang_pred"]) for r in predict_classical(model, probe).collect()}
+    assert got[0] == (None, got[1][1])

@@ -4,6 +4,8 @@ inputs."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -20,7 +22,7 @@ from language_identification_spark.functions.text import (
     py_words,
 )
 from language_identification_spark.models.hashed_ngram import DIM, doc_bucket_ids
-from language_identification_spark.models.perplexity import doc_bigram_keys
+from language_identification_spark.models.perplexity import bigram_frame, bigram_key_counts
 from language_identification_spark.oracle.reference import ct_profile
 from language_identification_spark.pipeline.rules import default_stopwords
 
@@ -49,10 +51,15 @@ def test_bucket_ids_deterministic_and_bounded(s):
 
 
 @given(TEXT)
+@example("ΟΔΟΣ İstanbul \ud800😀\x00")
 @settings(max_examples=200, deadline=None)
-def test_bigram_keys_length(s):
-    # '_' + text + '_' has len+1 transitions
-    assert len(doc_bigram_keys(s)) == len(s) + 1
+def test_bigram_key_counts_match_counter(s):
+    # the one bigram counter behind both the Spark trainer and the
+    # oracle: its (cur, nxt, cnt) rows are the 2-windows of '_' + s.lower() + '_'
+    p = "_" + s.lower() + "_"
+    want = Counter((p[i], p[i + 1]) for i in range(len(p) - 1))
+    f = bigram_frame(*bigram_key_counts([s]))
+    assert dict(zip(zip(f["cur"], f["nxt"]), f["cnt"].tolist())) == want
 
 
 @given(TEXT, st.integers(min_value=1, max_value=5))
